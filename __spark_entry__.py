@@ -21,12 +21,12 @@ def _corpora():
 
     21 TPC-H (the reference's declared contract, q1–q22 minus q15)
     + 16 LLM-pipeline operators (dedup / similarity / text / multimodal)
-    + 13 consolidated operator-family coverage entries (queries/graded.py).
+    + 13 operator-family coverage entries (queries/graded.py) — the one
+    coverage corpus, also oracle-tested in pytest at both scale factors
+    (tests/test_graded.py).
 
-    The fine-grained 45-entry coverage corpus and the 9 DataFrame-API TPC-H
-    twins remain fully oracle-tested in pytest (tests/test_coverage.py,
-    tests/test_tpch_df.py) — they are superseded *in the driver window*, not
-    removed.
+    The DataFrame-API TPC-H twins stay outside the window, oracle-tested in
+    pytest (tests/test_tpch_df.py).
     """
     from ballista_spark.queries.graded import GRADED_COVERAGE
     from ballista_spark.queries.pipeline import PIPELINE_QUERIES

@@ -1,19 +1,14 @@
-"""Graded coverage corpus — the consolidated operator-family entries that,
-together with the 21 TPC-H queries and the 16 pipeline entries, form the
-exactly-50-entry corpus the driver's correctness gate checks.
+"""Graded coverage corpus — the engine's one operator-coverage definition:
+13 operator-family entries that, with the 21 TPC-H queries and the 16
+pipeline entries, form the exactly-50-entry ``__spark_entry__.queries()``
+corpus whose every entry has a DuckDB oracle (tests/test_graded.py
+compares them at both scales).
 
-Round 1 lesson (VERDICT.md): the driver oracle-compares only the first 50
-``queries()`` entries, so the 45 fine-grained coverage entries pushed 40
-entries out of the window.  Here every SURVEY.md §2 operator family is
-folded into 13 entries, each still a *real* multi-operator query with a
-DuckDB oracle:
-
-- sub-results of unrelated shapes are normalized to a shared schema and
-  tagged with an ``op`` column, then combined with UNION ALL — the driver's
-  order-insensitive value-hash still checks every branch row-for-row;
-- the fine-grained originals in :mod:`ballista_spark.queries.coverage`
-  remain pytest-compared at both scale factors (tests/test_coverage.py) —
-  nothing lost, the driver window gained.
+Each entry is a real multi-operator query with a DuckDB oracle.  Results
+of unrelated shapes are normalized to a shared schema, tagged (``op``,
+``join_type`` or ``grp``) and combined with UNION ALL; the
+order-insensitive value compare still checks every branch row-for-row.
+README.md maps each ballista.proto family to its entry and tag.
 
 Hash-stability discipline per queries/base.py (decimal-cast sums, BIGINT
 pins, ROUND(…, 9) on cross-libm math).
@@ -29,6 +24,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from ballista_spark.dataframe import BallistaDataFrame
 from ballista_spark.queries.base import Query, dec_sum
@@ -554,9 +550,30 @@ SELECT * FROM (
 
 # --- 3. set operations + distinct + empty relation + repartition ------------
 
+#: Projection + Selection (ballista.proto:204-212) with BETWEEN / IN / LIKE /
+#: IS NOT NULL / NOT / negation (proto:47-78,134-139); shared by both sides
+_SELECT_FILTER = """
+SELECT p_partkey AS k, p_name AS tag, CAST(-p_retailprice AS DOUBLE) AS v
+FROM part
+WHERE p_size BETWEEN 10 AND 30
+  AND p_brand IN ('Brand#1', 'Brand#2', 'Brand#3')
+  AND p_name LIKE '%a%'
+  AND p_type IS NOT NULL
+  AND NOT (p_size = 20)
+"""
+
+#: LIMIT + OFFSET pagination over a total order (proto:280-283 plus the
+#: beyond-parity offset); shared by both sides
+_PAGE = """
+SELECT o_orderkey AS k, o_orderstatus AS tag, CAST(o_totalprice AS DOUBLE) AS v
+FROM orders ORDER BY o_orderkey LIMIT 25 OFFSET 100
+"""
+
 
 def _setops_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = register_tables(spark, sf_dir, ("customer", "supplier", "orders", "lineitem"))
+    t = register_tables(
+        spark, sf_dir, ("customer", "supplier", "orders", "lineitem", "part")
+    )
     cust = BallistaDataFrame(t["customer"])
     nb = F.lit(None).cast("bigint")
     nd = F.lit(None).cast("double")
@@ -619,8 +636,30 @@ def _setops_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("c"), _dsum("l_quantity").alias("q")),
         "repart_rr", F.col("c"), F.col("l_returnflag"), F.col("q"),
     )
+    # multi-key Sort with explicit (asc, nulls_first) per key
+    # (ballista.proto:157-161) + Limit over NULLABLE keys: the null
+    # placement decides which 50 rows the limit keeps
+    keyed = cust.select(
+        "c_custkey",
+        F.expr("NULLIF(c_mktsegment, 'HOUSEHOLD')").alias("seg"),
+        F.when(F.col("c_acctbal") >= 0, F.col("c_acctbal")).alias("bal"),
+    )
+    top = keyed.sort(
+        F.col("seg").asc_nulls_first(),
+        F.col("bal").desc_nulls_first(),
+        F.col("c_custkey").asc(),
+    ).limit(50)
+    sort_limit = tag(
+        top.df, "sort_limit", F.col("c_custkey"), F.col("seg"), F.col("bal")
+    )
+    select = tag(
+        spark.sql(_SELECT_FILTER), "select", F.col("k"), F.col("tag"), F.col("v")
+    )
+    page = tag(spark.sql(_PAGE), "page", F.col("k"), F.col("tag"), F.col("v"))
     out = union_all
-    for p in (union_d, inter, exc, dist, empty, rep_h, rep_rr):
+    for p in (
+        union_d, inter, exc, dist, empty, rep_h, rep_rr, sort_limit, select, page
+    ):
         out = out.unionAll(p)
     return out.orderBy("op", "k", "tag")
 
@@ -629,11 +668,13 @@ _b(
     "cov_setops_repart",
     "Set operations (UNION ALL by-name with reversed columns, UNION "
     "DISTINCT, INTERSECT, EXCEPT), SELECT DISTINCT, EmptyRelation "
-    "(ballista.proto:232-234; COUNT over WHERE 1=0), and hash/round-robin "
-    "Repartition (proto:219-230; results partition-invariant) — one tagged "
-    "result.",
+    "(ballista.proto:232-234; COUNT over WHERE 1=0), hash/round-robin "
+    "Repartition (proto:219-230; results partition-invariant), and a "
+    "BallistaDataFrame sort+limit with explicit NULLS FIRST on nullable "
+    "keys (proto:157-161,280-283), a predicate-matrix selection and a "
+    "LIMIT/OFFSET page — one tagged result.",
     _setops_builder,
-    oracle="""
+    oracle=f"""
 SELECT * FROM (
   SELECT 'union_all' AS op, c_custkey AS k, 'hi' AS tag, CAST(NULL AS DOUBLE) AS v
   FROM customer WHERE c_acctbal > 9000.0
@@ -666,17 +707,47 @@ SELECT * FROM (
   SELECT 'repart_rr', COUNT(*), l_returnflag,
          CAST(ROUND(SUM(CAST(l_quantity AS DECIMAL(18,6))), 2) AS DOUBLE)
   FROM lineitem GROUP BY l_returnflag
+  UNION ALL
+  SELECT 'sort_limit', c_custkey, seg, bal FROM (
+    SELECT c_custkey, NULLIF(c_mktsegment, 'HOUSEHOLD') AS seg,
+           CASE WHEN c_acctbal >= 0 THEN c_acctbal END AS bal
+    FROM customer
+    ORDER BY seg ASC NULLS FIRST, bal DESC NULLS FIRST, c_custkey
+    LIMIT 50)
+  UNION ALL
+  SELECT 'select', k, tag, v FROM ({_SELECT_FILTER})
+  UNION ALL
+  SELECT 'page', k, tag, v FROM ({_PAGE})
 ) t ORDER BY op, k, tag
 """,
 )
 
 # --- 4. aggregate family (wire enum + distinct + median/percentile) ---------
 
+#: the comparison-operator matrix (And/Or/Eq/NotEq/Lt/LtEq/Gt/GtEq,
+#: ballista.proto:64-68) as conditional counts, one row in the aggregate
+#: schema: nd = AND, mn = OR, mx = >=, sm = <
+_PRED_MATRIX = """
+SELECT 'pred:orders', COUNT(*),
+       CAST(SUM(CASE WHEN o_totalprice > 100000.0 AND o_orderstatus = 'O'
+                     THEN 1 ELSE 0 END) AS BIGINT),
+       CAST(SUM(CASE WHEN o_totalprice <= 2000.0 OR o_orderstatus <> 'O'
+                     THEN 1 ELSE 0 END) AS DOUBLE),
+       CAST(SUM(CASE WHEN o_totalprice >= 250000.0 THEN 1 ELSE 0 END)
+            AS DOUBLE),
+       CAST(SUM(CASE WHEN o_totalprice < 50000.0 THEN 1 ELSE 0 END)
+            AS DOUBLE),
+       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE),
+       CAST(NULL AS DOUBLE)
+FROM orders
+"""
+
 _q(
     "cov_agg_family",
     "Full aggregate surface in one tagged result: the wire enum MIN/MAX/"
     "SUM/AVG/COUNT (ballista.proto:121-127), COUNT(DISTINCT), global "
-    "no-GROUP-BY aggregation, and exact MEDIAN/PERCENTILE (beyond-enum).",
+    "no-GROUP-BY aggregation, exact MEDIAN/PERCENTILE (beyond-enum), and "
+    "the comparison-operator matrix as conditional counts (proto:64-68).",
     f"""
 SELECT 'orders:' || o_orderstatus AS grp, COUNT(*) AS n,
        COUNT(DISTINCT o_custkey) AS nd,
@@ -703,6 +774,8 @@ SELECT 'li:' || l_returnflag, COUNT(*), CAST(NULL AS BIGINT),
        MEDIAN(l_quantity), PERCENTILE(l_quantity, 0.25),
        PERCENTILE(l_quantity, 0.75)
 FROM lineitem GROUP BY l_returnflag
+UNION ALL
+{_PRED_MATRIX}
 ORDER BY grp
 """,
     oracle=f"""
@@ -731,6 +804,8 @@ SELECT 'li:' || l_returnflag, COUNT(*), CAST(NULL AS BIGINT),
        MEDIAN(l_quantity), QUANTILE_CONT(l_quantity, 0.25),
        QUANTILE_CONT(l_quantity, 0.75)
 FROM lineitem GROUP BY l_returnflag
+UNION ALL
+{_PRED_MATRIX}
 ORDER BY grp
 """,
 )
@@ -813,14 +888,8 @@ SELECT * FROM (
 
 # --- 6. window function family ----------------------------------------------
 
-_q(
-    "cov_window_family",
-    "Window surface in one tagged result: ranking (row_number/rank/"
-    "dense_rank), ordered-frame running SUM + LAG/LEAD, and distribution "
-    "functions (NTILE/PERCENT_RANK/CUME_DIST) — all integer-ratio or "
-    "decimal-exact, so one SQL text serves both engines.",
-    """
-SELECT 'rank' AS op, c_mktsegment AS grp, c_custkey AS k,
+_WINDOW_RANK = """
+SELECT '{op}' AS op, c_mktsegment AS grp, c_custkey AS k,
        CAST(rn AS DOUBLE) AS v1, CAST(rnk AS DOUBLE) AS v2,
        CAST(drnk AS DOUBLE) AS v3
 FROM (
@@ -830,8 +899,10 @@ FROM (
   FROM customer
   WINDOW w AS (PARTITION BY c_mktsegment ORDER BY c_acctbal DESC, c_custkey)
 ) r WHERE rn <= 3
-UNION ALL
-SELECT 'agg', CAST(o_custkey AS STRING), o_orderkey,
+"""
+
+_WINDOW_AGG = """
+SELECT '{op}', CAST(o_custkey AS STRING), o_orderkey,
        CAST(ROUND(SUM(CAST(o_totalprice AS DECIMAL(18,6)))
             OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
@@ -839,13 +910,73 @@ SELECT 'agg', CAST(o_custkey AS STRING), o_orderkey,
        LAG(o_totalprice, 1) OVER w2, LEAD(o_totalprice, 1) OVER w2
 FROM orders WHERE o_custkey < 50
 WINDOW w2 AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
+"""
+
+_WINDOW_SQL = f"""
+{_WINDOW_RANK.format(op="rank")}
+UNION ALL
+{_WINDOW_AGG.format(op="agg")}
 UNION ALL
 SELECT 'dist', '', c_custkey,
        CAST(NTILE(4) OVER w3 AS DOUBLE),
        PERCENT_RANK() OVER w3, CUME_DIST() OVER w3
 FROM customer WHERE c_custkey < 200
 WINDOW w3 AS (ORDER BY c_acctbal, c_custkey)
-ORDER BY op, grp, k
+"""
+
+
+def _window_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The SQL branches, plus the ranking and running-frame branches
+    rebuilt through the DataFrame ``Window`` API ('rank_api', 'agg_api';
+    the oracle recomputes them from the SQL text)."""
+    t = register_tables(spark, sf_dir, ("customer", "orders"))
+    w = Window.partitionBy("c_mktsegment").orderBy(
+        F.col("c_acctbal").desc(), F.col("c_custkey")
+    )
+    rank_api = t["customer"].select(
+        F.lit("rank_api").alias("op"),
+        F.col("c_mktsegment").alias("grp"),
+        F.col("c_custkey").alias("k"),
+        F.row_number().over(w).cast("double").alias("v1"),
+        F.rank().over(w).cast("double").alias("v2"),
+        F.dense_rank().over(w).cast("double").alias("v3"),
+    ).where(F.col("v1") <= 3)
+    w2 = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    running = w2.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    agg_api = t["orders"].where(F.col("o_custkey") < 50).select(
+        F.lit("agg_api").alias("op"),
+        F.col("o_custkey").cast("string").alias("grp"),
+        F.col("o_orderkey").alias("k"),
+        F.round(F.sum(F.col("o_totalprice").cast(_DEC)).over(running), 2)
+        .cast("double")
+        .alias("v1"),
+        F.lag("o_totalprice", 1).over(w2).alias("v2"),
+        F.lead("o_totalprice", 1).over(w2).alias("v3"),
+    )
+    return (
+        spark.sql(_WINDOW_SQL)
+        .unionAll(rank_api)
+        .unionAll(agg_api)
+        .orderBy("op", "grp", "k")
+    )
+
+
+_b(
+    "cov_window_family",
+    "Window surface in one tagged result: ranking (row_number/rank/"
+    "dense_rank), ordered-frame running SUM + LAG/LEAD, and distribution "
+    "functions (NTILE/PERCENT_RANK/CUME_DIST) in SQL, plus the ranking and "
+    "running-frame branches again through the DataFrame Window API — all "
+    "integer-ratio or decimal-exact, so the SQL text is its own oracle.",
+    _window_builder,
+    oracle=f"""
+SELECT * FROM (
+  {_WINDOW_SQL}
+  UNION ALL
+  SELECT * FROM ({_WINDOW_RANK.format(op="rank_api")}) ra
+  UNION ALL
+  SELECT * FROM ({_WINDOW_AGG.format(op="agg_api")}) aa
+) t ORDER BY op, grp, k
 """,
 )
 

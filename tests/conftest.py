@@ -25,6 +25,7 @@ import pandas as pd
 import pytest
 
 from ballista_spark.session import get_spark
+from tools.gen_test_tiers import tier_key
 
 SF_SMOKE = os.environ.get("BS_TEST_SF_DIR", "/root/testdata/sf0.001")
 SF_CORRECT = os.environ.get("BS_TEST_SF_CORRECT_DIR", "/root/testdata/sf0.01")
@@ -50,10 +51,7 @@ def pytest_collection_modifyitems(config, items):
         reason="slow tier (>10s); set BS_TEST_FULL=1 to run"
     )
     for item in items:
-        # nodeid is "tests/test_x.py::name[param]"; the tier list keys on
-        # "test_x.py::name[param]"
-        path, _, name = item.nodeid.partition("::")
-        if f"{os.path.basename(path)}::{name}" in slow:
+        if tier_key(item.nodeid) in slow:
             item.add_marker(marker)
 
 
@@ -102,8 +100,13 @@ def _normalize(pdf: pd.DataFrame) -> pd.DataFrame:
 def assert_frames_match(spark_df, duck_rel, *, float_exact: bool = True) -> None:
     """Exact value comparison; float_exact=False allows 1e-9 relative slack
     (used only for intentionally approximate operators)."""
-    left = _normalize(spark_df.toPandas())
-    right = _normalize(duck_rel.df())
+    assert_pandas_match(spark_df.toPandas(), duck_rel.df(), float_exact=float_exact)
+
+
+def assert_pandas_match(left, right, *, float_exact: bool = True) -> None:
+    """:func:`assert_frames_match` over already-collected pandas frames."""
+    left = _normalize(left)
+    right = _normalize(right)
     assert left.shape == right.shape, (
         f"shape mismatch: spark={left.shape} duck={right.shape}\n"
         f"spark cols={list(left.columns)} duck cols={list(right.columns)}"

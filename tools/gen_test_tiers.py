@@ -12,6 +12,11 @@ mirrors — runs under ``BS_TEST_FULL=1`` exactly like the sf0.01 graded
 gate already does.  Durations come from the most recent
 ``tools/partest.py`` run's junit XMLs (tools/.partest_logs/*.xml).
 
+Keys are pytest nodeids without their directory (``test_x.py::name[p]``,
+``test_x.py::Class::name[p]``); :func:`tier_key` is the one place that
+format is built, here from junit records and in tests/conftest.py from
+collected nodeids.
+
 Usage:
     python tools/partest.py -n 8      # produces fresh junit XMLs
     python tools/gen_test_tiers.py    # regenerates tools/test_tiers.json
@@ -35,6 +40,36 @@ OUT = os.path.join(REPO, "tools", "test_tiers.json")
 #: 199 over threshold carrying 84% of the 10530 s sharded total).
 THRESHOLD_S = 10.0
 
+#: tests kept in the default tier whatever their duration: the only
+#: default-tier checks of CsvScan + selection/predicates + limit/offset,
+#: of funnel/retention analytics, and of as-of/range joins + sessionization
+ALWAYS_RUN = frozenset(
+    {
+        "test_graded.py::test_graded_smoke_scale[cov_csv_select]",
+        "test_graded.py::test_graded_smoke_scale[cov_events_analytics]",
+        "test_graded.py::test_graded_smoke_scale[cov_interval_joins]",
+    }
+)
+
+
+def tier_key(nodeid: str) -> str:
+    """Tier-list key of a pytest nodeid: the nodeid without its directory
+    (``tests/test_x.py::Class::name[p]`` -> ``test_x.py::Class::name[p]``)."""
+    path, sep, rest = nodeid.partition("::")
+    return os.path.basename(path) + sep + rest
+
+
+def junit_key(case: ET.Element) -> str:
+    """:func:`tier_key` of one junit ``<testcase>``, whose classname is the
+    dotted module path plus any enclosing classes (``tests.test_x.TestFoo``);
+    empty when the classname names no test module."""
+    parts = (case.get("classname") or "").split(".")
+    i = next((i for i, p in enumerate(parts) if p.startswith("test_")), None)
+    if i is None:
+        return ""
+    name = case.get("name") or ""
+    return tier_key("::".join((parts[i] + ".py", *parts[i + 1 :], name)))
+
 
 def main() -> int:
     slow: dict[str, float] = {}
@@ -47,13 +82,9 @@ def main() -> int:
         for case in root.iter("testcase"):
             n_total += 1
             t = float(case.get("time") or 0.0)
-            cls = case.get("classname") or ""
-            fname = os.path.basename(case.get("file") or "") or next(
-                (p + ".py" for p in cls.split(".") if p.startswith("test_")), cls
-            )
-            if t > THRESHOLD_S and fname:
-                nodeid = f"{fname}::{case.get('name')}"
-                slow[nodeid] = max(slow.get(nodeid, 0.0), round(t, 1))
+            key = junit_key(case)
+            if t > THRESHOLD_S and key and key not in ALWAYS_RUN:
+                slow[key] = max(slow.get(key, 0.0), round(t, 1))
     if not slow:
         print("no junit XMLs found — run tools/partest.py first", file=sys.stderr)
         return 2
