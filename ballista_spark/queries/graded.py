@@ -1543,22 +1543,6 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
         order it used to build in — the assembled plan is bit-identical
         because expression construction is deterministic and
         order-independent across branches."""
-        if os.environ.get("BS_SKETCH_TIMING"):
-            import sys as _s
-            import time as _t
-
-            def timed():
-                t0 = _t.perf_counter()
-                try:
-                    return fn()
-                finally:
-                    print(
-                        f"BS_BRANCH {getattr(fn, '__qualname__', fn)} "
-                        f"{_t.perf_counter() - t0:.2f}s",
-                        file=_s.stderr,
-                    )
-
-            return pool.submit(timed)
         return pool.submit(fn)
 
     _d = F.col("doc_id")
@@ -2283,8 +2267,6 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
     # truncated, computed exactly once before the entry's union
     # executes).  All branches share the (op, k, metric, v) schema
     # since the r11 stack rewrite, so the raw frames union directly.
-    import time as _time
-    _tt = [("resolve_start", _time.perf_counter())] if os.environ.get("BS_SKETCH_TIMING") else None
     hll_rows = hll_rows_f.result()
     contam_tagged = contam_tagged_f.result()
     pack_rows = pack_rows_f.result()
@@ -2299,12 +2281,8 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             sent_b_f, kw_b_f, bt_b_f, val_b_f, cq_b_f, afp_b_f,
         )
     ]
-    if _tt is not None:
-        _tt.append(("branches_resolved", _time.perf_counter()))
     try:
         raws = [f.result() for f in deferred_ckpts]
-        if _tt is not None:
-            _tt.append(("ckpts_resolved", _time.perf_counter()))
         if raws:
             u = raws[0]
             for r in raws[1:]:
@@ -2312,16 +2290,6 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             u.count()
     finally:
         pool.shutdown()
-    if _tt is not None:
-        _tt.append(("ckpts_materialized", _time.perf_counter()))
-        import sys as _sys
-        print(
-            "BS_SKETCH_TIMING "
-            + " ".join(
-                f"{b[0]}={b[1] - a[1]:.2f}s" for a, b in zip(_tt, _tt[1:])
-            ),
-            file=_sys.stderr,
-        )
 
     out = (
         hll_rows.unionAll(sb_f.result())

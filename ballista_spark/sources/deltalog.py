@@ -34,9 +34,10 @@ Scale design:
   to a per-partition-value union with literal columns (correct, more
   plan nodes; the fallback logs a warning naming the cost).
 - **Commits are put-if-absent.**  ``{version:020d}.json`` is created
-  with an exclusive-create open; a losing racer re-reads the snapshot
-  and retries on top (optimistic concurrency, the Delta commit
-  protocol).
+  with an exclusive-create open at the version the writer READ + 1; a
+  losing racer re-reads the snapshot, fails if a winner conflicts with
+  it, and otherwise retries on top (optimistic concurrency, the Delta
+  commit protocol — one path, ``_commit``).
 - **Filesystem-agnostic metadata plane** (round 8): every log/staging
   IO site routes through ``sources/fsio.py`` — plain paths keep the
   local ``os`` fast-path, URIs (s3://, hdfs://, + Hadoop spellings
@@ -112,7 +113,8 @@ class DeltaProtocolError(RuntimeError):
 
 
 class DeltaConcurrentCommitError(RuntimeError):
-    """Commit lost the optimistic-concurrency race too many times."""
+    """A concurrent commit conflicts with this one, or the commit lost
+    the optimistic-concurrency race too many times."""
 
 
 # ---------------------------------------------------------------------------
@@ -1279,6 +1281,167 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
+#: lost commit races one commit absorbs before giving up
+_COMMIT_ATTEMPTS = 10
+#: every commit kind writes a checkpoint at multiples of this version
+_CHECKPOINT_INTERVAL = 10
+
+
+def _commit_info(operation: str, parameters: dict) -> dict:
+    return {
+        "commitInfo": {
+            "timestamp": _now_ms(),
+            "operation": operation,
+            "operationParameters": parameters,
+        }
+    }
+
+
+def _removes(files: list[_AddFile], data_change: bool = True) -> list[dict]:
+    """``remove`` actions for ``files``, each naming the deletion vector
+    it removes (the spec keys a logical file by path + DV)."""
+    ts = _now_ms()
+    return [
+        {
+            "remove": {
+                "path": f.path,
+                "deletionTimestamp": ts,
+                "dataChange": data_change,
+                **(
+                    {"deletionVector": f.deletion_vector}
+                    if f.deletion_vector else {}
+                ),
+            }
+        }
+        for f in files
+    ]
+
+
+def _metadata(
+    snap: DeltaSnapshot | None,
+    schema: T.StructType,
+    partition_columns: list[str] | None = None,
+    configuration: dict | None = None,
+) -> dict:
+    """A ``metaData`` action; partitioning and configuration default to
+    ``snap``'s.  It re-emits ``snap.table_id``: readers treat an id
+    change as table replacement, so only a new table gets a fresh id."""
+    return {
+        "metaData": {
+            "id": (snap.table_id if snap else "") or str(uuid.uuid4()),
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema.json(),
+            "partitionColumns": list(
+                snap.partition_columns if partition_columns is None
+                else partition_columns
+            ),
+            "configuration": dict(
+                snap.configuration if configuration is None else configuration
+            ),
+            "createdTime": _now_ms(),
+        }
+    }
+
+
+def _txn_applied(snap: DeltaSnapshot | None, txn: tuple[str, int] | None) -> bool:
+    """The ``txn`` (app id, version) is already in ``snap`` — a replay."""
+    return (
+        txn is not None
+        and snap is not None
+        and snap.app_versions.get(txn[0], -1) >= txn[1]
+    )
+
+
+def _file_key(path: str, dv: dict | None) -> tuple:
+    """A logical file's identity: its path plus its deletion vector's
+    unique id, so a file re-added with a new vector is a new file."""
+    if not dv:
+        return path, None
+    return path, dv.get("storageType"), dv.get("pathOrInlineDv"), dv.get("offset")
+
+
+def _table_shape(snap: DeltaSnapshot) -> tuple:
+    # a checkpoint spells absent protocol fields as None
+    proto = {k: v for k, v in snap.protocol.items() if v is not None}
+    return proto, snap.schema, snap.partition_columns, snap.configuration
+
+
+def _commit(
+    table_path: str,
+    snap: DeltaSnapshot | None,
+    actions,
+    txn: tuple[str, int] | None = None,
+    checkpoint_interval: int = _CHECKPOINT_INTERVAL,
+) -> int | None:
+    """Publish one commit at the READ version + 1 (``snap``; None is a
+    new table, which commits at 0) — the Delta optimistic-concurrency
+    rule.  When another writer took that version, the log is re-read
+    once and the winners are checked:
+
+    - the ``txn`` (app id, version) is already applied: return None;
+    - a file this commit removes is no longer live (path + deletion
+      vector), or, for staged actions, a winner changed the table's
+      protocol, schema, partitioning or configuration: raise
+      :class:`DeltaConcurrentCommitError`;
+    - otherwise retry at the new version + 1.
+
+    ``actions`` is either the staged list (DML and OPTIMIZE wrote their
+    data files against ``snap``, so the list is kept as is) or a
+    function of the snapshot the commit lands on (WRITE and the
+    metadata-only commits rebuild against the winner); the function may
+    return None when nothing is left to commit.  The ``txn`` action is
+    appended here.  A commit landing on a multiple of
+    ``checkpoint_interval`` writes a checkpoint.  Returns the version."""
+    rebuild = actions if callable(actions) else None
+    read = snap
+    version = 0 if snap is None else snap.version + 1
+    for _ in range(_COMMIT_ATTEMPTS):
+        attempt = rebuild(snap) if rebuild else actions
+        if attempt is None:
+            return None
+        if txn is not None:
+            attempt = attempt + [
+                {
+                    "txn": {
+                        "appId": txn[0],
+                        "version": txn[1],
+                        "lastUpdated": _now_ms(),
+                    }
+                }
+            ]
+        try:
+            _attempt_commit(table_path, version, attempt)
+        except FileExistsError:
+            snap = read_delta_snapshot(table_path)
+            if _txn_applied(snap, txn):
+                return None
+            live = {_file_key(f.path, f.deletion_vector) for f in snap.files}
+            removed = [a["remove"] for a in attempt if "remove" in a]
+            gone = [
+                r["path"]
+                for r in removed
+                if _file_key(r["path"], r.get("deletionVector")) not in live
+            ]
+            moved = rebuild is None and _table_shape(snap) != _table_shape(read)
+            if gone or moved:
+                raise DeltaConcurrentCommitError(
+                    f"version {version} of {table_path!r} was taken by a "
+                    "conflicting commit ("
+                    + (f"removed {gone[:3]}" if gone else "metadata changed")
+                    + "); rerun on the new snapshot"
+                ) from None
+            version = snap.version + 1
+            continue
+        if checkpoint_interval and version > 0 and (
+            version % checkpoint_interval == 0
+        ):
+            _write_checkpoint(table_path, version)
+        return version
+    raise DeltaConcurrentCommitError(
+        f"lost the commit race {_COMMIT_ATTEMPTS} times at {table_path!r}"
+    )
+
+
 #: NON-LOCAL commits staging at least this many files collect footer
 #: stats executor-side (one mapInPandas job).  Local paths always use
 #: the driver loop: measured on this box, 1,000 local footer reads take
@@ -1416,8 +1579,7 @@ def write_delta_table(
     table_path: str,
     mode: str = "append",
     partition_by: list[str] | None = None,
-    checkpoint_interval: int = 10,
-    max_retries: int = 10,
+    checkpoint_interval: int = _CHECKPOINT_INTERVAL,
     txn_app_id: str | None = None,
     txn_version: int | None = None,
 ) -> int | None:
@@ -1429,9 +1591,11 @@ def write_delta_table(
     the old snapshot or the new one, never a torn state.  ``mode``:
     ``append`` adds files; ``overwrite`` also removes the previous
     snapshot's files (logically — data files stay for time travel until
-    a vacuum).  A lost commit race re-reads the log and retries with the
-    next version (append) or fails cleanly (overwrite, where the removes
-    may be stale).
+    a vacuum).  The commit lands at the version read before staging + 1;
+    when a concurrent commit took it, the actions are rebuilt on the
+    winner (an overwrite then removes the winner's files too, unless the
+    winner removed a file the overwrite removes, which raises
+    :class:`DeltaConcurrentCommitError`).
 
     ``txn_app_id``/``txn_version`` make the commit IDEMPOTENT (the Delta
     ``txn`` action): a version already recorded for the app id is
@@ -1445,21 +1609,19 @@ def write_delta_table(
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version go together")
-    prior = (
-        read_delta_snapshot(table_path)
-        if _list_log_versions(table_path)
-        else None
-    )
+    txn = None if txn_app_id is None else (txn_app_id, int(txn_version))
+    try:
+        prior = read_delta_snapshot(table_path)
+    except FileNotFoundError:
+        prior = None
     if partition_by is None and prior is not None:
         # not specified: inherit the table's partitioning (the common
         # append case — a caller shouldn't have to restate it)
         partition_by = prior.partition_columns
     partition_by = list(partition_by or [])
     fsio.mkdirs(table_path)
-    if txn_app_id is not None and prior is not None:
-        committed = prior.app_versions.get(txn_app_id)
-        if committed is not None and committed >= int(txn_version):
-            return None  # replay of an already-committed batch
+    if _txn_applied(prior, txn):
+        return None  # replay of an already-committed batch
 
     adds = _stage_data_files(
         df,
@@ -1468,120 +1630,52 @@ def write_delta_table(
         column_mapping=prior.column_mapping if prior else None,
     )
 
-    schema_json = df.schema.json()
-    for attempt in range(max_retries):
-        versions = _list_log_versions(table_path)
-        next_version = (versions[-1] + 1) if versions else 0
-        if txn_app_id is not None and attempt > 0 and versions:
-            # we lost a race — the winner may have been our own replay
-            committed = read_delta_snapshot(table_path).app_versions.get(
-                txn_app_id
-            )
-            if committed is not None and committed >= int(txn_version):
-                return None
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "WRITE",
-                    "operationParameters": {"mode": mode.upper()},
-                }
-            }
-        ]
-        if next_version == 0:
-            actions.append(
+    def build(prev: DeltaSnapshot | None) -> list[dict]:
+        actions = [_commit_info("WRITE", {"mode": mode.upper()})]
+        if prev is None:
+            return actions + [
                 {
                     "protocol": {
                         "minReaderVersion": 1,
                         "minWriterVersion": MAX_WRITER_VERSION,
                     }
-                }
-            )
-            actions.append(
-                {
-                    "metaData": {
-                        "id": str(uuid.uuid4()),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": schema_json,
-                        "partitionColumns": partition_by,
-                        "configuration": {},
-                        "createdTime": _now_ms(),
-                    }
-                }
-            )
-        else:
-            prev = read_delta_snapshot(table_path)
-            _check_writer_protocol(
-                prev,
-                "WRITE",
-                adds_rows=True,
-                removes_rows=(mode == "overwrite"),
-            )
-            # compare names + types; nullability differences (literal
-            # columns are non-nullable) don't constitute schema change
-            shape = lambda sch: [(f.name, f.dataType) for f in sch.fields]  # noqa: E731
-            if shape(prev.schema) != shape(df.schema) or (
-                prev.partition_columns != partition_by
-            ):
-                if mode != "overwrite":
-                    raise ValueError(
-                        "schema/partitioning mismatch with existing table "
-                        "(append requires identical schema; use overwrite)"
-                    )
-                if prev.column_mapping:
-                    raise DeltaProtocolError(
-                        "overwrite with a schema/partitioning change on a "
-                        "column-mapped table would replace metaData and "
-                        "drop the mapping — ALTER the schema first, then "
-                        "overwrite with the matching shape"
-                    )
-                actions.append(
-                    {
-                        "metaData": {
-                            # overwrite replaces data, not table identity
-                            "id": prev.table_id or str(uuid.uuid4()),
-                            "format": {"provider": "parquet", "options": {}},
-                            "schemaString": schema_json,
-                            "partitionColumns": partition_by,
-                            "configuration": {},
-                            "createdTime": _now_ms(),
-                        }
-                    }
-                )
-            if mode == "overwrite":
-                ts = _now_ms()
-                for old in prev.files:
-                    actions.append(
-                        {
-                            "remove": {
-                                "path": old.path,
-                                "deletionTimestamp": ts,
-                                "dataChange": True,
-                            }
-                        }
-                    )
-        if txn_app_id is not None:
-            actions.append(
-                {
-                    "txn": {
-                        "appId": txn_app_id,
-                        "version": int(txn_version),
-                        "lastUpdated": _now_ms(),
-                    }
-                }
-            )
-        actions.extend(adds)
-        try:
-            _attempt_commit(table_path, next_version, actions)
-        except FileExistsError:
-            continue  # lost the race: recompute against the new log tail
-        if checkpoint_interval and next_version > 0 and (
-            next_version % checkpoint_interval == 0
+                },
+                _metadata(None, df.schema, partition_by, {}),
+                *adds,
+            ]
+        _check_writer_protocol(
+            prev,
+            "WRITE",
+            adds_rows=True,
+            removes_rows=(mode == "overwrite"),
+        )
+        # compare names + types; nullability differences (literal
+        # columns are non-nullable) don't constitute schema change
+        shape = lambda sch: [(f.name, f.dataType) for f in sch.fields]  # noqa: E731
+        if shape(prev.schema) != shape(df.schema) or (
+            prev.partition_columns != partition_by
         ):
-            _write_checkpoint(table_path, next_version)
-        return next_version
-    raise DeltaConcurrentCommitError(
-        f"lost the commit race {max_retries} times at {table_path!r}"
+            if mode != "overwrite":
+                raise ValueError(
+                    "schema/partitioning mismatch with existing table "
+                    "(append requires identical schema; use overwrite)"
+                )
+            if prev.column_mapping:
+                raise DeltaProtocolError(
+                    "overwrite with a schema/partitioning change on a "
+                    "column-mapped table would replace metaData and "
+                    "drop the mapping — ALTER the schema first, then "
+                    "overwrite with the matching shape"
+                )
+            # overwrite replaces data, not table identity
+            actions.append(_metadata(prev, df.schema, partition_by, {}))
+        if mode == "overwrite":
+            actions += _removes(prev.files)
+        return actions + adds
+
+    return _commit(
+        table_path, prior, build, txn=txn,
+        checkpoint_interval=checkpoint_interval,
     )
 
 
@@ -1604,120 +1698,93 @@ def alter_delta_table(
     drop_columns = list(drop_columns or [])
     if not add_columns and not drop_columns:
         raise ValueError("ALTER needs add_columns and/or drop_columns")
-    for _attempt in range(10):
-        result = _alter_once(table_path, add_columns, drop_columns)
-        if result is not None:
-            return result
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
 
-
-def _alter_once(
-    table_path: str, add_columns: dict, drop_columns: list[str]
-) -> int | None:
-    """One ALTER attempt built against the LIVE snapshot (so a raced
-    concurrent ALTER's schema is never clobbered); None = lost the
-    commit race, recompute and retry."""
-    snap = read_delta_snapshot(table_path)
-    _check_writer_protocol(snap, "ALTER")
-    mapped = snap.configuration.get("delta.columnMapping.mode") in (
-        "name", "id"
-    )
-    names = {f.name for f in snap.schema.fields}
-    dropped = set(json.loads(
-        snap.configuration.get("ballista.droppedColumns", "[]")
-    ))
-    for c in add_columns:
-        if c in names:
-            raise ValueError(f"column {c!r} already exists")
-        if c in dropped and not mapped:
-            # the unmapped reader projects parquet by NAME: re-adding a
-            # dropped name would RESURRECT the old physical data in
-            # pre-drop files (the reason delta-spark gates DROP behind
-            # column mapping).  Rewrite the files first, then the name
-            # frees up.  Mapped tables are immune: a re-added name gets
-            # a FRESH physical name, so old file data stays invisible.
-            raise ValueError(
-                f"column {c!r} was previously dropped and its name is "
-                "retired; re-adding it would resurrect old file data. "
-                "Use a new name (the Iceberg field-id discipline, "
-                "spelled in names), or enable_column_mapping() first"
-            )
-    for c in drop_columns:
-        if c not in names:
-            raise ValueError(f"column {c!r} does not exist")
-        if c in snap.partition_columns:
-            raise ValueError(f"cannot drop partition column {c!r}")
-        if c in add_columns:
-            raise ValueError(f"column {c!r} both added and dropped")
-    fields = [
-        f for f in snap.schema.fields if f.name not in set(drop_columns)
-    ]
-    config = dict(snap.configuration)
-    if mapped:
-        # new columns join the mapping: fresh id (never reused) + a
-        # fresh physical name, delta-spark's col-<uuid> convention
-        max_id = max(
-            [int(config.get("delta.columnMapping.maxColumnId", 0))]
-            + [
-                int((f.metadata or {}).get("delta.columnMapping.id", 0))
-                for f in snap.schema.fields
-            ]
+    def build(snap: DeltaSnapshot) -> list[dict]:
+        # built against the snapshot the commit lands on, so a raced
+        # concurrent ALTER's schema is never clobbered
+        _check_writer_protocol(snap, "ALTER")
+        mapped = snap.configuration.get("delta.columnMapping.mode") in (
+            "name", "id"
         )
-        for c, t in add_columns.items():
-            max_id += 1
-            fields.append(
-                T.StructField(
-                    c,
-                    T._parse_datatype_string(t),  # noqa: SLF001
-                    True,
-                    metadata={
-                        "delta.columnMapping.id": max_id,
-                        "delta.columnMapping.physicalName": (
-                            f"col-{uuid.uuid4().hex[:16]}"
-                        ),
-                    },
+        names = {f.name for f in snap.schema.fields}
+        dropped = set(json.loads(
+            snap.configuration.get("ballista.droppedColumns", "[]")
+        ))
+        for c in add_columns:
+            if c in names:
+                raise ValueError(f"column {c!r} already exists")
+            if c in dropped and not mapped:
+                # the unmapped reader projects parquet by NAME: re-adding a
+                # dropped name would RESURRECT the old physical data in
+                # pre-drop files (the reason delta-spark gates DROP behind
+                # column mapping).  Rewrite the files first, then the name
+                # frees up.  Mapped tables are immune: a re-added name gets
+                # a FRESH physical name, so old file data stays invisible.
+                raise ValueError(
+                    f"column {c!r} was previously dropped and its name is "
+                    "retired; re-adding it would resurrect old file data. "
+                    "Use a new name (the Iceberg field-id discipline, "
+                    "spelled in names), or enable_column_mapping() first"
                 )
-            )
-        config["delta.columnMapping.maxColumnId"] = str(max_id)
-    else:
-        fields += [
-            T.StructField(c, T._parse_datatype_string(t), True)  # noqa: SLF001
-            for c, t in add_columns.items()
+        for c in drop_columns:
+            if c not in names:
+                raise ValueError(f"column {c!r} does not exist")
+            if c in snap.partition_columns:
+                raise ValueError(f"cannot drop partition column {c!r}")
+            if c in add_columns:
+                raise ValueError(f"column {c!r} both added and dropped")
+        fields = [
+            f for f in snap.schema.fields if f.name not in set(drop_columns)
         ]
-        config["ballista.droppedColumns"] = json.dumps(
-            sorted(dropped | set(drop_columns))
-        )
-    if not fields:
-        raise ValueError("cannot drop every column")
-    new_schema = T.StructType(fields)
-    actions = [
-        {
-            "commitInfo": {
-                "timestamp": _now_ms(),
-                "operation": "ALTER TABLE",
-                "operationParameters": {
+        config = dict(snap.configuration)
+        if mapped:
+            # new columns join the mapping: fresh id (never reused) + a
+            # fresh physical name, delta-spark's col-<uuid> convention
+            max_id = max(
+                [int(config.get("delta.columnMapping.maxColumnId", 0))]
+                + [
+                    int((f.metadata or {}).get("delta.columnMapping.id", 0))
+                    for f in snap.schema.fields
+                ]
+            )
+            for c, t in add_columns.items():
+                max_id += 1
+                fields.append(
+                    T.StructField(
+                        c,
+                        T._parse_datatype_string(t),  # noqa: SLF001
+                        True,
+                        metadata={
+                            "delta.columnMapping.id": max_id,
+                            "delta.columnMapping.physicalName": (
+                                f"col-{uuid.uuid4().hex[:16]}"
+                            ),
+                        },
+                    )
+                )
+            config["delta.columnMapping.maxColumnId"] = str(max_id)
+        else:
+            fields += [
+                T.StructField(c, T._parse_datatype_string(t), True)  # noqa: SLF001
+                for c, t in add_columns.items()
+            ]
+            config["ballista.droppedColumns"] = json.dumps(
+                sorted(dropped | set(drop_columns))
+            )
+        if not fields:
+            raise ValueError("cannot drop every column")
+        return [
+            _commit_info(
+                "ALTER TABLE",
+                {
                     "added": json.dumps(add_columns),
                     "dropped": json.dumps(drop_columns),
                 },
-            }
-        },
-        {
-            "metaData": {
-                "id": snap.table_id or str(uuid.uuid4()),
-                "format": {"provider": "parquet", "options": {}},
-                "schemaString": new_schema.json(),
-                "partitionColumns": snap.partition_columns,
-                "configuration": config,
-                "createdTime": _now_ms(),
-            }
-        },
-    ]
-    versions = _list_log_versions(table_path)
-    try:
-        _attempt_commit(table_path, versions[-1] + 1, actions)
-        return versions[-1] + 1
-    except FileExistsError:
-        return None
+            ),
+            _metadata(snap, T.StructType(fields), configuration=config),
+        ]
+
+    return _commit(table_path, read_delta_snapshot(table_path), build)
 
 
 def enable_column_mapping(table_path: str) -> int | None:
@@ -1736,8 +1803,8 @@ def enable_column_mapping(table_path: str) -> int | None:
     enumerated, per the table-features spec).  Mapping cannot be
     DISABLED once on (protocol rule) — there is deliberately no
     inverse."""
-    for _attempt in range(10):
-        snap = read_delta_snapshot(table_path)
+
+    def build(snap: DeltaSnapshot) -> list[dict] | None:
         _check_writer_protocol(snap, "ALTER")
         if snap.configuration.get("delta.columnMapping.mode") in (
             "name", "id"
@@ -1777,39 +1844,22 @@ def enable_column_mapping(table_path: str) -> int | None:
                 "minWriterVersion": max(mwv, 5),
             }
         actions = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": json.dumps(
-                            {"delta.columnMapping.mode": "name"}
-                        )
-                    },
-                }
-            }
+            _commit_info(
+                "SET TBLPROPERTIES",
+                {
+                    "properties": json.dumps(
+                        {"delta.columnMapping.mode": "name"}
+                    )
+                },
+            )
         ]
         if new_proto != proto:
             actions.append({"protocol": new_proto})
-        actions.append(
-            {
-                "metaData": {
-                    "id": snap.table_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": T.StructType(fields).json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": config,
-                    "createdTime": _now_ms(),
-                }
-            }
-        )
-        versions = _list_log_versions(table_path)
-        try:
-            _attempt_commit(table_path, versions[-1] + 1, actions)
-            return versions[-1] + 1
-        except FileExistsError:
-            continue
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
+        return actions + [
+            _metadata(snap, T.StructType(fields), configuration=config)
+        ]
+
+    return _commit(table_path, read_delta_snapshot(table_path), build)
 
 
 #: table properties whose semantics ride on a writer feature — SETTING
@@ -1870,8 +1920,8 @@ def set_delta_table_properties(
                 "enable_column_mapping() (and mapping cannot be "
                 "disabled once on, per the protocol)"
             )
-    for _attempt in range(10):
-        snap = read_delta_snapshot(table_path)
+
+    def build(snap: DeltaSnapshot) -> list[dict]:
         _check_writer_protocol(snap, "ALTER")
         config = dict(snap.configuration)
         for k in unset:
@@ -1888,38 +1938,19 @@ def set_delta_table_properties(
                     new_proto if new_proto else proto, *req
                 )
         actions = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "SET TBLPROPERTIES",
-                    "operationParameters": {
-                        "properties": json.dumps(set_props),
-                        "unset": json.dumps(unset),
-                    },
-                }
-            }
+            _commit_info(
+                "SET TBLPROPERTIES",
+                {
+                    "properties": json.dumps(set_props),
+                    "unset": json.dumps(unset),
+                },
+            )
         ]
         if new_proto and new_proto != proto:
             actions.append({"protocol": new_proto})
-        actions.append(
-            {
-                "metaData": {
-                    "id": snap.table_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": snap.schema.json(),
-                    "partitionColumns": snap.partition_columns,
-                    "configuration": config,
-                    "createdTime": _now_ms(),
-                }
-            }
-        )
-        versions = _list_log_versions(table_path)
-        try:
-            _attempt_commit(table_path, versions[-1] + 1, actions)
-            return versions[-1] + 1
-        except FileExistsError:
-            continue
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
+        return actions + [_metadata(snap, snap.schema, configuration=config)]
+
+    return _commit(table_path, read_delta_snapshot(table_path), build)
 
 
 def rename_delta_column(table_path: str, old: str, new: str) -> int:
@@ -1932,14 +1963,10 @@ def rename_delta_column(table_path: str, old: str, new: str) -> int:
     sees the old name.  Returns the rename's commit version."""
     if old == new:
         raise ValueError("rename to the same name is a no-op")
-    for _attempt in range(10):
-        snap = read_delta_snapshot(table_path)
+    enable_column_mapping(table_path)  # a no-op on a mapped table
+
+    def build(snap: DeltaSnapshot) -> list[dict]:
         _check_writer_protocol(snap, "ALTER")
-        if snap.configuration.get("delta.columnMapping.mode") not in (
-            "name", "id"
-        ):
-            enable_column_mapping(table_path)
-            snap = read_delta_snapshot(table_path)
         names = [f.name for f in snap.schema.fields]
         if old not in names:
             raise ValueError(f"column {old!r} does not exist")
@@ -1954,34 +1981,16 @@ def rename_delta_column(table_path: str, old: str, new: str) -> int:
             )
             for f in snap.schema.fields
         ]
-        actions = [
-            {
-                "commitInfo": {
-                    "timestamp": _now_ms(),
-                    "operation": "RENAME COLUMN",
-                    "operationParameters": {"from": old, "to": new},
-                }
-            },
-            {
-                "metaData": {
-                    "id": snap.table_id or str(uuid.uuid4()),
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": T.StructType(fields).json(),
-                    "partitionColumns": [
-                        new if c == old else c for c in snap.partition_columns
-                    ],
-                    "configuration": dict(snap.configuration),
-                    "createdTime": _now_ms(),
-                }
-            },
+        return [
+            _commit_info("RENAME COLUMN", {"from": old, "to": new}),
+            _metadata(
+                snap,
+                T.StructType(fields),
+                [new if c == old else c for c in snap.partition_columns],
+            ),
         ]
-        versions = _list_log_versions(table_path)
-        try:
-            _attempt_commit(table_path, versions[-1] + 1, actions)
-            return versions[-1] + 1
-        except FileExistsError:
-            continue
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
+
+    return _commit(table_path, read_delta_snapshot(table_path), build)
 
 
 def _write_checkpoint(table_path: str, version: int) -> None:
@@ -2275,44 +2284,13 @@ def compact_delta_table(
             _rewrite(group, key, shaped)
     if not adds:
         return None
-    ts = _now_ms()
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "OPTIMIZE",
-                "operationParameters": {
-                    "targetSize": str(target_file_bytes)
-                },
-            }
-        }
-    ]
-    for old in removes:
-        actions.append(
-            {
-                "remove": {
-                    "path": old.path,
-                    "deletionTimestamp": ts,
-                    "dataChange": False,
-                }
-            }
-        )
-    actions.extend(adds)
-    for _attempt in range(10):
-        versions = _list_log_versions(table_path)
-        next_version = versions[-1] + 1
-        try:
-            _attempt_commit(table_path, next_version, actions)
-            return next_version
-        except FileExistsError:
-            # a writer landed mid-compaction; only safe if OUR inputs are
-            # all still live (no lost update) — re-check and retry
-            live = {f.path for f in read_delta_snapshot(table_path).files}
-            if not all(old.path in live for old in removes):
-                raise DeltaConcurrentCommitError(
-                    "compaction inputs were removed concurrently; rerun"
-                ) from None
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
+    return _commit(
+        table_path,
+        snap,
+        [_commit_info("OPTIMIZE", {"targetSize": str(target_file_bytes)})]
+        + _removes(removes, data_change=False)
+        + adds,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -2409,13 +2387,12 @@ def merge_delta_table(
     _check_writer_protocol(
         snap, "MERGE", adds_rows=True, removes_rows=True
     )
-    if txn_app_id is not None:
+    txn = None if txn_app_id is None else (txn_app_id, int(txn_version))
+    if _txn_applied(snap, txn):
         # streaming-upsert idempotence (the Delta `txn` action): a
         # replayed epoch is detected in the log and skipped before any
         # file is staged
-        committed = snap.app_versions.get(txn_app_id)
-        if committed is not None and committed >= int(txn_version):
-            return None
+        return None
     if when_matched == "update" or insert_not_matched:
         # names + types must match; nullability may differ (literals are
         # non-nullable, table columns usually nullable — irrelevant here)
@@ -2513,65 +2490,18 @@ def merge_delta_table(
     source.unpersist()
     if not adds and not touched:
         return None
-
-    ts = _now_ms()
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {
-                    "predicate": ",".join(on),
-                    "matchedAction": when_matched,
-                },
-            }
-        }
-    ]
-    if txn_app_id is not None:
-        actions.append(
-            {
-                "txn": {
-                    "appId": txn_app_id,
-                    "version": int(txn_version),
-                    "lastUpdated": ts,
-                }
-            }
-        )
-    for old in touched:
-        actions.append(
-            {
-                "remove": {
-                    "path": old.path,
-                    "deletionTimestamp": ts,
-                    "dataChange": True,
-                }
-            }
-        )
-    actions.extend(adds)
-    for _attempt in range(10):
-        versions = _list_log_versions(table_path)
-        next_version = versions[-1] + 1
-        try:
-            _attempt_commit(table_path, next_version, actions)
-            return next_version
-        except FileExistsError:
-            new_snap = read_delta_snapshot(table_path)
-            if txn_app_id is not None:
-                committed = new_snap.app_versions.get(txn_app_id)
-                if committed is not None and committed >= int(txn_version):
-                    return None  # the race loser WAS our replayed epoch
-            live = {f.path for f in new_snap.files}
-            if not all(old.path in live for old in touched):
-                raise DeltaConcurrentCommitError(
-                    "merge inputs were removed concurrently; rerun on the "
-                    "new snapshot"
-                ) from None
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
+    info = _commit_info(
+        "MERGE", {"predicate": ",".join(on), "matchedAction": when_matched}
+    )
+    return _commit(table_path, snap, [info] + _removes(touched) + adds, txn=txn)
 
 
 def _filters_to_column(filters: list[tuple[str, str, object]]):
     """AND of (col, op, value) triples as a real row predicate — the
-    exact-match twin of the proof language `_file_may_match` prunes on."""
+    exact-match twin of the proof language `_file_may_match` prunes on.
+    A NULL comparison counts as false, so DELETE keeps the row and
+    UPDATE leaves it untouched (SQL semantics).  Shared with
+    ``sources/iceberg.py``."""
     cond = F.lit(True)
     for col, op, val in filters:
         c = F.col(col)
@@ -2591,7 +2521,7 @@ def _filters_to_column(filters: list[tuple[str, str, object]]):
             cond = cond & c.isNull()
         else:
             raise ValueError(f"unsupported filter operator {op!r}")
-    return cond
+    return F.coalesce(cond, F.lit(False))
 
 
 def _touched_files(
@@ -2615,7 +2545,7 @@ def _touched_files(
     # merge probe comment: input_file_name() is '' after a DV shuffle
     probe = (
         _scan_snapshot(spark, probe_snap, file_col="__file")
-        .where(F.coalesce(_filters_to_column(filters), F.lit(False)))
+        .where(_filters_to_column(filters))
         .select("__file")
         .distinct()
     )
@@ -2623,57 +2553,6 @@ def _touched_files(
     for r in probe.collect():
         touched_rel.add(_normalize_rel(snap.table_path, r["__file"]))
     return [f for f in snap.files if f.path in touched_rel]
-
-
-def _commit_rewrite(
-    table_path: str,
-    touched: list[_AddFile],
-    adds: list[dict],
-    operation: str,
-    parameters: dict,
-    pre_actions: list[dict] | None = None,
-) -> int:
-    """remove(touched)+add(new) as ONE exclusive-create commit, with the
-    merge-path race handling: a concurrent commit that removed one of
-    our touched files aborts (rerun on the new snapshot).
-    ``pre_actions`` prepend after commitInfo (the DV-delete path's
-    protocol upgrade)."""
-    ts = _now_ms()
-    actions: list[dict] = [
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": operation,
-                "operationParameters": parameters,
-            }
-        }
-    ]
-    actions.extend(pre_actions or [])
-    for old in touched:
-        actions.append(
-            {
-                "remove": {
-                    "path": old.path,
-                    "deletionTimestamp": ts,
-                    "dataChange": True,
-                }
-            }
-        )
-    actions.extend(adds)
-    for _attempt in range(10):
-        versions = _list_log_versions(table_path)
-        next_version = versions[-1] + 1
-        try:
-            _attempt_commit(table_path, next_version, actions)
-            return next_version
-        except FileExistsError:
-            live = {f.path for f in read_delta_snapshot(table_path).files}
-            if not all(old.path in live for old in touched):
-                raise DeltaConcurrentCommitError(
-                    f"{operation.lower()} inputs were removed concurrently; "
-                    "rerun on the new snapshot"
-                ) from None
-    raise DeltaConcurrentCommitError("lost the commit race 10 times")
 
 
 def delete_from_delta_table(
@@ -2737,7 +2616,7 @@ def delete_from_delta_table(
         )
     tsnap = snap.with_files(touched)
     survivors = _scan_snapshot(spark, tsnap).where(
-        ~F.coalesce(_filters_to_column(filters), F.lit(False))
+        ~_filters_to_column(filters)
     )
     adds = _stage_data_files(
         survivors,
@@ -2746,13 +2625,10 @@ def delete_from_delta_table(
         data_change=True,
         column_mapping=snap.column_mapping,
     )
-    return _commit_rewrite(
-        table_path,
-        touched,
-        adds,
-        "DELETE",
-        {"predicate": json.dumps([list(map(str, f)) for f in filters])},
+    info = _commit_info(
+        "DELETE", {"predicate": json.dumps([list(map(str, f)) for f in filters])}
     )
+    return _commit(table_path, snap, [info] + _removes(touched) + adds)
 
 
 def _delete_with_deletion_vectors(
@@ -2780,7 +2656,7 @@ def _delete_with_deletion_vectors(
     tsnap = snap.with_files(touched)
     matched = (
         _scan_snapshot(spark, tsnap, file_col="__file", pos_col="__rowpos")
-        .where(F.coalesce(_filters_to_column(list(filters)), F.lit(False)))
+        .where(_filters_to_column(list(filters)))
         .select("__file", "__rowpos")
     )
 
@@ -2932,7 +2808,15 @@ def _delete_with_deletion_vectors(
         fsio.write_bytes(
             f"{table_path.rstrip('/')}/deletion_vector_{u}.bin", bytes(blob)
         )
-    pre_actions: list[dict] = []
+    actions = [
+        _commit_info(
+            "DELETE",
+            {
+                "predicate": json.dumps([list(map(str, f)) for f in filters]),
+                "deletionVectors": "true",
+            },
+        )
+    ]
     if "deletionVectors" not in snap.reader_features:
         proto = dict(snap.protocol or {})
         rf = set(proto.get("readerFeatures") or [])
@@ -2950,7 +2834,7 @@ def _delete_with_deletion_vectors(
         rf |= _LEGACY_READER_FEATURES.get(
             int(proto.get("minReaderVersion", 1)), frozenset()
         )
-        pre_actions.append(
+        actions.append(
             {
                 "protocol": {
                     "minReaderVersion": 3,
@@ -2960,17 +2844,8 @@ def _delete_with_deletion_vectors(
                 }
             }
         )
-    return _commit_rewrite(
-        table_path,
-        removes,
-        adds,
-        "DELETE",
-        {
-            "predicate": json.dumps([list(map(str, f)) for f in filters]),
-            "deletionVectors": "true",
-        },
-        pre_actions=pre_actions,
-    )
+    # each remove precedes its file's re-add with the new vector
+    return _commit(table_path, snap, actions + _removes(removes) + adds)
 
 
 def update_delta_table(
@@ -3006,7 +2881,7 @@ def update_delta_table(
             )
     if filters:
         touched = _touched_files(spark, snap, list(filters))
-        pred = F.coalesce(_filters_to_column(list(filters)), F.lit(False))
+        pred = _filters_to_column(list(filters))
     else:
         touched = list(snap.files)
         pred = F.lit(True)
@@ -3040,10 +2915,7 @@ def update_delta_table(
         data_change=True,
         column_mapping=snap.column_mapping,
     )
-    return _commit_rewrite(
-        table_path,
-        touched,
-        adds,
+    info = _commit_info(
         "UPDATE",
         {
             "predicate": json.dumps(
@@ -3052,6 +2924,7 @@ def update_delta_table(
             "set": json.dumps({k: str(v) for k, v in set_exprs.items()}),
         },
     )
+    return _commit(table_path, snap, [info] + _removes(touched) + adds)
 
 
 # ---------------------------------------------------------------------------

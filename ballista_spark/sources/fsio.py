@@ -44,6 +44,7 @@ from __future__ import annotations
 import os
 import shutil
 import threading
+import time
 import warnings
 
 __all__ = [
@@ -227,18 +228,17 @@ class SqliteLogStore(LogStore):
                 # load (r11).  Only in-protocol writers exist for a
                 # claimed path and they all carry OUR staged bytes, so
                 # retry briefly before deciding; a durably-foreign
-                # object (case b) still refuses after ~0.1 s.
+                # object (case b) still refuses after ~0.08 s.
                 published_ours = False
-                for _ in range(5):
+                for attempt in range(5):
+                    if attempt:
+                        time.sleep(0.02)
                     try:
                         published_ours = read_bytes(path) == data
                     except OSError:
                         published_ours = False
                     if published_ours:
                         break
-                    import time as _t
-
-                    _t.sleep(0.02)
                 with con:
                     con.execute(
                         "UPDATE commits SET complete = 1 WHERE path = ?",

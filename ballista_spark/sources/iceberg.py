@@ -85,6 +85,7 @@ from ballista_spark.sources.avroio import (
     read_avro_projected,
 )
 from ballista_spark.sources.decodecache import DecodeCache
+from ballista_spark.sources.deltalog import _filters_to_column
 
 __all__ = [
     "read_iceberg_table",
@@ -1862,7 +1863,7 @@ def write_iceberg_table(
     time travel), and ``v<N+1>.metadata.json`` committed by exclusive
     create — two racing writers produce two metadata versions, one
     wins, the loser raises (the Delta log's one-winner-per-version
-    device, `deltalog._attempt_commit`).
+    device, `deltalog._commit`).
 
     Scale: metadata work is O(files in this commit) + one manifest-list
     rewrite; data-file writing is the engine's normal distributed
@@ -2677,33 +2678,6 @@ def _decoded_file_path_col():
     )
 
 
-def _filters_to_column(filters: list[tuple[str, str, object]]):
-    """AND of advisory filter triples as a real row predicate — the
-    exact-match side of the same language the readers prune on."""
-    from pyspark.sql import functions as F
-
-    cond = F.lit(True)
-    for col, op, val in filters:
-        c = F.col(col)
-        if op == "=":
-            cond = cond & (c == F.lit(val))
-        elif op == "!=":
-            cond = cond & (c != F.lit(val))
-        elif op == "<":
-            cond = cond & (c < F.lit(val))
-        elif op == "<=":
-            cond = cond & (c <= F.lit(val))
-        elif op == ">":
-            cond = cond & (c > F.lit(val))
-        elif op == ">=":
-            cond = cond & (c >= F.lit(val))
-        elif op == "is_null":
-            cond = cond & c.isNull()
-        else:
-            raise ValueError(f"unsupported delete operator {op!r}")
-    return cond
-
-
 def delete_from_iceberg_table(
     spark: SparkSession,
     table_path: str,
@@ -2748,8 +2722,6 @@ def delete_from_iceberg_table(
     """
     import time
     import uuid as _uuid
-
-    from pyspark.sql import functions as F
 
     if not filters:
         raise ValueError(
@@ -2837,7 +2809,7 @@ def delete_from_iceberg_table(
         _norm_path(table_path, e["data_file"]["file_path"]) for e in touched
     ]
     survivors = _mutation_scan(spark, md, schema_json, paths).where(
-        ~F.coalesce(_filters_to_column(filters), F.lit(False))
+        ~_filters_to_column(filters)
     )
     new_entries = _stage_entries(survivors, table_path, ids, snapshot_id)
 
@@ -2949,7 +2921,7 @@ def _delete_with_position_deletes(
         )
         tagged = tagged.join(tombstones, ["__dfp", "__pos"], "left_anti")
     matched = tagged.where(
-        F.coalesce(_filters_to_column(list(filters)), F.lit(False))
+        _filters_to_column(list(filters))
     ).select(
         F.col("__dfp").alias("file_path"), F.col("__pos").alias("pos")
     )
@@ -3107,7 +3079,7 @@ def update_iceberg_table(
             )
 
         touched = [e for e in live if _may_match(e)]
-        pred = F.coalesce(_filters_to_column(list(filters)), F.lit(False))
+        pred = _filters_to_column(list(filters))
     else:
         touched = list(live)
         pred = F.lit(True)

@@ -529,3 +529,232 @@ def test_lazy_stats_and_checkpoint_cache_consistency(spark, tmp_path):
     assert read_delta_table(spark, table).count() == 9
     s3 = read_delta_snapshot(table)
     assert s3.num_files == len(s1.files) - 3
+
+
+# ---------------------------------------------------------------------------
+# deterministic commit races: the winning commit runs inside the victim's
+# staging step, after the victim read its snapshot and before it commits
+# (no threads, no sleeps)
+
+_KV = "k long, v double"
+
+
+def _race(monkeypatch, owner, name, winner):
+    """Run ``winner()`` inside the next call of ``owner.name``."""
+    real = getattr(owner, name)
+    fired = []
+
+    def once(*args, **kwargs):
+        if not fired:
+            fired.append(True)
+            winner()
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(owner, name, once)
+
+
+def _kv_rows(spark, path):
+    return sorted(map(tuple, read_delta_table(spark, path).select("k", "v").collect()))
+
+
+def _two_file_table(spark, path):
+    """k 0..4 in one file (v0), k 5..9 in another (v1); v = k."""
+    for ks in (range(5), range(5, 10)):
+        write_delta_table(
+            spark.createDataFrame([(k, float(k)) for k in ks], _KV).coalesce(1), path
+        )
+    return [(k, float(k)) for k in range(10)]
+
+
+def test_delete_racing_update_conflicts(spark, tmp_path, monkeypatch):
+    """An UPDATE that commits while a DELETE on the same file stages must
+    fail the DELETE: committing it would re-add the UPDATE's pre-image
+    next to the UPDATE's output (19 rows) and bring back the deleted
+    row."""
+    from ballista_spark.sources import deltalog as dl
+
+    path = str(tmp_path / "t")
+    write_delta_table(
+        spark.createDataFrame([(k, float(k)) for k in range(10)], _KV).coalesce(1), path
+    )
+    _race(monkeypatch, dl, "_stage_data_files", lambda: dl.update_delta_table(
+        spark, path, {"v": "v + 1000"}, [("k", "<", 5)]
+    ))
+    with pytest.raises(DeltaConcurrentCommitError):
+        dl.delete_from_delta_table(spark, path, [("k", "=", 9)])
+    assert _kv_rows(spark, path) == [
+        (k, k + (1000.0 if k < 5 else 0.0)) for k in range(10)
+    ]
+    assert read_delta_snapshot(path).version == 1
+
+
+def _victims(spark, path):
+    """name -> (module, the hook its staging step calls, the operation,
+    its effect on the (k, v) rows).  Every operation reads the k 0..4
+    file."""
+    from ballista_spark.sources import deltalog as dl
+
+    def delete(dv):
+        return lambda: dl.delete_from_delta_table(
+            spark, path, [("k", "=", 4)], use_deletion_vectors=dv
+        )
+
+    def update():
+        return dl.update_delta_table(spark, path, {"v": "v + 0.5"}, [("k", "=", 3)])
+
+    def merge():
+        src = spark.createDataFrame([(4, 40.0), (20, 20.0)], _KV)
+        return dl.merge_delta_table(spark, path, src, on=["k"])
+
+    def optimize():
+        return dl.compact_delta_table(spark, path, target_file_bytes=1 << 30)
+
+    def deleted(rows):
+        return [r for r in rows if r[0] != 4]
+
+    return {
+        "delete": (dl, "_stage_data_files", delete(False), deleted),
+        "dv_delete": (dl.fsio, "write_bytes", delete(True), deleted),
+        "update": (dl, "_stage_data_files", update,
+                   lambda rows: [(k, v + 0.5 if k == 3 else v) for k, v in rows]),
+        "merge": (dl, "_stage_data_files", merge,
+                  lambda rows: sorted(deleted(rows) + [(4, 40.0), (20, 20.0)])),
+        "optimize": (dl, "_collect_file_stats", optimize, lambda rows: rows),
+    }
+
+
+_VICTIMS = ["delete", "dv_delete", "update", "merge", "optimize"]
+
+
+@pytest.mark.parametrize("winner", ["update", "dv_delete"])
+@pytest.mark.parametrize("victim", _VICTIMS)
+def test_race_on_removed_input_raises(spark, tmp_path, monkeypatch, victim, winner):
+    """The winner rewrites the k 0..4 file (UPDATE removes it; a DV
+    DELETE re-adds it with a new deletion vector), so the victim's input
+    is no longer live: the victim raises and the table is the winner's."""
+    from ballista_spark.sources import deltalog as dl
+
+    path = str(tmp_path / "t")
+    rows = _two_file_table(spark, path)
+    def win():
+        if winner == "update":
+            dl.update_delta_table(spark, path, {"v": "v + 1000"}, [("k", "<", 2)])
+        else:
+            dl.delete_from_delta_table(
+                spark, path, [("k", "=", 0)], use_deletion_vectors=True
+            )
+
+    if winner == "update":
+        expect = [(k, v + 1000 if k < 2 else v) for k, v in rows]
+    else:
+        expect = rows[1:]
+    owner, hook, op, _effect = _victims(spark, path)[victim]
+    _race(monkeypatch, owner, hook, win)
+    with pytest.raises(DeltaConcurrentCommitError):
+        op()
+    assert _kv_rows(spark, path) == expect
+    assert read_delta_snapshot(path).version == 2
+
+
+@pytest.mark.parametrize("victim", _VICTIMS)
+def test_race_with_blind_append_commits_on_top(spark, tmp_path, monkeypatch, victim):
+    """A blind append removes nothing: the victim commits at the
+    winner's version + 1 and both changes are visible.  The winner
+    checkpoints its version, so the victim's re-read starts from a
+    checkpoint."""
+    from ballista_spark.sources import deltalog as dl
+
+    path = str(tmp_path / "t")
+    rows = _two_file_table(spark, path)
+    new = [(100, 100.0), (101, 101.0)]
+    owner, hook, op, effect = _victims(spark, path)[victim]
+    _race(monkeypatch, owner, hook, lambda: write_delta_table(
+        spark.createDataFrame(new, _KV), path, checkpoint_interval=1
+    ))
+    assert op() == 3
+    assert _kv_rows(spark, path) == sorted(effect(rows) + new)
+    assert os.path.exists(
+        os.path.join(path, "_delta_log", f"{2:020d}.checkpoint.parquet")
+    )
+
+
+def test_overwrite_racing_update_raises(spark, tmp_path, monkeypatch):
+    """An overwrite rebuilds its removes on the winner's snapshot, but a
+    winner that removed one of them still conflicts (the removed-file
+    rule holds for every commit kind)."""
+    from ballista_spark.sources import deltalog as dl
+
+    path = str(tmp_path / "t")
+    rows = _two_file_table(spark, path)
+    _race(monkeypatch, dl, "_stage_data_files", lambda: dl.update_delta_table(
+        spark, path, {"v": "v + 1000"}, [("k", "<", 2)]
+    ))
+    with pytest.raises(DeltaConcurrentCommitError):
+        write_delta_table(spark.createDataFrame([(7, 7.0)], _KV), path, mode="overwrite")
+    assert _kv_rows(spark, path) == [(k, v + 1000 if k < 2 else v) for k, v in rows]
+
+
+def test_dml_racing_metadata_change_raises(spark, tmp_path, monkeypatch):
+    """Staged DML fails when a winner changed the table's metadata:
+    here the table became append-only while the DELETE staged."""
+    from ballista_spark.sources import deltalog as dl
+
+    path = str(tmp_path / "t")
+    rows = _two_file_table(spark, path)
+    _race(monkeypatch, dl, "_stage_data_files", lambda: dl.set_delta_table_properties(
+        path, {"delta.appendOnly": "true"}
+    ))
+    with pytest.raises(DeltaConcurrentCommitError):
+        dl.delete_from_delta_table(spark, path, [("k", "=", 4)])
+    assert _kv_rows(spark, path) == rows
+
+
+def test_alter_racing_alter_keeps_both_columns(spark, tmp_path, monkeypatch):
+    from ballista_spark.sources import deltalog as dl
+
+    path = str(tmp_path / "t")
+    _two_file_table(spark, path)
+    _race(monkeypatch, dl, "_check_writer_protocol", lambda: dl.alter_delta_table(
+        path, add_columns={"b": "string"}
+    ))
+    assert dl.alter_delta_table(path, add_columns={"c": "long"}) == 3
+    snap = read_delta_snapshot(path)
+    assert [f.name for f in snap.schema.fields] == ["k", "v", "b", "c"]
+    assert read_delta_table(spark, path).where("b IS NULL AND c IS NULL").count() == 10
+
+
+def test_txn_write_racing_its_replay_appends_once(spark, tmp_path, monkeypatch):
+    from ballista_spark.sources import deltalog as dl
+
+    path = str(tmp_path / "t")
+    rows = _two_file_table(spark, path)
+    batch = spark.createDataFrame([(50, 50.0)], _KV)
+
+    def write():
+        return write_delta_table(batch, path, txn_app_id="app", txn_version=1)
+
+    _race(monkeypatch, dl, "_stage_data_files", write)
+    assert write() is None
+    assert _kv_rows(spark, path) == rows + [(50, 50.0)]
+    snap = read_delta_snapshot(path)
+    assert (snap.version, snap.app_versions) == (2, {"app": 1})
+
+
+def test_merge_only_table_checkpoints(spark, tmp_path):
+    """Every commit kind checkpoints at the default interval: one write
+    plus ten MERGEs (the upsert-sink shape) leave a v10 checkpoint that
+    snapshot reads start from."""
+    from ballista_spark.sources.deltalog import _read_last_checkpoint, merge_delta_table
+
+    path = str(tmp_path / "t")
+    write_delta_table(spark.createDataFrame([(0, 0.0)], _KV), path)
+    for i in range(1, 11):
+        src = spark.createDataFrame([(i, float(i))], _KV)
+        assert merge_delta_table(spark, path, src, on=["k"]) == i
+    logdir = os.path.join(path, "_delta_log")
+    assert os.path.exists(os.path.join(logdir, f"{10:020d}.checkpoint.parquet"))
+    assert _read_last_checkpoint(path)["version"] == 10
+    for v in range(10):  # the checkpoint replaces the JSON commits before it
+        os.remove(os.path.join(logdir, f"{v:020d}.json"))
+    assert read_delta_snapshot(path).version == 10
+    assert _kv_rows(spark, path) == [(k, float(k)) for k in range(11)]
