@@ -735,7 +735,7 @@ def execute_dml(ctx, stmt: DmlStatement):
             )
 
             target_schema = iceberg_to_spark_type(
-                _current_schema(_load_metadata(path))
+                _current_schema(_load_metadata(path)[1])
             )
         if stmt.insert_columns is not None:
             # named column list: query columns align BY POSITION to the

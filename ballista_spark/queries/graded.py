@@ -1523,27 +1523,16 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ballista_spark.operators.graph import pagerank
     from ballista_spark.operators.preference import bt_strengths
 
-    # 16 workers: branch CONSTRUCTION tasks (r10 pass 4, below) mostly
-    # block on py4j sockets, and a handful additionally block on the fit
-    # futures above — those fits are submitted FIRST so they are already
-    # running when any dependent task starts waiting (no cycle, no
-    # starvation)
+    # branch CONSTRUCTION also runs on pool threads (r10 pass 4, guide
+    # §2.6): DataFrames are immutable and py4j gives each thread its own
+    # gateway connection, so the ~25 independent branch trees build in
+    # parallel and the main thread resolves their futures in the order
+    # it used to build in — the assembled plan is bit-identical.
+    # 16 workers: branch construction tasks mostly block on py4j
+    # sockets, and a handful additionally block on the fit futures —
+    # those fits are submitted FIRST so they are already running when
+    # any dependent task starts waiting (no cycle, no starvation)
     pool = ThreadPoolExecutor(max_workers=16)
-
-    def sub(fn):
-        """Branch construction on a pool thread (r10 pass 4, guide §2.6).
-
-        The profiled residual of the warm build was ~3.6 s of *serial*
-        py4j round-trips on the main thread (8k calls) assembling ~25
-        independent branch expression trees.  DataFrames are immutable
-        and py4j gives each thread its own gateway connection, so the
-        construction itself parallelizes: each branch builds its tree
-        (and, where it always did, runs its tiny probe jobs) on a pool
-        thread, and the main thread only resolves futures in the same
-        order it used to build in — the assembled plan is bit-identical
-        because expression construction is deterministic and
-        order-independent across branches."""
-        return pool.submit(fn)
 
     _d = F.col("doc_id")
     lm_fit_f = pool.submit(
@@ -1621,12 +1610,12 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
 
-    hll_rows_f = sub(_hll_branch)
+    hll_rows_f = pool.submit(_hll_branch)
 
     bench = docs.where(F.col("source") == "src0")
     # contamination_stats feeds BOTH the contam branch and the final
     # union's decontaminate(...) — built once, on a pool thread
-    stats_f = sub(lambda: contamination_stats(docs, bench))
+    stats_f = pool.submit(lambda: contamination_stats(docs, bench))
 
     def _contam_branch():
         contam_rows = (
@@ -1642,7 +1631,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("hits", F.col("h")), ("ngrams", F.col("g"))],
         )
 
-    contam_tagged_f = sub(_contam_branch)
+    contam_tagged_f = pool.submit(_contam_branch)
 
     def _pack_branch():
         packed = pack_contiguous(
@@ -1668,7 +1657,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
 
-    pack_rows_f = sub(_pack_branch)
+    pack_rows_f = pool.submit(_pack_branch)
 
     # stupid-backoff bigram LM trained on src1 only, scored over ALL docs,
     # so cross-source scoring exercises every path: bigram hit, unigram
@@ -1709,7 +1698,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         ))
 
-    lm_b_f = sub(_lm_branch)
+    lm_b_f = pool.submit(_lm_branch)
 
     # quality-classifier SCORING path (training is iterative → pytest):
     # a fixed literal-gram weight model whose buckets both engines derive
@@ -1734,7 +1723,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("n", F.col("n")), ("n_above", F.col("na")), ("score_1e4", F.col("s4"))],
         ))
 
-    q_b_f = sub(_quality_branch)
+    q_b_f = pool.submit(_quality_branch)
 
     # DSIR importance weights (operators/dsir.py): full fit+score path —
     # target = src1 docs, raw = ALL docs, Laplace-smoothed hashed-bigram
@@ -1760,7 +1749,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("n", F.col("n")), ("sum_grams", F.col("sg")), ("logw_1e4", F.col("l4"))],
         ))
 
-    ds_b_f = sub(_dsir_branch)
+    ds_b_f = pool.submit(_dsir_branch)
 
     # fuzzy decontamination (operators/decontam.py:fuzzy_contaminated_keys,
     # MinHash-LSH against src0 as the benchmark): the flagged set is pinned
@@ -1786,7 +1775,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("n", F.col("n")), ("sum_ids", F.col("s"))],
         ))
 
-    fz_b_f = sub(_fuzzy_branch)
+    fz_b_f = pool.submit(_fuzzy_branch)
 
     # --- round-5 operator families folded into the driver window (round 6):
     # url_canon / chat render+stats+validate / pagerank — each pinned
@@ -1838,7 +1827,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("n", F.col("n")), ("md5_1e6", F.col("h"))],
         )
 
-    url_rows_f = sub(_url_branch)
+    url_rows_f = pool.submit(_url_branch)
 
     # conversations synthesized from the documents (token halves as one
     # user/assistant exchange) through the real chat operators; the
@@ -1890,7 +1879,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         )
 
-    chat_rows_f = sub(_chat_branch)
+    chat_rows_f = pool.submit(_chat_branch)
 
     # PageRank over a doc-derived digraph (multi-edges + dangling nodes
     # by construction); tol=0 pins exactly _PR_ITERS power iterations so
@@ -1903,7 +1892,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("rank") * 1000000).cast("long").alias("v"),
         )
 
-    pr_rows_f = sub(_pr_branch)
+    pr_rows_f = pool.submit(_pr_branch)
 
     # trained-langid SERVING path (training is iterative → pytest): a
     # fixed literal-gram softmax head scored through the real
@@ -1939,7 +1928,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("n", F.col("n")), ("prob_1e4", F.col("p4"))],
         ))
 
-    lg_b_f = sub(_langid_branch)
+    lg_b_f = pool.submit(_langid_branch)
 
     # robots.txt permission gate (round 6): synthesized URLs over four
     # hosts × three path classes run through the REAL parser + longest-
@@ -1989,7 +1978,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("n", F.col("n")), ("md5_1e6", F.col("h"))],
         )
 
-    rb_rows_f = sub(_robots_branch)
+    rb_rows_f = pool.submit(_robots_branch)
 
     # --- round-6 codec/document families folded into the driver window
     # (round 7): baseline JPEG decode, stdlib PDF extraction, rule-based
@@ -2040,7 +2029,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    jp_b_f = sub(_jpeg_branch)
+    jp_b_f = pool.submit(_jpeg_branch)
 
     def _pdf_branch():
         pdf_df = spark.createDataFrame(
@@ -2054,7 +2043,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             [("md5_1e6", md5_long("text") % 1000000), ("n_pages", F.col("n_pages"))],
         ))
 
-    pdf_b_f = sub(_pdf_branch)
+    pdf_b_f = pool.submit(_pdf_branch)
 
     def _sent_branch():
         sent_df = spark.createDataFrame(
@@ -2076,7 +2065,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    sent_b_f = sub(_sent_branch)
+    sent_b_f = pool.submit(_sent_branch)
 
     # banned-term keyword screen (round 7, operators/text.py): fixed
     # word + phrase terms over the real documents text through the REAL
@@ -2100,7 +2089,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             kw_g, "kwscreen", kw_k, [("occ", F.col("occ")), ("docs", F.col("nd"))]
         ))
 
-    kw_b_f = sub(_kw_branch)
+    kw_b_f = pool.submit(_kw_branch)
 
     # Bradley-Terry strengths (round 7, operators/preference.py): a
     # synthetic pairwise-comparison table derived from doc_id runs
@@ -2118,7 +2107,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("strength") * 1000000).cast("long").alias("v"),
         ))
 
-    bt_b_f = sub(_bt_branch)
+    bt_b_f = pool.submit(_bt_branch)
 
     # data-contract validation (round 7, operators/validate.py): the
     # REAL one-pass contract runs over documents; per check the report's
@@ -2157,7 +2146,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             ],
         ))
 
-    val_b_f = sub(_validate_branch)
+    val_b_f = pool.submit(_validate_branch)
 
     # code-curation quality stats (round 7, operators/code.py): the
     # StarCoder line-geometry pass + the published filter defaults over
@@ -2198,7 +2187,7 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    cq_b_f = sub(_codequal_branch)
+    cq_b_f = pool.submit(_codequal_branch)
 
     def _afp_branch():
         afp_ref, afp_clip = _afp_signals(HOP)
@@ -2228,12 +2217,12 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    afp_b_f = sub(_afp_branch)
+    afp_b_f = pool.submit(_afp_branch)
 
     # the six sampling/decontam branches of the final union build on pool
     # threads too (each is a moderate expression tree over docs/bench)
-    sb_f = sub(lambda: two(hash_sample(docs, ["doc_id"], 0.3), "sample_bernoulli"))
-    ss_f = sub(
+    sb_f = pool.submit(lambda: two(hash_sample(docs, ["doc_id"], 0.3), "sample_bernoulli"))
+    ss_f = pool.submit(
         lambda: two(
             stratified_sample(
                 docs,
@@ -2245,12 +2234,12 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sample_stratified",
         )
     )
-    ts_f = sub(lambda: two(temperature_sample(docs, "source", 0.5, ["doc_id"]), "temp_sample"))
-    gc_f = sub(lambda: two(group_cap(docs, ["source"], 5, ["doc_id"]), "group_cap"))
-    dk_f = sub(
+    ts_f = pool.submit(lambda: two(temperature_sample(docs, "source", 0.5, ["doc_id"]), "temp_sample"))
+    gc_f = pool.submit(lambda: two(group_cap(docs, ["source"], 5, ["doc_id"]), "group_cap"))
+    dk_f = pool.submit(
         lambda: two(decontaminate(docs, bench, 0.2, stats=stats_f.result()), "decontam_keep")
     )
-    da_f = sub(
+    da_f = pool.submit(
         lambda: two(
             dedup_against(docs.where(F.col("source") != "src0"), bench),
             "dedup_against",

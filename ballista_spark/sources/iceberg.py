@@ -57,11 +57,12 @@ WRITE side (round 7): ``write_iceberg_table`` produces spec
 format-version 1 tables — append and overwrite snapshots, one Avro
 manifest per commit plus a full manifest list, per-file Appendix-D
 column bounds (the same bounds this reader prunes on), and optimistic
-concurrency through exclusive-create of ``vN.metadata.json`` (the same
-one-winner-per-version device as the Delta log).  v1 deliberately:
-sequence-number bookkeeping and manifest-merge policy only exist to
-serve v2 merge-on-read delete FILES, which this engine does not write —
-row-level DELETE is provided copy-on-write instead
+concurrency through exclusive-create of ``vN.metadata.json`` at the
+version the writer read + 1 (the same one-winner-per-version device as
+the Delta log; every data-changing writer commits through
+``_commit_snapshot``).  v1 until the first merge-on-read position
+DELETE upgrades the table to v2, after which every snapshot takes a
+sequence number.  Row-level DELETE defaults to copy-on-write
 (``delete_from_iceberg_table``: bounds-pruned touch-only rewrite, the
 ``merge_delta_table`` discipline), alongside ``compact_iceberg_table``
 (replace snapshots) and ``expire_iceberg_snapshots`` (time-travel
@@ -201,19 +202,6 @@ def decode_bound(raw: bytes | None, iceberg_type: str):
     except (struct.error, UnicodeDecodeError):
         return None
     return None  # binary/uuid/fixed: no ordering we trust
-
-
-def _as_id_map(v) -> dict[int, bytes]:
-    """Bounds/counts come as avro map (string keys) or the spec's
-    array<record{key,value}> form — normalize to {int id: value}."""
-    if v is None:
-        return {}
-    if isinstance(v, dict):
-        return {int(k): val for k, val in v.items()}
-    out = {}
-    for item in v:
-        out[int(item["key"])] = item["value"]
-    return out
 
 
 def _kv_get(v, fid: int):
@@ -380,9 +368,9 @@ def _read_manifest(path: str) -> list[dict]:
     must treat the records as READ-ONLY (every write path already
     copies before modifying).  ``kv_arrays_as_maps``: the spec's
     bounds/counts k_v arrays decode as plain ``{id: value}`` dicts —
-    ~25% less decode time and RSS per entry; ``_as_id_map``/``_kv_get``
-    accept both forms and the Avro encoder re-emits dicts as k/v
-    records, so carried-forward entries round-trip byte-identically."""
+    ~25% less decode time and RSS per entry; ``_kv_get`` accepts both
+    forms and the Avro encoder re-emits dicts as k/v records, so
+    carried-forward entries round-trip byte-identically."""
     return _MANIFEST_CACHE.get_or_decode(
         path,
         lambda: read_avro_bytes(
@@ -443,23 +431,29 @@ def _metadata_versions(meta_dir: str) -> list[int]:
     )
 
 
-def _load_metadata(table_path: str) -> dict:
+def _load_metadata(table_path: str) -> tuple[int, dict]:
+    """(version, metadata) of the current ``vN.metadata.json``: the hint
+    when present, else the highest version on disk (hint-less tables
+    read fine and must write fine too).  Writers commit at exactly this
+    version + 1 (:func:`_commit_metadata`), so a racer that committed
+    since their read makes them raise instead of being dropped."""
     meta_dir = os.path.join(table_path, "metadata")
     hint = os.path.join(meta_dir, "version-hint.text")
     if fsio.exists(hint):
-        v = int(fsio.read_text(hint).strip())
-        cand = os.path.join(meta_dir, f"v{v}.metadata.json")
+        version = int(fsio.read_text(hint).strip())
     else:
         versions = _metadata_versions(meta_dir)
         if not versions:
             raise FileNotFoundError(f"no Iceberg metadata under {table_path!r}")
-        cand = os.path.join(meta_dir, f"v{versions[-1]}.metadata.json")
-    md = json.loads(fsio.read_text(cand))
+        version = versions[-1]
+    md = json.loads(
+        fsio.read_text(os.path.join(meta_dir, f"v{version}.metadata.json"))
+    )
     if int(md.get("format-version", 1)) > 3:
         raise IcebergFeatureError(
             f"format-version {md['format-version']} > 3 unsupported"
         )
-    return md
+    return version, md
 
 
 def _refuse_v3_write(md: dict, op: str) -> None:
@@ -612,7 +606,7 @@ def read_iceberg_snapshot(
     can match (identity partition transforms), before any entry
     decode; per-file bounds pruning stays the caller's move
     (:func:`read_iceberg_table`)."""
-    md = _load_metadata(table_path)
+    _, md = _load_metadata(table_path)
     schema = _current_schema(md)
     initial_defaults = _collect_initial_defaults(schema)
     spark_schema = iceberg_to_spark_type(schema)
@@ -807,6 +801,20 @@ def _bounds_may_match(bounds: dict, col: str, op: str, value) -> bool:
     except TypeError:
         return True  # incomparable types: keep
     return True
+
+
+def _entries_may_match(entries: list[dict], ids: dict, filters) -> list[dict]:
+    """The manifest entries whose column bounds may hold a row matching
+    ALL ``filters`` — the writers' touch set, decoding only the columns
+    the filters compare (:class:`_LazyBounds`)."""
+    by_name = {name: (fid, ftype) for fid, (name, ftype) in ids.items()}
+    out = []
+    for e in entries:
+        d = e["data_file"]
+        bounds = _LazyBounds(d.get("lower_bounds"), d.get("upper_bounds"), by_name)
+        if all(_bounds_may_match(bounds, c, op, v) for c, op, v in filters):
+            out.append(e)
+    return out
 
 
 #: Same decode-placement policy (and measurements) as
@@ -1087,7 +1095,7 @@ def read_iceberg_changelog(
     """
     from pyspark.sql import functions as F
 
-    md = _load_metadata(table_path)
+    _, md = _load_metadata(table_path)
     log = md.get("snapshot-log") or []
     hi = len(log) - 1 if to_ordinal is None else int(to_ordinal)
     ordinals = [i for i in range(len(log)) if from_ordinal < i <= hi]
@@ -1614,20 +1622,8 @@ def _schema_compatible(existing: T.StructType, new: T.StructType) -> bool:
 
 # ---------------------------------------------------------------------------
 # shared commit machinery — ONE implementation of staging, manifest
-# writing and the exclusive-create metadata commit, used by write /
-# compact / delete / expire (they had begun to diverge; the
-# version-hint fallback below is the same one _load_metadata uses)
-
-
-def _current_metadata_version(meta_dir: str) -> int:
-    """The metadata version a writer builds on: the hint when present,
-    else the highest vN.metadata.json on disk (hint-less tables read
-    fine and must write fine too), else 0."""
-    hint = os.path.join(meta_dir, "version-hint.text")
-    if fsio.exists(hint):
-        return int(fsio.read_text(hint).strip())
-    versions = _metadata_versions(meta_dir)
-    return max(versions) if versions else 0
+# writing and the snapshot commit (:func:`_commit_snapshot`) at the
+# metadata version each writer read (:func:`_load_metadata`)
 
 
 #: same policy as deltalog._collect_file_stats: NON-LOCAL commits with
@@ -1751,23 +1747,27 @@ def _stage_entries(
 
 
 def _write_manifest(
-    meta_dir: str, schema_json: dict, entries: list[dict]
+    meta_dir: str, schema_json: dict, entries: list[dict], content: int = 0
 ) -> tuple[str, int]:
-    """One manifest Avro file → (path, byte length)."""
+    """One manifest Avro file → (path, byte length); ``content=1``
+    writes a v2 position-DELETE manifest."""
     import uuid as _uuid
 
     from ballista_spark.sources.avroio import write_avro_bytes
 
-    manifest_path = os.path.join(meta_dir, f"{_uuid.uuid4().hex}-m0.avro")
+    deletes = content == 1
+    manifest_path = os.path.join(
+        meta_dir, f"{_uuid.uuid4().hex}-{'d0' if deletes else 'm0'}.avro"
+    )
     manifest_bytes = write_avro_bytes(
         entries,
-        _MANIFEST_ENTRY_SCHEMA,
+        _DELETE_MANIFEST_ENTRY_SCHEMA if deletes else _MANIFEST_ENTRY_SCHEMA,
         extra_meta={
             "schema": json.dumps(schema_json, separators=(",", ":")),
             "partition-spec": "[]",
             "partition-spec-id": "0",
-            "format-version": "1",
-            "content": "data",
+            "format-version": "2" if deletes else "1",
+            "content": "deletes" if deletes else "data",
         },
     )
     fsio.write_bytes(manifest_path, manifest_bytes)
@@ -1830,19 +1830,125 @@ def _live_entries(table_path: str, snap_md: dict) -> list[dict]:
     return live
 
 
-def _append_snapshot_md(
-    md: dict | None, snapshot: dict, extras: dict | None = None
-) -> dict:
+def _append_snapshot_md(md: dict, snapshot: dict, extras: dict) -> dict:
     now_ms = snapshot["timestamp-ms"]
-    base = dict(md) if md else {}
-    base.update(extras or {})
+    base = {**md, **extras}
     base["last-updated-ms"] = now_ms
     base["current-snapshot-id"] = snapshot["snapshot-id"]
-    base["snapshots"] = ((md or {}).get("snapshots") or []) + [snapshot]
-    base["snapshot-log"] = ((md or {}).get("snapshot-log") or []) + [
+    base["snapshots"] = (md.get("snapshots") or []) + [snapshot]
+    base["snapshot-log"] = (md.get("snapshot-log") or []) + [
         {"snapshot-id": snapshot["snapshot-id"], "timestamp-ms": now_ms}
     ]
     return base
+
+
+def _commit_snapshot(
+    table_path: str,
+    md: dict,
+    version: int,
+    snapshot_id: int,
+    added: list[dict],
+    summary: dict,
+    kept: list[dict] | None = None,
+    removed: int = 0,
+    content: int = 0,
+    txn: tuple = (None, None),
+) -> int:
+    """The one snapshot commit of every data-changing writer: a new
+    manifest of ``added`` entries, its manifest list, the snapshot, and
+    ``v<version + 1>.metadata.json`` by exclusive create — ``version``
+    is the one the writer READ, so a racer that committed since makes
+    this raise FileExistsError instead of silently dropping its
+    snapshot.  Returns ``snapshot_id``.
+
+    ``kept=None`` carries the parent's manifests forward verbatim
+    (append, position delete).  A list REPLACES them: the new manifest
+    re-records the ``kept`` live entries with status EXISTING next to
+    ``added``, and ``removed`` counts the files dropped (overwrite,
+    OPTIMIZE, copy-on-write DML).  ``content=1`` writes a position-
+    DELETE manifest and upgrades the table to format-version 2; every
+    snapshot of a v2 table takes the next sequence number.  ``txn``
+    (app id, version) is recorded for :func:`_txn_replayed`."""
+    import time
+
+    meta_dir = os.path.join(table_path, "metadata")
+    schema_json = _current_schema(md)
+    fmt = int(md.get("format-version", 1))
+    if content == 1:
+        fmt = max(fmt, 2)  # delete files need v2: the first one upgrades
+    seq = int(md.get("last-sequence-number", 0)) + 1 if fmt >= 2 else None
+    parent_id = md.get("current-snapshot-id")
+    if parent_id == -1:
+        parent_id = None
+    manifests: list[dict] = []
+    if kept is None and parent_id is not None:
+        parent = next(
+            s for s in md["snapshots"] if s["snapshot-id"] == parent_id
+        )
+        prev, _sch = read_avro_bytes(
+            fsio.read_bytes(_norm_path(table_path, parent["manifest-list"]))
+        )
+        names = [f["name"] for f in _MANIFEST_FILE_SCHEMA["fields"]]
+        manifests = [{k: m.get(k) for k in names} for m in prev]
+    existing = [  # status EXISTING, records otherwise verbatim
+        {"status": 0, "snapshot_id": e.get("snapshot_id"), "data_file": e["data_file"]}
+        for e in kept or []
+    ]
+    manifest_path, manifest_len = _write_manifest(
+        meta_dir, schema_json, existing + added, content
+    )
+    manifests.append({
+        "manifest_path": manifest_path,
+        "manifest_length": manifest_len,
+        "partition_spec_id": 0,
+        "added_snapshot_id": snapshot_id,
+        "added_data_files_count": len(added),
+        "existing_data_files_count": len(existing),
+        "deleted_data_files_count": removed,
+        "added_rows_count": sum(e["data_file"]["record_count"] for e in added),
+        "content": content,
+        "sequence_number": seq,
+    })
+    app_id, txn_version = txn
+    if app_id is not None:
+        summary = {
+            **summary, "txn-app-id": app_id, "txn-version": str(int(txn_version))
+        }
+    snapshot = {
+        "snapshot-id": snapshot_id,
+        "timestamp-ms": int(time.time() * 1000),
+        "manifest-list": _write_manifest_list(meta_dir, snapshot_id, manifests),
+        "summary": summary,
+    }
+    if parent_id is not None:
+        snapshot["parent-snapshot-id"] = parent_id
+    extras = {}
+    if seq is not None:
+        snapshot["sequence-number"] = seq
+        extras = {"format-version": fmt, "last-sequence-number": seq}
+        if not md.get("schemas"):  # v1 single-schema face → v2 list
+            schema = {"schema-id": 0, **schema_json}
+            extras["schemas"] = [schema]
+            extras["current-schema-id"] = schema["schema-id"]
+    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot, extras), version)
+    return snapshot_id
+
+
+def _txn_replayed(md: dict, app_id: str | None, version) -> int | None:
+    """Idempotent-commit check (the Delta ``txn`` contract): the id of
+    ``app_id``'s latest recorded snapshot when ``version`` is at or
+    below its txn-version — a redelivered epoch, skipped before any
+    file is staged — else None."""
+    if app_id is None:
+        return None
+    last = None
+    for s in md.get("snapshots") or []:
+        summ = s.get("summary") or {}
+        if summ.get("txn-app-id") == app_id:
+            v = int(summ.get("txn-version", -1))
+            if last is None or v > last[0]:
+                last = (v, s["snapshot-id"])
+    return last[1] if last is not None and int(version) <= last[0] else None
 
 
 def write_iceberg_table(
@@ -1861,9 +1967,9 @@ def write_iceberg_table(
     manifest list (previous manifests carried forward on append,
     dropped on overwrite — their files stay readable through snapshot
     time travel), and ``v<N+1>.metadata.json`` committed by exclusive
-    create — two racing writers produce two metadata versions, one
-    wins, the loser raises (the Delta log's one-winner-per-version
-    device, `deltalog._commit`).
+    create at the version N this write READ — of two racing writers
+    one wins, the loser raises FileExistsError (the Delta log's
+    one-winner-per-version device, `deltalog._commit`).
 
     Scale: metadata work is O(files in this commit) + one manifest-list
     rewrite; data-file writing is the engine's normal distributed
@@ -1877,7 +1983,6 @@ def write_iceberg_table(
     (`streaming.write_stream_iceberg_exactly_once`).  Returns the
     already-committed snapshot id on a skip.
     """
-    import time
     import uuid as _uuid
 
     if mode not in ("append", "overwrite"):
@@ -1900,10 +2005,10 @@ def write_iceberg_table(
     fsio.mkdirs(meta_dir)
 
     try:
-        md = _load_metadata(table_path)
+        version, md = _load_metadata(table_path)
         _refuse_v3_write(md, "WRITE")
     except FileNotFoundError:
-        md = None
+        version, md = 0, None
     if md is not None:
         schema_json = _current_schema(md)
         existing_spark = iceberg_to_spark_type(schema_json)
@@ -1913,125 +2018,46 @@ def write_iceberg_table(
                 f"{existing_spark.simpleString()}, DataFrame has "
                 f"{df.schema.simpleString()}"
             )
-        last_column_id = int(md.get("last-column-id", 0))
-        table_uuid = md["table-uuid"]
     else:
         schema_json, last_column_id = spark_to_iceberg_schema(df.schema)
-        table_uuid = str(_uuid.uuid4())
-    # new version = version READ + 1 (not highest-on-disk + 1): if a
-    # racer already claimed it, the exclusive create below raises
-    # instead of silently dropping that racer's snapshot
-    prev_version = _current_metadata_version(meta_dir) if md is not None else 0
-
-    if (txn_app_id is None) != (txn_version is None):
-        raise ValueError("txn_app_id and txn_version must be passed together")
-    if txn_app_id is not None and md is not None:
-        # idempotent replay check BEFORE staging: a redelivered epoch is
-        # skipped without writing a byte
-        last = None
-        for s in md.get("snapshots", []):
-            summ = s.get("summary") or {}
-            if summ.get("txn-app-id") == txn_app_id:
-                v = int(summ.get("txn-version", -1))
-                if last is None or v > last[0]:
-                    last = (v, s["snapshot-id"])
-        if last is not None and int(txn_version) <= last[0]:
-            return last[1]
-
-    ids = _field_ids(schema_json)
-    snapshot_id = _uuid.uuid4().int >> 75  # unique positive 53-bit long
-    now_ms = int(time.time() * 1000)
-
-    entries = _stage_entries(df, table_path, ids, snapshot_id)
-    manifest_path, manifest_len = _write_manifest(meta_dir, schema_json, entries)
-
-    # manifest list: carry previous manifests forward on append
-    carried: list[dict] = []
-    parent_snapshot_id = None
-    if md is not None and md.get("current-snapshot-id") not in (None, -1):
-        parent_snapshot_id = md["current-snapshot-id"]
-        if mode == "append":
-            cur = next(
-                s
-                for s in md.get("snapshots", [])
-                if s["snapshot-id"] == parent_snapshot_id
-            )
-            prev_manifests, _sch = read_avro_bytes(
-                fsio.read_bytes(_norm_path(table_path, cur["manifest-list"]))
-            )
-            for m in prev_manifests:
-                carried.append(
-                    {k: m.get(k) for k in
-                     [f["name"] for f in _MANIFEST_FILE_SCHEMA["fields"]]}
-                )
-    # a table upgraded to v2 (first position delete) keeps its version
-    # and advances the sequence counter on every commit; v1 tables
-    # stay v1 with no sequence bookkeeping
-    fmt_version = int((md or {}).get("format-version", 1))
-    new_seq = (
-        int((md or {}).get("last-sequence-number", 0)) + 1
-        if fmt_version >= 2
-        else None
-    )
-    new_manifest = {
-        "manifest_path": manifest_path,
-        "manifest_length": manifest_len,
-        "partition_spec_id": 0,
-        "added_snapshot_id": snapshot_id,
-        "added_data_files_count": len(entries),
-        "existing_data_files_count": 0,
-        "deleted_data_files_count": 0,
-        "added_rows_count": sum(
-            e["data_file"]["record_count"] for e in entries
-        ),
-        "content": 0,
-        "sequence_number": new_seq,
-    }
-    list_path = _write_manifest_list(
-        meta_dir, snapshot_id, carried + [new_manifest]
-    )
-
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": now_ms,
-        "manifest-list": list_path,
-        "summary": {
-            "operation": "append" if mode == "append" else "overwrite",
-            "added-data-files": str(len(entries)),
-            "added-records": str(new_manifest["added_rows_count"]),
-            **(
-                {"txn-app-id": txn_app_id, "txn-version": str(int(txn_version))}
-                if txn_app_id is not None
-                else {}
-            ),
-        },
-    }
-    if new_seq is not None:
-        snapshot["sequence-number"] = new_seq
-    if parent_snapshot_id is not None:
-        snapshot["parent-snapshot-id"] = parent_snapshot_id
-    new_md = _append_snapshot_md(
-        md,
-        snapshot,
-        extras={
-            "format-version": fmt_version,
-            "table-uuid": table_uuid,
+        md = {
+            "format-version": 1,
+            "table-uuid": str(_uuid.uuid4()),
             "location": table_path,
             "last-column-id": last_column_id,
             "schema": schema_json,
             "partition-spec": [],
             "partition-specs": [{"spec-id": 0, "fields": []}],
             "default-spec-id": 0,
-            "properties": (md or {}).get("properties", {}),
-            **(
-                {"last-sequence-number": new_seq}
-                if new_seq is not None
-                else {}
+            "properties": {},
+        }
+
+    if (txn_app_id is None) != (txn_version is None):
+        raise ValueError("txn_app_id and txn_version must be passed together")
+    # idempotent replay check BEFORE staging: a redelivered epoch is
+    # skipped without writing a byte
+    replayed = _txn_replayed(md, txn_app_id, txn_version)
+    if replayed is not None:
+        return replayed
+
+    snapshot_id = _uuid.uuid4().int >> 75  # unique positive 53-bit long
+    entries = _stage_entries(df, table_path, _field_ids(schema_json), snapshot_id)
+    return _commit_snapshot(
+        table_path,
+        md,
+        version,
+        snapshot_id,
+        entries,
+        {
+            "operation": mode,
+            "added-data-files": str(len(entries)),
+            "added-records": str(
+                sum(e["data_file"]["record_count"] for e in entries)
             ),
         },
+        kept=None if mode == "append" else [],
+        txn=(txn_app_id, txn_version),
     )
-    _commit_metadata(meta_dir, new_md, prev_version)
-    return snapshot_id
 
 
 def _shift_ids(node, offset: int):
@@ -2072,10 +2098,8 @@ def alter_iceberg_table(
     drop_columns = list(drop_columns or [])
     if not add_columns and not drop_columns:
         raise ValueError("ALTER needs add_columns and/or drop_columns")
-    md = _load_metadata(table_path)
+    version, md = _load_metadata(table_path)
     _refuse_v3_write(md, "ALTER")
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)
     schema_json = _current_schema(md)
     names = {f["name"] for f in schema_json["fields"]}
     props = dict(md.get("properties") or {})
@@ -2123,8 +2147,8 @@ def alter_iceberg_table(
             sorted(retired | set(drop_columns))
         )
         new_md["properties"] = props
-    _commit_metadata(meta_dir, new_md, prev_version)
-    return prev_version + 1
+    _commit_metadata(os.path.join(table_path, "metadata"), new_md, version)
+    return version + 1
 
 
 def _file_has_field_ids(path: str) -> bool:
@@ -2288,7 +2312,7 @@ def rename_iceberg_column(
     the current schema).  Returns the new metadata version."""
     if old == new:
         raise ValueError("rename to the same name is a no-op")
-    md = _load_metadata(table_path)
+    version, md = _load_metadata(table_path)
     _refuse_v3_write(md, "RENAME COLUMN")
     schema_json = _current_schema(md)
     names = [f["name"] for f in schema_json["fields"]]
@@ -2357,14 +2381,12 @@ def rename_iceberg_column(
         + [int(schema_json.get("schema-id", 0))]
     ) + 1
     new_schema = {"type": "struct", "schema-id": new_sid, "fields": fields}
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)
     new_md = dict(md)
     new_md["schema"] = new_schema  # v1 single-schema face
     new_md["schemas"] = prior + [new_schema]
     new_md["current-schema-id"] = new_sid
-    _commit_metadata(meta_dir, new_md, prev_version)
-    return prev_version + 1
+    _commit_metadata(os.path.join(table_path, "metadata"), new_md, version)
+    return version + 1
 
 
 def set_iceberg_table_properties(
@@ -2389,18 +2411,16 @@ def set_iceberg_table_properties(
             "ballista.dropped-columns is ALTER's retired-name registry "
             "— it cannot be edited directly"
         )
-    md = _load_metadata(table_path)
+    version, md = _load_metadata(table_path)
     _refuse_v3_write(md, "SET TBLPROPERTIES")
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)
     props = dict(md.get("properties") or {})
     for k in unset:
         props.pop(k, None)
     props.update(set_props)
     new_md = dict(md)
     new_md["properties"] = props
-    _commit_metadata(meta_dir, new_md, prev_version)
-    return prev_version + 1
+    _commit_metadata(os.path.join(table_path, "metadata"), new_md, version)
+    return version + 1
 
 
 def compact_iceberg_table(
@@ -2437,17 +2457,14 @@ def compact_iceberg_table(
     ``dataChange: false`` analogue.
     """
     import math
-    import time
     import uuid as _uuid
 
     from ballista_spark.sources.deltalog import plan_compaction_bins
 
-    md = _load_metadata(table_path)
+    version, md = _load_metadata(table_path)
     _refuse_v3_write(md, "OPTIMIZE")
     schema_json = _current_schema(md)
     ids = _field_ids(schema_json)
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)  # fail fast, pre-IO
     cur_id = md.get("current-snapshot-id")
     snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
     if cur_id in (None, -1) or cur_id not in snaps:
@@ -2459,7 +2476,6 @@ def compact_iceberg_table(
     has_deletes = len(data_live) != len(live)
 
     snapshot_id = _uuid.uuid4().int >> 75
-    spark_schema = iceberg_to_spark_type(schema_json)
     sizes = [int(e["data_file"]["file_size_in_bytes"]) for e in data_live]
 
     if has_deletes or cluster_by:
@@ -2469,7 +2485,7 @@ def compact_iceberg_table(
             return None
         total = sum(sizes)
         n_out = max(1, math.ceil(total / target_file_bytes))
-        src = read_iceberg_table(spark, table_path)
+        src = read_iceberg_table(spark, table_path, snapshot_id=cur_id)
         if cluster_by:
             src = src.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(
                 *cluster_by
@@ -2479,8 +2495,8 @@ def compact_iceberg_table(
         else:
             src = src.coalesce(1)
         new_entries = _stage_entries(src, table_path, ids, snapshot_id)
-        carried = []
-        replaced_count = len(live)
+        kept = []
+        removed = len(live)
     else:
         bins = plan_compaction_bins(sizes, target_file_bytes)
         if not bins:
@@ -2500,51 +2516,23 @@ def compact_iceberg_table(
                     snapshot_id,
                 )
             )
-        carried = [
-            {
-                "status": 0,  # EXISTING — record carried verbatim
-                "snapshot_id": e.get("snapshot_id"),
-                "data_file": e["data_file"],
-            }
-            for i, e in enumerate(data_live)
-            if i not in replaced_idx
-        ]
-        replaced_count = len(replaced_idx)
+        kept = [e for i, e in enumerate(data_live) if i not in replaced_idx]
+        removed = len(replaced_idx)
 
-    manifest_path, manifest_len = _write_manifest(
-        meta_dir, schema_json, carried + new_entries
-    )
-    list_path = _write_manifest_list(
-        meta_dir,
+    return _commit_snapshot(
+        table_path,
+        md,
+        version,
         snapshot_id,
-        [
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": 0,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(new_entries),
-                "existing_data_files_count": len(carried),
-                "deleted_data_files_count": replaced_count,
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in new_entries
-                ),
-            }
-        ],
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": list_path,
-        "parent-snapshot-id": cur_id,
-        "summary": {
+        new_entries,
+        {
             "operation": "replace",
             "added-data-files": str(len(new_entries)),
-            "deleted-data-files": str(replaced_count),
+            "deleted-data-files": str(removed),
         },
-    }
-    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot), prev_version)
-    return snapshot_id
+        kept=kept,
+        removed=removed,
+    )
 
 
 def expire_iceberg_snapshots(
@@ -2554,19 +2542,22 @@ def expire_iceberg_snapshots(
     now: int | None = None,
 ) -> list[str]:
     """Expire snapshots older than ``retention_ms`` (always keeping the
-    current one and the ``keep_last`` most recent), then physically
-    delete data files, manifests and manifest lists referenced ONLY by
-    expired snapshots.  Returns the deleted paths — the Iceberg twin of
-    ``deltalog.vacuum_delta_table`` (Iceberg's own expire_snapshots
-    maintenance action).
+    current one and the ``keep_last`` most recent), commit the trimmed
+    metadata, THEN physically delete data files, manifests and
+    manifest lists referenced ONLY by expired snapshots.  Returns the
+    deleted paths — the Iceberg twin of ``deltalog.vacuum_delta_table``
+    (Iceberg's own expire_snapshots maintenance action).
 
     All expired snapshots' references are unioned BEFORE anything is
     deleted — expired snapshots routinely share manifests (appends
     carry them forward), and a per-snapshot reap would delete a
     manifest another expired snapshot still needs to enumerate, wedging
     expiry halfway.  The retention window IS the time-travel window;
-    the trimmed metadata commits by exclusive create, so a racing
-    writer conflicts rather than resurrecting expired snapshots.
+    the trimmed metadata commits by exclusive create at the version
+    read, so a racing writer conflicts rather than resurrecting expired
+    snapshots — and because the commit comes first, a lost race deletes
+    nothing the winner's metadata still lists (a crash after the commit
+    only leaves orphans, as in Iceberg's ExpireSnapshots).
     Driver-side metadata work is O(snapshots × manifests); nothing
     row-sized is touched.
     """
@@ -2574,10 +2565,8 @@ def expire_iceberg_snapshots(
 
     now = int(time.time() * 1000) if now is None else int(now)
     horizon = now - int(retention_ms)
-    md = _load_metadata(table_path)
+    version, md = _load_metadata(table_path)
     _refuse_v3_write(md, "EXPIRE SNAPSHOTS")
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)
     snaps = list(md.get("snapshots") or [])
     if not snaps:
         return []
@@ -2621,15 +2610,6 @@ def expire_iceberg_snapshots(
         dead_lists.add(ml)
         dead_mans |= mans
         dead_files |= files
-    deleted: list[str] = []
-    for p in sorted(
-        (dead_lists - live_lists) | (dead_mans - live_mans)
-        | (dead_files - live_files)
-    ):
-        if fsio.exists(p):
-            fsio.remove(p)
-            deleted.append(os.path.relpath(p, table_path)
-                           if fsio.is_local(p) else p)
 
     expired_ids = {s["snapshot-id"] for s in expired}
     new_md = dict(md)
@@ -2640,7 +2620,17 @@ def expire_iceberg_snapshots(
         for e in (md.get("snapshot-log") or [])
         if e["snapshot-id"] not in expired_ids
     ]
-    _commit_metadata(meta_dir, new_md, prev_version)
+    _commit_metadata(os.path.join(table_path, "metadata"), new_md, version)
+
+    deleted: list[str] = []
+    for p in sorted(
+        (dead_lists - live_lists) | (dead_mans - live_mans)
+        | (dead_files - live_files)
+    ):
+        if fsio.exists(p):
+            fsio.remove(p)
+            deleted.append(os.path.relpath(p, table_path)
+                           if fsio.is_local(p) else p)
     return sorted(deleted)
 
 
@@ -2720,7 +2710,6 @@ def delete_from_iceberg_table(
     the ``ballista_iceberg`` streaming face refuses delete snapshots
     (a stream cannot retract).
     """
-    import time
     import uuid as _uuid
 
     if not filters:
@@ -2728,7 +2717,7 @@ def delete_from_iceberg_table(
             "refusing an unconditional DELETE — pass explicit filters "
             "(use mode='overwrite' with an empty DataFrame to truncate)"
         )
-    md = _load_metadata(table_path)
+    version, md = _load_metadata(table_path)
     _refuse_v3_write(md, "DELETE")
     if use_position_deletes is None:
         # the spec's routing property: merge-on-read tables get the
@@ -2742,8 +2731,6 @@ def delete_from_iceberg_table(
         )
     schema_json = _current_schema(md)
     ids = _field_ids(schema_json)
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)  # fail fast, pre-IO
     cur_id = md.get("current-snapshot-id")
     snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
     if cur_id in (None, -1) or cur_id not in snaps:
@@ -2772,39 +2759,18 @@ def delete_from_iceberg_table(
         # (_mutation_scan) and tombstones are (file, pos) pairs —
         # name-independent by construction
 
-    def _may_match(entry: dict) -> bool:
-        lowers = _as_id_map(entry["data_file"].get("lower_bounds"))
-        uppers = _as_id_map(entry["data_file"].get("upper_bounds"))
-        bounds = {}
-        for fid, (name, ftype) in ids.items():
-            lo = decode_bound(lowers.get(fid), ftype)
-            hi = decode_bound(uppers.get(fid), ftype)
-            if lo is not None or hi is not None:
-                bounds[name] = (lo, hi)
-        return all(_bounds_may_match(bounds, c, op, v) for c, op, v in filters)
-
-    touched = [
-        e
-        for e in live
-        if (e["data_file"].get("content", 0) or 0) == 0 and _may_match(e)
-    ]
+    touched = _entries_may_match(
+        [e for e in live if (e["data_file"].get("content", 0) or 0) == 0],
+        ids,
+        filters,
+    )
     if not touched:
         return None
+    snapshot_id = _uuid.uuid4().int >> 75
     if use_position_deletes:
         return _delete_with_position_deletes(
-            spark,
-            table_path,
-            md,
-            snaps[cur_id],
-            live,
-            touched,
-            filters,
-            schema_json,
-            meta_dir,
-            prev_version,
+            spark, table_path, md, version, snapshot_id, live, touched, filters
         )
-    snapshot_id = _uuid.uuid4().int >> 75
-    spark_schema = iceberg_to_spark_type(schema_json)
     paths = [
         _norm_path(table_path, e["data_file"]["file_path"]) for e in touched
     ]
@@ -2812,64 +2778,32 @@ def delete_from_iceberg_table(
         ~_filters_to_column(filters)
     )
     new_entries = _stage_entries(survivors, table_path, ids, snapshot_id)
-
     touched_paths = {e["data_file"]["file_path"] for e in touched}
-    carried = [
-        {
-            "status": 0,
-            "snapshot_id": e.get("snapshot_id"),
-            "data_file": e["data_file"],
-        }
-        for e in live
-        if e["data_file"]["file_path"] not in touched_paths
-    ]
-    manifest_path, manifest_len = _write_manifest(
-        meta_dir, schema_json, carried + new_entries
-    )
-    list_path = _write_manifest_list(
-        meta_dir,
+    return _commit_snapshot(
+        table_path,
+        md,
+        version,
         snapshot_id,
-        [
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": 0,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(new_entries),
-                "existing_data_files_count": len(carried),
-                "deleted_data_files_count": len(touched),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in new_entries
-                ),
-            }
-        ],
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": list_path,
-        "parent-snapshot-id": cur_id,
-        "summary": {
+        new_entries,
+        {
             "operation": "delete",
             "rewritten-data-files": str(len(touched)),
             "added-data-files": str(len(new_entries)),
         },
-    }
-    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot), prev_version)
-    return snapshot_id
+        kept=[e for e in live if e["data_file"]["file_path"] not in touched_paths],
+        removed=len(touched),
+    )
 
 
 def _delete_with_position_deletes(
     spark: SparkSession,
     table_path: str,
     md: dict,
-    cur_snap: dict,
+    version: int,
+    snapshot_id: int,
     live: list[dict],
     touched: list[dict],
     filters: list[tuple[str, str, object]],
-    schema_json: dict,
-    meta_dir: str,
-    prev_version: int,
 ) -> int | None:
     """The zero-rewrite shape of DELETE (see delete_from_iceberg_table)
     — the Iceberg v2 twin of ``deltalog._delete_with_deletion_vectors``.
@@ -2887,17 +2821,13 @@ def _delete_with_position_deletes(
     advances ``last-sequence-number``.
     """
     import math
-    import time
-    import uuid as _uuid
 
     from pyspark.sql import functions as F
-
-    from ballista_spark.sources.avroio import write_avro_bytes
 
     paths = [
         _norm_path(table_path, e["data_file"]["file_path"]) for e in touched
     ]
-    tagged = _mutation_scan(spark, md, schema_json, paths).withColumns(
+    tagged = _mutation_scan(spark, md, _current_schema(md), paths).withColumns(
         {
             "__dfp": _decoded_file_path_col(),
             "__pos": F.col("_metadata.row_index"),
@@ -2935,85 +2865,26 @@ def _delete_with_position_deletes(
         matched = matched.coalesce(1)
     matched = matched.sortWithinPartitions("file_path", "pos")
 
-    snapshot_id = _uuid.uuid4().int >> 75
     entries = _stage_entries(
         matched, table_path, _POS_DELETE_IDS, snapshot_id, content=1
     )
     if not entries:
         return None  # every match was already tombstoned — no-op
-    n_tombstones = sum(e["data_file"]["record_count"] for e in entries)
-
-    manifest_path = os.path.join(meta_dir, f"{_uuid.uuid4().hex}-d0.avro")
-    manifest_bytes = write_avro_bytes(
+    return _commit_snapshot(
+        table_path,
+        md,
+        version,
+        snapshot_id,
         entries,
-        _DELETE_MANIFEST_ENTRY_SCHEMA,
-        extra_meta={
-            "schema": json.dumps(schema_json, separators=(",", ":")),
-            "partition-spec": "[]",
-            "partition-spec-id": "0",
-            "format-version": "2",
-            "content": "deletes",
-        },
-    )
-    fsio.write_bytes(manifest_path, manifest_bytes)
-
-    new_seq = int(md.get("last-sequence-number", 0)) + 1
-    carried = []
-    prev_manifests, _sch = read_avro_bytes(
-        fsio.read_bytes(_norm_path(table_path, cur_snap["manifest-list"]))
-    )
-    for m in prev_manifests:
-        carried.append(
-            {
-                k: m.get(k)
-                for k in [f["name"] for f in _MANIFEST_FILE_SCHEMA["fields"]]
-            }
-        )
-    new_manifest = {
-        "manifest_path": manifest_path,
-        "manifest_length": len(manifest_bytes),
-        "partition_spec_id": 0,
-        "added_snapshot_id": snapshot_id,
-        "added_data_files_count": len(entries),
-        "existing_data_files_count": 0,
-        "deleted_data_files_count": 0,
-        "added_rows_count": n_tombstones,
-        "content": 1,
-        "sequence_number": new_seq,
-    }
-    list_path = _write_manifest_list(
-        meta_dir, snapshot_id, carried + [new_manifest]
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": int(time.time() * 1000),
-        "sequence-number": new_seq,
-        "manifest-list": list_path,
-        "parent-snapshot-id": cur_snap["snapshot-id"],
-        "summary": {
+        {
             "operation": "delete",
             "added-delete-files": str(len(entries)),
-            "added-position-deletes": str(n_tombstones),
-        },
-    }
-    if "schema-id" not in schema_json:
-        schema_json = {"schema-id": 0, **schema_json}
-    new_md = _append_snapshot_md(
-        md,
-        snapshot,
-        extras={
-            # first position delete upgrades the table to the spec
-            # version that defines delete files
-            "format-version": 2,
-            "last-sequence-number": new_seq,
-            "schemas": md.get("schemas") or [schema_json],
-            "current-schema-id": md.get(
-                "current-schema-id", schema_json.get("schema-id", 0)
+            "added-position-deletes": str(
+                sum(e["data_file"]["record_count"] for e in entries)
             ),
         },
+        content=1,
     )
-    _commit_metadata(meta_dir, new_md, prev_version)
-    return snapshot_id
 
 
 def update_iceberg_table(
@@ -3034,19 +2905,16 @@ def update_iceberg_table(
     refuse (compact first); the streaming face refuses the resulting
     overwrite snapshot (an update changes rows).
     """
-    import time
     import uuid as _uuid
 
     from pyspark.sql import functions as F
 
     if not set_exprs:
         raise ValueError("UPDATE needs at least one SET column")
-    md = _load_metadata(table_path)
+    version, md = _load_metadata(table_path)
     _refuse_v3_write(md, "UPDATE")
     schema_json = _current_schema(md)
     ids = _field_ids(schema_json)
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)  # fail fast, pre-IO
     cur_id = md.get("current-snapshot-id")
     snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
     if cur_id in (None, -1) or cur_id not in snaps:
@@ -3065,20 +2933,7 @@ def update_iceberg_table(
             raise ValueError(f"SET column {name!r} is not in the table schema")
 
     if filters:
-        def _may_match(entry: dict) -> bool:
-            lowers = _as_id_map(entry["data_file"].get("lower_bounds"))
-            uppers = _as_id_map(entry["data_file"].get("upper_bounds"))
-            bounds = {}
-            for fid, (fname, ftype) in ids.items():
-                lo = decode_bound(lowers.get(fid), ftype)
-                hi = decode_bound(uppers.get(fid), ftype)
-                if lo is not None or hi is not None:
-                    bounds[fname] = (lo, hi)
-            return all(
-                _bounds_may_match(bounds, c, op, v) for c, op, v in filters
-            )
-
-        touched = [e for e in live if _may_match(e)]
+        touched = _entries_may_match(live, ids, filters)
         pred = _filters_to_column(list(filters))
     else:
         touched = list(live)
@@ -3109,51 +2964,21 @@ def update_iceberg_table(
         ]
     )
     new_entries = _stage_entries(updated, table_path, ids, snapshot_id)
-
     touched_paths = {e["data_file"]["file_path"] for e in touched}
-    carried = [
-        {
-            "status": 0,
-            "snapshot_id": e.get("snapshot_id"),
-            "data_file": e["data_file"],
-        }
-        for e in live
-        if e["data_file"]["file_path"] not in touched_paths
-    ]
-    manifest_path, manifest_len = _write_manifest(
-        meta_dir, schema_json, carried + new_entries
-    )
-    list_path = _write_manifest_list(
-        meta_dir,
+    return _commit_snapshot(
+        table_path,
+        md,
+        version,
         snapshot_id,
-        [
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": 0,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(new_entries),
-                "existing_data_files_count": len(carried),
-                "deleted_data_files_count": len(touched),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in new_entries
-                ),
-            }
-        ],
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": list_path,
-        "parent-snapshot-id": cur_id,
-        "summary": {
+        new_entries,
+        {
             "operation": "overwrite",
             "rewritten-data-files": str(len(touched)),
             "added-data-files": str(len(new_entries)),
         },
-    }
-    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot), prev_version)
-    return snapshot_id
+        kept=[e for e in live if e["data_file"]["file_path"] not in touched_paths],
+        removed=len(touched),
+    )
 
 
 def merge_iceberg_table(
@@ -3183,7 +3008,6 @@ def merge_iceberg_table(
     table.  Tables with v2 delete files refuse (compact first — it
     applies the tombstones).
     """
-    import time
     import uuid as _uuid
 
     from pyspark.sql import functions as F
@@ -3193,24 +3017,14 @@ def merge_iceberg_table(
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be passed together")
     on = list(on)
-    md = _load_metadata(table_path)
+    version, md = _load_metadata(table_path)
     _refuse_v3_write(md, "MERGE")
-    if txn_app_id is not None:
-        # streaming-upsert idempotence: a replayed epoch is detected in
-        # the snapshot history and skipped BEFORE any file is staged
-        last = None
-        for s in md.get("snapshots") or []:
-            summ = s.get("summary") or {}
-            if summ.get("txn-app-id") == txn_app_id:
-                v = int(summ.get("txn-version", -1))
-                if last is None or v > last:
-                    last = v
-        if last is not None and int(txn_version) <= last:
-            return None
+    # streaming-upsert idempotence: a replayed epoch is detected in the
+    # snapshot history and skipped BEFORE any file is staged
+    if _txn_replayed(md, txn_app_id, txn_version) is not None:
+        return None
     schema_json = _current_schema(md)
     ids = _field_ids(schema_json)
-    meta_dir = os.path.join(table_path, "metadata")
-    prev_version = _current_metadata_version(meta_dir)  # fail fast, pre-IO
     cur_id = md.get("current-snapshot-id")
     snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
     if cur_id in (None, -1) or cur_id not in snaps:
@@ -3220,7 +3034,6 @@ def merge_iceberg_table(
         if not insert_not_matched:
             return None
         live = []
-        cur_id = None
     else:
         live = _live_entries(table_path, snaps[cur_id])
     if any((e["data_file"].get("content", 0) or 0) != 0 for e in live):
@@ -3239,30 +3052,15 @@ def merge_iceberg_table(
             )
     source = source.cache()
 
-    def _bounds_of(entry: dict) -> dict:
-        lowers = _as_id_map(entry["data_file"].get("lower_bounds"))
-        uppers = _as_id_map(entry["data_file"].get("upper_bounds"))
-        bounds = {}
-        for fid, (name, ftype) in ids.items():
-            lo = decode_bound(lowers.get(fid), ftype)
-            hi = decode_bound(uppers.get(fid), ftype)
-            if lo is not None or hi is not None:
-                bounds[name] = (lo, hi)
-        return bounds
-
     # 1. stats pre-prune (proof-based superset of the true touch set)
     candidates = live
     if len(on) == 1:
         key = on[0]
         kb = source.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).collect()[0]
         if kb["lo"] is not None:
-            lo, hi = kb["lo"], kb["hi"]
-            candidates = [
-                e
-                for e in live
-                if _bounds_may_match(_bounds_of(e), key, ">=", lo)
-                and _bounds_may_match(_bounds_of(e), key, "<=", hi)
-            ]
+            candidates = _entries_may_match(
+                live, ids, [(key, ">=", kb["lo"]), (key, "<=", kb["hi"])]
+            )
 
     def _paths(entries):
         return [
@@ -3324,54 +3122,25 @@ def merge_iceberg_table(
     if not new_entries and not touched:
         return None
 
-    carried = [
-        {
-            "status": 0,
-            "snapshot_id": e.get("snapshot_id"),
-            "data_file": e["data_file"],
-        }
-        for e in live
-        if _norm_path(table_path, e["data_file"]["file_path"])
-        not in touched_paths
-    ]
-    manifest_path, manifest_len = _write_manifest(
-        meta_dir, schema_json, carried + new_entries
-    )
-    list_path = _write_manifest_list(
-        meta_dir,
+    return _commit_snapshot(
+        table_path,
+        md,
+        version,
         snapshot_id,
-        [
-            {
-                "manifest_path": manifest_path,
-                "manifest_length": manifest_len,
-                "partition_spec_id": 0,
-                "added_snapshot_id": snapshot_id,
-                "added_data_files_count": len(new_entries),
-                "existing_data_files_count": len(carried),
-                "deleted_data_files_count": len(touched),
-                "added_rows_count": sum(
-                    e["data_file"]["record_count"] for e in new_entries
-                ),
-            }
-        ],
-    )
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": list_path,
-        "parent-snapshot-id": cur_id,
-        "summary": {
+        new_entries,
+        {
             "operation": "overwrite",  # a merge changes rows
             "merge-keys": ",".join(on),
             "matched-action": when_matched,
             "rewritten-data-files": str(len(touched)),
             "added-data-files": str(len(new_entries)),
-            **(
-                {"txn-app-id": txn_app_id, "txn-version": str(int(txn_version))}
-                if txn_app_id is not None
-                else {}
-            ),
         },
-    }
-    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot), prev_version)
-    return snapshot_id
+        kept=[
+            e
+            for e in live
+            if _norm_path(table_path, e["data_file"]["file_path"])
+            not in touched_paths
+        ],
+        removed=len(touched),
+        txn=(txn_app_id, txn_version),
+    )

@@ -499,7 +499,7 @@ class _IcebergStreamReader(DataSourceStreamReader):
         from ballista_spark.sources.iceberg import _load_metadata
 
         try:
-            md = _load_metadata(self.table_path)
+            _, md = _load_metadata(self.table_path)
         except FileNotFoundError:
             return []
         return list(md.get("snapshot-log") or [])
@@ -562,7 +562,7 @@ class _IcebergStreamReader(DataSourceStreamReader):
         from ballista_spark.sources.avroio import read_avro_bytes
         from ballista_spark.sources.iceberg import _load_metadata, _norm_path
 
-        md = _load_metadata(self.table_path)
+        _, md = _load_metadata(self.table_path)
         log = list(md.get("snapshot-log") or [])
         snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
         # renamed table: bind replayed files' columns by field id (a

@@ -185,7 +185,6 @@ def test_delta_metadata_plane_on_mock_fs(mockfs, warnmode):
 def test_iceberg_metadata_plane_on_mock_fs(mockfs, warnmode):
     from ballista_spark.sources.iceberg import (
         _commit_metadata,
-        _current_metadata_version,
         _live_entries,
         _load_metadata,
         _write_manifest,
@@ -246,8 +245,8 @@ def test_iceberg_metadata_plane_on_mock_fs(mockfs, warnmode):
         "snapshot-log": [{"snapshot-id": 77, "timestamp-ms": 0}],
     }
     _commit_metadata(meta_dir, md, 0)
-    assert _current_metadata_version(meta_dir) == 1
-    back = _load_metadata(table)
+    assert _load_metadata(table)[0] == 1
+    back = _load_metadata(table)[1]
     assert back["current-snapshot-id"] == 77
     live = _live_entries(table, back["snapshots"][0])
     assert len(live) == 1

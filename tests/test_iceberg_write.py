@@ -18,6 +18,7 @@ import struct
 import pyarrow.parquet as pq
 import pytest
 
+from ballista_spark.sources import iceberg
 from ballista_spark.sources.avroio import read_avro_bytes
 from ballista_spark.sources.iceberg import (
     encode_bound,
@@ -587,7 +588,7 @@ def test_compaction_applies_positional_deletes(spark, tmp_path):
         ),
         dpath,
     )
-    md = _load_metadata(path)
+    _, md = _load_metadata(path)
     from ballista_spark.sources.iceberg import _MANIFEST_FILE_SCHEMA
 
     mdir = os.path.join(path, "metadata")
@@ -837,3 +838,158 @@ def test_merge_stream_refuses_merge_snapshot(spark, tmp_path):
         q2.awaitTermination(120)
         if q2.exception() is not None:
             raise q2.exception()
+
+
+# ---------------------------------------------------------------------------
+# every writer commits at the metadata version it READ — races made
+# deterministic: the racer commits inside the victim's own metadata read
+# or commit call (one wrapped call; no threads, no sleeps)
+
+_RACER_ROWS = [(100 + i, "r", 0.0) for i in range(5)]
+
+
+def _rows(spark, path, snapshot_id=None):
+    return sorted(
+        map(tuple, read_iceberg_table(spark, path, snapshot_id).collect())
+    )
+
+
+#: victim writer → its call on the racing table (10 rows, two files)
+_RACE_VICTIMS = {
+    "append": lambda spark, path: write_iceberg_table(
+        _df(spark, [(50, "w", 1.0)]), path
+    ),
+    "cow_delete": lambda spark, path: iceberg.delete_from_iceberg_table(
+        spark, path, [("id", "=", 3)]
+    ),
+    "update": lambda spark, path: iceberg.update_iceberg_table(
+        spark, path, {"v": "v + 1"}, [("id", "=", 3)]
+    ),
+    "merge": lambda spark, path: iceberg.merge_iceberg_table(
+        spark, path, _df(spark, [(3, "m", 9.0), (60, "m", 9.0)]), ["id"]
+    ),
+    "optimize": lambda spark, path: iceberg.compact_iceberg_table(
+        spark, path, target_file_bytes=1 << 30
+    ),
+    "set_properties": lambda spark, path: iceberg.set_iceberg_table_properties(
+        path, {"k": "v"}
+    ),
+    "alter_add_column": lambda spark, path: iceberg.alter_iceberg_table(
+        path, add_columns={"extra": "int"}
+    ),
+    "rename_column": lambda spark, path: iceberg.rename_iceberg_column(
+        path, "cat", "category", spark=spark
+    ),
+}
+
+
+@pytest.mark.parametrize("victim", list(_RACE_VICTIMS))
+def test_writer_racing_append_after_its_read_raises(
+    spark, tmp_path, monkeypatch, victim
+):
+    """A 5-row append commits right after the victim's metadata read:
+    the victim must lose (FileExistsError at version read + 1) and the
+    table must read back exactly the racer's state — the racer's rows
+    are never silently dropped."""
+    path = str(tmp_path / "t")
+    for lo in (0, 5):  # two small files, so OPTIMIZE has a bin to pack
+        write_iceberg_table(
+            _df(spark, [(lo + i, "c", float(i)) for i in range(5)]).coalesce(1),
+            path,
+        )
+    real = iceberg._load_metadata
+
+    def read_then_race(table_path):
+        got = real(table_path)
+        monkeypatch.setattr(iceberg, "_load_metadata", real)
+        write_iceberg_table(_df(spark, _RACER_ROWS).coalesce(1), path)
+        return got
+
+    base = _rows(spark, path)
+    monkeypatch.setattr(iceberg, "_load_metadata", read_then_race)
+    with pytest.raises(FileExistsError):
+        _RACE_VICTIMS[victim](spark, path)
+    assert iceberg._load_metadata is real  # the race actually ran
+    got = read_iceberg_table(spark, path)
+    assert got.columns == ["id", "cat", "v"]
+    assert _rows(spark, path) == sorted(base + _RACER_ROWS)
+
+
+def test_expire_losing_commit_race_deletes_nothing(
+    spark, tmp_path, monkeypatch
+):
+    """Expiry commits BEFORE it deletes: when an append wins the
+    metadata version expiry read, expiry raises, no file is removed,
+    and every snapshot the winner's metadata lists stays readable."""
+    path = str(tmp_path / "t")
+    for lo in (0, 10, 20):
+        write_iceberg_table(
+            _df(spark, [(lo + i, "c", float(i)) for i in range(10)]).coalesce(1),
+            path,
+        )
+    # the replace snapshot leaves the three appended files reapable
+    assert iceberg.compact_iceberg_table(spark, path, target_file_bytes=1 << 30)
+    before = {
+        os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
+    }
+    real = iceberg._commit_metadata
+
+    def race_then_commit(meta_dir, new_md, base_version):
+        monkeypatch.setattr(iceberg, "_commit_metadata", real)
+        write_iceberg_table(_df(spark, _RACER_ROWS).coalesce(1), path)
+        return real(meta_dir, new_md, base_version)
+
+    monkeypatch.setattr(iceberg, "_commit_metadata", race_then_commit)
+    with pytest.raises(FileExistsError):
+        iceberg.expire_iceberg_snapshots(path, retention_ms=-1)
+    assert iceberg._commit_metadata is real  # the race actually ran
+    assert sorted(p for p in before if not os.path.exists(p)) == []
+    md = _read_meta(path)
+    assert len(md["snapshots"]) == 5  # 3 appends, replace, racer
+    for s in md["snapshots"]:
+        assert _rows(spark, path, s["snapshot-id"])  # every one readable
+    assert len(_rows(spark, path)) == 35
+
+
+def test_v2_sequence_number_on_every_snapshot(spark, tmp_path):
+    """From the first position delete (the v2 upgrade) onward, EVERY
+    snapshot kind — replace, overwrite, copy-on-write delete, merge,
+    append — takes the next sequence number, and its new manifest
+    carries the same number (spec: a v2 snapshot always has one)."""
+    path = str(tmp_path / "t")
+    write_iceberg_table(
+        _df(spark, [(i, "c", float(i)) for i in range(20)]).coalesce(2), path
+    )
+    assert iceberg.delete_from_iceberg_table(
+        spark, path, [("id", "=", 3)], use_position_deletes=True
+    )
+    assert iceberg.compact_iceberg_table(spark, path, target_file_bytes=1 << 30)
+    assert iceberg.update_iceberg_table(
+        spark, path, {"v": "v + 100"}, [("id", "=", 5)]
+    )
+    assert iceberg.delete_from_iceberg_table(
+        spark, path, [("id", "=", 7)], use_position_deletes=False
+    )
+    iceberg.merge_iceberg_table(
+        spark, path, _df(spark, [(3, "m", 3.0), (5, "m", 5.0)]), ["id"]
+    )
+    write_iceberg_table(_df(spark, [(7, "a", 7.0)]), path)
+
+    md = _read_meta(path)
+    snaps = md["snapshots"]
+    assert [s["summary"]["operation"] for s in snaps] == [
+        "append", "delete", "replace", "overwrite", "delete", "overwrite",
+        "append",
+    ]
+    assert md["format-version"] == 2
+    seqs = [s.get("sequence-number") for s in snaps[1:]]
+    assert None not in seqs
+    assert all(a < b for a, b in zip(seqs, seqs[1:]))
+    for s in snaps[1:]:
+        with open(s["manifest-list"], "rb") as f:
+            mans, _ = read_avro_bytes(f.read())
+        new = [m for m in mans if m["added_snapshot_id"] == s["snapshot-id"]]
+        assert new
+        assert all(m["sequence_number"] == s["sequence-number"] for m in new)
+    assert md["last-sequence-number"] == snaps[-1]["sequence-number"]
+    assert [r[0] for r in _rows(spark, path)] == list(range(20))

@@ -633,11 +633,11 @@ def test_sql_tblproperties_iceberg_round_trip(spark, tmp_path):
     ctx.sql(
         "ALTER TABLE t SET TBLPROPERTIES ('commit.retry.num-retries'='7')"
     )
-    assert _load_metadata(path)["properties"][
+    assert _load_metadata(path)[1]["properties"][
         "commit.retry.num-retries"
     ] == "7"
     ctx.sql("ALTER TABLE t UNSET TBLPROPERTIES ('commit.retry.num-retries')")
-    assert "commit.retry.num-retries" not in _load_metadata(path)["properties"]
+    assert "commit.retry.num-retries" not in _load_metadata(path)[1]["properties"]
 
 
 def test_sql_delete_uses_dv_when_property_set(spark, tmp_path):
