@@ -77,8 +77,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ballista_spark.sources import fsio
+from ballista_spark.sources import fsio, rewrite
 from ballista_spark.sources.decodecache import DecodeCache
+from ballista_spark.sources.dvbitmap import DECODE_CHUNK
+from ballista_spark.sources.rewrite import _filters_to_column, decoded_file_path
 
 __all__ = [
     "DeltaSnapshot",
@@ -93,7 +95,6 @@ __all__ = [
     "update_delta_table",
     "alter_delta_table",
     "vacuum_delta_table",
-    "plan_compaction_bins",
     "DeltaProtocolError",
     "DeltaConcurrentCommitError",
 ]
@@ -846,19 +847,6 @@ def _check_writer_protocol(
             )
 
 
-def _purges_deletion_vectors() -> None:
-    """Round-8 stance on mutating DV tables: every mutation path reads
-    touched files through ``_scan_snapshot`` (DV-applied) and rewrites
-    them WITHOUT a descriptor — a touch purges the file's DV while
-    untouched files keep theirs (the checkpoint writer carries the
-    descriptors and the table's real protocol).  delta-spark calls this
-    shape REORG ... APPLY (PURGE), applied incrementally.  DELETE can
-    also WRITE deletion vectors on request
-    (``delete_from_delta_table(use_deletion_vectors=True)`` — zero data
-    bytes rewritten, cost tracks matched rows); the default stays
-    copy-on-write."""
-
-
 def _dv_positions(table_path: str, dv: dict) -> list[int]:
     """Resolve one add action's deletionVector descriptor to its sorted
     deleted-row positions (delta.io PROTOCOL.md "Deletion Vectors"):
@@ -930,9 +918,17 @@ DV_DRIVER_DECODE_MAX = 20_000
 #: test hook: force the executor path regardless of size/locality
 DV_DECODE_FORCE_EXECUTOR = False
 
-#: positions per yielded Arrow batch in the executor decode (bounds a
-#: batch to ~30 MB even for pathological path lengths)
-_DV_DECODE_CHUNK = 1 << 18
+
+def _scan_root(table_path: str) -> str:
+    """The table root as ``rewrite.decoded_file_path`` spells the files
+    under it.  file: URIs strip before abspath (abspath('file:///x')
+    would prepend the cwd — review finding)."""
+    tp = table_path
+    if tp.startswith("file:"):
+        tp = tp[5:]
+        while tp.startswith("//"):
+            tp = tp[1:]
+    return os.path.abspath(tp) if fsio.is_local(tp) else tp.rstrip("/")
 
 
 def _dv_tombstones(spark: SparkSession, snap: DeltaSnapshot):
@@ -947,15 +943,9 @@ def _dv_tombstones(spark: SparkSession, snap: DeltaSnapshot):
     if not dv_files:
         return None
     # DECODED spelling on this side (rel paths come unquoted out of
-    # _normalize_rel); the scan side url_decodes _metadata.file_path to
-    # match.  file: URIs strip before abspath (abspath('file:///x')
-    # would prepend the cwd — review finding).
-    tp = snap.table_path
-    if tp.startswith("file:"):
-        tp = tp[5:]
-        while tp.startswith("//"):
-            tp = tp[1:]
-    root = os.path.abspath(tp) if fsio.is_local(tp) else tp.rstrip("/")
+    # _normalize_rel); the scan side decodes _metadata.file_path to
+    # match (rewrite.decoded_file_path)
+    root = _scan_root(snap.table_path)
     cards = [
         int(f.deletion_vector.get("cardinality") or 0) for f in dv_files
     ]
@@ -1003,8 +993,8 @@ def _dv_tombstones(spark: SparkSession, snap: DeltaSnapshot):
                 pos = np.asarray(
                     _dv_positions(table_path, json.loads(dvj)), dtype="int64"
                 )
-                for i in range(0, max(len(pos), 1), _DV_DECODE_CHUNK):
-                    chunk = pos[i : i + _DV_DECODE_CHUNK]
+                for i in range(0, max(len(pos), 1), DECODE_CHUNK):
+                    chunk = pos[i : i + DECODE_CHUNK]
                     yield pd.DataFrame(
                         {
                             "__dfp": np.repeat(dfp, len(chunk)),
@@ -1071,9 +1061,9 @@ def _scan_snapshot(
     pos_col: str | None = None,
 ) -> DataFrame:
     """Scan the snapshot; ``file_col`` / ``pos_col`` optionally carry
-    each row's source-file URI and physical row position captured AT
-    THE SCAN STAGE (``_metadata`` — unlike ``input_file_name()`` they
-    survive any shuffle the DV anti-join introduces downstream)."""
+    each row's decoded source-file path (``rewrite.decoded_file_path``)
+    and physical row position captured AT THE SCAN STAGE, where
+    ``_metadata`` still resolves (it does not after a shuffle)."""
     data_fields = [
         fld for fld in snap.schema.fields if fld.name not in snap.partition_columns
     ]
@@ -1116,14 +1106,10 @@ def _scan_snapshot(
     tomb = _dv_tombstones(spark, snap)
 
     def _tag(scan_df):
-        """Capture the per-row source file / position AT THE SCAN STAGE
-        when the caller asked for them (probes, DV-delete): after any
-        shuffle downstream, neither input_file_name() nor _metadata
-        resolves."""
+        """Capture the per-row source file / position when the caller
+        asked for them (probes, DV-delete)."""
         if file_col:
-            scan_df = scan_df.withColumn(
-                file_col, F.col("_metadata.file_path")
-            )
+            scan_df = scan_df.withColumn(file_col, decoded_file_path())
         if pos_col:
             scan_df = scan_df.withColumn(
                 pos_col, F.col("_metadata.row_index")
@@ -1133,23 +1119,13 @@ def _scan_snapshot(
     def _strip_deleted(scan_df):
         """Anti-join DV tombstones on (file, row position) — applied on
         the scan stage while `_metadata` is still resolvable.  The scan
-        side DECODES the percent-encoded file URI (literal '+' is
-        pre-escaped so url_decode cannot turn it into a space) because
-        the tombstone side is built from the log's DECODED relative
-        paths."""
+        side DECODES the percent-encoded file URI because the tombstone
+        side is built from the log's DECODED relative paths."""
         if tomb is None:
             return scan_df
         tagged = scan_df.withColumns(
             {
-                "__dfp": F.url_decode(
-                    F.regexp_replace(
-                        F.regexp_replace(
-                            F.col("_metadata.file_path"), "^file:/*", "/"
-                        ),
-                        r"\+",
-                        "%2B",
-                    )
-                ),
+                "__dfp": decoded_file_path(),
                 "__pos": F.col("_metadata.row_index"),
             }
         )
@@ -2133,41 +2109,18 @@ def _write_checkpoint(table_path: str, version: int) -> None:
 # compaction
 
 
-def plan_compaction_bins(
-    sizes: list[int], target_bytes: int
-) -> list[list[int]]:
-    """First-fit-decreasing bin packing of file indices into rewrite
-    groups ≤ target_bytes (singletons already ≥ target stay untouched —
-    returned as no bin at all).  Pure function; the unit the compactor
-    tests against."""
-    order = sorted(range(len(sizes)), key=lambda i: -sizes[i])
-    bins: list[tuple[int, list[int]]] = []  # (remaining, members)
-    for i in order:
-        s = sizes[i]
-        if s >= target_bytes:
-            continue  # already big enough — leave in place
-        for bi, (rem, members) in enumerate(bins):
-            if s <= rem:
-                bins[bi] = (rem - s, members + [i])
-                break
-        else:
-            bins.append((target_bytes - s, [i]))
-    # a bin with one small file and nothing merged in is a no-op rewrite
-    return [members for _rem, members in bins if len(members) > 1]
-
-
 def compact_delta_table(
     spark: SparkSession,
     table_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
     cluster_by: list[str] | None = None,
 ) -> int | None:
-    """Transactional small-file compaction: per partition, bin-pack live
-    files under ``target_file_bytes`` and rewrite each bin as one file,
-    committing remove+add atomically (``dataChange: false`` rewrites —
-    the table's rows are unchanged, so concurrent readers at any version
-    stay correct).  Returns the committed version, or None when nothing
-    needed compacting.
+    """Transactional small-file compaction (``rewrite.compact``): per
+    partition, bin-pack live files under ``target_file_bytes`` and
+    rewrite each bin as one file, committing remove+add atomically
+    (``dataChange: false`` rewrites — the table's rows are unchanged,
+    so concurrent readers at any version stay correct).  Returns the
+    committed version, or None when nothing needed compacting.
 
     ``cluster_by`` switches to CLUSTERED rewrite (the OPTIMIZE ZORDER
     analogue): each partition's live files are rewritten as
@@ -2176,7 +2129,9 @@ def compact_delta_table(
     min/max stats become selective — stats-based file skipping on those
     columns then prunes most of the table.  For multi-dimensional
     locality pass a ``zorder_column`` (``operators/partitioning.py``)
-    materialized as a column and cluster on it.
+    materialized as a column and cluster on it.  Groups read through
+    :func:`_scan_snapshot`, so deletion vectors apply (a direct parquet
+    read would resurrect DV-deleted rows) and the rewrite PURGES them.
 
     This is the operational answer to the classic 100 TB failure mode:
     streaming/append pipelines produce millions of KB-sized files whose
@@ -2184,112 +2139,8 @@ def compact_delta_table(
     ~target-sized scan units without blocking writers (optimistic
     commit) or readers (old files stay until vacuum).
     """
-    snap = read_delta_snapshot(table_path)
-    _check_writer_protocol(snap, "OPTIMIZE")
-    cm = snap.column_mapping
-    by_part: dict[tuple, list[_AddFile]] = {}
-    for f in snap.files:
-        key = tuple(
-            (c, f.partition_values.get(c, "")) for c in snap.partition_columns
-        )
-        by_part.setdefault(key, []).append(f)
-
-    removes: list[_AddFile] = []
-    adds: list[dict] = []
-    data_fields = [
-        fld for fld in snap.schema.fields
-        if fld.name not in snap.partition_columns
-    ]
-    # column-mapped tables stage/name everything physically (dirs,
-    # parquet columns, stats keys, partitionValues) — the reader remaps
-    stat_cols = [cm.get(fld.name, fld.name) for fld in data_fields]
-
-    def _rewrite(group: list[_AddFile], key: tuple, shaped) -> None:
-        """Write `shaped` (already coalesced/range-partitioned), move its
-        files into the partition dir, queue remove+add actions."""
-        part_dir = "/".join(
-            f"{cm.get(c, c)}="
-            f"{'__HIVE_DEFAULT_PARTITION__' if v in (None, '') else v}"
-            for c, v in key
-        )
-        if cm:
-            shaped = shaped.select(
-                *[shaped[c].alias(cm.get(c, c)) for c in shaped.columns]
-            )
-        out_dir = f"{table_path.rstrip('/')}/.compact-{uuid.uuid4().hex}"
-        shaped.write.mode("overwrite").parquet(out_dir)
-        written = sorted(
-            (rel, size)
-            for rel, size in fsio.walk_files(out_dir)
-            if rel.endswith(".parquet")
-        )
-        stats_by_rel = _collect_file_stats(
-            spark, out_dir, [r for r, _ in written], stat_cols
-        )
-        for name, size in written:
-            stats, n = stats_by_rel[name]
-            if n == 0:
-                continue  # empty range split — swept with out_dir
-            rel = (
-                f"{part_dir}/part-compact-{uuid.uuid4().hex}.parquet"
-                if part_dir
-                else f"part-compact-{uuid.uuid4().hex}.parquet"
-            )
-            fsio.move(
-                f"{out_dir}/{name}", f"{table_path.rstrip('/')}/{rel}"
-            )
-            adds.append(
-                {
-                    "add": {
-                        "path": rel,
-                        "partitionValues": {
-                            cm.get(c, c): (v or "") for c, v in key
-                        },
-                        "size": size,
-                        "modificationTime": _now_ms(),
-                        "dataChange": False,
-                        "stats": stats,
-                    }
-                }
-            )
-        fsio.remove_dir(out_dir)
-        removes.extend(group)
-
-    def _scan_group(group: list[_AddFile]) -> DataFrame:
-        """Group scan through _scan_snapshot so deletion vectors apply:
-        a direct parquet read would resurrect DV-deleted rows into the
-        compacted file.  The rewrite PURGES the group's DVs (visible
-        rows unchanged — dataChange:false stays correct)."""
-        return _scan_snapshot(spark, snap.with_files(group)).select(
-            [fld.name for fld in data_fields]
-        )
-
-    for key, files in by_part.items():
-        if cluster_by:
-            # clustered rewrite: ALL live files of the partition become
-            # n_out range-sorted files (narrow per-file stat ranges)
-            total = sum(f.size for f in files)
-            n_out = max(1, -(-total // target_file_bytes))
-            shaped = (
-                _scan_group(files)
-                .repartitionByRange(int(n_out), *cluster_by)
-                .sortWithinPartitions(*cluster_by)
-            )
-            _rewrite(files, key, shaped)
-            continue
-        bins = plan_compaction_bins([f.size for f in files], target_file_bytes)
-        for members in bins:
-            group = [files[i] for i in members]
-            shaped = _scan_group(group).coalesce(1)
-            _rewrite(group, key, shaped)
-    if not adds:
-        return None
-    return _commit(
-        table_path,
-        snap,
-        [_commit_info("OPTIMIZE", {"targetSize": str(target_file_bytes)})]
-        + _removes(removes, data_change=False)
-        + adds,
+    return rewrite.compact(
+        _Rewrite(spark, table_path, "OPTIMIZE"), target_file_bytes, cluster_by
     )
 
 
@@ -2337,7 +2188,83 @@ def vacuum_delta_table(
 
 
 # ---------------------------------------------------------------------------
-# MERGE (upsert / delete-matched)
+# row-level DML and OPTIMIZE: the touch-only core in sources/rewrite.py
+# over this adapter
+
+
+class _Rewrite:
+    """The ``rewrite.Table`` adapter over the snapshot a row-level
+    writer read.  The writer-protocol gate runs first.  Every rewrite
+    reads through :func:`_scan_snapshot` (DV-applied) and stages files
+    WITHOUT a descriptor, so a touch purges the file's DV while
+    untouched files keep theirs (the checkpoint writer carries the
+    descriptors and the table's real protocol) — delta-spark's REORG
+    ... APPLY (PURGE), applied incrementally.  Commits go through
+    :func:`_commit` at the version read."""
+
+    def __init__(
+        self,
+        spark: SparkSession,
+        table_path: str,
+        op: str,
+        adds_rows: bool = False,
+        removes_rows: bool = False,
+    ):
+        self.spark = spark
+        self.snap = read_delta_snapshot(table_path)
+        _check_writer_protocol(
+            self.snap, op, adds_rows=adds_rows, removes_rows=removes_rows
+        )
+        self.schema = self.snap.schema
+        self.root = _scan_root(table_path)
+
+    def live_files(self) -> list[_AddFile]:
+        return self.snap.files
+
+    def may_match(self, files, conjuncts) -> list[_AddFile]:
+        return [
+            f
+            for f in files
+            if all(_file_may_match(f, c, op, v) for c, op, v in conjuncts)
+        ]
+
+    def path(self, f: _AddFile) -> str:
+        return f"{self.root}/{f.path}"
+
+    def size(self, f: _AddFile) -> int:
+        return f.size
+
+    def partition(self, f: _AddFile) -> tuple:
+        return tuple(
+            f.partition_values.get(c, "") for c in self.snap.partition_columns
+        )
+
+    def scan(self, files, file_col=None, pos_col=None) -> DataFrame:
+        return _scan_snapshot(
+            self.spark, self.snap.with_files(files), file_col, pos_col
+        )
+
+    def stage(self, df: DataFrame, data_change: bool = True) -> list[dict]:
+        return _stage_data_files(
+            df,
+            self.snap.table_path,
+            self.snap.partition_columns,
+            data_change=data_change,
+            column_mapping=self.snap.column_mapping,
+        )
+
+    def commit(self, removed, added, op, params, txn=None) -> int | None:
+        return _commit(
+            self.snap.table_path,
+            self.snap,
+            [_commit_info(op, params)]
+            + _removes(removed, data_change=op != "OPTIMIZE")
+            + added,
+            txn=txn,
+        )
+
+    def txn_applied(self, txn) -> bool:
+        return _txn_applied(self.snap, txn)
 
 
 def merge_delta_table(
@@ -2356,203 +2283,24 @@ def merge_delta_table(
     are inserted when ``insert_not_matched``.  One atomic commit; returns
     its version (None when the merge is a no-op).
 
-    Scale shape — rewrite only what the keys touch:
-
-    1. *stats pre-prune* (driver, free): for single-key merges the
-       source's key min/max cut the candidate file list via the log's
-       per-file stats before any Spark work;
-    2. *touch probe*: candidates are scanned once with
-       ``input_file_name()`` semi-joined against the (broadcast) source
-       keys — a CDC batch is small, so the probe is a map-only broadcast
-       join over just the candidate files;
-    3. *rewrite*: only touched files are read again; kept rows
-       (anti-join), updates, and inserts are staged as new files, and
-       remove(touched)+add(new) publish in ONE exclusive-create commit.
-
-    Untouched files are never read twice, never rewritten — at 100 TB a
-    1M-row CDC batch against a well-clustered table rewrites a few
-    files, not the table.  Matching the delta-spark semantics, a
-    concurrent commit that removed one of our touched files aborts with
+    Touch-only (``rewrite.merge``): for single-key merges the source's
+    key min/max cut the candidates by the log's per-file stats, a
+    broadcast-semi probe finds the files the keys touch, and only those
+    are rewritten.  Matching the delta-spark semantics, a concurrent
+    commit that removed one of our touched files aborts with
     :class:`DeltaConcurrentCommitError` (rerun on the new snapshot).
+    ``txn_app_id``/``txn_version`` give streaming-upsert idempotence
+    (the Delta ``txn`` action): a replayed epoch is detected in the log
+    and skipped before any file is staged.
 
     Row semantics mirror ``operators.dataset.merge_upsert`` (the
     DataFrame-level MERGE); this is its transactional storage face.
     """
-    if when_matched not in ("update", "delete"):
-        raise ValueError("when_matched must be update|delete")
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version go together")
-    on = list(on)
-    snap = read_delta_snapshot(table_path)
-    _check_writer_protocol(
-        snap, "MERGE", adds_rows=True, removes_rows=True
-    )
     txn = None if txn_app_id is None else (txn_app_id, int(txn_version))
-    if _txn_applied(snap, txn):
-        # streaming-upsert idempotence (the Delta `txn` action): a
-        # replayed epoch is detected in the log and skipped before any
-        # file is staged
-        return None
-    if when_matched == "update" or insert_not_matched:
-        # names + types must match; nullability may differ (literals are
-        # non-nullable, table columns usually nullable — irrelevant here)
-        shape = lambda sch: [(f.name, f.dataType) for f in sch.fields]  # noqa: E731
-        if shape(source.schema) != shape(snap.schema):
-            raise ValueError(
-                "merge source schema must equal the table schema "
-                f"(table {snap.schema.simpleString()}, "
-                f"source {source.schema.simpleString()})"
-            )
-    source = source.cache()
-
-    # 1. stats pre-prune (proof-based superset of the true touch set)
-    candidates = snap.files
-    if len(on) == 1:
-        key = on[0]
-        bounds = source.agg(
-            F.min(key).alias("lo"), F.max(key).alias("hi")
-        ).collect()[0]
-        if bounds["lo"] is not None:
-            lo, hi = bounds["lo"], bounds["hi"]
-            if hasattr(lo, "isoformat"):
-                lo, hi = lo.isoformat(), hi.isoformat()
-            candidates = [
-                f
-                for f in candidates
-                if _file_may_match(f, key, ">=", lo)
-                and _file_may_match(f, key, "<=", hi)
-            ]
-
-    # 2. touch probe over the candidates only
-    touched_rel: set[str] = set()
-    if candidates:
-        probe_snap = snap.with_files(candidates)
-        # _metadata.file_path, NOT input_file_name(): the DV anti-join
-        # inside _scan_snapshot may shuffle, after which
-        # input_file_name() returns '' and the probe silently under-
-        # touches (review finding)
-        probe = (
-            _scan_snapshot(
-                spark, probe_snap, file_col="__file"
-            )
-            .join(F.broadcast(source.select(*on).distinct()), on=on, how="semi")
-            .select("__file")
-            .distinct()
-        )
-        for r in probe.collect():
-            # input_file_name yields a URI (file:/… locally, s3a://… on
-            # a cluster) — _normalize_rel handles both spellings
-            touched_rel.add(_normalize_rel(table_path, r["__file"]))
-    touched = [f for f in snap.files if f.path in touched_rel]
-
-    # 3. rewrite touched files + build the single commit
-    adds: list[dict] = []
-    matched_keys = None
-    if touched:
-        tsnap = snap.with_files(touched)
-        touched_df = _scan_snapshot(spark, tsnap)
-        kept = touched_df.join(
-            F.broadcast(source.select(*on).distinct()), on=on, how="left_anti"
-        )
-        matched_keys = (
-            touched_df.select(*on)
-            .join(F.broadcast(source.select(*on).distinct()), on=on, how="semi")
-            .distinct()
-        )
-        new_rows = kept
-        if when_matched == "update":
-            updates = source.join(matched_keys, on=on, how="semi")
-            new_rows = kept.unionByName(updates)
-        adds.extend(
-            _stage_data_files(
-                new_rows,
-                table_path,
-                snap.partition_columns,
-                data_change=True,
-                column_mapping=snap.column_mapping,
-            )
-        )
-    if insert_not_matched:
-        inserts = source
-        if matched_keys is not None:
-            inserts = source.join(matched_keys, on=on, how="left_anti")
-        elif touched_rel == set() and candidates:
-            pass  # no key matched anything: all of source inserts
-        adds.extend(
-            _stage_data_files(
-                inserts,
-                table_path,
-                snap.partition_columns,
-                data_change=True,
-                column_mapping=snap.column_mapping,
-            )
-        )
-    source.unpersist()
-    if not adds and not touched:
-        return None
-    info = _commit_info(
-        "MERGE", {"predicate": ",".join(on), "matchedAction": when_matched}
-    )
-    return _commit(table_path, snap, [info] + _removes(touched) + adds, txn=txn)
-
-
-def _filters_to_column(filters: list[tuple[str, str, object]]):
-    """AND of (col, op, value) triples as a real row predicate — the
-    exact-match twin of the proof language `_file_may_match` prunes on.
-    A NULL comparison counts as false, so DELETE keeps the row and
-    UPDATE leaves it untouched (SQL semantics).  Shared with
-    ``sources/iceberg.py``."""
-    cond = F.lit(True)
-    for col, op, val in filters:
-        c = F.col(col)
-        if op == "=":
-            cond = cond & (c == F.lit(val))
-        elif op == "!=":
-            cond = cond & (c != F.lit(val))
-        elif op == "<":
-            cond = cond & (c < F.lit(val))
-        elif op == "<=":
-            cond = cond & (c <= F.lit(val))
-        elif op == ">":
-            cond = cond & (c > F.lit(val))
-        elif op == ">=":
-            cond = cond & (c >= F.lit(val))
-        elif op == "is_null":
-            cond = cond & c.isNull()
-        else:
-            raise ValueError(f"unsupported filter operator {op!r}")
-    return F.coalesce(cond, F.lit(False))
-
-
-def _touched_files(
-    spark: SparkSession,
-    snap: DeltaSnapshot,
-    filters: list[tuple[str, str, object]],
-) -> list[_AddFile]:
-    """The files that PROVABLY contain predicate matches: stats prune
-    first (driver, free), then one scan of the surviving candidates with
-    ``input_file_name()`` — so a file inside the stats superset whose
-    rows all miss the predicate is never rewritten."""
-    candidates = [
-        f
-        for f in snap.files
-        if all(_file_may_match(f, c, op, v) for (c, op, v) in filters)
-    ]
-    if not candidates:
-        return []
-    probe_snap = snap.with_files(candidates)
-    # file identity captured at the scan stage (file_col) — see the
-    # merge probe comment: input_file_name() is '' after a DV shuffle
-    probe = (
-        _scan_snapshot(spark, probe_snap, file_col="__file")
-        .where(_filters_to_column(filters))
-        .select("__file")
-        .distinct()
-    )
-    touched_rel: set[str] = set()
-    for r in probe.collect():
-        touched_rel.add(_normalize_rel(snap.table_path, r["__file"]))
-    return [f for f in snap.files if f.path in touched_rel]
+    t = _Rewrite(spark, table_path, "MERGE", adds_rows=True, removes_rows=True)
+    return rewrite.merge(t, source, on, when_matched, insert_not_matched, txn)
 
 
 def delete_from_delta_table(
@@ -2563,13 +2311,10 @@ def delete_from_delta_table(
 ) -> int | None:
     """``DELETE FROM``: remove every row matching ALL ``filters``
     ((col, op, value) triples — the same proof language the reader
-    prunes on), touching ONLY files that provably contain matches.
-    Returns the commit version, or None when nothing matched (zero
-    writes).  Rows where the predicate is NULL are KEPT — SQL DELETE
-    semantics.  The transactional twin of
-    ``delete_from_iceberg_table`` (sources/iceberg.py), same
-    discipline: stats pre-prune → exact scan-stage touch probe → only
-    the touched files pay, untouched files never read twice.
+    prunes on), touching ONLY files that provably contain matches
+    (``rewrite.delete``).  Returns the commit version, or None when
+    nothing matched (zero writes).  Rows where the predicate is NULL
+    are KEPT — SQL DELETE semantics.
 
     Two write shapes:
 
@@ -2589,58 +2334,33 @@ def delete_from_delta_table(
       entirely.  Purge later with OPTIMIZE (compaction applies and
       drops DVs) — the usual operational pairing.
     """
-    if not filters:
-        raise ValueError(
-            "refusing an unconditional DELETE — pass explicit filters "
-            "(use write_delta_table(mode='overwrite') with an empty "
-            "DataFrame to truncate)"
-        )
-    snap = read_delta_snapshot(table_path)
-    _check_writer_protocol(snap, "DELETE", removes_rows=True)
+    t = _Rewrite(spark, table_path, "DELETE", removes_rows=True)
     if use_deletion_vectors is None:
         # the delta-spark default: tables that enable DVs get the
         # zero-rewrite shape (SQL DELETE included); explicit True/False
         # overrides
         use_deletion_vectors = (
-            (snap.configuration or {})
+            (t.snap.configuration or {})
             .get("delta.enableDeletionVectors", "")
             .lower()
             == "true"
         )
-    touched = _touched_files(spark, snap, filters)
-    if not touched:
-        return None
-    if use_deletion_vectors:
-        return _delete_with_deletion_vectors(
-            spark, table_path, snap, touched, filters
-        )
-    tsnap = snap.with_files(touched)
-    survivors = _scan_snapshot(spark, tsnap).where(
-        ~_filters_to_column(filters)
+    if not use_deletion_vectors:
+        return rewrite.delete(t, filters)
+    return rewrite.delete(
+        t, filters, lambda c: _delete_with_deletion_vectors(t, c, filters)
     )
-    adds = _stage_data_files(
-        survivors,
-        table_path,
-        snap.partition_columns,
-        data_change=True,
-        column_mapping=snap.column_mapping,
-    )
-    info = _commit_info(
-        "DELETE", {"predicate": json.dumps([list(map(str, f)) for f in filters])}
-    )
-    return _commit(table_path, snap, [info] + _removes(touched) + adds)
 
 
 def _delete_with_deletion_vectors(
-    spark: SparkSession,
-    table_path: str,
-    snap: DeltaSnapshot,
-    touched: list[_AddFile],
+    t: _Rewrite,
+    candidates: list[_AddFile],
     filters: list[tuple[str, str, object]],
 ) -> int | None:
-    """The DV write shape of DELETE (see delete_from_delta_table).
-    Matched row positions NEVER collect to the driver: they aggregate
-    per touched file EXECUTOR-SIDE (groupBy file → applyInPandas
+    """The DV write shape of DELETE (see delete_from_delta_table) over
+    the stats-pruned ``candidates``; a candidate with no new match is
+    left alone.  Matched row positions NEVER collect to the driver:
+    they aggregate per file EXECUTOR-SIDE (groupBy file → applyInPandas
     packing each file's roaring-bitmap DV-file segment), unioned there
     with any existing descriptor's positions (a DV replaces a DV).
     The driver receives one compressed segment per touched file —
@@ -2653,66 +2373,25 @@ def _delete_with_deletion_vectors(
 
     from ballista_spark.sources.dvbitmap import z85_encode
 
-    tsnap = snap.with_files(touched)
-    matched = (
-        _scan_snapshot(spark, tsnap, file_col="__file", pos_col="__rowpos")
-        .where(_filters_to_column(list(filters)))
-        .select("__file", "__rowpos")
+    snap, spark, table_path = t.snap, t.spark, t.snap.table_path
+    all_pos = (
+        t.scan(candidates, file_col="__file", pos_col="__rowpos")
+        .where(_filters_to_column(filters))
+        .select(
+            "__file", F.col("__rowpos").alias("__pos"), F.lit(1).alias("__new")
+        )
     )
 
-    def _to_rel(batches):
-        import pandas as pd
-
-        from ballista_spark.sources.deltalog import _normalize_rel
-
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "__rel": [
-                        _normalize_rel(table_path, p) for p in pdf["__file"]
-                    ],
-                    "__pos": pdf["__rowpos"].astype("int64"),
-                    "__new": 1,
-                }
+    # existing descriptors on candidate files fold into the replacement
+    # vector through the reader's size-aware tombstone decode (the scan
+    # already anti-joined them out, so matched rows are new deletions)
+    old = _dv_tombstones(spark, snap.with_files(candidates))
+    if old is not None:
+        all_pos = all_pos.unionByName(
+            old.select(
+                F.col("__dfp").alias("__file"), "__pos", F.lit(0).alias("__new")
             )
-
-    pos_schema = "__rel string, __pos long, __new int"
-    all_pos = matched.mapInPandas(_to_rel, pos_schema)
-
-    # existing descriptors on touched files fold into the replacement
-    # vector executor-side too (the scan already anti-joined them out,
-    # so matched rows are new deletions only)
-    old_rows = [
-        (f.path, json.dumps(f.deletion_vector))
-        for f in touched
-        if f.deletion_vector
-    ]
-    if old_rows:
-
-        def _decode_old(batches):
-            import numpy as np
-            import pandas as pd
-
-            from ballista_spark.sources.deltalog import _dv_positions
-
-            for pdf in batches:
-                for rel, dvj in zip(pdf["__rel"], pdf["__dv"]):
-                    pos = np.asarray(
-                        _dv_positions(table_path, json.loads(dvj)),
-                        dtype="int64",
-                    )
-                    yield pd.DataFrame(
-                        {
-                            "__rel": np.repeat(rel, len(pos)),
-                            "__pos": pos,
-                            "__new": np.zeros(len(pos), dtype="int32"),
-                        }
-                    )
-
-        old_df = spark.createDataFrame(
-            old_rows, "__rel string, __dv string"
-        ).mapInPandas(_decode_old, pos_schema)
-        all_pos = all_pos.unionByName(old_df)
+        )
 
     def _pack(pdf):
         import struct as _struct
@@ -2723,10 +2402,10 @@ def _delete_with_deletion_vectors(
         from ballista_spark.sources.dvbitmap import encode_rbm_array
 
         if not int((pdf["__new"] == 1).sum()):
-            # probe superset / carried-only descriptor: no new deletion
+            # stats superset / carried-only descriptor: no new deletion
             return pd.DataFrame(
                 {
-                    "__rel": pd.Series([], dtype=str),
+                    "__file": pd.Series([], dtype=str),
                     "__segment": pd.Series([], dtype=object),
                     "__size": pd.Series([], dtype="int64"),
                     "__card": pd.Series([], dtype="int64"),
@@ -2741,7 +2420,7 @@ def _delete_with_deletion_vectors(
         )
         return pd.DataFrame(
             {
-                "__rel": [pdf["__rel"].iloc[0]],
+                "__file": [pdf["__file"].iloc[0]],
                 "__segment": [seg],
                 "__size": [len(data)],
                 "__card": [len(vals)],
@@ -2749,21 +2428,21 @@ def _delete_with_deletion_vectors(
         )
 
     packed = {
-        r["__rel"]: r
-        for r in all_pos.groupBy("__rel")
+        r["__file"]: r
+        for r in all_pos.groupBy("__file")
         .applyInPandas(
             _pack,
-            "__rel string, __segment binary, __size long, __card long",
+            "__file string, __segment binary, __size long, __card long",
         )
         .collect()
     }
 
     removes: list[_AddFile] = []
     vec_files: list[tuple[_AddFile, dict]] = []
-    for f in touched:
-        seg = packed.get(f.path)
+    for f in candidates:
+        seg = packed.get(t.path(f))
         if seg is None:
-            continue  # probe superset: no live row actually matched
+            continue  # stats superset: no live row actually matched
         removes.append(f)
         n_records = (f.stats or {}).get("numRecords")
         if n_records is not None and int(seg["__card"]) >= int(n_records):
@@ -2773,6 +2452,33 @@ def _delete_with_deletion_vectors(
         return None
 
     adds: list[dict] = []
+    if "deletionVectors" not in snap.reader_features:
+        proto = dict(snap.protocol or {})
+        rf = set(proto.get("readerFeatures") or [])
+        wf = set(proto.get("writerFeatures") or [])
+        # upgrading to v7 writers must ENUMERATE the legacy features the
+        # old minWriterVersion implied (spec: table features) — the full
+        # 1-6 map; _check_writer_protocol already refused any implied
+        # feature this writer couldn't honor
+        wf |= _LEGACY_WRITER_FEATURES.get(
+            int(proto.get("minWriterVersion", 2)), frozenset()
+        )
+        # same on the reader side: a minReaderVersion=2 (column-mapped)
+        # table upgraded to 3 must keep declaring columnMapping, or
+        # other readers would scan physical names unmapped
+        rf |= _LEGACY_READER_FEATURES.get(
+            int(proto.get("minReaderVersion", 1)), frozenset()
+        )
+        adds.append(
+            {
+                "protocol": {
+                    "minReaderVersion": 3,
+                    "minWriterVersion": 7,
+                    "readerFeatures": sorted(rf | {"deletionVectors"}),
+                    "writerFeatures": sorted(wf | {"deletionVectors"}),
+                }
+            }
+        )
     if vec_files:
         u = _uuid.uuid4()
         enc = z85_encode(u.bytes)
@@ -2808,44 +2514,16 @@ def _delete_with_deletion_vectors(
         fsio.write_bytes(
             f"{table_path.rstrip('/')}/deletion_vector_{u}.bin", bytes(blob)
         )
-    actions = [
-        _commit_info(
-            "DELETE",
-            {
-                "predicate": json.dumps([list(map(str, f)) for f in filters]),
-                "deletionVectors": "true",
-            },
-        )
-    ]
-    if "deletionVectors" not in snap.reader_features:
-        proto = dict(snap.protocol or {})
-        rf = set(proto.get("readerFeatures") or [])
-        wf = set(proto.get("writerFeatures") or [])
-        # upgrading to v7 writers must ENUMERATE the legacy features the
-        # old minWriterVersion implied (spec: table features) — the full
-        # 1-6 map; _check_writer_protocol already refused any implied
-        # feature this writer couldn't honor
-        wf |= _LEGACY_WRITER_FEATURES.get(
-            int(proto.get("minWriterVersion", 2)), frozenset()
-        )
-        # same on the reader side: a minReaderVersion=2 (column-mapped)
-        # table upgraded to 3 must keep declaring columnMapping, or
-        # other readers would scan physical names unmapped
-        rf |= _LEGACY_READER_FEATURES.get(
-            int(proto.get("minReaderVersion", 1)), frozenset()
-        )
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": 3,
-                    "minWriterVersion": 7,
-                    "readerFeatures": sorted(rf | {"deletionVectors"}),
-                    "writerFeatures": sorted(wf | {"deletionVectors"}),
-                }
-            }
-        )
     # each remove precedes its file's re-add with the new vector
-    return _commit(table_path, snap, actions + _removes(removes) + adds)
+    return t.commit(
+        removes,
+        adds,
+        "DELETE",
+        {
+            "predicate": json.dumps([list(map(str, f)) for f in filters]),
+            "deletionVectors": "true",
+        },
+    )
 
 
 def update_delta_table(
@@ -2860,71 +2538,18 @@ def update_delta_table(
     the table schema never drifts.  ``filters=None`` is the
     unconditional full-table UPDATE (SQL allows it; every file is
     rewritten).  Returns the commit version, or None when no row
-    matched.  Same touch-only shape as :func:`delete_from_delta_table`;
-    non-matching rows inside a touched file are carried byte-identical
-    through the rewrite (``CASE WHEN`` keeps them).
+    matched.  Same touch-only shape as :func:`delete_from_delta_table`
+    (``rewrite.update``); non-matching rows inside a touched file are
+    carried byte-identical through the rewrite.
     """
-    if not set_exprs:
-        raise ValueError("UPDATE needs at least one SET column")
-    snap = read_delta_snapshot(table_path)
-    _check_writer_protocol(
-        snap, "UPDATE", adds_rows=True, removes_rows=True
-    )
-    by_name = {f.name: f for f in snap.schema.fields}
+    t = _Rewrite(spark, table_path, "UPDATE", adds_rows=True, removes_rows=True)
     for name in set_exprs:
-        if name not in by_name:
-            raise ValueError(f"SET column {name!r} is not in the table schema")
-        if name in snap.partition_columns:
+        if name in t.snap.partition_columns:
             raise ValueError(
                 f"SET column {name!r} is a partition column — rewrite "
                 "paths would change; use merge_delta_table (delete+insert)"
             )
-    if filters:
-        touched = _touched_files(spark, snap, list(filters))
-        pred = _filters_to_column(list(filters))
-    else:
-        touched = list(snap.files)
-        pred = F.lit(True)
-    if not touched:
-        return None
-    tsnap = snap.with_files(touched)
-    base = _scan_snapshot(spark, tsnap)
-    # SQL UPDATE semantics: every SET right-hand side evaluates against
-    # the PRE-update row, so `SET a = b, b = a` swaps.  One select
-    # projection over the original row — never chained withColumn (a
-    # later assignment would see already-updated columns).
-    replacements = {
-        name: F.when(
-            pred,
-            (F.expr(expr) if isinstance(expr, str) else expr).cast(
-                by_name[name].dataType
-            ),
-        ).otherwise(F.col(name))
-        for name, expr in set_exprs.items()
-    }
-    updated = base.select(
-        *[
-            replacements[c].alias(c) if c in replacements else F.col(c)
-            for c in base.columns
-        ]
-    )
-    adds = _stage_data_files(
-        updated,
-        table_path,
-        snap.partition_columns,
-        data_change=True,
-        column_mapping=snap.column_mapping,
-    )
-    info = _commit_info(
-        "UPDATE",
-        {
-            "predicate": json.dumps(
-                [list(map(str, f)) for f in (filters or [])]
-            ),
-            "set": json.dumps({k: str(v) for k, v in set_exprs.items()}),
-        },
-    )
-    return _commit(table_path, snap, [info] + _removes(touched) + adds)
+    return rewrite.update(t, set_exprs, filters)
 
 
 # ---------------------------------------------------------------------------

@@ -41,6 +41,11 @@ _Z85_INDEX = {c: i for i, c in enumerate(_Z85_CHARS)}
 
 MAGIC = 1681511377  # RoaringBitmapArray portable-format magic
 
+#: positions per yielded Arrow batch when a table reader decodes vectors
+#: executor-side (bounds a batch to ~30 MB even for pathological path
+#: lengths)
+DECODE_CHUNK = 1 << 18
+
 _SERIAL_COOKIE = 12347
 _SERIAL_COOKIE_NO_RUNCONTAINER = 12346
 _NO_OFFSET_THRESHOLD = 4

@@ -63,8 +63,9 @@ the Delta log; every data-changing writer commits through
 ``_commit_snapshot``).  v1 until the first merge-on-read position
 DELETE upgrades the table to v2, after which every snapshot takes a
 sequence number.  Row-level DELETE defaults to copy-on-write
-(``delete_from_iceberg_table``: bounds-pruned touch-only rewrite, the
-``merge_delta_table`` discipline), alongside ``compact_iceberg_table``
+(``delete_from_iceberg_table``: bounds-pruned, probed touch-only
+rewrite — DML and compaction run the row-level core shared with the
+Delta writer, ``sources/rewrite.py``), alongside ``compact_iceberg_table``
 (replace snapshots) and ``expire_iceberg_snapshots`` (time-travel
 window maintenance).  Unpartitioned layout: Iceberg data files always
 carry every column, and file skipping here rides the column bounds —
@@ -73,6 +74,8 @@ the mechanism Iceberg itself uses within a partition.
 
 from __future__ import annotations
 
+import copy
+import functools
 import json
 import os
 import struct
@@ -80,13 +83,14 @@ import struct
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ballista_spark.sources import fsio
+from ballista_spark.sources import fsio, rewrite
 from ballista_spark.sources.avroio import (
     read_avro_bytes,
     read_avro_projected,
 )
 from ballista_spark.sources.decodecache import DecodeCache
-from ballista_spark.sources.deltalog import _filters_to_column
+from ballista_spark.sources.dvbitmap import DECODE_CHUNK
+from ballista_spark.sources.rewrite import _filters_to_column, decoded_file_path
 
 __all__ = [
     "read_iceberg_table",
@@ -352,6 +356,14 @@ def _norm_path(table_path: str, p: str) -> str:
     return p
 
 
+def _abs_path(table_path: str, p: str) -> str:
+    """A manifest path as ``rewrite.decoded_file_path`` spells it."""
+    p = _norm_path(table_path, p)
+    if fsio.is_local(p) and not os.path.isabs(p):
+        p = os.path.abspath(p)
+    return p
+
+
 #: Manifests are IMMUTABLE once written (the Iceberg contract: a new
 #: snapshot writes NEW manifest files), so their decoded entries
 #: LRU-cache across snapshot resolutions — the per-query production
@@ -607,6 +619,17 @@ def read_iceberg_snapshot(
     decode; per-file bounds pruning stays the caller's move
     (:func:`read_iceberg_table`)."""
     _, md = _load_metadata(table_path)
+    return _resolve_snapshot(table_path, md, snapshot_id, filters)
+
+
+def _resolve_snapshot(
+    table_path: str,
+    md: dict,
+    snapshot_id: int | None = None,
+    filters: list[tuple[str, str, object]] | None = None,
+) -> IcebergSnapshot:
+    """:func:`read_iceberg_snapshot` over metadata already read (a
+    writer resolves the version it will commit on)."""
     schema = _current_schema(md)
     initial_defaults = _collect_initial_defaults(schema)
     spark_schema = iceberg_to_spark_type(schema)
@@ -803,20 +826,6 @@ def _bounds_may_match(bounds: dict, col: str, op: str, value) -> bool:
     return True
 
 
-def _entries_may_match(entries: list[dict], ids: dict, filters) -> list[dict]:
-    """The manifest entries whose column bounds may hold a row matching
-    ALL ``filters`` — the writers' touch set, decoding only the columns
-    the filters compare (:class:`_LazyBounds`)."""
-    by_name = {name: (fid, ftype) for fid, (name, ftype) in ids.items()}
-    out = []
-    for e in entries:
-        d = e["data_file"]
-        bounds = _LazyBounds(d.get("lower_bounds"), d.get("upper_bounds"), by_name)
-        if all(_bounds_may_match(bounds, c, op, v) for c, op, v in filters):
-            out.append(e)
-    return out
-
-
 #: Same decode-placement policy (and measurements) as
 #: deltalog.DV_DRIVER_DECODE_MAX: local tables whose manifests declare
 #: at most this many total deleted positions decode deletion vectors on
@@ -852,12 +861,10 @@ def _dv_tombstones(spark: SparkSession, snap: IcebergSnapshot) -> DataFrame:
     vector in the snapshot — the anti-join side of the scan.  Paths
     normalize exactly like the parquet position-delete side (file: URI
     stripped; relative paths rooted at the table)."""
-    entries = []
-    for puffin, ref, off, size, card in snap.dv_deletes:
-        p = _norm_path(snap.table_path, ref)
-        if fsio.is_local(p) and not os.path.isabs(p):
-            p = os.path.abspath(p)
-        entries.append((p, puffin, int(off), int(size), int(card)))
+    entries = [
+        (_abs_path(snap.table_path, ref), puffin, int(off), int(size), int(card))
+        for puffin, ref, off, size, card in snap.dv_deletes
+    ]
     total = sum(e[4] for e in entries)
     cardinality_known = all(e[4] > 0 for e in entries)
     if (
@@ -889,7 +896,6 @@ def _dv_tombstones(spark: SparkSession, snap: IcebergSnapshot) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from ballista_spark.sources.deltalog import _DV_DECODE_CHUNK
         from ballista_spark.sources.iceberg import _read_dv_positions
 
         for pdf in batches:
@@ -903,8 +909,8 @@ def _dv_tombstones(spark: SparkSession, snap: IcebergSnapshot) -> DataFrame:
                 )
                 # chunk like deltalog._dv_tombstones: one huge DV must
                 # not become one unbounded Arrow batch (round-9 advice)
-                for i in range(0, max(len(pos), 1), _DV_DECODE_CHUNK):
-                    chunk = pos[i : i + _DV_DECODE_CHUNK]
+                for i in range(0, max(len(pos), 1), DECODE_CHUNK):
+                    chunk = pos[i : i + DECODE_CHUNK]
                     yield pd.DataFrame(
                         {"__dfp": np.repeat(dfp, len(chunk)), "__pos": chunk}
                     )
@@ -933,16 +939,30 @@ def read_iceberg_table(
     real ``.where`` for row-level filtering + parquet row-group
     skipping)."""
     snap = read_iceberg_snapshot(table_path, snapshot_id, filters=filters)
-    files = snap.files
     if filters:
         kept = [
             f
-            for f in files
+            for f in snap.files
             if all(_bounds_may_match(f[2], c, op, v) for (c, op, v) in filters)
         ]
-        snap.files_pruned = len(files) - len(kept)
-        files = kept
+        snap.files_pruned = len(snap.files) - len(kept)
         snap.files = kept
+    return _scan_snapshot(spark, snap)
+
+
+def _scan_snapshot(
+    spark: SparkSession,
+    snap: IcebergSnapshot,
+    file_col: str | None = None,
+    pos_col: str | None = None,
+) -> DataFrame:
+    """ONE parquet scan of ``snap.files`` with every delete file of the
+    snapshot applied; ``file_col`` / ``pos_col`` optionally carry each
+    row's decoded source-file path (``rewrite.decoded_file_path``) and
+    physical row position, captured at the scan stage."""
+    from pyspark.sql import functions as F
+
+    files = snap.files
     if not files:
         return spark.createDataFrame([], snap.spark_schema)
     read_schema = snap.spark_schema
@@ -960,27 +980,30 @@ def read_iceberg_table(
         read_schema = _spark_schema_with_field_ids(
             snap.spark_schema, snap.schema_json
         )
-    from pyspark.sql import functions as F
-
     has_deletes = bool(
         snap.delete_files or snap.eq_deletes or snap.dv_deletes
     )
+    tag = has_deletes or bool(file_col or pos_col)
     if snap.initial_defaults:
         df = _scan_with_initial_defaults(
-            spark, read_schema, [f[0] for f in files], snap, tag=has_deletes
+            spark, read_schema, [f[0] for f in files], snap, tag=tag
         )
     else:
         df = spark.read.schema(read_schema).parquet(*[f[0] for f in files])
-        if has_deletes:
+        if tag:
             df = df.withColumns(
                 {
-                    "__dfp": _decoded_file_path_col(),
+                    "__dfp": decoded_file_path(),
                     "__pos": F.col("_metadata.row_index"),
                 }
             )
-    if not has_deletes:
+    if not tag:
         return df
-    out_cols = [f.name for f in snap.spark_schema.fields]
+    out_cols = [F.col(f.name) for f in snap.spark_schema.fields] + [
+        F.col(src).alias(c)
+        for src, c in (("__dfp", file_col), ("__pos", pos_col))
+        if c
+    ]
     tagged = df
     if snap.delete_files:
         # v2 POSITION deletes: one anti-join on (file, row position).
@@ -1358,7 +1381,7 @@ def _footer_bounds(path: str, ids: dict[int, tuple[str, str]]):
     """(record_count, lower, upper, null_counts) from ONE parquet footer
     — same footer-only discipline as deltalog._file_stats_json, but
     keyed by Iceberg field id with Appendix-D encoded values.
-    Worker-safe (fsio-routed): ``_bounds_for_files`` runs it on
+    Worker-safe (fsio-routed): ``_per_file`` runs it on
     executors for large commits."""
     import pyarrow.parquet as pq
 
@@ -1634,23 +1657,20 @@ EXECUTOR_STATS_MIN_FILES = 64
 EXECUTOR_STATS_FORCE = False
 
 
-def _bounds_for_files(
-    spark: SparkSession | None, paths: list[str], ids: dict
-) -> dict[str, tuple]:
-    """path -> ``_footer_bounds`` result for every staged file; large
-    object-store commits distribute the footer reads (one tiny Spark
-    job over the path list — the Appendix-D byte bounds pickle back
-    losslessly) instead of a serial driver loop."""
+def _per_file(spark: SparkSession | None, paths: list[str], fn) -> dict:
+    """{path: fn(path)} for a worker-safe footer read ``fn``; large
+    object-store path lists distribute the reads (one tiny Spark job
+    over the path list — results such as the Appendix-D byte bounds
+    pickle back losslessly) instead of a serial driver loop."""
     if (
         spark is None
         or len(paths) < EXECUTOR_STATS_MIN_FILES
-        or (not paths)
         or (fsio.is_local(paths[0]) and not EXECUTOR_STATS_FORCE)
     ):
-        return {p: _footer_bounds(p, ids) for p in paths}
+        return {p: fn(p) for p in paths}
     sc = spark.sparkContext
     rdd = sc.parallelize(paths, min(len(paths), sc.defaultParallelism))
-    return dict(rdd.map(lambda p: (p, _footer_bounds(p, ids))).collect())
+    return dict(rdd.map(lambda p: (p, fn(p))).collect())
 
 
 def _entry_for_file(
@@ -1706,7 +1726,7 @@ def _stage_entries(
     INT96 default also writes no statistics, killing bound pruning) —
     TIMESTAMP_MICROS is forced for the staging write, then restored.
     IO is fsio-routed; footer bounds for large commits are collected
-    executor-side (``_bounds_for_files``), not in a driver loop.
+    executor-side (``_per_file``), not in a driver loop.
     """
     import uuid as _uuid
 
@@ -1729,8 +1749,10 @@ def _stage_entries(
         for rel, size in fsio.walk_files(staging)
         if rel.endswith(".parquet")
     )
-    bounds = _bounds_for_files(
-        spark, [f"{staging}/{rel}" for rel, _ in staged], ids
+    bounds = _per_file(
+        spark,
+        [f"{staging}/{rel}" for rel, _ in staged],
+        lambda p: _footer_bounds(p, ids),
     )
     entries = []
     for rel, size in staged:
@@ -2165,24 +2187,6 @@ def _file_has_field_ids(path: str) -> bool:
     )
 
 
-def _files_missing_field_ids(
-    spark: SparkSession | None, paths: list[str]
-) -> list[str]:
-    """Paths whose parquet footers lack field ids; large object-store
-    tables distribute the footer check (the `_bounds_for_files`
-    pattern) instead of a serial driver loop."""
-    if (
-        spark is None
-        or len(paths) < EXECUTOR_STATS_MIN_FILES
-        or not paths
-        or (fsio.is_local(paths[0]) and not EXECUTOR_STATS_FORCE)
-    ):
-        return [p for p in paths if not _file_has_field_ids(p)]
-    sc = spark.sparkContext
-    rdd = sc.parallelize(paths, min(len(paths), sc.defaultParallelism))
-    return sorted(rdd.filter(lambda p: not _file_has_field_ids(p)).collect())
-
-
 def _absent_default_fields(path: str, targets: tuple) -> frozenset:
     """The defaulted field names ABSENT from this file's footer
     (matched by stamped field id when present, else by name) — rows in
@@ -2203,27 +2207,6 @@ def _absent_default_fields(path: str, targets: tuple) -> frozenset:
         name
         for name, fid in targets
         if fid not in present_ids and name not in present_names
-    )
-
-
-def _absent_defaults_per_file(
-    spark: SparkSession | None, paths: list[str], targets: tuple
-) -> dict:
-    """{path: frozenset(absent defaulted field names)}; large
-    object-store tables distribute the footer probe (the
-    `_files_missing_field_ids` pattern) instead of a serial driver
-    loop."""
-    if (
-        spark is None
-        or len(paths) < EXECUTOR_STATS_MIN_FILES
-        or not paths
-        or (fsio.is_local(paths[0]) and not EXECUTOR_STATS_FORCE)
-    ):
-        return {p: _absent_default_fields(p, targets) for p in paths}
-    sc = spark.sparkContext
-    rdd = sc.parallelize(paths, min(len(paths), sc.defaultParallelism))
-    return dict(
-        rdd.map(lambda p: (p, _absent_default_fields(p, targets))).collect()
     )
 
 
@@ -2252,7 +2235,9 @@ def _scan_with_initial_defaults(
     targets = tuple(
         (name, id_by_name.get(name, -1)) for name in snap.initial_defaults
     )
-    absent = _absent_defaults_per_file(spark, paths, targets)
+    absent = _per_file(
+        spark, paths, lambda p: _absent_default_fields(p, targets)
+    )
     groups: dict[frozenset, list] = {}
     for p in paths:
         groups.setdefault(absent.get(p, frozenset()), []).append(p)
@@ -2269,7 +2254,7 @@ def _scan_with_initial_defaults(
         if tag:
             g = g.withColumns(
                 {
-                    "__dfp": _decoded_file_path_col(),
+                    "__dfp": decoded_file_path(),
                     "__pos": F.col("_metadata.row_index"),
                 }
             )
@@ -2359,7 +2344,8 @@ def rename_iceberg_column(
                     )
                 if content == 0:
                     all_paths.add(_norm_path(table_path, row[_SR_PATH]))
-    missing = _files_missing_field_ids(spark, sorted(all_paths))
+    has_ids = _per_file(spark, sorted(all_paths), _file_has_field_ids)
+    missing = [p for p, ok in has_ids.items() if not ok]
     if missing:
         raise IcebergFeatureError(
             "RENAME COLUMN requires every data file referenced by any "
@@ -2429,110 +2415,32 @@ def compact_iceberg_table(
     target_file_bytes: int = 128 * 1024 * 1024,
     cluster_by: list[str] | None = None,
 ) -> int | None:
-    """Transactional small-file compaction — the Iceberg twin of
-    ``deltalog.compact_delta_table``.  Returns the new snapshot id, or
-    None when nothing needed compacting.
+    """Transactional small-file compaction (``rewrite.compact``, shared
+    with ``deltalog.compact_delta_table``).  Returns the new snapshot
+    id, or None when nothing needed compacting.
 
     Three rewrite shapes, committed as one REPLACE snapshot:
 
-    - default: FFD bin-pack files under ``target_file_bytes`` (shared
-      planner) and rewrite each bin as one file; untouched files'
-      manifest records carry forward verbatim (status EXISTING, bounds
-      bytes untouched).
+    - default: FFD bin-pack files under ``target_file_bytes`` and
+      rewrite each bin as one file; untouched files' manifest records
+      carry forward verbatim (status EXISTING, bounds bytes untouched).
     - ``cluster_by``: range-partition + sort ALL live rows into
-      ``ceil(total/target)`` outputs — the Delta twin's clustered mode.
-      FFD bins are size-based, not key-based, so composing them with a
-      per-bin sort would leave every output spanning the full key range
-      and bounds would prune nothing; clustering must be a full
-      rewrite to make the Appendix-D bounds selective.
+      ``ceil(total/target)`` outputs, so the Appendix-D bounds become
+      selective.
     - a table with v2 POSITION delete files also forces a full rewrite
-      through :func:`read_iceberg_table` (which applies the
-      tombstones): rewriting changes row positions, so tombstones
-      cannot survive any partial rewrite.  The replace snapshot carries
-      no delete files — compaction is how a MOR table becomes plain.
+      through the tombstone-applying scan: rewriting changes row
+      positions, so tombstones cannot survive any partial rewrite.  The
+      replace snapshot carries no delete files — compaction is how a
+      MOR table becomes plain.
 
     Readers at older snapshots stay correct (old files are never
     deleted here); the ``ballista_iceberg`` STREAMING face skips
     replace snapshots entirely — a compaction adds no rows, the Delta
     ``dataChange: false`` analogue.
     """
-    import math
-    import uuid as _uuid
-
-    from ballista_spark.sources.deltalog import plan_compaction_bins
-
-    version, md = _load_metadata(table_path)
-    _refuse_v3_write(md, "OPTIMIZE")
-    schema_json = _current_schema(md)
-    ids = _field_ids(schema_json)
-    cur_id = md.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
-    if cur_id in (None, -1) or cur_id not in snaps:
-        return None
-    live = _live_entries(table_path, snaps[cur_id])
-    data_live = [
-        e for e in live if (e["data_file"].get("content", 0) or 0) == 0
-    ]
-    has_deletes = len(data_live) != len(live)
-
-    snapshot_id = _uuid.uuid4().int >> 75
-    sizes = [int(e["data_file"]["file_size_in_bytes"]) for e in data_live]
-
-    if has_deletes or cluster_by:
-        # full rewrite (see docstring); MOR path reads through the
-        # tombstone-applying reader
-        if not data_live:
-            return None
-        total = sum(sizes)
-        n_out = max(1, math.ceil(total / target_file_bytes))
-        src = read_iceberg_table(spark, table_path, snapshot_id=cur_id)
-        if cluster_by:
-            src = src.repartitionByRange(n_out, *cluster_by).sortWithinPartitions(
-                *cluster_by
-            )
-        elif n_out != 1:
-            src = src.repartition(n_out)
-        else:
-            src = src.coalesce(1)
-        new_entries = _stage_entries(src, table_path, ids, snapshot_id)
-        kept = []
-        removed = len(live)
-    else:
-        bins = plan_compaction_bins(sizes, target_file_bytes)
-        if not bins:
-            return None
-        replaced_idx = {i for b in bins for i in b}
-        new_entries = []
-        for b in bins:
-            paths = [
-                _norm_path(table_path, data_live[i]["data_file"]["file_path"])
-                for i in b
-            ]
-            new_entries.extend(
-                _stage_entries(
-                    _mutation_scan(spark, md, schema_json, paths).coalesce(1),
-                    table_path,
-                    ids,
-                    snapshot_id,
-                )
-            )
-        kept = [e for i, e in enumerate(data_live) if i not in replaced_idx]
-        removed = len(replaced_idx)
-
-    return _commit_snapshot(
-        table_path,
-        md,
-        version,
-        snapshot_id,
-        new_entries,
-        {
-            "operation": "replace",
-            "added-data-files": str(len(new_entries)),
-            "deleted-data-files": str(removed),
-        },
-        kept=kept,
-        removed=removed,
-    )
+    t = _Rewrite(spark, table_path, "OPTIMIZE")
+    has_deletes = len(t.live) != len(t.live_files())
+    return rewrite.compact(t, target_file_bytes, cluster_by, full=has_deletes)
 
 
 def expire_iceberg_snapshots(
@@ -2634,38 +2542,112 @@ def expire_iceberg_snapshots(
     return sorted(deleted)
 
 
-def _mutation_scan(spark: SparkSession, md: dict, schema_json: dict, paths):
-    """Raw data-file read for a REWRITE (DELETE/UPDATE/MERGE/compact
-    bin-pack): when the schema history contains a rename, bind columns
-    by parquet field id exactly like :func:`read_iceberg_table` —
-    pre-rename files carry OLD column names, and a name-bound read
-    would silently NULL the renamed column in the rewritten output
-    (round-10 regression caught by forcing a survivor rewrite of a
-    pre-rename file)."""
-    spark_schema = iceberg_to_spark_type(schema_json)
-    read_schema = spark_schema
-    if _rename_in_history(md, schema_json):
-        spark.conf.set("spark.sql.parquet.fieldId.read.enabled", "true")
-        read_schema = _spark_schema_with_field_ids(spark_schema, schema_json)
-    return spark.read.schema(read_schema).parquet(*paths)
+#: each row-level operation's snapshot ``operation`` (spec summary)
+_SNAPSHOT_OPERATION = {
+    "DELETE": "delete",
+    "UPDATE": "overwrite",  # an update changes rows
+    "MERGE": "overwrite",
+    "OPTIMIZE": "replace",
+}
 
 
-def _decoded_file_path_col():
-    """``_metadata.file_path`` normalized to the manifests' raw spelling
-    — it is a PERCENT-ENCODED ``file:`` URI while manifests and delete
-    files store raw absolute paths; literal '+' is pre-escaped so
-    url_decode cannot turn it into a space.  Shared by the tombstone
-    anti-join (read side) and the position-delete writer (so both sides
-    of the (file, pos) join always agree byte-for-byte)."""
-    from pyspark.sql import functions as F
+class _Rewrite:
+    """The ``rewrite.Table`` adapter over the metadata version a
+    row-level writer read (:func:`_load_metadata`): files are the live
+    DATA manifest entries, scanned through :func:`_scan_snapshot` (field
+    ids bound on renamed tables, delete files applied) and committed by
+    :func:`_commit_snapshot` at that version + 1."""
 
-    return F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/"),
-            r"\+",
-            "%2B",
+    def __init__(self, spark: SparkSession, table_path: str, op: str):
+        import uuid as _uuid
+
+        self.spark, self.table_path = spark, table_path
+        self.version, self.md = _load_metadata(table_path)
+        _refuse_v3_write(self.md, op)
+        schema_json = _current_schema(self.md)
+        self.schema = iceberg_to_spark_type(schema_json)
+        self.ids = _field_ids(schema_json)
+        self.snapshot_id = _uuid.uuid4().int >> 75  # positive 53-bit long
+        cur_id = self.md.get("current-snapshot-id")
+        snaps = {s["snapshot-id"]: s for s in self.md.get("snapshots") or []}
+        #: every live entry, data AND delete files
+        self.live = (
+            _live_entries(table_path, snaps[cur_id]) if cur_id in snaps else []
         )
-    )
+
+    def live_files(self) -> list[dict]:
+        return [e for e in self.live if not e["data_file"].get("content")]
+
+    def may_match(self, files, conjuncts) -> list[dict]:
+        # decodes only the columns the conjuncts compare (_LazyBounds)
+        by_name = {name: (fid, ft) for fid, (name, ft) in self.ids.items()}
+        out = []
+        for e in files:
+            d = e["data_file"]
+            b = _LazyBounds(d.get("lower_bounds"), d.get("upper_bounds"), by_name)
+            if all(_bounds_may_match(b, c, op, v) for c, op, v in conjuncts):
+                out.append(e)
+        return out
+
+    def path(self, e: dict) -> str:
+        return _abs_path(self.table_path, e["data_file"]["file_path"])
+
+    def size(self, e: dict) -> int:
+        return int(e["data_file"]["file_size_in_bytes"])
+
+    def partition(self, e: dict) -> tuple:
+        return ()  # unpartitioned layout
+
+    @functools.cached_property
+    def snap(self) -> IcebergSnapshot:
+        return _resolve_snapshot(self.table_path, self.md)
+
+    def scan(self, files, file_col=None, pos_col=None) -> DataFrame:
+        tp = self.table_path
+        keep = {_norm_path(tp, e["data_file"]["file_path"]) for e in files}
+        snap = copy.copy(self.snap)
+        snap.files = [f for f in snap.files if f[0] in keep]
+        return _scan_snapshot(self.spark, snap, file_col, pos_col)
+
+    def stage(self, df: DataFrame, data_change: bool = True) -> list[dict]:
+        return _stage_entries(df, self.table_path, self.ids, self.snapshot_id)
+
+    def commit(self, removed, added, op, params, txn=None) -> int:
+        # the replacing manifest re-records the kept data files; delete
+        # files never carry over: row-level writers refuse tables that
+        # have them, and OPTIMIZE then rewrites every data file through
+        # them
+        gone = {e["data_file"]["file_path"] for e in removed}
+        kept = [
+            e for e in self.live_files()
+            if e["data_file"]["file_path"] not in gone
+        ]
+        dropped = len(self.live) - len(kept)
+        summary = {
+            "operation": _SNAPSHOT_OPERATION[op],
+            **params,
+            "added-data-files": str(len(added)),
+            "deleted-data-files": str(dropped),
+        }
+        return _commit_snapshot(
+            self.table_path, self.md, self.version, self.snapshot_id, added,
+            summary, kept=kept, removed=dropped, txn=txn or (None, None),
+        )
+
+    def txn_applied(self, txn) -> bool:
+        return txn is not None and _txn_replayed(self.md, *txn) is not None
+
+
+def _refuse_delete_files(t: _Rewrite, op: str, hint: str = "") -> None:
+    """Copy-on-write rewrites refuse tables with v2 delete files:
+    rewriting a file invalidates ITS tombstone positions while other
+    files' tombstones must survive."""
+    if len(t.live) != len(t.live_files()):
+        raise IcebergFeatureError(
+            f"table has v2 delete files: copy-on-write {op} cannot carry "
+            "tombstones across a rewrite — compact_iceberg_table first "
+            f"(it applies them){hint}"
+        )
 
 
 def delete_from_iceberg_table(
@@ -2676,11 +2658,10 @@ def delete_from_iceberg_table(
 ) -> int | None:
     """DELETE: remove every row matching ALL ``filters`` (the same
     (col, op, value) triples the readers prune on), touching ONLY the
-    files whose manifest bounds may contain matches — the
-    ``merge_delta_table`` discipline.  Commits one snapshot (operation
-    ``delete``); returns its id, or None when the bounds prove no file
-    could match (zero I/O).  Rows where the predicate is NULL are KEPT
-    — SQL DELETE semantics.
+    files that provably contain matches (``rewrite.delete``).  Commits
+    one snapshot (operation ``delete``); returns its id, or None when
+    no row matched (zero writes).  Rows where the predicate is NULL are
+    KEPT — SQL DELETE semantics.
 
     Two write shapes (the Iceberg twin of
     ``delete_from_delta_table``'s COW/DV split):
@@ -2688,10 +2669,8 @@ def delete_from_iceberg_table(
     - default (copy-on-write): touched files REWRITE without the
       matching rows (a file left empty disappears); untouched files'
       manifest records carry forward verbatim.  Cost tracks touched
-      BYTES.  Tables with v2 delete files refuse: rewriting a file
-      invalidates ITS tombstone positions while other files'
-      tombstones must survive — run ``compact_iceberg_table`` first
-      (it applies the tombstones).
+      BYTES.  Tables with v2 delete files refuse — run
+      ``compact_iceberg_table`` first (it applies the tombstones).
     - ``use_position_deletes=True`` — or None (the default) on a table
       with ``write.delete.mode=merge-on-read``, the spec's routing
       property (spec v2 merge-on-read): matched
@@ -2701,164 +2680,79 @@ def delete_from_iceberg_table(
       tracks MATCHED ROWS.  The commit upgrades the table to
       format-version 2 and assigns the snapshot a sequence number.
       Repeating the same DELETE is a no-op (existing tombstones
-      anti-join out of the matched scan executor-side).  Purge later
+      apply in the matched scan executor-side).  Purge later
       with ``compact_iceberg_table`` (a table with delete files
-      compacts through the tombstone-applying reader and the replace
+      compacts through the tombstone-applying scan and the replace
       snapshot carries none).
 
     Old snapshots stay readable until ``expire_iceberg_snapshots``;
     the ``ballista_iceberg`` streaming face refuses delete snapshots
     (a stream cannot retract).
     """
-    import uuid as _uuid
-
-    if not filters:
-        raise ValueError(
-            "refusing an unconditional DELETE — pass explicit filters "
-            "(use mode='overwrite' with an empty DataFrame to truncate)"
-        )
-    version, md = _load_metadata(table_path)
-    _refuse_v3_write(md, "DELETE")
+    t = _Rewrite(spark, table_path, "DELETE")
     if use_position_deletes is None:
         # the spec's routing property: merge-on-read tables get the
         # zero-rewrite shape (SQL DELETE included); explicit True/False
         # overrides
         use_position_deletes = (
-            (md.get("properties") or {})
+            (t.md.get("properties") or {})
             .get("write.delete.mode", "copy-on-write")
             .lower()
             == "merge-on-read"
         )
-    schema_json = _current_schema(md)
-    ids = _field_ids(schema_json)
-    cur_id = md.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
-    if cur_id in (None, -1) or cur_id not in snaps:
-        return None
-    live = _live_entries(table_path, snaps[cur_id])
-    if not use_position_deletes and any(
-        (e["data_file"].get("content", 0) or 0) != 0 for e in live
-    ):
-        raise IcebergFeatureError(
-            "table has v2 delete files: copy-on-write DELETE cannot "
-            "carry tombstones across a rewrite — compact_iceberg_table "
-            "first (it applies them), or pass use_position_deletes=True"
-        )
-    if use_position_deletes:
-        for e in live:
-            content = e["data_file"].get("content", 0) or 0
-            fmt = (e["data_file"].get("file_format") or "PARQUET").upper()
-            if content == 2 or (content == 1 and fmt != "PARQUET"):
-                raise IcebergFeatureError(
-                    "position-delete DELETE on a table with equality "
-                    "deletes or Puffin deletion vectors is not "
-                    "supported (their sequence/vector bookkeeping "
-                    "would interleave) — compact_iceberg_table first"
-                )
-        # renamed tables are fine: the matched scan binds by field id
-        # (_mutation_scan) and tombstones are (file, pos) pairs —
-        # name-independent by construction
-
-    touched = _entries_may_match(
-        [e for e in live if (e["data_file"].get("content", 0) or 0) == 0],
-        ids,
-        filters,
-    )
-    if not touched:
-        return None
-    snapshot_id = _uuid.uuid4().int >> 75
-    if use_position_deletes:
-        return _delete_with_position_deletes(
-            spark, table_path, md, version, snapshot_id, live, touched, filters
-        )
-    paths = [
-        _norm_path(table_path, e["data_file"]["file_path"]) for e in touched
-    ]
-    survivors = _mutation_scan(spark, md, schema_json, paths).where(
-        ~_filters_to_column(filters)
-    )
-    new_entries = _stage_entries(survivors, table_path, ids, snapshot_id)
-    touched_paths = {e["data_file"]["file_path"] for e in touched}
-    return _commit_snapshot(
-        table_path,
-        md,
-        version,
-        snapshot_id,
-        new_entries,
-        {
-            "operation": "delete",
-            "rewritten-data-files": str(len(touched)),
-            "added-data-files": str(len(new_entries)),
-        },
-        kept=[e for e in live if e["data_file"]["file_path"] not in touched_paths],
-        removed=len(touched),
+    if not use_position_deletes:
+        _refuse_delete_files(t, "DELETE", ", or pass use_position_deletes=True")
+        return rewrite.delete(t, filters)
+    for e in t.live:
+        content = e["data_file"].get("content", 0) or 0
+        fmt = (e["data_file"].get("file_format") or "PARQUET").upper()
+        if content == 2 or (content == 1 and fmt != "PARQUET"):
+            raise IcebergFeatureError(
+                "position-delete DELETE on a table with equality "
+                "deletes or Puffin deletion vectors is not "
+                "supported (their sequence/vector bookkeeping "
+                "would interleave) — compact_iceberg_table first"
+            )
+    # renamed tables are fine: the matched scan binds by field id and
+    # tombstones are (file, pos) pairs — name-independent by construction
+    return rewrite.delete(
+        t, filters, lambda c: _delete_with_position_deletes(t, c, filters)
     )
 
 
 def _delete_with_position_deletes(
-    spark: SparkSession,
-    table_path: str,
-    md: dict,
-    version: int,
-    snapshot_id: int,
-    live: list[dict],
-    touched: list[dict],
+    t: _Rewrite,
+    candidates: list[dict],
     filters: list[tuple[str, str, object]],
 ) -> int | None:
     """The zero-rewrite shape of DELETE (see delete_from_iceberg_table)
-    — the Iceberg v2 twin of ``deltalog._delete_with_deletion_vectors``.
+    over the stats-pruned ``candidates`` — the Iceberg v2 twin of
+    ``deltalog._delete_with_deletion_vectors``.
 
-    Matched row positions NEVER collect to the driver: the touched
-    files scan with ``_metadata`` (file, row_index), existing
-    tombstones anti-join out executor-side (a repeated DELETE commits
-    nothing), and the survivors write DISTRIBUTED as sorted
-    position-delete parquet under ``data/`` — the driver only moves
-    staged files and reads their footers, exactly the data-write
-    discipline of ``_stage_entries``.  One new DELETE manifest
-    (``content=1``, spec reserved field ids 2147483546/2147483545)
-    joins the manifest list next to the carried-forward data
-    manifests; the commit upgrades the table to format-version 2 and
-    advances ``last-sequence-number``.
+    Matched row positions NEVER collect to the driver: the candidate
+    files scan with their (file, row_index), existing tombstones apply
+    in that scan executor-side (a repeated DELETE commits nothing), and
+    the matches write DISTRIBUTED as sorted position-delete parquet
+    under ``data/`` — the driver only moves staged files and reads
+    their footers, exactly the data-write discipline of
+    ``_stage_entries``.  One new DELETE manifest (``content=1``, spec
+    reserved field ids 2147483546/2147483545) joins the manifest list
+    next to the carried-forward data manifests; the commit upgrades the
+    table to format-version 2 and advances ``last-sequence-number``.
     """
     import math
 
     from pyspark.sql import functions as F
 
-    paths = [
-        _norm_path(table_path, e["data_file"]["file_path"]) for e in touched
-    ]
-    tagged = _mutation_scan(spark, md, _current_schema(md), paths).withColumns(
-        {
-            "__dfp": _decoded_file_path_col(),
-            "__pos": F.col("_metadata.row_index"),
-        }
-    )
-    existing = [
-        _norm_path(table_path, e["data_file"]["file_path"])
-        for e in live
-        if (e["data_file"].get("content", 0) or 0) == 1
-    ]
-    if existing:
-        tombstones = (
-            spark.read.parquet(*existing)
-            .select(
-                F.regexp_replace(F.col("file_path"), "^file:/*", "/").alias(
-                    "__dfp"
-                ),
-                F.col("pos").cast("long").alias("__pos"),
-            )
-            .distinct()
-        )
-        tagged = tagged.join(tombstones, ["__dfp", "__pos"], "left_anti")
-    matched = tagged.where(
-        _filters_to_column(list(filters))
-    ).select(
-        F.col("__dfp").alias("file_path"), F.col("__pos").alias("pos")
+    matched = (
+        t.scan(candidates, file_col="__file", pos_col="__rowpos")
+        .where(_filters_to_column(filters))
+        .select(F.col("__file").alias("file_path"), F.col("__rowpos").alias("pos"))
     )
     # spec: position-delete rows sorted by (file_path, pos); each output
     # file covers a contiguous file range so a future id-aware reader
     # can skip delete files by their file_path bounds
-    n_out = max(1, math.ceil(len(touched) / 64))
+    n_out = max(1, math.ceil(len(candidates) / 64))
     if n_out > 1:
         matched = matched.repartitionByRange(n_out, "file_path", "pos")
     else:
@@ -2866,15 +2760,15 @@ def _delete_with_position_deletes(
     matched = matched.sortWithinPartitions("file_path", "pos")
 
     entries = _stage_entries(
-        matched, table_path, _POS_DELETE_IDS, snapshot_id, content=1
+        matched, t.table_path, _POS_DELETE_IDS, t.snapshot_id, content=1
     )
     if not entries:
-        return None  # every match was already tombstoned — no-op
+        return None  # no new match — every hit was already tombstoned
     return _commit_snapshot(
-        table_path,
-        md,
-        version,
-        snapshot_id,
+        t.table_path,
+        t.md,
+        t.version,
+        t.snapshot_id,
         entries,
         {
             "operation": "delete",
@@ -2893,92 +2787,21 @@ def update_iceberg_table(
     set_exprs,
     filters: list[tuple[str, str, object]] | None = None,
 ) -> int | None:
-    """Copy-on-write ``UPDATE ... SET ... WHERE``: rows matching ALL
-    ``filters`` get each ``set_exprs`` column (SQL string or Column)
-    applied, cast back to the column's declared type so the table schema
-    never drifts; non-matching rows in a touched file carry through the
-    rewrite unchanged (``CASE WHEN``).  ``filters=None`` = unconditional
-    full-table UPDATE.  Returns the new snapshot id, or None when the
-    bounds prove no file could match (zero I/O).  Same discipline and
+    """Copy-on-write ``UPDATE ... SET ... WHERE`` (``rewrite.update``):
+    rows matching ALL ``filters`` get each ``set_exprs`` column (SQL
+    string or Column) applied, cast back to the column's declared type
+    so the table schema never drifts; non-matching rows in a touched
+    file carry through the rewrite unchanged.  ``filters=None`` =
+    unconditional full-table UPDATE.  Returns the new snapshot id, or
+    None when no row matched (zero writes).  Same discipline and
     restrictions as :func:`delete_from_iceberg_table`: untouched files'
     manifest records carry forward verbatim; v2 delete-file tables
     refuse (compact first); the streaming face refuses the resulting
     overwrite snapshot (an update changes rows).
     """
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    if not set_exprs:
-        raise ValueError("UPDATE needs at least one SET column")
-    version, md = _load_metadata(table_path)
-    _refuse_v3_write(md, "UPDATE")
-    schema_json = _current_schema(md)
-    ids = _field_ids(schema_json)
-    cur_id = md.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
-    if cur_id in (None, -1) or cur_id not in snaps:
-        return None
-    live = _live_entries(table_path, snaps[cur_id])
-    if any((e["data_file"].get("content", 0) or 0) != 0 for e in live):
-        raise IcebergFeatureError(
-            "table has v2 delete files: copy-on-write UPDATE cannot "
-            "carry tombstones across a rewrite — compact_iceberg_table "
-            "first (it applies them)"
-        )
-    spark_schema = iceberg_to_spark_type(schema_json)
-    by_name = {f.name: f for f in spark_schema.fields}
-    for name in set_exprs:
-        if name not in by_name:
-            raise ValueError(f"SET column {name!r} is not in the table schema")
-
-    if filters:
-        touched = _entries_may_match(live, ids, filters)
-        pred = _filters_to_column(list(filters))
-    else:
-        touched = list(live)
-        pred = F.lit(True)
-    if not touched:
-        return None
-    snapshot_id = _uuid.uuid4().int >> 75
-    paths = [
-        _norm_path(table_path, e["data_file"]["file_path"]) for e in touched
-    ]
-    base = _mutation_scan(spark, md, schema_json, paths)
-    # SQL UPDATE: all SET right-hand sides see the PRE-update row
-    # (`SET a = b, b = a` swaps) — one select projection, not chained
-    # withColumn
-    replacements = {
-        name: F.when(
-            pred,
-            (F.expr(expr) if isinstance(expr, str) else expr).cast(
-                by_name[name].dataType
-            ),
-        ).otherwise(F.col(name))
-        for name, expr in set_exprs.items()
-    }
-    updated = base.select(
-        *[
-            replacements[c].alias(c) if c in replacements else F.col(c)
-            for c in base.columns
-        ]
-    )
-    new_entries = _stage_entries(updated, table_path, ids, snapshot_id)
-    touched_paths = {e["data_file"]["file_path"] for e in touched}
-    return _commit_snapshot(
-        table_path,
-        md,
-        version,
-        snapshot_id,
-        new_entries,
-        {
-            "operation": "overwrite",
-            "rewritten-data-files": str(len(touched)),
-            "added-data-files": str(len(new_entries)),
-        },
-        kept=[e for e in live if e["data_file"]["file_path"] not in touched_paths],
-        removed=len(touched),
-    )
+    t = _Rewrite(spark, table_path, "UPDATE")
+    _refuse_delete_files(t, "UPDATE")
+    return rewrite.update(t, set_exprs, filters)
 
 
 def merge_iceberg_table(
@@ -2991,156 +2814,22 @@ def merge_iceberg_table(
     txn_app_id: str | None = None,
     txn_version: int | None = None,
 ) -> int | None:
-    """``MERGE INTO`` the Iceberg table — the transactional twin of
-    ``deltalog.merge_delta_table`` with identical semantics: matched
-    rows (on the ``on`` keys) are replaced by the source row (SCD-1) or
-    deleted; unmatched source rows insert when ``insert_not_matched``.
-    One atomic snapshot (operation ``overwrite`` — a merge changes
-    rows, so the streaming face refuses it); returns its id, or None
-    for a no-op merge.
-
-    Same three-step touch-only shape: (1) manifest-bounds pre-prune of
-    candidate files for single-key merges, (2) a map-only
-    ``input_file_name`` probe semi-joined against the broadcast source
-    keys, (3) rewrite of ONLY the touched files — untouched files'
-    manifest records carry forward verbatim.  A 1M-row CDC batch
-    against a clustered 100 TB table rewrites a few files, not the
-    table.  Tables with v2 delete files refuse (compact first — it
+    """``MERGE INTO`` the Iceberg table (``rewrite.merge``, shared with
+    ``deltalog.merge_delta_table``): matched rows (on the ``on`` keys)
+    are replaced by the source row (SCD-1) or deleted; unmatched source
+    rows insert when ``insert_not_matched`` — into an empty table too
+    (the CDC-bootstrap case).  One atomic snapshot (operation
+    ``overwrite`` — a merge changes rows, so the streaming face refuses
+    it); returns its id, or None for a no-op merge or a replayed
+    ``txn_app_id``/``txn_version`` epoch.  Only the touched files are
+    rewritten — untouched files' manifest records carry forward
+    verbatim.  Tables with v2 delete files refuse (compact first — it
     applies the tombstones).
     """
-    import uuid as _uuid
-
-    from pyspark.sql import functions as F
-
-    if when_matched not in ("update", "delete"):
-        raise ValueError("when_matched must be update|delete")
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be passed together")
-    on = list(on)
-    version, md = _load_metadata(table_path)
-    _refuse_v3_write(md, "MERGE")
-    # streaming-upsert idempotence: a replayed epoch is detected in the
-    # snapshot history and skipped BEFORE any file is staged
-    if _txn_replayed(md, txn_app_id, txn_version) is not None:
-        return None
-    schema_json = _current_schema(md)
-    ids = _field_ids(schema_json)
-    cur_id = md.get("current-snapshot-id")
-    snaps = {s["snapshot-id"]: s for s in md.get("snapshots") or []}
-    if cur_id in (None, -1) or cur_id not in snaps:
-        # empty table: nothing can match, but unmatched source rows
-        # still INSERT (the CDC-bootstrap case — dropping them here
-        # would silently lose the stream's first epoch)
-        if not insert_not_matched:
-            return None
-        live = []
-    else:
-        live = _live_entries(table_path, snaps[cur_id])
-    if any((e["data_file"].get("content", 0) or 0) != 0 for e in live):
-        raise IcebergFeatureError(
-            "table has v2 delete files: MERGE cannot carry tombstones "
-            "across a rewrite — compact_iceberg_table first"
-        )
-    spark_schema = iceberg_to_spark_type(schema_json)
-    if when_matched == "update" or insert_not_matched:
-        shape = lambda sch: [(f.name, f.dataType) for f in sch.fields]  # noqa: E731
-        if shape(source.schema) != shape(spark_schema):
-            raise ValueError(
-                "merge source schema must equal the table schema "
-                f"(table {spark_schema.simpleString()}, "
-                f"source {source.schema.simpleString()})"
-            )
-    source = source.cache()
-
-    # 1. stats pre-prune (proof-based superset of the true touch set)
-    candidates = live
-    if len(on) == 1:
-        key = on[0]
-        kb = source.agg(F.min(key).alias("lo"), F.max(key).alias("hi")).collect()[0]
-        if kb["lo"] is not None:
-            candidates = _entries_may_match(
-                live, ids, [(key, ">=", kb["lo"]), (key, "<=", kb["hi"])]
-            )
-
-    def _paths(entries):
-        return [
-            _norm_path(table_path, e["data_file"]["file_path"]) for e in entries
-        ]
-
-    # 2. touch probe over the candidates only (map-only broadcast semi)
-    touched_paths: set[str] = set()
-    if candidates:
-        probe = (
-            _mutation_scan(spark, md, schema_json, _paths(candidates))
-            .withColumn("__file", F.input_file_name())
-            .join(F.broadcast(source.select(*on).distinct()), on=on, how="semi")
-            .select("__file")
-            .distinct()
-        )
-        for r in probe.collect():
-            p = r["__file"]
-            if p.startswith("file:"):
-                p = p[5:]
-                while p.startswith("//"):
-                    p = p[1:]
-            touched_paths.add(p)
-    touched = [
-        e
-        for e in live
-        if _norm_path(table_path, e["data_file"]["file_path"]) in touched_paths
-    ]
-
-    # 3. rewrite touched files + stage inserts
-    snapshot_id = _uuid.uuid4().int >> 75
-    new_entries: list[dict] = []
-    matched_keys = None
-    if touched:
-        touched_df = _mutation_scan(spark, md, schema_json, _paths(touched))
-        kept = touched_df.join(
-            F.broadcast(source.select(*on).distinct()), on=on, how="left_anti"
-        )
-        matched_keys = (
-            touched_df.select(*on)
-            .join(F.broadcast(source.select(*on).distinct()), on=on, how="semi")
-            .distinct()
-        )
-        new_rows = kept
-        if when_matched == "update":
-            updates = source.join(matched_keys, on=on, how="semi")
-            new_rows = kept.unionByName(updates)
-        new_entries.extend(
-            _stage_entries(new_rows, table_path, ids, snapshot_id)
-        )
-    if insert_not_matched:
-        inserts = source
-        if matched_keys is not None:
-            inserts = source.join(matched_keys, on=on, how="left_anti")
-        new_entries.extend(
-            _stage_entries(inserts, table_path, ids, snapshot_id)
-        )
-    source.unpersist()
-    if not new_entries and not touched:
-        return None
-
-    return _commit_snapshot(
-        table_path,
-        md,
-        version,
-        snapshot_id,
-        new_entries,
-        {
-            "operation": "overwrite",  # a merge changes rows
-            "merge-keys": ",".join(on),
-            "matched-action": when_matched,
-            "rewritten-data-files": str(len(touched)),
-            "added-data-files": str(len(new_entries)),
-        },
-        kept=[
-            e
-            for e in live
-            if _norm_path(table_path, e["data_file"]["file_path"])
-            not in touched_paths
-        ],
-        removed=len(touched),
-        txn=(txn_app_id, txn_version),
-    )
+    t = _Rewrite(spark, table_path, "MERGE")
+    txn = None if txn_app_id is None else (txn_app_id, txn_version)
+    if not t.txn_applied(txn):
+        _refuse_delete_files(t, "MERGE")
+    return rewrite.merge(t, source, on, when_matched, insert_not_matched, txn)

@@ -18,11 +18,11 @@ import pytest
 from ballista_spark.sources.deltalog import (
     DeltaConcurrentCommitError,
     compact_delta_table,
-    plan_compaction_bins,
     read_delta_snapshot,
     read_delta_table,
     write_delta_table,
 )
+from ballista_spark.sources.rewrite import plan_compaction_bins
 
 
 def _df(spark, rows, schema="id long, cat string, v double"):

@@ -830,7 +830,7 @@ def _code_screen(spark, sf_dir: str):
 def _dml_touch(spark, sf_dir: str):
     """Copy-on-write UPDATE with a narrow key predicate on the
     range-clustered lineitem table: stats prune the candidates
-    driver-side, the exact input_file_name probe confines the rewrite
+    driver-side, the exact scan-stage file probe confines the rewrite
     to files that PROVABLY contain matches, so cost tracks the touched
     band, not the table.  The update (+1) re-touches the SAME files
     every run — stable per-run cost, min-of-runs is the steady state.
