@@ -227,19 +227,13 @@ class BallistaContext:
         catalog jars."""
         from ballista_spark.dml import execute_dml, parse_dml
 
-        stmt = parse_dml(query)
+        # INSERT/ALTER on a table that is NOT a registered lakehouse
+        # table is legitimate Spark SQL (catalog tables, views) and
+        # parses to None.  DELETE/UPDATE/MERGE/VACUUM/OPTIMIZE keep the
+        # loud DmlError: stock Spark refuses those without catalog jars
+        # anyway, and the error names the registered mutable tables.
+        stmt = parse_dml(query, self.spark, self._lakehouse)
         if stmt is not None:
-            # INSERT/ALTER on a table that is NOT a registered lakehouse
-            # table is legitimate Spark SQL (catalog tables, views) —
-            # pass through rather than hijacking it.  DELETE/UPDATE/
-            # MERGE/VACUUM/OPTIMIZE keep the loud DmlError: stock Spark
-            # refuses those without catalog jars anyway, and the error
-            # names the registered mutable tables.
-            if (
-                stmt.op in ("insert", "insert_overwrite", "alter")
-                and stmt.table not in self._lakehouse
-            ):
-                return BallistaDataFrame(self.spark.sql(query))
             return BallistaDataFrame(execute_dml(self, stmt))
         return BallistaDataFrame(self.spark.sql(query))
 

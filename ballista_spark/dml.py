@@ -1,177 +1,71 @@
 """SQL faces for the lakehouse mutation layer: DELETE / UPDATE / MERGE /
-VACUUM / OPTIMIZE statements routed to the Delta and Iceberg table
-operations.
+INSERT / ALTER / VACUUM / OPTIMIZE against registered Delta and Iceberg
+tables through ``BallistaContext.sql`` — one engine surface for queries
+AND mutations, as the reference funnels everything through `ctx.sql`
+(`rust/client/src/context.rs:131-143`; its engine was read-only).
+Spark parses DML but will not run it without the catalog jars this repo
+does not require, so these statements run as the pure-Python
+transactional ops of `sources/deltalog.py` and `sources/iceberg.py`.
 
-Spark SQL itself refuses these statements without a catalog plugin (the
-v2 `DeltaCatalog`/`SparkCatalog` jars this repo deliberately does not
-require), so `BallistaContext.sql` recognizes them and dispatches to the
-pure-Python transactional ops (`sources/deltalog.py`,
-`sources/iceberg.py`) — one engine surface for queries AND mutations,
-the way the reference funnels everything through `ctx.sql`
-(`rust/client/src/context.rs:131-143`; its engine was read-only — this
-is beyond-parity).
+The grammar is Catalyst's: :func:`parse_dml` walks the plan Spark's
+SQL parser returns (a syntax error is pyspark's ``ParseException``).
+WHERE predicates, SET values and MERGE conditions are any Spark SQL,
+carried as Columns; a predicate's provable ``col op literal``
+conjuncts prune files on their stats and the whole predicate picks the
+rows (``sources/rewrite.py``).  A clause the storage layer cannot
+honour (NOT MATCHED BY SOURCE, a second WHEN MATCHED, INSERT (cols)
+VALUES, ...) raises :class:`DmlError` in its walker.  Any other plan,
+and an INSERT or ALTER naming a table that is not a registered
+lakehouse table, passes to Spark SQL.
 
-Grammar (case-insensitive keywords; `<conj>` is the proof-language
-subset the storage layer can prune on — conjunctions of
-``col op literal`` and ``col IS NULL``):
-
-- ``DELETE FROM t WHERE <conj>``
-- ``UPDATE t SET c = <expr> [, ...] [WHERE <conj>]``
-- ``MERGE INTO t [alias] USING s|(subquery) [alias] ON t.k = s.k
-  [AND ...] WHEN MATCHED [AND <cond>] THEN UPDATE SET * | UPDATE SET
-  c = <expr> [, ...] | DELETE [WHEN NOT MATCHED [AND <cond>] THEN
-  INSERT *]`` — at most one clause of each kind; ``<cond>`` and SET
-  right-hand sides are arbitrary Spark SQL over the statement aliases
-  (``t.c`` / ``s.c``), evaluated by transforming the merge SOURCE so
-  the storage layer's touch-only rewrite discipline is untouched
-- ``VACUUM t [RETAIN n HOURS]``
-- ``OPTIMIZE t [ZORDER BY (c1, c2, ...)]``
-- ``ALTER TABLE t ADD COLUMNS (c type [, ...])`` /
-  ``ALTER TABLE t DROP COLUMN c`` / ``DROP COLUMNS (c1, c2)`` /
-  ``ALTER TABLE t RENAME COLUMN old TO new`` (metadata-only on both
-  formats: Delta via column mapping, auto-enabled; Iceberg via field-id
-  binding — rename proves every live file carries parquet field ids) /
-  ``ALTER TABLE t SET TBLPROPERTIES ('k'='v', ...)`` /
-  ``UNSET TBLPROPERTIES ('k', ...)`` — feature-backed Delta
-  properties (appendOnly, enableChangeDataFeed, constraints) upgrade
-  the protocol and the writer gate then honors them
-- ``INSERT INTO t [(c1, c2, ...)] <query>`` / ``INSERT OVERWRITE t
-  <query>`` where ``<query>`` is any Spark SQL query (``SELECT ...``,
-  ``VALUES ...``) — aligned to the table schema BY POSITION (SQL
-  INSERT semantics) or to the named column list (unlisted columns
-  fill with NULL), cast to the declared column types
-- ``CREATE EXTERNAL TABLE name [(col type, ...)] STORED AS fmt
-  [WITH HEADER ROW] [DELIMITER 'c'] LOCATION 'path'`` — the reference's
-  exact DDL text (`ballista.proto:236-248`, DataFusion dialect), routed
-  to ``BallistaContext.create_external_table``; fmt covers the
-  reference enum (CSV/PARQUET/NDJSON) plus this engine's extensions
-  (JSON/ORC/AVRO/ARROW/IPC/FEATHER/DELTA/ICEBERG/HUDI)
-
-A WHERE predicate outside the conjunction language raises with the
-grammar named — refusing loudly beats silently rewriting the whole
-table.  SET expressions are arbitrary Spark SQL.  After a mutation the
-table's registered view refreshes to the new snapshot.
+Small regexes read what Spark's parser rejects: ``VACUUM t [RETAIN n
+HOURS]``, ``OPTIMIZE t [ZORDER BY (c, ...)]``, the reference's DDL
+``CREATE EXTERNAL TABLE name [(col type, ...)] STORED AS fmt [WITH
+HEADER ROW] [DELIMITER 'c'] LOCATION 'path'`` (`ballista.proto:236-248`;
+Arrow type names such as int64 and utf8; fmt is CSV, PARQUET, NDJSON,
+JSON, ORC, AVRO, ARROW, IPC, FEATHER, DELTA, ICEBERG or HUDI), and ``ALTER TABLE t SET |
+UNSET TBLPROPERTIES`` over quoted keys, which may be ones Spark
+reserves for its catalog tables (owner, location, ...).
 """
 
 from __future__ import annotations
 
-import datetime
 import re
 from dataclasses import dataclass, field
+from types import SimpleNamespace
 
-__all__ = ["parse_dml", "execute_dml", "parse_where_triples", "DmlError"]
+from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.classic.column import Column as _ClassicColumn
+from pyspark.sql.classic.dataframe import DataFrame as _ClassicDataFrame
+
+from ballista_spark.sources.rewrite import _and_terms, _kind
+from ballista_spark.types import schema as _schema
+
+__all__ = ["parse_dml", "execute_dml", "DmlError"]
 
 
 class DmlError(ValueError):
     pass
 
 
-_IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
-
-_WHERE_GRAMMAR = (
-    "supported WHERE grammar: conjunctions of `col op literal` "
-    "(op: = != <> < <= > >=; literal: number, 'string', TRUE/FALSE, "
-    "DATE 'yyyy-mm-dd') and `col IS NULL`"
-)
-
-
-def _split_top_level(s: str, sep_pattern: str) -> list[str]:
-    """Split on a regex separator at paren/quote depth zero."""
-    parts, depth, last, i = [], 0, 0, 0
-    sep = re.compile(sep_pattern, re.IGNORECASE)
-    while i < len(s):
-        c = s[i]
-        if c == "'":
-            j = i + 1
-            while j < len(s):
-                if s[j] == "'" and j + 1 < len(s) and s[j + 1] == "'":
-                    j += 2
-                elif s[j] == "'":
-                    break
-                else:
-                    j += 1
-            i = j + 1
-            continue
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif depth == 0:
-            m = sep.match(s, i)
-            if m:
-                parts.append(s[last:i])
-                i = m.end()
-                last = i
-                continue
-        i += 1
-    parts.append(s[last:])
-    return parts
-
-
-def _parse_literal(tok: str):
-    t = tok.strip()
-    m = re.fullmatch(r"(?i)DATE\s*'(\d{4}-\d{2}-\d{2})'", t)
-    if m:
-        return datetime.date.fromisoformat(m.group(1))
-    if re.fullmatch(r"(?i)TRUE", t):
-        return True
-    if re.fullmatch(r"(?i)FALSE", t):
-        return False
-    m = re.fullmatch(r"'((?:[^']|'')*)'", t, re.DOTALL)
-    if m:
-        return m.group(1).replace("''", "'")
-    if re.fullmatch(r"[+-]?\d+", t):
-        return int(t)
-    try:
-        return float(t)
-    except ValueError:
-        raise DmlError(f"unsupported literal {tok!r} — {_WHERE_GRAMMAR}")
-
-
-def parse_where_triples(where: str) -> list[tuple[str, str, object]]:
-    """A WHERE string as the storage layer's (col, op, value) triples —
-    the same proof language file pruning runs on.  Raises
-    :class:`DmlError` for anything outside the conjunction grammar."""
-    triples: list[tuple[str, str, object]] = []
-    for term in _split_top_level(where, r"\bAND\b"):
-        t = term.strip()
-        if not t:
-            raise DmlError(f"empty conjunct in WHERE — {_WHERE_GRAMMAR}")
-        m = re.fullmatch(rf"({_IDENT})\s+IS\s+NULL", t, re.IGNORECASE)
-        if m:
-            triples.append((m.group(1), "is_null", None))
-            continue
-        m = re.fullmatch(
-            rf"({_IDENT})\s*(=|!=|<>|<=|>=|<|>)\s*(.+)", t, re.DOTALL
-        )
-        if not m:
-            raise DmlError(f"cannot parse conjunct {t!r} — {_WHERE_GRAMMAR}")
-        col, op, lit = m.group(1), m.group(2), _parse_literal(m.group(3))
-        triples.append((col, "!=" if op == "<>" else op, lit))
-    return triples
-
-
 @dataclass
 class DmlStatement:
-    op: str  # delete | update | merge | vacuum | optimize
+    op: str  # delete | update | merge | insert[_overwrite] | alter | ...
     table: str
-    where: list[tuple[str, str, object]] | None = None
-    set_exprs: dict[str, str] = field(default_factory=dict)
-    source_sql: str | None = None  # merge: table name or (subquery)
+    where: Column | None = None
+    set_exprs: dict[str, Column] = field(default_factory=dict)
+    source: object = None  # MERGE source / INSERT query: a parsed plan
     on: list[str] = field(default_factory=list)
-    when_matched: str = "update"
+    when_matched: str = "update"  # update | delete | skip (insert-only)
     insert_not_matched: bool = False
-    #: MERGE extras (round 8): per-clause conditions (raw SQL over the
-    #: statement aliases), explicit UPDATE SET assignments (None =
-    #: SET *), and the statement's target/source aliases for resolution
-    matched_condition: str | None = None
-    not_matched_condition: str | None = None
-    matched_set: dict[str, str] | None = None
+    matched_condition: Column | None = None
+    not_matched_condition: Column | None = None
+    matched_set: dict[str, Column] | None = None  # None = UPDATE SET *
     target_alias: str | None = None
     source_alias: str | None = None
-    #: INSERT extras: explicit column list (None = full-schema
-    #: positional)
-    insert_columns: list[str] | None = None
+    insert_columns: list[str] | None = None  # None = by position
     retain_hours: float | None = None
     zorder_by: list[str] = field(default_factory=list)
     add_columns: dict[str, str] = field(default_factory=dict)
@@ -183,56 +77,18 @@ class DmlStatement:
     # CREATE EXTERNAL TABLE fields
     file_type: str | None = None
     location: str | None = None
-    columns: dict[str, str] = field(default_factory=dict)
+    columns: T.StructType | None = None
     has_header: bool = False
     delimiter: str = ","
 
 
-_DELETE_RE = re.compile(
-    rf"(?is)^\s*DELETE\s+FROM\s+({_IDENT})\s+WHERE\s+(.+?)\s*;?\s*$"
-)
-_UPDATE_RE = re.compile(
-    # SET/WHERE are split quote-aware below (a quoted ' WHERE ' inside a
-    # SET expression must not split), so this just captures the rest
-    rf"(?is)^\s*UPDATE\s+({_IDENT})\s+SET\s+(.+?)\s*;?\s*$"
-)
-_MERGE_RE = re.compile(
-    # the subquery match is GREEDY: nested parens inside it are fine
-    # because nothing after USING in this grammar contains ')' (ON is
-    # ident-equality conjunctions, WHEN actions are SET */DELETE/INSERT *)
-    rf"(?is)^\s*MERGE\s+INTO\s+({_IDENT})(?:\s+(?:AS\s+)?({_IDENT}))?"
-    rf"\s+USING\s+(\((?:.|\n)*\)|{_IDENT})(?:\s+(?:AS\s+)?({_IDENT}))?"
-    rf"\s+ON\s+(.+?)\s+(WHEN\s+.+?)\s*;?\s*$"
-)
+_IDENT = r"[A-Za-z_][A-Za-z0-9_]*"
 _VACUUM_RE = re.compile(
     rf"(?is)^\s*VACUUM\s+({_IDENT})(?:\s+RETAIN\s+(\d+(?:\.\d+)?)\s+HOURS?)?\s*;?\s*$"
 )
 _OPTIMIZE_RE = re.compile(
     rf"(?is)^\s*OPTIMIZE\s+({_IDENT})"
     rf"(?:\s+ZORDER\s+BY\s*\(\s*({_IDENT}(?:\s*,\s*{_IDENT})*)\s*\))?\s*;?\s*$"
-)
-_ALTER_ADD_RE = re.compile(
-    rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+ADD\s+COLUMNS?\s*\((.+)\)\s*;?\s*$"
-)
-_ALTER_DROP_RE = re.compile(
-    rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+DROP\s+COLUMNS?\s*"
-    rf"\(?\s*({_IDENT}(?:\s*,\s*{_IDENT})*)\s*\)?\s*;?\s*$"
-)
-_ALTER_RENAME_RE = re.compile(
-    rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+RENAME\s+COLUMN\s+"
-    rf"({_IDENT})\s+TO\s+({_IDENT})\s*;?\s*$"
-)
-_PROP_PAIR = r"'((?:[^']|'')+)'\s*=\s*'((?:[^']|'')*)'"
-_ALTER_SETPROPS_RE = re.compile(
-    rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+SET\s+TBLPROPERTIES\s*"
-    rf"\(\s*{_PROP_PAIR}(?:\s*,\s*{_PROP_PAIR})*\s*\)\s*;?\s*$"
-)
-_ALTER_UNSETPROPS_RE = re.compile(
-    rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+UNSET\s+TBLPROPERTIES\s*"
-    rf"\(\s*'(?:[^']|'')+'(?:\s*,\s*'(?:[^']|'')+')*\s*\)\s*;?\s*$"
-)
-_INSERT_RE = re.compile(
-    rf"(?is)^\s*INSERT\s+(INTO|OVERWRITE)\s+(?:TABLE\s+)?({_IDENT})\s+(.+?)\s*;?\s*$"
 )
 _CREATE_EXT_RE = re.compile(
     rf"(?is)^\s*CREATE\s+EXTERNAL\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?"
@@ -242,265 +98,442 @@ _CREATE_EXT_RE = re.compile(
     rf"(?:\s+DELIMITER\s+'((?:[^']|'')+)')?"
     rf"\s+LOCATION\s+'((?:[^']|'')+)'\s*;?\s*$"
 )
+_Q = r"'(?:[^']|'')*'"
+_TBLPROPERTIES_RE = re.compile(
+    rf"(?is)^\s*ALTER\s+TABLE\s+({_IDENT})\s+(?:SET\s+TBLPROPERTIES\s*\(\s*"
+    rf"({_Q}\s*=\s*{_Q}(?:\s*,\s*{_Q}\s*=\s*{_Q})*)|UNSET\s+TBLPROPERTIES\s*"
+    rf"\(\s*({_Q}(?:\s*,\s*{_Q})*))\s*\)\s*;?\s*$"
+)
 _DML_HEAD = re.compile(
     r"(?is)^\s*(DELETE|UPDATE|MERGE|VACUUM|OPTIMIZE|ALTER|INSERT"
     r"|CREATE\s+EXTERNAL)\b"
 )
 
 
-def parse_dml(query: str) -> DmlStatement | None:
+def parse_dml(
+    query: str, spark: SparkSession | None = None, lakehouse=None
+) -> DmlStatement | None:
     """Parse ``query`` as a DML/maintenance statement, or None when it
-    isn't one (SELECT/CTE/DDL pass through to Spark SQL untouched)."""
-    if not _DML_HEAD.match(query):
+    passes through to Spark SQL untouched: a SELECT/CTE/DDL, a plan
+    the walker does not route, or an INSERT/ALTER naming a table
+    outside ``lakehouse`` (the registered mutable table names; None
+    routes every table)."""
+    head = _DML_HEAD.match(query)
+    if not head:
         return None
-    m = _DELETE_RE.match(query)
-    if m:
+    word = head.group(1).split()[0].upper()
+    if word in ("VACUUM", "OPTIMIZE", "CREATE"):
+        return _parse_unparsable(word, query)
+    props = _TBLPROPERTIES_RE.match(query)
+    if props:
+        return _parse_properties(props, lakehouse)
+    spark = spark or SparkSession.active()
+    plan = _parser(spark).parsePlan(query)
+    kind = plan.getClass().getSimpleName()
+    walk = _WALKERS.get(kind)
+    if walk is None:
+        return None
+    table, alias = _relation(
+        plan.targetTable() if kind == "MergeIntoTable" else plan.table()
+    )
+    if table is None or (
+        lakehouse is not None
+        and table not in lakehouse
+        and kind not in ("DeleteFromTable", "UpdateTable", "MergeIntoTable")
+    ):
+        return None
+    return walk(spark, plan, table, alias)
+
+
+def _parse_unparsable(word: str, query: str) -> DmlStatement | None:
+    """VACUUM, OPTIMIZE and CREATE EXTERNAL TABLE, which Spark's parser
+    rejects."""
+    m = {"VACUUM": _VACUUM_RE, "OPTIMIZE": _OPTIMIZE_RE}.get(
+        word, _CREATE_EXT_RE
+    ).match(query)
+    if m is None:
+        if word == "CREATE":
+            return None  # Spark SQL's own CREATE EXTERNAL TABLE forms
+        raise DmlError(f"cannot parse {word} statement — see ballista_spark.dml")
+    if word == "VACUUM":
         return DmlStatement(
-            op="delete", table=m.group(1),
-            where=parse_where_triples(m.group(2)),
+            op="vacuum", table=m[1], retain_hours=float(m[2]) if m[2] else None
         )
-    m = _UPDATE_RE.match(query)
-    if m:
-        parts = _split_top_level(m.group(2), r"\bWHERE\b")
-        if len(parts) > 2:
-            raise DmlError("multiple top-level WHERE keywords in UPDATE")
-        set_part, where_part = parts[0], (parts[1] if len(parts) == 2 else None)
-        sets: dict[str, str] = {}
-        for a in _split_top_level(set_part, r","):
-            am = re.fullmatch(
-                rf"\s*({_IDENT})\s*=\s*(.+?)\s*", a, re.DOTALL
-            )
-            if not am:
-                raise DmlError(f"cannot parse SET assignment {a!r}")
-            sets[am.group(1)] = am.group(2)
+    if word == "OPTIMIZE":
         return DmlStatement(
-            op="update", table=m.group(1), set_exprs=sets,
-            where=parse_where_triples(where_part) if where_part else None,
+            op="optimize", table=m[1],
+            zorder_by=[c.strip() for c in m[2].split(",")] if m[2] else [],
         )
-    m = _MERGE_RE.match(query)
-    if m:
-        target, t_alias, source, s_alias, on_sql, clauses = m.groups()
-        aliases = {a for a in (t_alias, s_alias, target, source) if a}
-        on_cols: list[str] = []
-        for term in _split_top_level(on_sql, r"\bAND\b"):
-            em = re.fullmatch(
-                rf"\s*(?:({_IDENT})\.)?({_IDENT})\s*=\s*(?:({_IDENT})\.)?({_IDENT})\s*",
-                term,
-            )
-            if not em:
-                raise DmlError(
-                    f"MERGE ON must be equi-conjunctions (got {term.strip()!r})"
-                )
-            q1, c1, q2, c2 = em.groups()
-            if c1 != c2:
-                raise DmlError(
-                    "MERGE ON columns must share one name on both sides "
-                    f"(got {c1!r} = {c2!r}) — the storage MERGE is keyed "
-                    "by column name"
-                )
-            for q in (q1, q2):
-                if q and q not in aliases:
-                    raise DmlError(f"unknown qualifier {q!r} in MERGE ON")
-            on_cols.append(c1)
-        when_matched, insert = None, False  # None = insert-only merge
-        matched_condition = not_matched_condition = None
-        matched_set: dict[str, str] | None = None
-        # boundary lookaheads are SPECIFIC: a clause ends only at the
-        # next `WHEN [NOT] MATCHED` (not any WHEN — CASE WHEN inside a
-        # SET expression must not truncate it), and the THEN that ends
-        # a condition is the one followed by an action keyword (a CASE
-        # ... THEN inside the condition passes through)
-        clause_re = re.compile(
-            r"(?is)WHEN\s+(NOT\s+)?MATCHED\s*"
-            r"(?:\bAND\b\s+(.+?))?\s*"
-            r"THEN\s+(?=(?:UPDATE|DELETE|INSERT)\b)"
-            r"(UPDATE\s+SET\s+.+?|DELETE|INSERT\s+\*)\s*"
-            r"(?=WHEN\s+(?:NOT\s+)?MATCHED\b|$)"
+    name, cols, fmt, header, delim, loc = m.groups()
+    return DmlStatement(
+        op="create_external", table=name, file_type=fmt.lower(),
+        location=loc.replace("''", "'"),
+        columns=_schema(cols[1:-1]) if cols else None,
+        has_header=bool(header), delimiter=(delim or ",").replace("''", "'"),
+    )
+
+
+def _parse_properties(m: re.Match, lakehouse) -> DmlStatement | None:
+    """SET / UNSET TBLPROPERTIES, or None for a table outside
+    ``lakehouse``.  Spark's parser refuses the keys it reserves for its
+    catalog tables (owner, location, provider, external); a lakehouse
+    table's properties are its own."""
+    if lakehouse is not None and m[1] not in lakehouse:
+        return None
+    vals = [v[1:-1].replace("''", "'") for v in re.findall(_Q, m[2] or m[3])]
+    if m[3]:
+        return DmlStatement(op="alter", table=m[1], unset_properties=vals)
+    props = dict(zip(vals[::2], vals[1::2]))
+    return DmlStatement(op="alter", table=m[1], set_properties=props)
+
+
+# ------------------------------------------------------------ plan walker
+
+
+def _parser(spark: SparkSession | None):
+    spark = spark or SparkSession.active()
+    return spark._jsparkSession.sessionState().sqlParser()
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _relation(rel) -> tuple[str | None, str | None]:
+    """(table name, the name statement columns qualify it by) of a
+    relation: its alias, else the table's own last name part.  The
+    table name is None when ``rel`` is not a plain named table."""
+    alias = None
+    if rel.getClass().getSimpleName() == "SubqueryAlias":
+        alias, rel = rel.alias(), rel.child()
+    if rel.getClass().getSimpleName() not in ("UnresolvedRelation", "UnresolvedTable"):
+        return None, alias
+    parts = _seq(rel.multipartIdentifier())
+    return ".".join(parts), alias or parts[-1]
+
+
+def _column(spark: SparkSession, expr) -> Column:
+    return _ClassicColumn(
+        spark._jvm.org.apache.spark.sql.classic.ExpressionUtils.column(expr)
+    )
+
+
+def _dataframe(spark: SparkSession, plan) -> DataFrame:
+    return _ClassicDataFrame(
+        spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+            spark._jsparkSession, plan
+        ),
+        spark,
+    )
+
+
+def _attribute(e, aliases: set, what: str) -> str:
+    """The column a possibly qualified column reference names."""
+    named = e.getClass().getSimpleName() == "UnresolvedAttribute"
+    parts = _seq(e.nameParts()) if named else []
+    if not 0 < len(parts) <= 2:
+        raise DmlError(f"{what} must name a column (got {e.sql()})")
+    if len(parts) == 2 and parts[0] not in aliases:
+        raise DmlError(f"unknown qualifier {parts[0]!r} in {what}")
+    return parts[-1]
+
+
+def _assignments(spark, seq, aliases: set, what: str) -> dict[str, Column]:
+    out: dict[str, Column] = {}
+    for a in _seq(seq):
+        col = _attribute(a.key(), aliases, what)
+        if col in out:
+            raise DmlError(f"column {col!r} assigned twice in {what}")
+        out[col] = _column(spark, a.value())
+    return out
+
+
+def _condition(spark, option) -> Column | None:
+    return _column(spark, option.get()) if option.isDefined() else None
+
+
+def _walk_delete(spark, plan, table, alias) -> DmlStatement:
+    cond = plan.condition()
+    if cond.getClass().getSimpleName() == "Literal" and cond.sql() == "true":
+        raise DmlError(
+            "DELETE needs a WHERE clause — refusing an unconditional "
+            "DELETE (INSERT OVERWRITE with an empty query truncates)"
         )
-        for cm in clause_re.finditer(clauses):
-            neg, cond, action = cm.group(1), cm.group(2), cm.group(3)
-            action_u = re.sub(r"\s+", " ", action.upper()).strip()
-            if neg:
-                if action_u != "INSERT *":
-                    raise DmlError("WHEN NOT MATCHED supports only INSERT *")
-                if insert:
-                    raise DmlError("at most one WHEN NOT MATCHED clause")
-                insert = True
-                not_matched_condition = cond.strip() if cond else None
-            else:
-                if when_matched is not None:
-                    raise DmlError("at most one WHEN MATCHED clause")
-                if action_u == "DELETE":
-                    when_matched = "delete"
-                elif action_u == "UPDATE SET *":
-                    when_matched = "update"
-                elif action_u.startswith("UPDATE SET"):
-                    when_matched = "update"
-                    matched_set = {}
-                    set_sql = re.sub(
-                        r"(?is)^\s*UPDATE\s+SET\s+", "", action
-                    ).strip()
-                    for a in _split_top_level(set_sql, r","):
-                        am = re.fullmatch(
-                            rf"\s*(?:({_IDENT})\.)?({_IDENT})\s*=\s*(.+?)\s*",
-                            a,
-                            re.DOTALL,
-                        )
-                        if not am:
-                            raise DmlError(
-                                f"cannot parse MERGE SET assignment {a!r}"
-                            )
-                        q, col, expr = am.groups()
-                        if q and q not in aliases:
-                            raise DmlError(
-                                f"unknown qualifier {q!r} in MERGE SET"
-                            )
-                        if col in matched_set:
-                            raise DmlError(
-                                f"column {col!r} assigned twice in MERGE SET"
-                            )
-                        matched_set[col] = expr
-                else:
-                    raise DmlError(
-                        "WHEN MATCHED supports UPDATE SET * | "
-                        "UPDATE SET c = expr, ... | DELETE"
-                    )
-                matched_condition = cond.strip() if cond else None
-        if re.sub(r"\s+", "", clause_re.sub("", clauses)):
+    return DmlStatement(op="delete", table=table, where=_column(spark, cond))
+
+
+def _walk_update(spark, plan, table, alias) -> DmlStatement:
+    sets = _assignments(spark, plan.assignments(), {table, alias}, "UPDATE SET")
+    where = _condition(spark, plan.condition())
+    return DmlStatement(op="update", table=table, set_exprs=sets, where=where)
+
+
+def _walk_merge(spark, plan, table, alias) -> DmlStatement:
+    if plan.withSchemaEvolution():
+        raise DmlError(
+            "MERGE WITH SCHEMA EVOLUTION is not supported — evolve the "
+            "table with ALTER TABLE ... ADD COLUMNS first"
+        )
+    if not plan.notMatchedBySourceActions().isEmpty():
+        raise DmlError(
+            "WHEN NOT MATCHED BY SOURCE is not supported — the storage "
+            "MERGE never touches target rows without a source match"
+        )
+    matched = _seq(plan.matchedActions())
+    not_matched = _seq(plan.notMatchedActions())
+    if len(matched) > 1:
+        raise DmlError("at most one WHEN MATCHED clause")
+    if len(not_matched) > 1:
+        raise DmlError("at most one WHEN NOT MATCHED clause")
+    src = plan.sourceTable()
+    source_alias = _relation(src)[1] or "__src"
+    aliases = {table, alias, source_alias}
+    on: list[str] = []
+    for term in _and_terms(plan.mergeCondition()):
+        if _kind(term) != "=":
             raise DmlError(
-                f"unsupported MERGE clause in {clauses!r} — supported: "
-                "WHEN MATCHED [AND cond] THEN UPDATE SET * | "
-                "UPDATE SET c = expr, ... | DELETE, "
-                "WHEN NOT MATCHED [AND cond] THEN INSERT *"
+                f"MERGE ON must be equi-conjunctions (got {term.sql()})"
             )
-        if when_matched is None and not insert:
-            raise DmlError("MERGE needs at least one WHEN clause")
-        return DmlStatement(
-            op="merge", table=target, source_sql=source, on=on_cols,
-            # "skip" = insert-only: matched target rows stay untouched
-            when_matched=when_matched or "skip",
-            insert_not_matched=insert,
-            matched_condition=matched_condition,
-            not_matched_condition=not_matched_condition,
-            matched_set=matched_set,
-            target_alias=t_alias,
-            source_alias=s_alias,
+        c1, c2 = (
+            _attribute(e, aliases, "MERGE ON") for e in _seq(term.children())
         )
-    m = _VACUUM_RE.match(query)
-    if m:
-        return DmlStatement(
-            op="vacuum", table=m.group(1),
-            retain_hours=float(m.group(2)) if m.group(2) else None,
+        if c1 != c2:
+            raise DmlError(
+                "MERGE ON columns must share one name on both sides "
+                f"(got {c1!r} = {c2!r}) — the storage MERGE is keyed "
+                "by column name"
+            )
+        on.append(c1)
+    stmt = DmlStatement(
+        op="merge", table=table, source=src, on=on,
+        # "skip" = insert-only: matched target rows stay untouched
+        when_matched="skip", target_alias=alias, source_alias=source_alias,
+    )
+    for action in matched:  # DeleteAction | UpdateStarAction | UpdateAction
+        kind = action.getClass().getSimpleName()
+        stmt.matched_condition = _condition(spark, action.condition())
+        stmt.when_matched = "delete" if kind == "DeleteAction" else "update"
+        if kind == "UpdateAction":
+            stmt.matched_set = _assignments(
+                spark, action.assignments(), aliases, "MERGE SET"
+            )
+    for action in not_matched:
+        if action.getClass().getSimpleName() != "InsertStarAction":
+            raise DmlError(
+                "WHEN NOT MATCHED supports only INSERT * (INSERT (cols) "
+                "VALUES (...) is not supported)"
+            )
+        stmt.insert_not_matched = True
+        stmt.not_matched_condition = _condition(spark, action.condition())
+    return stmt
+
+
+def _walk_insert(spark, plan, table, alias) -> DmlStatement:
+    if not plan.partitionSpec().isEmpty():
+        raise DmlError(
+            "INSERT ... PARTITION (...) is not supported — the table's "
+            "own layout places the rows"
         )
-    m = _OPTIMIZE_RE.match(query)
-    if m:
-        return DmlStatement(
-            op="optimize", table=m.group(1),
-            zorder_by=(
-                [c.strip() for c in m.group(2).split(",")] if m.group(2) else []
-            ),
+    if plan.byName():
+        raise DmlError(
+            "INSERT ... BY NAME is not supported — name the columns: "
+            "INSERT INTO t (c1, ...) <query>"
         )
-    m = _CREATE_EXT_RE.match(query)
-    if m:
-        name, cols, fmt, header, delim, loc = m.groups()
-        schema = None
-        if cols:
-            schema = {}
-            for part in _split_top_level(cols[1:-1], r","):
-                cm = re.fullmatch(
-                    rf"\s*({_IDENT})\s+(.+?)\s*", part, re.DOTALL
+    cols = _seq(plan.userSpecifiedCols()) or None
+    if cols and len({c.lower() for c in cols}) != len(cols):
+        raise DmlError("duplicate column in INSERT column list")
+    return DmlStatement(
+        op="insert_overwrite" if plan.overwrite() else "insert",
+        table=table, source=plan.query(), insert_columns=cols,
+    )
+
+
+def _walk_add_columns(spark, plan, table, alias) -> DmlStatement:
+    adds: dict[str, str] = {}
+    for c in _seq(plan.columnsToAdd()):
+        for clause, present in (
+            ("a nested path", c.path().isDefined()),
+            ("NOT NULL", not c.nullable()),
+            ("COMMENT", c.comment().isDefined()),
+            ("a position", c.position().isDefined()),
+            ("DEFAULT", c.default().isDefined()),
+        ):
+            if present:
+                raise DmlError(
+                    f"ADD COLUMNS {c.colName()!r} with {clause} is not "
+                    "supported — added columns are top-level, nullable and "
+                    "appended (old files read them as NULL)"
                 )
-                if not cm:
-                    raise DmlError(f"cannot parse column definition {part!r}")
-                schema[cm.group(1)] = cm.group(2)
-        return DmlStatement(
-            op="create_external",
-            table=name,
-            file_type=fmt.lower(),
-            location=loc.replace("''", "'"),
-            columns=schema or {},
-            has_header=bool(header),
-            delimiter=(delim or ",").replace("''", "'"),
+        adds[c.colName()] = c.dataType().catalogString()
+    return DmlStatement(op="alter", table=table, add_columns=adds)
+
+
+def _walk_drop_columns(spark, plan, table, alias) -> DmlStatement:
+    cols = [f.name().mkString(".") for f in _seq(plan.columnsToDrop())]
+    return DmlStatement(op="alter", table=table, drop_columns=cols)
+
+
+def _walk_rename_column(spark, plan, table, alias) -> DmlStatement:
+    return DmlStatement(
+        op="alter", table=table,
+        rename_from=plan.column().name().mkString("."),
+        rename_to=plan.newName(),
+    )
+
+
+#: parsed plan node class → walker; any other node passes to Spark SQL
+_WALKERS = {
+    "DeleteFromTable": _walk_delete,
+    "UpdateTable": _walk_update,
+    "MergeIntoTable": _walk_merge,
+    "InsertIntoStatement": _walk_insert,
+    "AddColumns": _walk_add_columns,
+    "DropColumns": _walk_drop_columns,
+    "RenameColumn": _walk_rename_column,
+}
+
+
+# -------------------------------------------------------------- execution
+
+
+def _storage(fmt: str) -> SimpleNamespace:
+    """The one per-format table of storage functions the router calls."""
+    from ballista_spark.sources import deltalog as d
+    from ballista_spark.sources import iceberg as i
+
+    table = {  # operation: (Delta, Iceberg)
+        "delete": (d.delete_from_delta_table, i.delete_from_iceberg_table),
+        "update": (d.update_delta_table, i.update_iceberg_table),
+        "merge": (d.merge_delta_table, i.merge_iceberg_table),
+        "read": (d.read_delta_table, i.read_iceberg_table),
+        "write": (d.write_delta_table, i.write_iceberg_table),
+        "compact": (d.compact_delta_table, i.compact_iceberg_table),
+        "vacuum": (d.vacuum_delta_table, i.expire_iceberg_snapshots),
+        "set_properties": (
+            d.set_delta_table_properties, i.set_iceberg_table_properties
+        ),
+        "alter": (d.alter_delta_table, i.alter_iceberg_table),
+        # both metadata-only: Delta through column mapping, Iceberg
+        # through parquet field ids
+        "rename": (
+            lambda path, old, new, spark: d.rename_delta_column(path, old, new),
+            i.rename_iceberg_column,
+        ),
+        "schema": (
+            lambda path: d.read_delta_snapshot(path).schema,
+            lambda path: i.iceberg_to_spark_type(
+                i._current_schema(i._load_metadata(path)[1])
+            ),
+        ),
+    }
+    return SimpleNamespace(**{op: fns[fmt != "delta"] for op, fns in table.items()})
+
+
+def _merge(spark, store: SimpleNamespace, path: str, stmt: DmlStatement):
+    source = _dataframe(spark, stmt.source)
+    if (
+        stmt.when_matched != "skip"
+        and stmt.matched_condition is None
+        and stmt.not_matched_condition is None
+        and stmt.matched_set is None
+    ):
+        return store.merge(
+            spark, path, source, on=stmt.on,
+            when_matched=stmt.when_matched,
+            insert_not_matched=stmt.insert_not_matched,
         )
-    m = _INSERT_RE.match(query)
-    if m:
-        rest = m.group(3)
-        insert_columns = None
-        lead = re.match(
-            rf"(\(\s*{_IDENT}(?:\s*,\s*{_IDENT})*\s*\))\s*\S", rest
+    # per-clause conditions / explicit SET compose onto the plain
+    # storage MERGE by transforming the SOURCE: matched rows passing the
+    # condition become their POST-action rows (source row for SET *, a
+    # projection over the t/s pair for explicit SET); matched rows
+    # failing it leave the source — the storage merge then never
+    # touches them.  Ambiguous references surface as an
+    # AnalysisException, never a silent guess.
+    talias, salias = stmt.target_alias, stmt.source_alias
+    target_df = store.read(spark, path)
+    target_cols = target_df.columns
+    types = {f.name: f.dataType for f in target_df.schema.fields}
+    bad = [c for c in stmt.matched_set or () if c not in types]
+    if bad:
+        raise DmlError(
+            f"MERGE SET columns {bad} are not in the table schema {target_cols}"
         )
-        if lead:
-            cols = [
-                c.strip() for c in lead.group(1)[1:-1].split(",")
-            ]
-            # `INSERT INTO t (SELECT ...)` is a parenthesized query,
-            # not a column list — only treat idents that are not query
-            # heads as columns
-            if cols[0].upper() not in (
-                "SELECT", "VALUES", "WITH", "TABLE", "FROM"
-            ):
-                if len(set(c.lower() for c in cols)) != len(cols):
-                    raise DmlError("duplicate column in INSERT column list")
-                insert_columns = cols
-                rest = rest[lead.end(1):].strip()
-        return DmlStatement(
-            op="insert" if m.group(1).upper() == "INTO" else "insert_overwrite",
-            table=m.group(2),
-            source_sql=rest,
-            insert_columns=insert_columns,
+    keyed = [c for c in stmt.matched_set or () if c in stmt.on]
+    if keyed:
+        raise DmlError(
+            f"MERGE SET cannot assign ON columns {keyed} — the merge is "
+            "keyed by them"
         )
-    m = _ALTER_ADD_RE.match(query)
-    if m:
-        adds: dict[str, str] = {}
-        for part in _split_top_level(m.group(2), r","):
-            am = re.fullmatch(rf"\s*({_IDENT})\s+(.+?)\s*", part, re.DOTALL)
-            if not am:
-                raise DmlError(f"cannot parse column definition {part!r}")
-            adds[am.group(1)] = am.group(2)
-        return DmlStatement(op="alter", table=m.group(1), add_columns=adds)
-    m = _ALTER_DROP_RE.match(query)
-    if m:
-        return DmlStatement(
-            op="alter", table=m.group(1),
-            drop_columns=[c.strip() for c in m.group(2).split(",")],
+    t, s = target_df.alias(talias), source.alias(salias)
+    pair = F.col(f"{talias}.{stmt.on[0]}") == F.col(f"{salias}.{stmt.on[0]}")
+    for k in stmt.on[1:]:
+        pair = pair & (F.col(f"{talias}.{k}") == F.col(f"{salias}.{k}"))
+    inserts = None
+    if stmt.insert_not_matched:
+        inserts = s.join(t, pair, "left_anti")
+        if stmt.not_matched_condition is not None:
+            inserts = inserts.where(stmt.not_matched_condition)
+        inserts = inserts.select(
+            *[F.col(f"{salias}.{c}").alias(c) for c in target_cols]
         )
-    m = _ALTER_RENAME_RE.match(query)
-    if m:
-        return DmlStatement(
-            op="alter", table=m.group(1),
-            rename_from=m.group(2), rename_to=m.group(3),
+    if stmt.when_matched == "skip":
+        # insert-only MERGE: matched rows stay untouched, so the new
+        # keys are a plain append (no file ever rewrites)
+        if not inserts.limit(1).count():
+            return None
+        return store.write(inserts, path, mode="append")
+    applied = t.join(s, pair, "inner")
+    if stmt.matched_condition is not None:
+        applied = applied.where(stmt.matched_condition)
+    if stmt.when_matched == "update" and stmt.matched_set:
+        new = {c: e.cast(types[c]) for c, e in stmt.matched_set.items()}
+        source = applied.select(
+            *[new.get(c, F.col(f"{talias}.{c}")).alias(c) for c in target_cols]
         )
-    m = _ALTER_SETPROPS_RE.match(query)
-    if m:
-        body = query[query.index("(") + 1 : query.rindex(")")]
-        props = {}
-        for pair in _split_top_level(body, r","):
-            pm = re.fullmatch(rf"\s*{_PROP_PAIR}\s*", pair, re.DOTALL)
-            if not pm:
-                raise DmlError(f"cannot parse TBLPROPERTIES pair {pair!r}")
-            props[pm.group(1).replace("''", "'")] = (
-                pm.group(2).replace("''", "'")
-            )
-        return DmlStatement(
-            op="alter", table=m.group(1), set_properties=props
+    else:  # SET * (update) or DELETE: the source row carries on
+        source = applied.select(
+            *[F.col(f"{salias}.{c}").alias(c) for c in target_cols]
         )
-    m = _ALTER_UNSETPROPS_RE.match(query)
-    if m:
-        body = query[query.index("(") + 1 : query.rindex(")")]
-        keys = [
-            k.strip()[1:-1].replace("''", "'")
-            for k in _split_top_level(body, r",")
+    if inserts is not None:
+        source = source.unionByName(inserts)
+    return store.merge(
+        spark, path, source, on=stmt.on,
+        when_matched=stmt.when_matched,
+        insert_not_matched=stmt.insert_not_matched,
+    )
+
+
+def _insert_rows(spark, target_schema: T.StructType, stmt: DmlStatement):
+    """The INSERT query aligned to the table: BY POSITION to the full
+    schema, or to the named column list with unlisted columns NULL;
+    cast to the declared types."""
+    src_df = _dataframe(spark, stmt.source)
+    # a VALUES/SELECT query can produce names like `9.5` that any
+    # by-name access would dot-parse — normalize to safe ordinals
+    src_df = src_df.toDF(*[f"__c{i}" for i in range(len(src_df.columns))])
+    by_lower = {f.name.lower(): f.name for f in target_schema.fields}
+    names = stmt.insert_columns or list(by_lower.values())
+    unknown = [c for c in names if c.lower() not in by_lower]
+    if unknown:
+        raise DmlError(
+            f"INSERT column(s) {unknown} not in table schema "
+            f"{list(by_lower.values())}"
+        )
+    if len(src_df.columns) != len(names):
+        target = "column list has" if stmt.insert_columns else "table column count is"
+        raise DmlError(
+            f"INSERT query produces {len(src_df.columns)} columns but the "
+            f"{target} {len(names)}"
+        )
+    pos = {by_lower[c.lower()]: i for i, c in enumerate(names)}
+    return src_df.select(
+        *[
+            (F.col(f"__c{pos[f.name]}") if f.name in pos else F.lit(None))
+            .cast(f.dataType)
+            .alias(f.name)
+            for f in target_schema.fields
         ]
-        return DmlStatement(
-            op="alter", table=m.group(1), unset_properties=keys
-        )
-    head = re.sub(r"\s+", " ", _DML_HEAD.match(query).group(1).upper())
-    if head in ("ALTER", "INSERT", "CREATE EXTERNAL"):
-        # Spark SQL legitimately parses other statements under these
-        # heads (ALTER VIEW, INSERT INTO a catalog table, ...) — pass
-        # through instead of hijacking them
-        return None
-    raise DmlError(f"cannot parse {head} statement — see ballista_spark.dml grammar")
+    )
 
 
 def execute_dml(ctx, stmt: DmlStatement):
@@ -511,10 +544,7 @@ def execute_dml(ctx, stmt: DmlStatement):
     if stmt.op == "create_external":
         kwargs = {}
         if stmt.file_type in ("csv", "tbl"):
-            kwargs = {
-                "has_header": stmt.has_header,
-                "delimiter": stmt.delimiter,
-            }
+            kwargs = {"has_header": stmt.has_header, "delimiter": stmt.delimiter}
         if stmt.columns and stmt.file_type in ("csv", "tbl", "json", "ndjson"):
             kwargs["schema"] = stmt.columns
         ctx.create_external_table(
@@ -534,324 +564,42 @@ def execute_dml(ctx, stmt: DmlStatement):
             "register_iceberg"
         )
     fmt, path = entry
-    version: int | None = None
+    store = _storage(fmt)
     if stmt.op == "delete":
-        # both storage layers default their write shape from the
-        # table's own properties (delta.enableDeletionVectors /
-        # write.delete.mode=merge-on-read) — the router stays policy-
-        # free and the snapshot/metadata is read exactly once
-        if fmt == "delta":
-            from ballista_spark.sources.deltalog import delete_from_delta_table
-
-            version = delete_from_delta_table(spark, path, stmt.where)
-        else:
-            from ballista_spark.sources.iceberg import delete_from_iceberg_table
-
-            version = delete_from_iceberg_table(spark, path, stmt.where)
+        # each format picks its write shape from the table's own
+        # properties (delta.enableDeletionVectors /
+        # write.delete.mode=merge-on-read): the router is policy-free
+        version = store.delete(spark, path, stmt.where)
     elif stmt.op == "update":
-        if fmt == "delta":
-            from ballista_spark.sources.deltalog import update_delta_table
-
-            version = update_delta_table(
-                spark, path, stmt.set_exprs, stmt.where
-            )
-        else:
-            from ballista_spark.sources.iceberg import update_iceberg_table
-
-            version = update_iceberg_table(
-                spark, path, stmt.set_exprs, stmt.where
-            )
+        version = store.update(spark, path, stmt.set_exprs, stmt.where)
     elif stmt.op == "merge":
-        from pyspark.sql import functions as F
-
-        src = stmt.source_sql
-        source = (
-            spark.sql(src[1:-1]) if src.startswith("(") else spark.table(src)
-        )
-        if fmt == "delta":
-            from ballista_spark.sources.deltalog import (
-                merge_delta_table as _merge,
-                read_delta_table as _read,
-                write_delta_table as _write,
-            )
-        else:
-            from ballista_spark.sources.iceberg import (
-                merge_iceberg_table as _merge,
-                read_iceberg_table as _read,
-                write_iceberg_table as _write,
-            )
-        talias = stmt.target_alias or stmt.table
-        salias = stmt.source_alias or (
-            src if not src.startswith("(") else "__src"
-        )
-        conditional = (
-            stmt.matched_condition is not None
-            or stmt.not_matched_condition is not None
-            or stmt.matched_set is not None
-        )
-        if stmt.when_matched == "skip":
-            # insert-only MERGE: matched rows untouched — new keys
-            # anti-join against the target, then a plain append (no
-            # file ever rewrites)
-            target_df = _read(spark, path)
-            new_rows = source.alias(salias).join(
-                target_df.select(*stmt.on).distinct(), stmt.on, "left_anti"
-            )
-            if stmt.not_matched_condition:
-                new_rows = new_rows.where(
-                    F.expr(stmt.not_matched_condition)
-                )
-            new_rows = new_rows.select(*target_df.columns)
-            version = (
-                _write(new_rows, path, mode="append")
-                if new_rows.limit(1).count()
-                else None
-            )
-        elif conditional:
-            # per-clause conditions / explicit SET compose onto the
-            # plain storage MERGE by transforming the SOURCE: matched
-            # rows passing the condition become their POST-action rows
-            # (source row for SET *, a projection over the t/s pair for
-            # explicit SET); matched rows failing it leave the source —
-            # the storage merge then never touches them.  Conditions
-            # and SET right-hand sides are arbitrary Spark SQL over the
-            # statement's aliases (t.c / s.c); ambiguity surfaces as an
-            # AnalysisException, never a silent guess.
-            target_df = _read(spark, path)
-            target_cols = target_df.columns
-            types = {f.name: f.dataType for f in target_df.schema.fields}
-            if stmt.matched_set:
-                bad = [c for c in stmt.matched_set if c not in types]
-                if bad:
-                    raise DmlError(
-                        f"MERGE SET columns {bad} are not in the table "
-                        f"schema {target_cols}"
-                    )
-                keyed = [c for c in stmt.matched_set if c in stmt.on]
-                if keyed:
-                    raise DmlError(
-                        f"MERGE SET cannot assign ON columns {keyed} — "
-                        "the merge is keyed by them"
-                    )
-            t = target_df.alias(talias)
-            s = source.alias(salias)
-            pair_cond = None
-            for k in stmt.on:
-                c = F.col(f"{talias}.{k}") == F.col(f"{salias}.{k}")
-                pair_cond = c if pair_cond is None else (pair_cond & c)
-            m_cond = (
-                F.expr(stmt.matched_condition)
-                if stmt.matched_condition
-                else F.lit(True)
-            )
-            applied = t.join(s, pair_cond, "inner").where(m_cond)
-            if stmt.when_matched == "update" and stmt.matched_set:
-                eff_matched = applied.select(
-                    *[
-                        (
-                            F.expr(stmt.matched_set[c])
-                            .cast(types[c])
-                            .alias(c)
-                            if c in stmt.matched_set
-                            else F.col(f"{talias}.{c}").alias(c)
-                        )
-                        for c in target_cols
-                    ]
-                )
-            else:  # SET * (update) or DELETE: the source row carries on
-                eff_matched = applied.select(
-                    *[F.col(f"{salias}.{c}").alias(c) for c in target_cols]
-                )
-            pieces = [eff_matched]
-            if stmt.insert_not_matched:
-                ins = s.join(t, pair_cond, "left_anti")
-                if stmt.not_matched_condition:
-                    ins = ins.where(F.expr(stmt.not_matched_condition))
-                pieces.append(
-                    ins.select(
-                        *[
-                            F.col(f"{salias}.{c}").alias(c)
-                            for c in target_cols
-                        ]
-                    )
-                )
-            effective = pieces[0]
-            for p in pieces[1:]:
-                effective = effective.unionByName(p)
-            version = _merge(
-                spark, path, effective, on=stmt.on,
-                when_matched=stmt.when_matched,
-                insert_not_matched=stmt.insert_not_matched,
-            )
-        else:
-            version = _merge(
-                spark, path, source, on=stmt.on,
-                when_matched=stmt.when_matched,
-                insert_not_matched=stmt.insert_not_matched,
-            )
+        version = _merge(spark, store, path, stmt)
     elif stmt.op == "vacuum":
-        ms = int((stmt.retain_hours or 7 * 24) * 3600 * 1000)
-        if fmt == "delta":
-            from ballista_spark.sources.deltalog import vacuum_delta_table
-
-            version = len(vacuum_delta_table(path, retention_ms=ms))
-        else:
-            from ballista_spark.sources.iceberg import expire_iceberg_snapshots
-
-            version = len(expire_iceberg_snapshots(path, retention_ms=ms))
+        hours = 7 * 24 if stmt.retain_hours is None else stmt.retain_hours
+        version = len(store.vacuum(path, retention_ms=int(hours * 3600 * 1000)))
     elif stmt.op == "optimize":
-        if fmt == "delta":
-            from ballista_spark.sources.deltalog import compact_delta_table
-
-            version = compact_delta_table(
-                spark, path, cluster_by=stmt.zorder_by or None
-            )
-        else:
-            from ballista_spark.sources.iceberg import compact_iceberg_table
-
-            version = compact_iceberg_table(
-                spark, path, cluster_by=stmt.zorder_by or None
-            )
+        version = store.compact(spark, path, cluster_by=stmt.zorder_by or None)
     elif stmt.op in ("insert", "insert_overwrite"):
-        from pyspark.sql import functions as F
-
-        src_df = spark.sql(stmt.source_sql)
-        # a VALUES/SELECT query can produce names like `9.5` that any
-        # by-name access would dot-parse — normalize to safe ordinals
-        src_df = src_df.toDF(*[f"__c{i}" for i in range(len(src_df.columns))])
-        # SQL INSERT aligns BY POSITION, then casts to the declared types
-        if fmt == "delta":
-            from ballista_spark.sources.deltalog import (
-                read_delta_snapshot,
-                write_delta_table,
-            )
-
-            target_schema = read_delta_snapshot(path).schema
-        else:
-            from ballista_spark.sources.iceberg import (
-                _current_schema,
-                _load_metadata,
-                iceberg_to_spark_type,
-            )
-
-            target_schema = iceberg_to_spark_type(
-                _current_schema(_load_metadata(path)[1])
-            )
-        if stmt.insert_columns is not None:
-            # named column list: query columns align BY POSITION to the
-            # listed names; unlisted table columns fill with NULL
-            by_lower = {f.name.lower(): f.name for f in target_schema.fields}
-            unknown = [
-                c for c in stmt.insert_columns if c.lower() not in by_lower
-            ]
-            if unknown:
-                raise DmlError(
-                    f"INSERT column(s) {unknown} not in table schema "
-                    f"{[f.name for f in target_schema.fields]}"
-                )
-            if len(src_df.columns) != len(stmt.insert_columns):
-                raise DmlError(
-                    f"INSERT column list has {len(stmt.insert_columns)} "
-                    f"names but the query produces {len(src_df.columns)} "
-                    "columns"
-                )
-            pos = {
-                by_lower[c.lower()]: i
-                for i, c in enumerate(stmt.insert_columns)
-            }
-            aligned = src_df.select(
-                *[
-                    (
-                        F.col(f"__c{pos[f.name]}").cast(f.dataType)
-                        if f.name in pos
-                        else F.lit(None).cast(f.dataType)
-                    ).alias(f.name)
-                    for f in target_schema.fields
-                ]
-            )
-        else:
-            if len(src_df.columns) != len(target_schema.fields):
-                raise DmlError(
-                    f"INSERT column count {len(src_df.columns)} != table "
-                    f"column count {len(target_schema.fields)}"
-                )
-            aligned = src_df.select(
-                *[
-                    F.col(f"__c{i}").cast(f.dataType).alias(f.name)
-                    for i, f in enumerate(target_schema.fields)
-                ]
-            )
-        mode = "append" if stmt.op == "insert" else "overwrite"
-        if fmt == "delta":
-            version = write_delta_table(aligned, path, mode=mode)
-        else:
-            from ballista_spark.sources.iceberg import write_iceberg_table
-
-            version = write_iceberg_table(aligned, path, mode=mode)
-    elif stmt.op == "alter":
-        if stmt.set_properties or stmt.unset_properties:
-            if fmt == "delta":
-                from ballista_spark.sources.deltalog import (
-                    set_delta_table_properties,
-                )
-
-                version = set_delta_table_properties(
-                    path,
-                    set_props=stmt.set_properties or None,
-                    unset=stmt.unset_properties or None,
-                )
-            else:
-                from ballista_spark.sources.iceberg import (
-                    set_iceberg_table_properties,
-                )
-
-                version = set_iceberg_table_properties(
-                    path,
-                    set_props=stmt.set_properties or None,
-                    unset=stmt.unset_properties or None,
-                )
-        elif stmt.rename_from is not None:
-            if fmt == "delta":
-                from ballista_spark.sources.deltalog import (
-                    rename_delta_column,
-                )
-
-                version = rename_delta_column(
-                    path, stmt.rename_from, stmt.rename_to
-                )
-            else:
-                # round 10: Iceberg renames are metadata-only too —
-                # staged files carry parquet field ids and renamed
-                # tables read id-resolved (rename proves every live
-                # file has ids first)
-                from ballista_spark.sources.iceberg import (
-                    rename_iceberg_column,
-                )
-
-                version = rename_iceberg_column(
-                    path, stmt.rename_from, stmt.rename_to, spark=spark
-                )
-        elif fmt == "delta":
-            from ballista_spark.sources.deltalog import alter_delta_table
-
-            version = alter_delta_table(
-                path, add_columns=stmt.add_columns or None,
-                drop_columns=stmt.drop_columns or None,
-            )
-        else:
-            from ballista_spark.sources.iceberg import alter_iceberg_table
-
-            version = alter_iceberg_table(
-                path, add_columns=stmt.add_columns or None,
-                drop_columns=stmt.drop_columns or None,
-            )
-    else:  # pragma: no cover — parse_dml only emits the five ops
-        raise DmlError(f"unknown op {stmt.op!r}")
-
-    if stmt.op in (
-        "delete", "update", "merge", "optimize", "alter",
-        "insert", "insert_overwrite",
-    ):
+        version = store.write(
+            _insert_rows(spark, store.schema(path), stmt), path,
+            mode="append" if stmt.op == "insert" else "overwrite",
+        )
+    elif stmt.set_properties or stmt.unset_properties:
+        version = store.set_properties(
+            path,
+            set_props=stmt.set_properties or None,
+            unset=stmt.unset_properties or None,
+        )
+    elif stmt.rename_from is not None:
+        version = store.rename(
+            path, stmt.rename_from, stmt.rename_to, spark=spark
+        )
+    else:  # ADD / DROP COLUMNS
+        version = store.alter(
+            path, add_columns=stmt.add_columns or None,
+            drop_columns=stmt.drop_columns or None,
+        )
+    if stmt.op != "vacuum":
         ctx._refresh_lakehouse_view(stmt.table)  # noqa: SLF001
     return spark.createDataFrame(
         [(stmt.op, stmt.table, version)],

@@ -73,14 +73,14 @@ from collections.abc import Mapping
 from dataclasses import dataclass, field
 from urllib.parse import unquote as _unquote
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ballista_spark.sources import fsio, rewrite
 from ballista_spark.sources.decodecache import DecodeCache
 from ballista_spark.sources.dvbitmap import DECODE_CHUNK
-from ballista_spark.sources.rewrite import _filters_to_column, decoded_file_path
+from ballista_spark.sources.rewrite import decoded_file_path
 
 __all__ = [
     "DeltaSnapshot",
@@ -2306,15 +2306,16 @@ def merge_delta_table(
 def delete_from_delta_table(
     spark: SparkSession,
     table_path: str,
-    filters: list[tuple[str, str, object]],
+    filters: list[tuple[str, str, object]] | Column,
     use_deletion_vectors: bool | None = None,
 ) -> int | None:
-    """``DELETE FROM``: remove every row matching ALL ``filters``
-    ((col, op, value) triples — the same proof language the reader
-    prunes on), touching ONLY files that provably contain matches
-    (``rewrite.delete``).  Returns the commit version, or None when
-    nothing matched (zero writes).  Rows where the predicate is NULL
-    are KEPT — SQL DELETE semantics.
+    """``DELETE FROM``: remove every row matching ``filters`` — either
+    (col, op, value) triples, ALL of which must hold (the proof
+    language the reader prunes on), or any Column predicate, whose
+    provable top-level conjuncts prune — touching ONLY files that
+    provably contain matches (``rewrite.delete``).  Returns the commit
+    version, or None when nothing matched (zero writes).  Rows where
+    the predicate is NULL are KEPT — SQL DELETE semantics.
 
     Two write shapes:
 
@@ -2348,14 +2349,19 @@ def delete_from_delta_table(
     if not use_deletion_vectors:
         return rewrite.delete(t, filters)
     return rewrite.delete(
-        t, filters, lambda c: _delete_with_deletion_vectors(t, c, filters)
+        t,
+        filters,
+        lambda c, pred: _delete_with_deletion_vectors(
+            t, c, pred, rewrite._predicate_param(filters)
+        ),
     )
 
 
 def _delete_with_deletion_vectors(
     t: _Rewrite,
     candidates: list[_AddFile],
-    filters: list[tuple[str, str, object]],
+    pred,
+    predicate_text: str,
 ) -> int | None:
     """The DV write shape of DELETE (see delete_from_delta_table) over
     the stats-pruned ``candidates``; a candidate with no new match is
@@ -2376,7 +2382,7 @@ def _delete_with_deletion_vectors(
     snap, spark, table_path = t.snap, t.spark, t.snap.table_path
     all_pos = (
         t.scan(candidates, file_col="__file", pos_col="__rowpos")
-        .where(_filters_to_column(filters))
+        .where(pred)
         .select(
             "__file", F.col("__rowpos").alias("__pos"), F.lit(1).alias("__new")
         )
@@ -2520,7 +2526,7 @@ def _delete_with_deletion_vectors(
         adds,
         "DELETE",
         {
-            "predicate": json.dumps([list(map(str, f)) for f in filters]),
+            "predicate": predicate_text,
             "deletionVectors": "true",
         },
     )
@@ -2530,14 +2536,15 @@ def update_delta_table(
     spark: SparkSession,
     table_path: str,
     set_exprs: Mapping[str, object],
-    filters: list[tuple[str, str, object]] | None = None,
+    filters: list[tuple[str, str, object]] | Column | None = None,
 ) -> int | None:
-    """Copy-on-write ``UPDATE ... SET ... WHERE``: rows matching ALL
-    ``filters`` get each ``set_exprs`` column replaced by its expression
-    (SQL string or Column), cast back to the column's declared type so
-    the table schema never drifts.  ``filters=None`` is the
-    unconditional full-table UPDATE (SQL allows it; every file is
-    rewritten).  Returns the commit version, or None when no row
+    """Copy-on-write ``UPDATE ... SET ... WHERE``: rows matching
+    ``filters`` (ALL of the triples, or a Column predicate, as in
+    :func:`delete_from_delta_table`) get each ``set_exprs`` column
+    replaced by its expression (SQL string or Column), cast back to
+    the column's declared type so the table schema never drifts.
+    ``filters=None`` is the unconditional full-table UPDATE (SQL allows
+    it; every file is rewritten).  Returns the commit version, or None when no row
     matched.  Same touch-only shape as :func:`delete_from_delta_table`
     (``rewrite.update``); non-matching rows inside a touched file are
     carried byte-identical through the rewrite.

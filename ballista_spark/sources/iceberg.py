@@ -80,7 +80,7 @@ import json
 import os
 import struct
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 
 from ballista_spark.sources import fsio, rewrite
@@ -90,7 +90,7 @@ from ballista_spark.sources.avroio import (
 )
 from ballista_spark.sources.decodecache import DecodeCache
 from ballista_spark.sources.dvbitmap import DECODE_CHUNK
-from ballista_spark.sources.rewrite import _filters_to_column, decoded_file_path
+from ballista_spark.sources.rewrite import decoded_file_path
 
 __all__ = [
     "read_iceberg_table",
@@ -2653,15 +2653,17 @@ def _refuse_delete_files(t: _Rewrite, op: str, hint: str = "") -> None:
 def delete_from_iceberg_table(
     spark: SparkSession,
     table_path: str,
-    filters: list[tuple[str, str, object]],
+    filters: list[tuple[str, str, object]] | Column,
     use_position_deletes: bool | None = None,
 ) -> int | None:
-    """DELETE: remove every row matching ALL ``filters`` (the same
-    (col, op, value) triples the readers prune on), touching ONLY the
-    files that provably contain matches (``rewrite.delete``).  Commits
-    one snapshot (operation ``delete``); returns its id, or None when
-    no row matched (zero writes).  Rows where the predicate is NULL are
-    KEPT — SQL DELETE semantics.
+    """DELETE: remove every row matching ``filters`` — either (col, op,
+    value) triples, ALL of which must hold (the proof language the
+    readers prune on), or any Column predicate, whose provable
+    top-level conjuncts prune — touching ONLY the files that provably
+    contain matches (``rewrite.delete``).  Commits one snapshot
+    (operation ``delete``); returns its id, or None when no row matched
+    (zero writes).  Rows where the predicate is NULL are KEPT — SQL
+    DELETE semantics.
 
     Two write shapes (the Iceberg twin of
     ``delete_from_delta_table``'s COW/DV split):
@@ -2716,14 +2718,12 @@ def delete_from_iceberg_table(
     # renamed tables are fine: the matched scan binds by field id and
     # tombstones are (file, pos) pairs — name-independent by construction
     return rewrite.delete(
-        t, filters, lambda c: _delete_with_position_deletes(t, c, filters)
+        t, filters, lambda c, pred: _delete_with_position_deletes(t, c, pred)
     )
 
 
 def _delete_with_position_deletes(
-    t: _Rewrite,
-    candidates: list[dict],
-    filters: list[tuple[str, str, object]],
+    t: _Rewrite, candidates: list[dict], pred
 ) -> int | None:
     """The zero-rewrite shape of DELETE (see delete_from_iceberg_table)
     over the stats-pruned ``candidates`` — the Iceberg v2 twin of
@@ -2746,7 +2746,7 @@ def _delete_with_position_deletes(
 
     matched = (
         t.scan(candidates, file_col="__file", pos_col="__rowpos")
-        .where(_filters_to_column(filters))
+        .where(pred)
         .select(F.col("__file").alias("file_path"), F.col("__rowpos").alias("pos"))
     )
     # spec: position-delete rows sorted by (file_path, pos); each output
@@ -2785,18 +2785,20 @@ def update_iceberg_table(
     spark: SparkSession,
     table_path: str,
     set_exprs,
-    filters: list[tuple[str, str, object]] | None = None,
+    filters: list[tuple[str, str, object]] | Column | None = None,
 ) -> int | None:
     """Copy-on-write ``UPDATE ... SET ... WHERE`` (``rewrite.update``):
-    rows matching ALL ``filters`` get each ``set_exprs`` column (SQL
-    string or Column) applied, cast back to the column's declared type
-    so the table schema never drifts; non-matching rows in a touched
-    file carry through the rewrite unchanged.  ``filters=None`` =
-    unconditional full-table UPDATE.  Returns the new snapshot id, or
-    None when no row matched (zero writes).  Same discipline and
-    restrictions as :func:`delete_from_iceberg_table`: untouched files'
-    manifest records carry forward verbatim; v2 delete-file tables
-    refuse (compact first); the streaming face refuses the resulting
+    rows matching ``filters`` (ALL of the triples, or a Column
+    predicate, as in :func:`delete_from_iceberg_table`) get each
+    ``set_exprs`` column (SQL string or Column) applied, cast back to
+    the column's declared type so the table schema never drifts;
+    non-matching rows in a touched file carry through the rewrite
+    unchanged.  ``filters=None`` = unconditional full-table UPDATE.
+    Returns the new snapshot id, or None when no row matched (zero
+    writes).  Same discipline and restrictions as
+    :func:`delete_from_iceberg_table`: untouched files' manifest
+    records carry forward verbatim; v2 delete-file tables refuse
+    (compact first); the streaming face refuses the resulting
     overwrite snapshot (an update changes rows).
     """
     t = _Rewrite(spark, table_path, "UPDATE")

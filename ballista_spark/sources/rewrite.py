@@ -30,10 +30,11 @@ their protocol gates and those zero-rewrite fast paths.
 
 from __future__ import annotations
 
+import datetime
 import json
 from typing import Callable, Protocol
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -96,9 +97,7 @@ def decoded_file_path() -> Column:
 
 def _filters_to_column(filters: list[tuple[str, str, object]]) -> Column:
     """AND of (col, op, value) triples as a real row predicate — the
-    exact-match twin of the proof language the stats prune on.  A NULL
-    comparison counts as false, so DELETE keeps the row and UPDATE
-    leaves it untouched (SQL semantics)."""
+    exact-match twin of the proof language the stats prune on."""
     cond = F.lit(True)
     for col, op, val in filters:
         c = F.col(col)
@@ -118,10 +117,120 @@ def _filters_to_column(filters: list[tuple[str, str, object]]) -> Column:
             cond = cond & c.isNull()
         else:
             raise ValueError(f"unsupported filter operator {op!r}")
-    return F.coalesce(cond, F.lit(False))
+    return cond
+
+
+#: Catalyst expression classes as the proof language's operators
+_KIND = {
+    "And": "and",
+    "Not": "not",
+    "IsNull": "is_null",
+    "EqualTo": "=",
+    "LessThan": "<",
+    "LessThanOrEqual": "<=",
+    "GreaterThan": ">",
+    "GreaterThanOrEqual": ">=",
+}
+_FLIP = {"=": "=", "!=": "!=", "<": ">", "<=": ">=", ">": "<", ">=": "<="}
+_EPOCH = datetime.date(1970, 1, 1)
+
+
+def _kind(e) -> str | None:
+    return _KIND.get(e.getClass().getSimpleName())
+
+
+def _column_name(e) -> str | None:
+    if e.getClass().getSimpleName() != "UnresolvedAttribute":
+        return None
+    parts = e.nameParts()
+    return parts.head() if parts.size() == 1 else None
+
+
+def _literal(e):
+    """A Catalyst literal as the Python value a triple carries (int,
+    float for decimal and double, str, bool, ``datetime.date``); a
+    ValueError for NULL and every other type."""
+    if e.getClass().getSimpleName() != "Literal" or e.value() is None:
+        raise ValueError("not a comparable literal")
+    t, v = e.dataType().typeName(), e.value()
+    if t in ("byte", "short", "integer", "long"):
+        return int(v)
+    if t in ("float", "double"):
+        return float(v)
+    if t.startswith("decimal"):
+        return float(v.toString())
+    if t == "string":
+        return v.toString()
+    if t == "boolean":
+        return bool(v)
+    if t == "date":
+        return _EPOCH + datetime.timedelta(days=v)
+    raise ValueError(f"no triple literal for {t}")
+
+
+def _conjunct(e) -> tuple[str, str, object] | None:
+    """``e`` as one (col, op, value) triple, or None when it is not
+    ``col op literal``, ``literal op col`` or ``col IS NULL``."""
+    op = _kind(e)
+    if op == "not" and _kind(e.children().head()) == "=":
+        e, op = e.children().head(), "!="
+    ch = e.children()
+    if op == "is_null":
+        col = _column_name(ch.head())
+        return None if col is None else (col, "is_null", None)
+    if op not in _FLIP or ch.size() != 2:
+        return None
+    left, right = ch.apply(0), ch.apply(1)
+    col = _column_name(left)
+    if col is None:
+        col, op, right = _column_name(right), _FLIP[op], left
+    if col is None:
+        return None
+    try:
+        return (col, op, _literal(right))
+    except ValueError:
+        return None
+
+
+def _and_terms(e) -> list:
+    """The terms of a Catalyst expression's top-level AND, in order."""
+    if _kind(e) != "and":
+        return [e]
+    ch = e.children()
+    return _and_terms(ch.apply(0)) + _and_terms(ch.apply(1))
+
+
+def provable_conjuncts(predicate: Column) -> list[tuple[str, str, object]]:
+    """The (col, op, value) triples the top-level AND of ``predicate``
+    implies: each conjunct that is ``col op literal``, ``literal op
+    col`` or ``col IS NULL``.  Every other conjunct (OR, IN, LIKE, a
+    function call) is skipped: it still filters rows, it only cannot
+    prune files."""
+    tree = SparkSession.active()._jsparkSession.expression(predicate._jc)
+    return [t for t in map(_conjunct, _and_terms(tree)) if t is not None]
+
+
+def _normalize(filters) -> tuple[list, Column]:
+    """``filters`` — (col, op, value) triples or a Column — as
+    ``(conjuncts, predicate)``: the triples the stats prune on, and the
+    exact row predicate with NULL counted as false, so DELETE keeps the
+    row and UPDATE leaves it untouched (SQL semantics)."""
+    if isinstance(filters, Column):
+        conjuncts, pred = provable_conjuncts(filters), filters
+    else:
+        conjuncts, pred = list(filters), _filters_to_column(filters)
+    return conjuncts, F.coalesce(pred, F.lit(False))
+
+
+def _sql_text(col: Column) -> str:
+    return SparkSession.active()._jsparkSession.expression(col._jc).sql()
 
 
 def _predicate_param(filters) -> str:
+    """The commit's recorded predicate: a Column as its Catalyst SQL
+    text, triples as JSON."""
+    if isinstance(filters, Column):
+        return _sql_text(filters)
     return json.dumps([list(map(str, f)) for f in filters or []])
 
 
@@ -144,26 +253,31 @@ def _touch(
     return [f for f in files if a.path(f) in hit]
 
 
+def _given(filters) -> bool:
+    return isinstance(filters, Column) or bool(filters)
+
+
 def delete(
     a: Table,
-    filters: list[tuple[str, str, object]],
-    fast_path: Callable[[list], int | None] | None = None,
+    filters,
+    fast_path: Callable[[list, Column], int | None] | None = None,
 ) -> int | None:
-    """DELETE the rows matching ALL ``filters``; rows where the
-    predicate is NULL are kept.  Copy-on-write rewrites the touched
-    files without the matches (a file left empty disappears);
-    ``fast_path`` instead receives the stats-pruned candidates.  None
-    when no row matched (zero writes)."""
-    if not filters:
+    """DELETE the rows matching ``filters`` (triples, ALL of them, or a
+    Column); rows where the predicate is NULL are kept.  Copy-on-write
+    rewrites the touched files without the matches (a file left empty
+    disappears); ``fast_path`` instead receives the stats-pruned
+    candidates and the predicate.  None when no row matched (zero
+    writes)."""
+    if not _given(filters):
         raise ValueError(
             "refusing an unconditional DELETE — pass explicit filters "
             "(overwrite with an empty DataFrame to truncate)"
         )
+    conjuncts, pred = _normalize(filters)
     if fast_path is not None:
-        candidates = a.may_match(a.live_files(), filters)
-        return fast_path(candidates) if candidates else None
-    pred = _filters_to_column(filters)
-    touched = _touch(a, filters, lambda df: df.where(pred))
+        candidates = a.may_match(a.live_files(), conjuncts)
+        return fast_path(candidates, pred) if candidates else None
+    touched = _touch(a, conjuncts, lambda df: df.where(pred))
     if not touched:
         return None
     survivors = a.scan(touched).where(~pred)
@@ -173,25 +287,23 @@ def delete(
     )
 
 
-def update(
-    a: Table,
-    set_exprs,
-    filters: list[tuple[str, str, object]] | None = None,
-) -> int | None:
-    """Copy-on-write UPDATE: rows matching ALL ``filters`` (every row
-    when None) get each ``set_exprs`` column (SQL string or Column),
-    cast back to its declared type so the schema never drifts.  None
-    when no row matched."""
+def update(a: Table, set_exprs, filters=None) -> int | None:
+    """Copy-on-write UPDATE: rows matching ``filters`` (triples, ALL of
+    them, or a Column; every row when None) get each ``set_exprs``
+    column (SQL string or Column), cast back to its declared type so
+    the schema never drifts.  None when no row matched."""
     if not set_exprs:
         raise ValueError("UPDATE needs at least one SET column")
     types = {f.name: f.dataType for f in a.schema.fields}
     for name in set_exprs:
         if name not in types:
             raise ValueError(f"SET column {name!r} is not in the table schema")
-    pred = _filters_to_column(filters) if filters else F.lit(True)
-    touched = _touch(
-        a, filters or [], (lambda df: df.where(pred)) if filters else None
-    )
+    if _given(filters):
+        conjuncts, pred = _normalize(filters)
+        touched = _touch(a, conjuncts, lambda df: df.where(pred))
+    else:
+        pred = F.lit(True)
+        touched = _touch(a, [], None)
     if not touched:
         return None
     rows = a.scan(touched)
@@ -214,7 +326,12 @@ def update(
         touched, a.stage(updated), "UPDATE",
         {
             "predicate": _predicate_param(filters),
-            "set": json.dumps({k: str(v) for k, v in set_exprs.items()}),
+            "set": json.dumps(
+                {
+                    k: v if isinstance(v, str) else _sql_text(v)
+                    for k, v in set_exprs.items()
+                }
+            ),
         },
     )
 

@@ -144,13 +144,33 @@ def spark_type_to_arrow_name(dt: T.DataType) -> str:
     raise ValueError(f"no Arrow name for Spark type {dt}")
 
 
-def schema(fields: dict[str, str] | list[tuple[str, str]]) -> T.StructType:
-    """Build a Spark schema from {name: arrow_type_name} pairs.
+def schema(fields: dict[str, str] | list[tuple[str, str]] | str) -> T.StructType:
+    """Build a Spark schema from {name: arrow_type_name} pairs, or from
+    a DDL column list ``"name type, ..."``.
 
     Mirrors the reference's explicit-schema CSV registration
-    (``python/src/context.rs:84-139``: schema passed as field list).
+    (``python/src/context.rs:84-139``: schema passed as field list) and
+    its ``CREATE EXTERNAL TABLE`` column list.
     """
+    if isinstance(fields, str):
+        fields = _column_list(fields)
     items = fields.items() if isinstance(fields, dict) else fields
     return T.StructType(
         [T.StructField(n, arrow_name_to_spark(t), True) for n, t in items]
     )
+
+
+def _column_list(ddl: str) -> list[tuple[str, str]]:
+    """``name type, ...`` as (name, type) pairs; a type's own commas
+    sit inside ``()`` or ``<>``."""
+    pairs, depth, start = [], 0, 0
+    for i, c in enumerate(ddl + ","):
+        depth += (c in "(<") - (c in ")>")
+        if c == "," and depth == 0:
+            part = ddl[start:i]
+            m = re.fullmatch(r"\s*([A-Za-z_][A-Za-z0-9_]*)\s+(.+?)\s*", part, re.S)
+            if m is None:
+                raise ValueError(f"cannot parse column definition {part!r}")
+            pairs.append(m.groups())
+            start = i + 1
+    return pairs

@@ -63,7 +63,7 @@ HEADLINE = [
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from ballista_spark.queries.tpch import TPCH_QUERIES
-    from ballista_spark.session import get_spark
+    from ballista_spark.session import default_parallelism, get_spark
 
     queries = dict(TPCH_QUERIES)
     try:
@@ -160,6 +160,8 @@ def main() -> None:
         "loadavg_before": [round(x, 2) for x in load_before],
         "loadavg_after": [round(x, 2) for x in os.getloadavg()],
         "bench_started_unix": round(bench_started_unix, 1),
+        "cpus": default_parallelism(),
+        "master": spark.sparkContext.master,
     }
     print(json.dumps(result))
     spark.stop()
