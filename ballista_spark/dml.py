@@ -259,13 +259,18 @@ def _walk_delete(spark, plan, table, alias) -> DmlStatement:
             "DELETE needs a WHERE clause — refusing an unconditional "
             "DELETE (INSERT OVERWRITE with an empty query truncates)"
         )
-    return DmlStatement(op="delete", table=table, where=_column(spark, cond))
+    return DmlStatement(
+        op="delete", table=table, where=_column(spark, cond), target_alias=alias
+    )
 
 
 def _walk_update(spark, plan, table, alias) -> DmlStatement:
     sets = _assignments(spark, plan.assignments(), {table, alias}, "UPDATE SET")
     where = _condition(spark, plan.condition())
-    return DmlStatement(op="update", table=table, set_exprs=sets, where=where)
+    return DmlStatement(
+        op="update", table=table, set_exprs=sets, where=where,
+        target_alias=alias,
+    )
 
 
 def _walk_merge(spark, plan, table, alias) -> DmlStatement:
@@ -569,9 +574,11 @@ def execute_dml(ctx, stmt: DmlStatement):
         # each format picks its write shape from the table's own
         # properties (delta.enableDeletionVectors /
         # write.delete.mode=merge-on-read): the router is policy-free
-        version = store.delete(spark, path, stmt.where)
+        version = store.delete(spark, path, stmt.where, alias=stmt.target_alias)
     elif stmt.op == "update":
-        version = store.update(spark, path, stmt.set_exprs, stmt.where)
+        version = store.update(
+            spark, path, stmt.set_exprs, stmt.where, alias=stmt.target_alias
+        )
     elif stmt.op == "merge":
         version = _merge(spark, store, path, stmt)
     elif stmt.op == "vacuum":

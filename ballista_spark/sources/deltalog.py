@@ -36,8 +36,8 @@ Scale design:
 - **Commits are put-if-absent.**  ``{version:020d}.json`` is created
   with an exclusive-create open at the version the writer READ + 1; a
   losing racer re-reads the snapshot, fails if a winner conflicts with
-  it, and otherwise retries on top (optimistic concurrency, the Delta
-  commit protocol — one path, ``_commit``).
+  it, and otherwise retries on top (optimistic concurrency: the one
+  loop ``occ.commit`` runs for Delta and Iceberg, through ``_commit``).
 - **Filesystem-agnostic metadata plane** (round 8): every log/staging
   IO site routes through ``sources/fsio.py`` — plain paths keep the
   local ``os`` fast-path, URIs (s3://, hdfs://, + Hadoop spellings
@@ -45,8 +45,7 @@ Scale design:
   check-then-write on object stores (fsio warns; multi-writer S3
   deployments need the spec's LogStore coordination layer — documented,
   loud).  Footer-stat collection for large commits distributes as one
-  ``mapInPandas`` pass instead of a serial driver loop
-  (``_collect_file_stats``).
+  tiny Spark job instead of a serial driver loop (``rewrite.per_file``).
 
 Supported protocol subset (checked, not assumed): reader version ≤ 2
 plus the columnMapping table feature (reader version 3 tables whose
@@ -77,9 +76,9 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ballista_spark.sources import fsio, rewrite
+from ballista_spark.sources import fsio, occ, rewrite
 from ballista_spark.sources.decodecache import DecodeCache
-from ballista_spark.sources.dvbitmap import DECODE_CHUNK
+from ballista_spark.sources.dvbitmap import tombstones
 from ballista_spark.sources.rewrite import decoded_file_path
 
 __all__ = [
@@ -113,9 +112,8 @@ class DeltaProtocolError(RuntimeError):
     """Table requires protocol features this subset does not implement."""
 
 
-class DeltaConcurrentCommitError(RuntimeError):
-    """A concurrent commit conflicts with this one, or the commit lost
-    the optimistic-concurrency race too many times."""
+#: the Delta name of the one conflict error (``occ.commit`` raises it)
+DeltaConcurrentCommitError = occ.ConcurrentCommitError
 
 
 # ---------------------------------------------------------------------------
@@ -900,21 +898,6 @@ def _dv_positions(table_path: str, dv: dict) -> list[int]:
     return positions
 
 
-#: LOCAL tables whose descriptors declare at most this many total
-#: deleted positions decode tombstones on the driver (one Arrow batch,
-#: no job).  Measured warm on this box (read+count of a 1-DV table):
-#: 2k positions 0.46 s driver vs 0.67 s executor; 20k ~equal (0.78 vs
-#: 0.83); 100k the executor pass WINS (1.28 vs 1.02 — the pure-Python
-#: bitmap decode dominates and parallelizes).  Above the threshold, or
-#: on any non-local table, decode runs EXECUTOR-SIDE: the driver ships
-#: only the (file, descriptor) list — file-count rows — and one
-#: mapInPandas pass decodes each file's bitmap where the anti-join
-#: consumes it.  Driver memory never holds decoded positions (the
-#: round-8 weak item: a 100 TB table with 1% DV-deleted rows would
-#: otherwise materialize billions of int64s on the driver; measured:
-#: a 2.5M-position lifecycle adds 27 MB to driver maxrss on DELETE —
-#: the compressed per-file segments — and 0 MB on read).
-DV_DRIVER_DECODE_MAX = 20_000
 #: test hook: force the executor path regardless of size/locality
 DV_DECODE_FORCE_EXECUTOR = False
 
@@ -932,13 +915,8 @@ def _scan_root(table_path: str) -> str:
 
 
 def _dv_tombstones(spark: SparkSession, snap: DeltaSnapshot):
-    """(file path, row position) tombstone DataFrame for every live
-    file carrying a deletion vector, or None.  The scan applies it as a
-    single anti-join — the Iceberg position-delete pattern, never a
-    per-row Python filter.  Decode placement is size-aware (see
-    DV_DRIVER_DECODE_MAX): small local vectors decode on the driver,
-    everything else decodes executor-side so driver memory stays
-    O(file count), not O(deleted rows)."""
+    """(file path, row position) tombstones of every live file carrying
+    a deletion vector (``dvbitmap.tombstones``), or None."""
     dv_files = [f for f in snap.files if f.deletion_vector]
     if not dv_files:
         return None
@@ -946,68 +924,15 @@ def _dv_tombstones(spark: SparkSession, snap: DeltaSnapshot):
     # _normalize_rel); the scan side decodes _metadata.file_path to
     # match (rewrite.decoded_file_path)
     root = _scan_root(snap.table_path)
-    cards = [
-        int(f.deletion_vector.get("cardinality") or 0) for f in dv_files
-    ]
-    # a descriptor WITHOUT cardinality could hide an arbitrarily large
-    # vector — unknown sizes always take the executor path (the Iceberg
-    # twin applies the same rule)
-    cardinality_known = all(c > 0 for c in cards)
-    if (
-        cardinality_known
-        and sum(cards) <= DV_DRIVER_DECODE_MAX
-        and fsio.is_local(snap.table_path)
-        and not DV_DECODE_FORCE_EXECUTOR
-    ):
-        import pandas as pd
-
-        frames = []
-        for f in dv_files:
-            pos = _dv_positions(snap.table_path, f.deletion_vector)
-            frames.append(
-                pd.DataFrame(
-                    {
-                        "__dfp": f"{root}/{f.path}",
-                        "__pos": pd.Series(pos, dtype="int64"),
-                    }
-                )
-            )
-        return spark.createDataFrame(
-            pd.concat(frames, ignore_index=True),
-            schema="__dfp string, __pos long",
-        )
-
-    table_path = snap.table_path
-    entries = [
-        (f"{root}/{f.path}", json.dumps(f.deletion_vector)) for f in dv_files
-    ]
-
-    def _decode(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ballista_spark.sources.deltalog import _dv_positions
-
-        for pdf in batches:
-            for dfp, dvj in zip(pdf["__dfp"], pdf["__dv"]):
-                pos = np.asarray(
-                    _dv_positions(table_path, json.loads(dvj)), dtype="int64"
-                )
-                for i in range(0, max(len(pos), 1), DECODE_CHUNK):
-                    chunk = pos[i : i + DECODE_CHUNK]
-                    yield pd.DataFrame(
-                        {
-                            "__dfp": np.repeat(dfp, len(chunk)),
-                            "__pos": chunk,
-                        }
-                    )
-
-    desc_df = spark.createDataFrame(entries, "__dfp string, __dv string")
-    n_part = max(
-        1, min(len(entries), spark.sparkContext.defaultParallelism)
-    )
-    return desc_df.repartition(n_part).mapInPandas(
-        _decode, "__dfp string, __pos long"
+    return tombstones(
+        spark,
+        [
+            (f"{root}/{f.path}", int(f.deletion_vector.get("cardinality") or 0),
+             snap.table_path, f.deletion_vector)
+            for f in dv_files
+        ],
+        _dv_positions,
+        fsio.is_local(snap.table_path) and not DV_DECODE_FORCE_EXECUTOR,
     )
 
 
@@ -1257,8 +1182,6 @@ def _now_ms() -> int:
     return int(time.time() * 1000)
 
 
-#: lost commit races one commit absorbs before giving up
-_COMMIT_ATTEMPTS = 10
 #: every commit kind writes a checkpoint at multiples of this version
 _CHECKPOINT_INTERVAL = 10
 
@@ -1350,124 +1273,72 @@ def _commit(
     checkpoint_interval: int = _CHECKPOINT_INTERVAL,
 ) -> int | None:
     """Publish one commit at the READ version + 1 (``snap``; None is a
-    new table, which commits at 0) — the Delta optimistic-concurrency
-    rule.  When another writer took that version, the log is re-read
-    once and the winners are checked:
-
-    - the ``txn`` (app id, version) is already applied: return None;
-    - a file this commit removes is no longer live (path + deletion
-      vector), or, for staged actions, a winner changed the table's
-      protocol, schema, partitioning or configuration: raise
-      :class:`DeltaConcurrentCommitError`;
-    - otherwise retry at the new version + 1.
-
-    ``actions`` is either the staged list (DML and OPTIMIZE wrote their
-    data files against ``snap``, so the list is kept as is) or a
-    function of the snapshot the commit lands on (WRITE and the
-    metadata-only commits rebuild against the winner); the function may
-    return None when nothing is left to commit.  The ``txn`` action is
-    appended here.  A commit landing on a multiple of
-    ``checkpoint_interval`` writes a checkpoint.  Returns the version."""
+    new table, which commits at 0) through :func:`occ.commit`.  A lost
+    race conflicts when a file this commit removes is no longer live
+    (path + deletion vector), or, for staged actions, when a winner
+    changed the table's protocol, schema, partitioning or configuration.
+    ``actions`` is the staged list (DML and OPTIMIZE, kept as is) or a
+    function of the snapshot the commit lands on (WRITE and metadata-only
+    commits; None: nothing to commit).  The ``txn`` action is appended
+    here; a version that is a multiple of ``checkpoint_interval`` writes
+    a checkpoint.  Returns the version."""
     rebuild = actions if callable(actions) else None
-    read = snap
-    version = 0 if snap is None else snap.version + 1
-    for _ in range(_COMMIT_ATTEMPTS):
-        attempt = rebuild(snap) if rebuild else actions
-        if attempt is None:
-            return None
-        if txn is not None:
-            attempt = attempt + [
-                {
-                    "txn": {
-                        "appId": txn[0],
-                        "version": txn[1],
-                        "lastUpdated": _now_ms(),
-                    }
-                }
-            ]
-        try:
-            _attempt_commit(table_path, version, attempt)
-        except FileExistsError:
-            snap = read_delta_snapshot(table_path)
-            if _txn_applied(snap, txn):
-                return None
-            live = {_file_key(f.path, f.deletion_vector) for f in snap.files}
-            removed = [a["remove"] for a in attempt if "remove" in a]
-            gone = [
-                r["path"]
-                for r in removed
-                if _file_key(r["path"], r.get("deletionVector")) not in live
-            ]
-            moved = rebuild is None and _table_shape(snap) != _table_shape(read)
-            if gone or moved:
-                raise DeltaConcurrentCommitError(
-                    f"version {version} of {table_path!r} was taken by a "
-                    "conflicting commit ("
-                    + (f"removed {gone[:3]}" if gone else "metadata changed")
-                    + "); rerun on the new snapshot"
-                ) from None
-            version = snap.version + 1
-            continue
-        if checkpoint_interval and version > 0 and (
-            version % checkpoint_interval == 0
-        ):
-            _write_checkpoint(table_path, version)
+
+    def build(s: DeltaSnapshot | None) -> list[dict] | None:
+        attempt = rebuild(s) if rebuild else actions
+        if attempt is None or txn is None:
+            return attempt
+        return attempt + [
+            {"txn": {"appId": txn[0], "version": txn[1], "lastUpdated": _now_ms()}}
+        ]
+
+    def publish(s: DeltaSnapshot | None, attempt: list[dict]) -> int:
+        version = 0 if s is None else s.version + 1
+        _attempt_commit(table_path, version, attempt)
         return version
-    raise DeltaConcurrentCommitError(
-        f"lost the commit race {_COMMIT_ATTEMPTS} times at {table_path!r}"
+
+    def conflicts(read, winner: DeltaSnapshot, attempt: list[dict]):
+        live = {_file_key(f.path, f.deletion_vector) for f in winner.files}
+        gone = [
+            r["path"]
+            for r in (a["remove"] for a in attempt if "remove" in a)
+            if _file_key(r["path"], r.get("deletionVector")) not in live
+        ]
+        if gone:
+            return f"removed {gone[:3]}"
+        if rebuild is None and _table_shape(winner) != _table_shape(read):
+            return "changed the table metadata"
+        return None
+
+    version = occ.commit(
+        "delta", table_path, snap, build, publish,
+        lambda: read_delta_snapshot(table_path), conflicts,
+        lambda s: _txn_applied(s, txn),
     )
+    if version and checkpoint_interval and version % checkpoint_interval == 0:
+        _write_checkpoint(table_path, version)
+    return version
 
 
-#: NON-LOCAL commits staging at least this many files collect footer
-#: stats executor-side (one mapInPandas job).  Local paths always use
-#: the driver loop: measured on this box, 1,000 local footer reads take
-#: 0.15 s serially vs 4.5 s of Spark job overhead — the distributed
-#: pass only wins where each footer read is a ~10-100 ms object-store
-#: GET (10k files = minutes serial, seconds distributed).
+#: staged-file counts from which NON-LOCAL footer stats are collected
+#: executor-side (``rewrite.per_file``)
 EXECUTOR_STATS_MIN_FILES = 64
 #: test hook: force the executor path on local paths too
 EXECUTOR_STATS_FORCE = False
 
 
 def _collect_file_stats(
-    spark: SparkSession | None,
-    base: str,
-    rels: list[str],
-    stat_cols: list[str],
+    spark: SparkSession | None, base: str, rels: list[str], stat_cols: list[str]
 ) -> dict[str, tuple[str, int]]:
-    """rel path -> (stats JSON, numRecords) for every staged file.
-
-    Local/small commits loop on the driver; large object-store commits
-    distribute the footer reads as ONE Arrow-batched ``mapInPandas``
-    pass over the path list (a 10k-file initial load reads 10k footers
-    across the cluster, not serially on the driver — the round-7
-    scale-killer)."""
-    if (
-        spark is None
-        or len(rels) < EXECUTOR_STATS_MIN_FILES
-        or (fsio.is_local(base) and not EXECUTOR_STATS_FORCE)
-    ):
-        return {r: _file_stats_json(f"{base}/{r}", stat_cols) for r in rels}
-
-    def _gen(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            recs = [
-                (r, *_file_stats_json(f"{base}/{r}", stat_cols))
-                for r in pdf["rel"]
-            ]
-            yield pd.DataFrame(
-                recs, columns=["rel", "stats", "num_records"]
-            )
-
-    paths_df = spark.createDataFrame(
-        [(r,) for r in rels], "rel string"
-    ).repartition(min(len(rels), spark.sparkContext.defaultParallelism))
-    rows = paths_df.mapInPandas(
-        _gen, "rel string, stats string, num_records long"
-    ).collect()
-    return {r["rel"]: (r["stats"], int(r["num_records"])) for r in rows}
+    """rel path -> (stats JSON, numRecords) for every staged file."""
+    stats = rewrite.per_file(
+        spark,
+        [f"{base}/{r}" for r in rels],
+        lambda p: _file_stats_json(p, stat_cols),
+        EXECUTOR_STATS_MIN_FILES,
+        EXECUTOR_STATS_FORCE,
+    )
+    return {r: stats[f"{base}/{r}"] for r in rels}
 
 
 def _stage_data_files(
@@ -2209,8 +2080,9 @@ class _Rewrite:
         op: str,
         adds_rows: bool = False,
         removes_rows: bool = False,
+        alias: str | None = None,
     ):
-        self.spark = spark
+        self.spark, self.alias = spark, alias
         self.snap = read_delta_snapshot(table_path)
         _check_writer_protocol(
             self.snap, op, adds_rows=adds_rows, removes_rows=removes_rows
@@ -2240,9 +2112,10 @@ class _Rewrite:
         )
 
     def scan(self, files, file_col=None, pos_col=None) -> DataFrame:
-        return _scan_snapshot(
+        df = _scan_snapshot(
             self.spark, self.snap.with_files(files), file_col, pos_col
         )
+        return df.alias(self.alias) if self.alias else df
 
     def stage(self, df: DataFrame, data_change: bool = True) -> list[dict]:
         return _stage_data_files(
@@ -2308,6 +2181,7 @@ def delete_from_delta_table(
     table_path: str,
     filters: list[tuple[str, str, object]] | Column,
     use_deletion_vectors: bool | None = None,
+    alias: str | None = None,
 ) -> int | None:
     """``DELETE FROM``: remove every row matching ``filters`` — either
     (col, op, value) triples, ALL of which must hold (the proof
@@ -2334,8 +2208,11 @@ def delete_from_delta_table(
       the requirement); a file whose bitmap reaches its row count drops
       entirely.  Purge later with OPTIMIZE (compaction applies and
       drops DVs) — the usual operational pairing.
+
+    ``alias`` is the name a Column predicate qualifies the table's
+    columns by (SQL ``DELETE FROM t AS x WHERE x.id = 1``).
     """
-    t = _Rewrite(spark, table_path, "DELETE", removes_rows=True)
+    t = _Rewrite(spark, table_path, "DELETE", removes_rows=True, alias=alias)
     if use_deletion_vectors is None:
         # the delta-spark default: tables that enable DVs get the
         # zero-rewrite shape (SQL DELETE included); explicit True/False
@@ -2537,6 +2414,7 @@ def update_delta_table(
     table_path: str,
     set_exprs: Mapping[str, object],
     filters: list[tuple[str, str, object]] | Column | None = None,
+    alias: str | None = None,
 ) -> int | None:
     """Copy-on-write ``UPDATE ... SET ... WHERE``: rows matching
     ``filters`` (ALL of the triples, or a Column predicate, as in
@@ -2547,9 +2425,14 @@ def update_delta_table(
     it; every file is rewritten).  Returns the commit version, or None when no row
     matched.  Same touch-only shape as :func:`delete_from_delta_table`
     (``rewrite.update``); non-matching rows inside a touched file are
-    carried byte-identical through the rewrite.
+    carried byte-identical through the rewrite.  ``alias`` qualifies
+    columns in ``filters`` and ``set_exprs`` as in
+    :func:`delete_from_delta_table`.
     """
-    t = _Rewrite(spark, table_path, "UPDATE", adds_rows=True, removes_rows=True)
+    t = _Rewrite(
+        spark, table_path, "UPDATE", adds_rows=True, removes_rows=True,
+        alias=alias,
+    )
     for name in set_exprs:
         if name in t.snap.partition_columns:
             raise ValueError(
@@ -2688,6 +2571,7 @@ def read_delta_cdf(
             _snap_memo[ver] = read_delta_snapshot(table_path, ver)
         return _snap_memo[ver]
 
+    final_types = {f.name: f.dataType for f in final.schema.fields}
     parts: list[DataFrame] = []
     for v in versions:
         added_rel: set[str] = set()
@@ -2721,61 +2605,12 @@ def read_delta_cdf(
 
         new_df = _side(added_rel, _snap_at(v)) if added_rel else None
         old_df = _side(removed_rel, _snap_at(v - 1)) if removed_rel else None
-        if old_df is None:
-            changes = new_df.withColumn("_change_type", F.lit("insert"))
-        elif new_df is None:
-            changes = old_df.withColumn("_change_type", F.lit("delete"))
-        else:
-            # align pre/post schemas (ALTER between them) before diffing
-            cols = [f.name for f in new_df.schema.fields]
-            old_aligned = old_df.select(
-                *[
-                    F.col(c) if c in old_df.columns
-                    else F.lit(None).cast(
-                        dict((f.name, f.dataType) for f in new_df.schema.fields)[c]
-                    ).alias(c)
-                    for c in cols
-                ]
-            )
-            changes = (
-                new_df.exceptAll(old_aligned)
-                .withColumn("_change_type", F.lit("insert"))
-                .unionByName(
-                    old_aligned.exceptAll(new_df).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-            )
-        # align to the FINAL window schema (an ALTER inside the window
+        # aligned to the FINAL window schema (an ALTER inside the window
         # must not make early commits un-unionable / un-selectable)
-        final_types = {f.name: f.dataType for f in final.schema.fields}
-        changes = changes.select(
-            *[
-                F.col(c) if c in changes.columns
-                else F.lit(None).cast(final_types[c]).alias(c)
-                for c in final_types
-            ],
-            "_change_type",
-        )
+        changes = rewrite.row_changes(new_df, old_df, final_types)
         parts.append(
             changes.withColumn("_commit_version", F.lit(v).cast("long"))
         )
-    if not parts:
-        empty_schema = T.StructType(
-            list(final.schema.fields)
-            + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_commit_version", T.LongType()),
-            ]
-        )
-        return spark.createDataFrame([], empty_schema)
-    out = parts[0]
-    for i, p in enumerate(parts[1:], start=1):
-        out = out.unionByName(p, allowMissingColumns=True)
-        if i % CDF_CHECKPOINT_EVERY == 0:
-            # truncate the logical plan every K commits (the
-            # curate_corpus pattern): a 500-commit window would
-            # otherwise build a 1000+-node exceptAll/union chain whose
-            # analysis cost alone dwarfs the data
-            out = out.localCheckpoint(eager=True)
-    return out
+    return rewrite.union_changes(
+        spark, parts, final.schema, ["_commit_version"], CDF_CHECKPOINT_EVERY
+    )

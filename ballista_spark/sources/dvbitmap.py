@@ -21,7 +21,7 @@ The encoder serves fixtures AND the production DV-write DELETE
 roaring bitmap per touched file, executor-side, into one shared DV
 file); mutations on DV tables otherwise apply-then-purge (a touched
 file rewrites without its descriptor).  The reader decodes descriptors
-executor-side for large vectors (``deltalog._dv_tombstones``) and
+executor-side for large vectors (:func:`tombstones`) and
 applies them as a (file, position) anti-join at the scan stage — never
 a per-row Python filter, never all positions materialized on the
 driver.
@@ -45,6 +45,20 @@ MAGIC = 1681511377  # RoaringBitmapArray portable-format magic
 #: executor-side (bounds a batch to ~30 MB even for pathological path
 #: lengths)
 DECODE_CHUNK = 1 << 18
+#: LOCAL tables whose descriptors declare at most this many total
+#: deleted positions decode tombstones on the driver (one Arrow batch,
+#: no job).  Measured warm on a 4-vCPU host (read+count of a 1-DV
+#: table): 2k positions 0.46 s driver vs 0.67 s executor; 20k ~equal
+#: (0.78 vs 0.83); 100k the executor pass WINS (1.28 vs 1.02 — the
+#: pure-Python bitmap decode dominates and parallelizes).  Above the
+#: threshold, with an unknown cardinality, or on any non-local table,
+#: decode runs EXECUTOR-SIDE: the driver ships only the (file,
+#: descriptor) list and one mapInPandas pass decodes each file's bitmap
+#: where the anti-join consumes it, so driver memory never holds
+#: decoded positions (measured: a 2.5M-position lifecycle adds 27 MB to
+#: driver maxrss on DELETE — the compressed per-file segments — and
+#: 0 MB on read).
+DRIVER_DECODE_MAX = 20_000
 
 _SERIAL_COOKIE = 12347
 _SERIAL_COOKIE_NO_RUNCONTAINER = 12346
@@ -371,3 +385,45 @@ def pack_dv_file(
         )
         descs.append((off, len(data), len(set(vals))))
     return bytes(blob), descs
+
+
+def tombstones(spark, vectors: list[tuple], decode, local: bool):
+    """The (``__dfp``, ``__pos``) tombstone DataFrame of deletion
+    ``vectors`` — (data file path, cardinality or 0 when unknown,
+    *args), ``decode(*args)`` returning the file's deleted positions —
+    which a scan applies as one anti-join, never a per-row Python
+    filter.  ``local`` vectors decode on the driver under
+    :data:`DRIVER_DECODE_MAX`; the rest decode executor-side in
+    :data:`DECODE_CHUNK` batches (``args`` must be JSON)."""
+    cards = [v[1] for v in vectors]
+    if local and all(c > 0 for c in cards) and sum(cards) <= DRIVER_DECODE_MAX:
+        import pandas as pd
+
+        frames = [
+            pd.DataFrame(
+                {"__dfp": v[0], "__pos": pd.Series(decode(*v[2:]), dtype="int64")}
+            )
+            for v in vectors
+        ]
+        return spark.createDataFrame(
+            pd.concat(frames, ignore_index=True), schema="__dfp string, __pos long"
+        )
+
+    def _decode(batches):
+        import numpy as np
+        import pandas as pd
+
+        for pdf in batches:
+            for dfp, args in zip(pdf["__dfp"], pdf["__args"]):
+                pos = np.asarray(decode(*json.loads(args)), dtype="int64")
+                for i in range(0, max(len(pos), 1), DECODE_CHUNK):
+                    chunk = pos[i : i + DECODE_CHUNK]
+                    yield pd.DataFrame(
+                        {"__dfp": np.repeat(dfp, len(chunk)), "__pos": chunk}
+                    )
+
+    desc = spark.createDataFrame(
+        [(v[0], json.dumps(v[2:])) for v in vectors], "__dfp string, __args string"
+    )
+    n_part = max(1, min(len(vectors), spark.sparkContext.defaultParallelism))
+    return desc.repartition(n_part).mapInPandas(_decode, "__dfp string, __pos long")

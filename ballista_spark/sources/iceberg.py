@@ -58,9 +58,9 @@ format-version 1 tables — append and overwrite snapshots, one Avro
 manifest per commit plus a full manifest list, per-file Appendix-D
 column bounds (the same bounds this reader prunes on), and optimistic
 concurrency through exclusive-create of ``vN.metadata.json`` at the
-version the writer read + 1 (the same one-winner-per-version device as
-the Delta log; every data-changing writer commits through
-``_commit_snapshot``).  v1 until the first merge-on-read position
+version the writer read + 1, retried on a lost race by the commit loop
+the Delta log shares (``occ.commit``; every data-changing writer
+commits through ``_commit_snapshot``).  v1 until the first merge-on-read position
 DELETE upgrades the table to v2, after which every snapshot takes a
 sequence number.  Row-level DELETE defaults to copy-on-write
 (``delete_from_iceberg_table``: bounds-pruned, probed touch-only
@@ -83,13 +83,13 @@ import struct
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from ballista_spark.sources import fsio, rewrite
+from ballista_spark.sources import fsio, occ, rewrite
 from ballista_spark.sources.avroio import (
     read_avro_bytes,
     read_avro_projected,
 )
 from ballista_spark.sources.decodecache import DecodeCache
-from ballista_spark.sources.dvbitmap import DECODE_CHUNK
+from ballista_spark.sources.dvbitmap import tombstones
 from ballista_spark.sources.rewrite import decoded_file_path
 
 __all__ = [
@@ -391,6 +391,13 @@ def _read_manifest(path: str) -> list[dict]:
     )
 
 
+def _manifest_records(table_path: str, snap: dict) -> list[dict]:
+    """The manifest-list records of one snapshot."""
+    return read_avro_bytes(
+        fsio.read_bytes(_norm_path(table_path, snap["manifest-list"]))
+    )[0]
+
+
 #: compact scan-row slots (see _manifest_scan_rows)
 _SR_STATUS, _SR_SEQ, _SR_CONTENT, _SR_FMT, _SR_PATH, _SR_RC = range(6)
 _SR_LO, _SR_HI, _SR_EQIDS, _SR_REF, _SR_OFF, _SR_SIZE = range(6, 12)
@@ -443,16 +450,17 @@ def _metadata_versions(meta_dir: str) -> list[int]:
     )
 
 
-def _load_metadata(table_path: str) -> tuple[int, dict]:
+def _load_metadata(table_path: str, hint: bool = True) -> tuple[int, dict]:
     """(version, metadata) of the current ``vN.metadata.json``: the hint
-    when present, else the highest version on disk (hint-less tables
-    read fine and must write fine too).  Writers commit at exactly this
-    version + 1 (:func:`_commit_metadata`), so a racer that committed
-    since their read makes them raise instead of being dropped."""
+    when present and ``hint``, else the highest version on disk
+    (hint-less tables read fine and must write fine too).  Writers
+    commit at this version + 1 through :func:`_commit`; after a lost
+    race they re-read without the hint, which may still name the
+    version the winner took."""
     meta_dir = os.path.join(table_path, "metadata")
-    hint = os.path.join(meta_dir, "version-hint.text")
-    if fsio.exists(hint):
-        version = int(fsio.read_text(hint).strip())
+    hint_path = os.path.join(meta_dir, "version-hint.text")
+    if hint and fsio.exists(hint_path):
+        version = int(fsio.read_text(hint_path).strip())
     else:
         versions = _metadata_versions(meta_dir)
         if not versions:
@@ -660,9 +668,7 @@ def _resolve_snapshot(
     manifests_pruned = 0
 
     if "manifest-list" in snap:  # v2 (and v1 with list)
-        manifests, _sch = read_avro_bytes(
-            fsio.read_bytes(_norm_path(table_path, snap["manifest-list"]))
-        )
+        manifests = _manifest_records(table_path, snap)
         if filters:
             # whole-manifest skip from partition field summaries —
             # DATA manifests only (content 0): a skipped data
@@ -826,13 +832,6 @@ def _bounds_may_match(bounds: dict, col: str, op: str, value) -> bool:
     return True
 
 
-#: Same decode-placement policy (and measurements) as
-#: deltalog.DV_DRIVER_DECODE_MAX: local tables whose manifests declare
-#: at most this many total deleted positions decode deletion vectors on
-#: the driver (one Arrow batch, no job); larger vectors, unknown
-#: cardinalities, or non-local tables decode executor-side so driver
-#: memory stays O(DV count), never O(deleted rows).
-DV_DRIVER_DECODE_MAX = 20_000
 #: test hook: force the executor path regardless of size/locality
 DV_DECODE_FORCE_EXECUTOR = False
 
@@ -858,70 +857,18 @@ def _read_dv_positions(
 
 def _dv_tombstones(spark: SparkSession, snap: IcebergSnapshot) -> DataFrame:
     """(data file path, row position) tombstones for every v3 deletion
-    vector in the snapshot — the anti-join side of the scan.  Paths
-    normalize exactly like the parquet position-delete side (file: URI
-    stripped; relative paths rooted at the table)."""
-    entries = [
-        (_abs_path(snap.table_path, ref), puffin, int(off), int(size), int(card))
-        for puffin, ref, off, size, card in snap.dv_deletes
-    ]
-    total = sum(e[4] for e in entries)
-    cardinality_known = all(e[4] > 0 for e in entries)
-    if (
-        cardinality_known
-        and total <= DV_DRIVER_DECODE_MAX
-        and fsio.is_local(snap.table_path)
-        and not DV_DECODE_FORCE_EXECUTOR
-    ):
-        import pandas as pd
-
-        frames = [
-            pd.DataFrame(
-                {
-                    "__dfp": dfp,
-                    "__pos": pd.Series(
-                        _read_dv_positions(puf, off, size, card),
-                        dtype="int64",
-                    ),
-                }
-            )
-            for dfp, puf, off, size, card in entries
-        ]
-        return spark.createDataFrame(
-            pd.concat(frames, ignore_index=True),
-            schema="__dfp string, __pos long",
-        )
-
-    def _decode(batches):
-        import numpy as np
-        import pandas as pd
-
-        from ballista_spark.sources.iceberg import _read_dv_positions
-
-        for pdf in batches:
-            for dfp, puf, off, size, card in zip(
-                pdf["__dfp"], pdf["__puffin"], pdf["__off"],
-                pdf["__size"], pdf["__card"],
-            ):
-                pos = np.asarray(
-                    _read_dv_positions(puf, int(off), int(size), int(card)),
-                    dtype="int64",
-                )
-                # chunk like deltalog._dv_tombstones: one huge DV must
-                # not become one unbounded Arrow batch (round-9 advice)
-                for i in range(0, max(len(pos), 1), DECODE_CHUNK):
-                    chunk = pos[i : i + DECODE_CHUNK]
-                    yield pd.DataFrame(
-                        {"__dfp": np.repeat(dfp, len(chunk)), "__pos": chunk}
-                    )
-
-    desc = spark.createDataFrame(
-        entries,
-        "__dfp string, __puffin string, __off long, __size long, __card long",
-    )
-    n_part = max(1, min(len(entries), spark.sparkContext.defaultParallelism))
-    return desc.repartition(n_part).mapInPandas(
-        _decode, "__dfp string, __pos long"
+    vector in the snapshot (``dvbitmap.tombstones``).  Paths normalize
+    exactly like the parquet position-delete side (file: URI stripped;
+    relative paths rooted at the table)."""
+    return tombstones(
+        spark,
+        [
+            (_abs_path(snap.table_path, ref), int(card), puffin, int(off), int(size),
+             int(card))
+            for puffin, ref, off, size, card in snap.dv_deletes
+        ],
+        _read_dv_positions,
+        fsio.is_local(snap.table_path) and not DV_DECODE_FORCE_EXECUTOR,
     )
 
 
@@ -1029,10 +976,8 @@ def _scan_snapshot(
     if snap.dv_deletes:
         # v3 deletion vectors: decode each referenced file's roaring
         # bitmap into (file, pos) tombstones and apply the SAME
-        # anti-join as parquet position deletes.  Decode placement is
-        # size-aware like deltalog._dv_tombstones: small local vectors
-        # decode on the driver, larger ones executor-side so driver
-        # memory stays O(DV count), never O(deleted rows).
+        # anti-join as parquet position deletes (decode placement:
+        # dvbitmap.tombstones).
         tagged = tagged.join(
             _dv_tombstones(spark, snap), ["__dfp", "__pos"], "left_anti"
         )
@@ -1145,16 +1090,6 @@ def read_iceberg_changelog(
     )
     final_types = {f.name: f.dataType for f in final_schema.fields}
 
-    def _align(df):
-        return df.select(
-            *[
-                F.col(c) if c in df.columns
-                else F.lit(None).cast(final_types[c]).alias(c)
-                for c in final_types
-            ],
-            "_change_type",
-        )
-
     parts = []
     for i in ordinals:
         child_id = log[i]["snapshot-id"]
@@ -1202,55 +1137,15 @@ def read_iceberg_changelog(
             )
         if new_df is None and old_df is None:
             continue  # no data change (e.g. metadata-only)
-        if old_df is None:
-            changes = new_df.withColumn("_change_type", F.lit("insert"))
-        elif new_df is None:
-            changes = old_df.withColumn("_change_type", F.lit("delete"))
-        else:
-            cols = [f.name for f in new_df.schema.fields]
-            old_named = old_df.select(
-                *[
-                    F.col(c) if c in old_df.columns
-                    else F.lit(None).cast(
-                        dict(
-                            (f.name, f.dataType) for f in new_df.schema.fields
-                        )[c]
-                    ).alias(c)
-                    for c in cols
-                ]
-            )
-            changes = (
-                new_df.exceptAll(old_named)
-                .withColumn("_change_type", F.lit("insert"))
-                .unionByName(
-                    old_named.exceptAll(new_df).withColumn(
-                        "_change_type", F.lit("delete")
-                    )
-                )
-            )
         parts.append(
-            _align(changes)
+            rewrite.row_changes(new_df, old_df, final_types)
             .withColumn("_snapshot_ordinal", F.lit(i).cast("long"))
             .withColumn("_snapshot_id", F.lit(child_id).cast("long"))
         )
-    if not parts:
-        empty = T.StructType(
-            list(final_schema.fields)
-            + [
-                T.StructField("_change_type", T.StringType()),
-                T.StructField("_snapshot_ordinal", T.LongType()),
-                T.StructField("_snapshot_id", T.LongType()),
-            ]
-        )
-        return spark.createDataFrame([], empty)
-    out = parts[0]
-    for i, p in enumerate(parts[1:], start=1):
-        out = out.unionByName(p)
-        if i % CDF_CHECKPOINT_EVERY == 0:
-            # bound logical-plan depth on long windows (the
-            # deltalog.read_delta_cdf / curate_corpus pattern)
-            out = out.localCheckpoint(eager=True)
-    return out
+    return rewrite.union_changes(
+        spark, parts, final_schema, ["_snapshot_ordinal", "_snapshot_id"],
+        CDF_CHECKPOINT_EVERY,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1649,28 +1544,17 @@ def _schema_compatible(existing: T.StructType, new: T.StructType) -> bool:
 # metadata version each writer read (:func:`_load_metadata`)
 
 
-#: same policy as deltalog._collect_file_stats: NON-LOCAL commits with
-#: at least this many files read their footers executor-side (local
-#: footer reads are ~0.15 ms each — a Spark job never pays for itself)
+#: staged-file counts from which NON-LOCAL footer reads go
+#: executor-side (``rewrite.per_file``)
 EXECUTOR_STATS_MIN_FILES = 64
 #: test hook: force the executor path on local paths too
 EXECUTOR_STATS_FORCE = False
 
 
 def _per_file(spark: SparkSession | None, paths: list[str], fn) -> dict:
-    """{path: fn(path)} for a worker-safe footer read ``fn``; large
-    object-store path lists distribute the reads (one tiny Spark job
-    over the path list — results such as the Appendix-D byte bounds
-    pickle back losslessly) instead of a serial driver loop."""
-    if (
-        spark is None
-        or len(paths) < EXECUTOR_STATS_MIN_FILES
-        or (fsio.is_local(paths[0]) and not EXECUTOR_STATS_FORCE)
-    ):
-        return {p: fn(p) for p in paths}
-    sc = spark.sparkContext
-    rdd = sc.parallelize(paths, min(len(paths), sc.defaultParallelism))
-    return dict(rdd.map(lambda p: (p, fn(p))).collect())
+    return rewrite.per_file(
+        spark, paths, fn, EXECUTOR_STATS_MIN_FILES, EXECUTOR_STATS_FORCE
+    )
 
 
 def _entry_for_file(
@@ -1822,9 +1706,8 @@ def _write_manifest_list(
 
 def _commit_metadata(meta_dir: str, new_md: dict, base_version: int) -> None:
     """Exclusive-create commit of ``v<base_version + 1>.metadata.json``
-    (one winner per version — a racer raises FileExistsError instead of
-    silently dropping the other's snapshot), then the hint pointer
-    moves atomically."""
+    (one winner per version: a racer gets FileExistsError), then the
+    hint pointer moves atomically."""
     import uuid as _uuid
 
     md_path = os.path.join(meta_dir, f"v{base_version + 1}.metadata.json")
@@ -1842,14 +1725,59 @@ def _commit_metadata(meta_dir: str, new_md: dict, base_version: int) -> None:
 def _live_entries(table_path: str, snap_md: dict) -> list[dict]:
     """All non-deleted manifest entries of a snapshot, records verbatim
     (data files AND delete files — callers split on content)."""
-    manifests, _sch = read_avro_bytes(
-        fsio.read_bytes(_norm_path(table_path, snap_md["manifest-list"]))
+    return [
+        e
+        for m in _manifest_records(table_path, snap_md)
+        for e in _read_manifest(_norm_path(table_path, m["manifest_path"]))
+        if e.get("status", 1) != 2
+    ]
+
+
+class _Meta:
+    """One metadata ``version`` as a writer read it: ``md`` and, read on
+    first use, the current snapshot's ``live`` manifest entries."""
+
+    def __init__(self, table_path: str, version: int, md: dict):
+        self.table_path, self.version, self.md = table_path, version, md
+
+    @functools.cached_property
+    def live(self) -> list[dict]:
+        cur = self.md.get("current-snapshot-id")
+        for s in self.md.get("snapshots") or []:
+            if s["snapshot-id"] == cur:
+                return _live_entries(self.table_path, s)
+        return []
+
+    @property
+    def data(self) -> list[dict]:
+        return [e for e in self.live if not e["data_file"].get("content")]
+
+
+def _commit(read: _Meta, build, conflicts=None, txn=(None, None)) -> int | None:
+    """:func:`occ.commit` over metadata versions: ``build(state)``
+    returns (new metadata, the manifest files it wrote), published as
+    ``v<state.version + 1>``; a lost attempt's files are deleted, as no
+    version references them.  Returns the version, or None."""
+    table_path = read.table_path
+
+    def publish(state: _Meta, attempt) -> int:
+        new_md, written = attempt
+        try:
+            _commit_metadata(
+                os.path.join(table_path, "metadata"), new_md, state.version
+            )
+        except FileExistsError:
+            for p in written:
+                fsio.remove(p)
+            raise
+        return state.version + 1
+
+    return occ.commit(
+        "iceberg", table_path, read, build, publish,
+        lambda: _Meta(table_path, *_load_metadata(table_path, hint=False)),
+        conflicts or (lambda *_: None),
+        lambda state: _txn_replayed(state.md, *txn) is not None,
     )
-    live: list[dict] = []
-    for m in manifests:
-        entries = _read_manifest(_norm_path(table_path, m["manifest_path"]))
-        live.extend(e for e in entries if e.get("status", 1) != 2)
-    return live
 
 
 def _append_snapshot_md(md: dict, snapshot: dict, extras: dict) -> dict:
@@ -1864,96 +1792,117 @@ def _append_snapshot_md(md: dict, snapshot: dict, extras: dict) -> dict:
     return base
 
 
+def _file_paths(entries) -> set[str]:
+    return {e["data_file"]["file_path"] for e in entries}
+
+
 def _commit_snapshot(
-    table_path: str,
-    md: dict,
-    version: int,
+    read: _Meta,
     snapshot_id: int,
     added: list[dict],
     summary: dict,
-    kept: list[dict] | None = None,
+    kept=None,
     removed: int = 0,
     content: int = 0,
     txn: tuple = (None, None),
-) -> int:
+) -> int | None:
     """The one snapshot commit of every data-changing writer: a new
-    manifest of ``added`` entries, its manifest list, the snapshot, and
-    ``v<version + 1>.metadata.json`` by exclusive create — ``version``
-    is the one the writer READ, so a racer that committed since makes
-    this raise FileExistsError instead of silently dropping its
-    snapshot.  Returns ``snapshot_id``.
-
-    ``kept=None`` carries the parent's manifests forward verbatim
-    (append, position delete).  A list REPLACES them: the new manifest
-    re-records the ``kept`` live entries with status EXISTING next to
-    ``added``, and ``removed`` counts the files dropped (overwrite,
-    OPTIMIZE, copy-on-write DML).  ``content=1`` writes a position-
-    DELETE manifest and upgrades the table to format-version 2; every
-    snapshot of a v2 table takes the next sequence number.  ``txn``
-    (app id, version) is recorded for :func:`_txn_replayed`."""
+    manifest of ``added`` entries, its manifest list and the snapshot,
+    published by :func:`_commit` on the version the writer ``read``.
+    Returns ``snapshot_id``, or None when a racer applied ``txn``.
+    ``kept=None`` carries the landing snapshot's manifests forward
+    (append, position delete); else the new manifest re-records
+    ``kept(state)``, the landing snapshot's live data entries it keeps,
+    as EXISTING, and ``removed`` counts the files dropped.  ``content=1``
+    writes a position-DELETE manifest, upgrading the table to v2, where
+    every snapshot takes the next sequence number.  A lost race rebuilds
+    on the winner unless the winner changed the schema or, for all but
+    an append, changed the format version, added delete files, or
+    removed a data file the commit drops (a position delete: any it
+    read)."""
     import time
 
-    meta_dir = os.path.join(table_path, "metadata")
-    schema_json = _current_schema(md)
-    fmt = int(md.get("format-version", 1))
-    if content == 1:
-        fmt = max(fmt, 2)  # delete files need v2: the first one upgrades
-    seq = int(md.get("last-sequence-number", 0)) + 1 if fmt >= 2 else None
-    parent_id = md.get("current-snapshot-id")
-    if parent_id == -1:
-        parent_id = None
-    manifests: list[dict] = []
-    if kept is None and parent_id is not None:
-        parent = next(
-            s for s in md["snapshots"] if s["snapshot-id"] == parent_id
+    meta_dir = os.path.join(read.table_path, "metadata")
+
+    def build(state: _Meta):
+        md = state.md
+        fmt = int(md.get("format-version", 1))
+        if content == 1:
+            fmt = max(fmt, 2)  # delete files need v2: the first one upgrades
+        seq = int(md.get("last-sequence-number", 0)) + 1 if fmt >= 2 else None
+        parent_id = md.get("current-snapshot-id")
+        if parent_id == -1:
+            parent_id = None
+        manifests: list[dict] = []
+        if kept is None and parent_id is not None:
+            parent = next(
+                s for s in md["snapshots"] if s["snapshot-id"] == parent_id
+            )
+            prev = _manifest_records(read.table_path, parent)
+            names = [f["name"] for f in _MANIFEST_FILE_SCHEMA["fields"]]
+            manifests = [{k: m.get(k) for k in names} for m in prev]
+        existing = [  # status EXISTING, records otherwise verbatim
+            {"status": 0, "snapshot_id": e.get("snapshot_id"),
+             "data_file": e["data_file"]}
+            for e in (kept(state) if kept else [])
+        ]
+        manifest_path, manifest_len = _write_manifest(
+            meta_dir, _current_schema(md), existing + added, content
         )
-        prev, _sch = read_avro_bytes(
-            fsio.read_bytes(_norm_path(table_path, parent["manifest-list"]))
-        )
-        names = [f["name"] for f in _MANIFEST_FILE_SCHEMA["fields"]]
-        manifests = [{k: m.get(k) for k in names} for m in prev]
-    existing = [  # status EXISTING, records otherwise verbatim
-        {"status": 0, "snapshot_id": e.get("snapshot_id"), "data_file": e["data_file"]}
-        for e in kept or []
-    ]
-    manifest_path, manifest_len = _write_manifest(
-        meta_dir, schema_json, existing + added, content
-    )
-    manifests.append({
-        "manifest_path": manifest_path,
-        "manifest_length": manifest_len,
-        "partition_spec_id": 0,
-        "added_snapshot_id": snapshot_id,
-        "added_data_files_count": len(added),
-        "existing_data_files_count": len(existing),
-        "deleted_data_files_count": removed,
-        "added_rows_count": sum(e["data_file"]["record_count"] for e in added),
-        "content": content,
-        "sequence_number": seq,
-    })
+        manifests.append({
+            "manifest_path": manifest_path,
+            "manifest_length": manifest_len,
+            "partition_spec_id": 0,
+            "added_snapshot_id": snapshot_id,
+            "added_data_files_count": len(added),
+            "existing_data_files_count": len(existing),
+            "deleted_data_files_count": removed,
+            "added_rows_count": sum(e["data_file"]["record_count"] for e in added),
+            "content": content,
+            "sequence_number": seq,
+        })
+        list_path = _write_manifest_list(meta_dir, snapshot_id, manifests)
+        snapshot = {
+            "snapshot-id": snapshot_id,
+            "timestamp-ms": int(time.time() * 1000),
+            "manifest-list": list_path,
+            "summary": summary,
+        }
+        if parent_id is not None:
+            snapshot["parent-snapshot-id"] = parent_id
+        extras = {}
+        if seq is not None:
+            snapshot["sequence-number"] = seq
+            extras = {"format-version": fmt, "last-sequence-number": seq}
+            if not md.get("schemas"):  # v1 single-schema face → v2 list
+                schema = {"schema-id": 0, **_current_schema(md)}
+                extras["schemas"] = [schema]
+                extras["current-schema-id"] = schema["schema-id"]
+        new_md = _append_snapshot_md(md, snapshot, extras)
+        return new_md, (manifest_path, list_path)
+
+    def conflicts(read: _Meta, winner: _Meta, attempt) -> str | None:
+        if _current_schema(winner.md)["fields"] != _current_schema(read.md)["fields"]:
+            return "changed the schema"
+        if kept is None and content == 0:
+            return None  # a blind append reads no file
+        inputs = _file_paths(read.data) - _file_paths(kept(read) if kept else [])
+        if not inputs:
+            return None
+        deletes = [_file_paths(m.live) - _file_paths(m.data) for m in (read, winner)]
+        fmts = [m.md.get("format-version", 1) for m in (read, winner)]
+        if fmts[0] != fmts[1] or deletes[1] - deletes[0]:
+            return "changed the format version or added delete files"
+        gone = sorted(inputs - _file_paths(winner.data))
+        return f"removed {gone[:3]}" if gone else None
+
     app_id, txn_version = txn
     if app_id is not None:
         summary = {
             **summary, "txn-app-id": app_id, "txn-version": str(int(txn_version))
         }
-    snapshot = {
-        "snapshot-id": snapshot_id,
-        "timestamp-ms": int(time.time() * 1000),
-        "manifest-list": _write_manifest_list(meta_dir, snapshot_id, manifests),
-        "summary": summary,
-    }
-    if parent_id is not None:
-        snapshot["parent-snapshot-id"] = parent_id
-    extras = {}
-    if seq is not None:
-        snapshot["sequence-number"] = seq
-        extras = {"format-version": fmt, "last-sequence-number": seq}
-        if not md.get("schemas"):  # v1 single-schema face → v2 list
-            schema = {"schema-id": 0, **schema_json}
-            extras["schemas"] = [schema]
-            extras["current-schema-id"] = schema["schema-id"]
-    _commit_metadata(meta_dir, _append_snapshot_md(md, snapshot, extras), version)
-    return snapshot_id
+    committed = _commit(read, build, conflicts, txn)
+    return None if committed is None else snapshot_id
 
 
 def _txn_replayed(md: dict, app_id: str | None, version) -> int | None:
@@ -1979,7 +1928,7 @@ def write_iceberg_table(
     mode: str = "append",
     txn_app_id: str | None = None,
     txn_version: int | None = None,
-) -> int:
+) -> int | None:
     """Commit ``df`` to an Iceberg v1 table at ``table_path`` (created
     on first write); returns the new snapshot id.
 
@@ -1989,9 +1938,11 @@ def write_iceberg_table(
     manifest list (previous manifests carried forward on append,
     dropped on overwrite — their files stay readable through snapshot
     time travel), and ``v<N+1>.metadata.json`` committed by exclusive
-    create at the version N this write READ — of two racing writers
-    one wins, the loser raises FileExistsError (the Delta log's
-    one-winner-per-version device, `deltalog._commit`).
+    create at the version N this write READ.  A writer that loses that
+    race rebuilds on the winner and retries (:func:`_commit_snapshot`):
+    two racing appends both commit, and an overwrite drops the winner's
+    files too unless the winner removed one it read, which raises
+    ``occ.ConcurrentCommitError``.
 
     Scale: metadata work is O(files in this commit) + one manifest-list
     rewrite; data-file writing is the engine's normal distributed
@@ -2003,7 +1954,8 @@ def write_iceberg_table(
     recorded version is SKIPPED before any file is staged — the
     exactly-once streaming-sink hook
     (`streaming.write_stream_iceberg_exactly_once`).  Returns the
-    already-committed snapshot id on a skip.
+    already-committed snapshot id on a skip, or None when a racer
+    committed the same version while this write staged.
     """
     import uuid as _uuid
 
@@ -2023,26 +1975,12 @@ def write_iceberg_table(
                 for i, f in enumerate(df.schema.fields)
             ]
         )
-    meta_dir = os.path.join(table_path, "metadata")
-    fsio.mkdirs(meta_dir)
-
+    fsio.mkdirs(os.path.join(table_path, "metadata"))
     try:
         version, md = _load_metadata(table_path)
-        _refuse_v3_write(md, "WRITE")
-    except FileNotFoundError:
-        version, md = 0, None
-    if md is not None:
-        schema_json = _current_schema(md)
-        existing_spark = iceberg_to_spark_type(schema_json)
-        if not _schema_compatible(existing_spark, df.schema):
-            raise ValueError(
-                "schema mismatch on Iceberg append: table has "
-                f"{existing_spark.simpleString()}, DataFrame has "
-                f"{df.schema.simpleString()}"
-            )
-    else:
+    except FileNotFoundError:  # a new table commits v1 over this md
         schema_json, last_column_id = spark_to_iceberg_schema(df.schema)
-        md = {
+        version, md = 0, {
             "format-version": 1,
             "table-uuid": str(_uuid.uuid4()),
             "location": table_path,
@@ -2053,6 +1991,16 @@ def write_iceberg_table(
             "default-spec-id": 0,
             "properties": {},
         }
+    else:
+        _refuse_v3_write(md, "WRITE")
+        schema_json = _current_schema(md)
+        existing_spark = iceberg_to_spark_type(schema_json)
+        if not _schema_compatible(existing_spark, df.schema):
+            raise ValueError(
+                "schema mismatch on Iceberg append: table has "
+                f"{existing_spark.simpleString()}, DataFrame has "
+                f"{df.schema.simpleString()}"
+            )
 
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be passed together")
@@ -2065,9 +2013,7 @@ def write_iceberg_table(
     snapshot_id = _uuid.uuid4().int >> 75  # unique positive 53-bit long
     entries = _stage_entries(df, table_path, _field_ids(schema_json), snapshot_id)
     return _commit_snapshot(
-        table_path,
-        md,
-        version,
+        _Meta(table_path, version, md),
         snapshot_id,
         entries,
         {
@@ -2077,7 +2023,7 @@ def write_iceberg_table(
                 sum(e["data_file"]["record_count"] for e in entries)
             ),
         },
-        kept=None if mode == "append" else [],
+        kept=None if mode == "append" else (lambda state: []),
         txn=(txn_app_id, txn_version),
     )
 
@@ -2120,57 +2066,61 @@ def alter_iceberg_table(
     drop_columns = list(drop_columns or [])
     if not add_columns and not drop_columns:
         raise ValueError("ALTER needs add_columns and/or drop_columns")
-    version, md = _load_metadata(table_path)
-    _refuse_v3_write(md, "ALTER")
-    schema_json = _current_schema(md)
-    names = {f["name"] for f in schema_json["fields"]}
-    props = dict(md.get("properties") or {})
-    retired = set(json.loads(props.get("ballista.dropped-columns", "[]")))
-    for c in add_columns:
-        if c in names:
-            raise ValueError(f"column {c!r} already exists")
-        if c in retired:
-            # this reader projects parquet by NAME (our staged files
-            # carry no field-id metadata), so a re-added name would
-            # resurrect pre-drop physical data; the name stays retired
-            # the way the spec retires field ids
-            raise ValueError(
-                f"column {c!r} was previously dropped and its name is "
-                "retired; use a new name"
+    read = _Meta(table_path, *_load_metadata(table_path))
+    _refuse_v3_write(read.md, "ALTER")
+
+    def build(state: _Meta):
+        md = state.md
+        schema_json = _current_schema(md)
+        names = {f["name"] for f in schema_json["fields"]}
+        props = dict(md.get("properties") or {})
+        retired = set(json.loads(props.get("ballista.dropped-columns", "[]")))
+        for c in add_columns:
+            if c in names:
+                raise ValueError(f"column {c!r} already exists")
+            if c in retired:
+                # this reader projects parquet by NAME (our staged files
+                # carry no field-id metadata), so a re-added name would
+                # resurrect pre-drop physical data; the name stays retired
+                # the way the spec retires field ids
+                raise ValueError(
+                    f"column {c!r} was previously dropped and its name is "
+                    "retired; use a new name"
+                )
+        for c in drop_columns:
+            if c not in names:
+                raise ValueError(f"column {c!r} does not exist")
+            if c in add_columns:
+                raise ValueError(f"column {c!r} both added and dropped")
+        keep = [
+            dict(f) for f in schema_json["fields"] if f["name"] not in set(drop_columns)
+        ]
+        if not keep and not add_columns:
+            raise ValueError("cannot drop every column")
+        last_id = int(md.get("last-column-id", 0))
+        for c, t in add_columns.items():
+            spark_t = T._parse_datatype_string(t)  # noqa: SLF001
+            frag, used = spark_to_iceberg_schema(T.StructType([
+                T.StructField(c, spark_t, True)
+            ]))
+            keep.append(_shift_ids(frag["fields"][0], last_id))
+            last_id += used
+        old_sid = int(schema_json.get("schema-id", 0))
+        new_schema = {"type": "struct", "schema-id": old_sid + 1, "fields": keep}
+        prior = [dict(s) for s in md.get("schemas") or [schema_json]]
+        new_md = dict(md)
+        new_md["last-column-id"] = last_id
+        new_md["schema"] = new_schema  # v1 single-schema face
+        new_md["schemas"] = prior + [new_schema]
+        new_md["current-schema-id"] = new_schema["schema-id"]
+        if drop_columns:
+            props["ballista.dropped-columns"] = json.dumps(
+                sorted(retired | set(drop_columns))
             )
-    for c in drop_columns:
-        if c not in names:
-            raise ValueError(f"column {c!r} does not exist")
-        if c in add_columns:
-            raise ValueError(f"column {c!r} both added and dropped")
-    keep = [
-        dict(f) for f in schema_json["fields"] if f["name"] not in set(drop_columns)
-    ]
-    if not keep and not add_columns:
-        raise ValueError("cannot drop every column")
-    last_id = int(md.get("last-column-id", 0))
-    for c, t in add_columns.items():
-        spark_t = T._parse_datatype_string(t)  # noqa: SLF001
-        frag, used = spark_to_iceberg_schema(T.StructType([
-            T.StructField(c, spark_t, True)
-        ]))
-        keep.append(_shift_ids(frag["fields"][0], last_id))
-        last_id += used
-    old_sid = int(schema_json.get("schema-id", 0))
-    new_schema = {"type": "struct", "schema-id": old_sid + 1, "fields": keep}
-    prior = [dict(s) for s in md.get("schemas") or [schema_json]]
-    new_md = dict(md)
-    new_md["last-column-id"] = last_id
-    new_md["schema"] = new_schema  # v1 single-schema face
-    new_md["schemas"] = prior + [new_schema]
-    new_md["current-schema-id"] = new_schema["schema-id"]
-    if drop_columns:
-        props["ballista.dropped-columns"] = json.dumps(
-            sorted(retired | set(drop_columns))
-        )
-        new_md["properties"] = props
-    _commit_metadata(os.path.join(table_path, "metadata"), new_md, version)
-    return version + 1
+            new_md["properties"] = props
+        return new_md, ()
+
+    return _commit(read, build)
 
 
 def _file_has_field_ids(path: str) -> bool:
@@ -2270,41 +2220,10 @@ def _scan_with_initial_defaults(
     return df
 
 
-def rename_iceberg_column(
-    table_path: str,
-    old: str,
-    new: str,
-    spark: SparkSession | None = None,
-) -> int:
-    """``ALTER TABLE … RENAME COLUMN old TO new`` as a METADATA-ONLY
-    commit — the Iceberg spec's actual contract (field ids are the
-    identity; names are labels).  Round-10 ask #2: this engine now
-    stamps ``parquet.field.id`` into every staged file (Spark's parquet
-    writer emits them natively), reads of renamed tables resolve
-    columns BY ID (``field_id_binding``), and rename first PROVES the
-    re-binding is safe by checking that every data file referenced by
-    ANY retained snapshot carries field ids — not just the current one
-    (review finding: after a compact-then-rename of a legacy table,
-    time travel to a pre-compaction snapshot would otherwise hit
-    id-less files under the id-bound read and fail where it worked
-    before).  ``expire_iceberg_snapshots`` retires old snapshots;
-    ``compact_iceberg_table`` rewrites id-less live files with ids.
-    Tables carrying equality-delete files refuse: post-rename reads of
-    ANY retained snapshot with eq-deletes raise (name-bound delete
-    files), which would wedge the table behind an unreadable
-    compaction path.  Time travel to pre-rename snapshots reads the
-    old files correctly under the CURRENT names (Iceberg reads apply
-    the current schema).  Returns the new metadata version."""
-    if old == new:
-        raise ValueError("rename to the same name is a no-op")
-    version, md = _load_metadata(table_path)
-    _refuse_v3_write(md, "RENAME COLUMN")
-    schema_json = _current_schema(md)
-    names = [f["name"] for f in schema_json["fields"]]
-    if old not in names:
-        raise ValueError(f"column {old!r} does not exist")
-    if new in names:
-        raise ValueError(f"column {new!r} already exists")
+def _require_field_ids(table_path: str, md: dict, spark) -> None:
+    """RENAME COLUMN's precondition: every data file of every retained
+    snapshot carries parquet field ids, and no snapshot has
+    equality-delete files."""
     # vet EVERY retained snapshot's entries, not just the current
     # snapshot's: time travel and eq-delete application must survive
     # the switch to id-bound reads.  Walks the PROJECTED scan rows
@@ -2315,12 +2234,9 @@ def rename_iceberg_column(
     seen_manifests: set[str] = set()
     for snap_md in md.get("snapshots") or []:
         if "manifest-list" in snap_md:
-            mlist, _sch = read_avro_bytes(
-                fsio.read_bytes(
-                    _norm_path(table_path, snap_md["manifest-list"])
-                )
-            )
-            manifest_paths = [m["manifest_path"] for m in mlist]
+            manifest_paths = [
+                m["manifest_path"] for m in _manifest_records(table_path, snap_md)
+            ]
         else:
             manifest_paths = list(snap_md.get("manifests") or [])
         for mp in manifest_paths:
@@ -2357,22 +2273,64 @@ def rename_iceberg_column(
             "snapshots still referencing id-less ones; rename after "
             "that"
         )
-    fields = [dict(f) for f in schema_json["fields"]]
-    for f in fields:
-        if f["name"] == old:
-            f["name"] = new
-    prior = [dict(s) for s in md.get("schemas") or [schema_json]]
-    new_sid = max(
-        [int(s.get("schema-id", 0)) for s in prior]
-        + [int(schema_json.get("schema-id", 0))]
-    ) + 1
-    new_schema = {"type": "struct", "schema-id": new_sid, "fields": fields}
-    new_md = dict(md)
-    new_md["schema"] = new_schema  # v1 single-schema face
-    new_md["schemas"] = prior + [new_schema]
-    new_md["current-schema-id"] = new_sid
-    _commit_metadata(os.path.join(table_path, "metadata"), new_md, version)
-    return version + 1
+
+
+def rename_iceberg_column(
+    table_path: str,
+    old: str,
+    new: str,
+    spark: SparkSession | None = None,
+) -> int:
+    """``ALTER TABLE … RENAME COLUMN old TO new`` as a METADATA-ONLY
+    commit — the Iceberg spec's actual contract (field ids are the
+    identity; names are labels).  Round-10 ask #2: this engine now
+    stamps ``parquet.field.id`` into every staged file (Spark's parquet
+    writer emits them natively), reads of renamed tables resolve
+    columns BY ID (``field_id_binding``), and rename first PROVES the
+    re-binding is safe by checking that every data file referenced by
+    ANY retained snapshot carries field ids — not just the current one
+    (review finding: after a compact-then-rename of a legacy table,
+    time travel to a pre-compaction snapshot would otherwise hit
+    id-less files under the id-bound read and fail where it worked
+    before).  ``expire_iceberg_snapshots`` retires old snapshots;
+    ``compact_iceberg_table`` rewrites id-less live files with ids.
+    Tables carrying equality-delete files refuse: post-rename reads of
+    ANY retained snapshot with eq-deletes raise (name-bound delete
+    files), which would wedge the table behind an unreadable
+    compaction path.  Time travel to pre-rename snapshots reads the
+    old files correctly under the CURRENT names (Iceberg reads apply
+    the current schema).  Returns the new metadata version."""
+    if old == new:
+        raise ValueError("rename to the same name is a no-op")
+    read = _Meta(table_path, *_load_metadata(table_path))
+    _refuse_v3_write(read.md, "RENAME COLUMN")
+
+    def build(state: _Meta):
+        md = state.md
+        schema_json = _current_schema(md)
+        names = [f["name"] for f in schema_json["fields"]]
+        if old not in names:
+            raise ValueError(f"column {old!r} does not exist")
+        if new in names:
+            raise ValueError(f"column {new!r} already exists")
+        _require_field_ids(table_path, md, spark)
+        fields = [dict(f) for f in schema_json["fields"]]
+        for f in fields:
+            if f["name"] == old:
+                f["name"] = new
+        prior = [dict(s) for s in md.get("schemas") or [schema_json]]
+        new_sid = max(
+            [int(s.get("schema-id", 0)) for s in prior]
+            + [int(schema_json.get("schema-id", 0))]
+        ) + 1
+        new_schema = {"type": "struct", "schema-id": new_sid, "fields": fields}
+        new_md = dict(md)
+        new_md["schema"] = new_schema  # v1 single-schema face
+        new_md["schemas"] = prior + [new_schema]
+        new_md["current-schema-id"] = new_sid
+        return new_md, ()
+
+    return _commit(read, build)
 
 
 def set_iceberg_table_properties(
@@ -2397,16 +2355,17 @@ def set_iceberg_table_properties(
             "ballista.dropped-columns is ALTER's retired-name registry "
             "— it cannot be edited directly"
         )
-    version, md = _load_metadata(table_path)
-    _refuse_v3_write(md, "SET TBLPROPERTIES")
-    props = dict(md.get("properties") or {})
-    for k in unset:
-        props.pop(k, None)
-    props.update(set_props)
-    new_md = dict(md)
-    new_md["properties"] = props
-    _commit_metadata(os.path.join(table_path, "metadata"), new_md, version)
-    return version + 1
+    read = _Meta(table_path, *_load_metadata(table_path))
+    _refuse_v3_write(read.md, "SET TBLPROPERTIES")
+
+    def build(state: _Meta):
+        props = dict(state.md.get("properties") or {})
+        for k in unset:
+            props.pop(k, None)
+        props.update(set_props)
+        return {**state.md, "properties": props}, ()
+
+    return _commit(read, build)
 
 
 def compact_iceberg_table(
@@ -2460,12 +2419,12 @@ def expire_iceberg_snapshots(
     deleted — expired snapshots routinely share manifests (appends
     carry them forward), and a per-snapshot reap would delete a
     manifest another expired snapshot still needs to enumerate, wedging
-    expiry halfway.  The retention window IS the time-travel window;
-    the trimmed metadata commits by exclusive create at the version
-    read, so a racing writer conflicts rather than resurrecting expired
-    snapshots — and because the commit comes first, a lost race deletes
-    nothing the winner's metadata still lists (a crash after the commit
-    only leaves orphans, as in Iceberg's ExpireSnapshots).
+    expiry halfway.  The retention window IS the time-travel window.
+    The trimmed metadata commits through :func:`_commit`: a lost race
+    re-plans the expiry on the winner's metadata, so a racer's snapshot
+    is kept and no file it reads is deleted.  Files are deleted only
+    after the commit (a crash in between leaves orphans, as in
+    Iceberg's ExpireSnapshots).
     Driver-side metadata work is O(snapshots × manifests); nothing
     row-sized is touched.
     """
@@ -2473,68 +2432,61 @@ def expire_iceberg_snapshots(
 
     now = int(time.time() * 1000) if now is None else int(now)
     horizon = now - int(retention_ms)
-    version, md = _load_metadata(table_path)
-    _refuse_v3_write(md, "EXPIRE SNAPSHOTS")
-    snaps = list(md.get("snapshots") or [])
-    if not snaps:
-        return []
-    cur_id = md.get("current-snapshot-id")
-    ordered = sorted(snaps, key=lambda s: s["timestamp-ms"])
-    keep_ids = {s["snapshot-id"] for s in ordered[-max(1, keep_last):]}
-    keep_ids.add(cur_id)
-    kept = [
-        s
-        for s in ordered
-        if s["snapshot-id"] in keep_ids or s["timestamp-ms"] >= horizon
-    ]
-    expired = [s for s in ordered if s not in kept]
-    if not expired:
-        return []
+    read = _Meta(table_path, *_load_metadata(table_path))
+    _refuse_v3_write(read.md, "EXPIRE SNAPSHOTS")
+    doomed: set[str] = set()
 
     def _refs(snapshot: dict):
-        """(manifest-list path, {manifest paths}, {data-file paths})."""
-        mlist = _norm_path(table_path, snapshot["manifest-list"])
+        """({manifest-list path}, {manifest paths}, {data-file paths})."""
         mans, files = set(), set()
-        manifests, _sch = read_avro_bytes(fsio.read_bytes(mlist))
-        for m in manifests:
+        for m in _manifest_records(table_path, snapshot):
             mp = _norm_path(table_path, m["manifest_path"])
             mans.add(mp)
-            entries = _read_manifest(mp)
-            for e in entries:
+            for e in _read_manifest(mp):
                 if e.get("status", 1) != 2:
                     files.add(_norm_path(table_path, e["data_file"]["file_path"]))
-        return mlist, mans, files
+        return {_norm_path(table_path, snapshot["manifest-list"])}, mans, files
 
-    live_lists, live_mans, live_files = set(), set(), set()
-    for s in kept:
-        ml, mans, files = _refs(s)
-        live_lists.add(ml)
-        live_mans |= mans
-        live_files |= files
-    # union ALL expired refs first (see docstring), then delete once
-    dead_lists, dead_mans, dead_files = set(), set(), set()
-    for s in expired:
-        ml, mans, files = _refs(s)
-        dead_lists.add(ml)
-        dead_mans |= mans
-        dead_files |= files
+    def build(state: _Meta):
+        md = state.md
+        snaps = list(md.get("snapshots") or [])
+        ordered = sorted(snaps, key=lambda s: s["timestamp-ms"])
+        keep_ids = {s["snapshot-id"] for s in ordered[-max(1, keep_last):]}
+        keep_ids.add(md.get("current-snapshot-id"))
+        kept = [
+            s
+            for s in ordered
+            if s["snapshot-id"] in keep_ids or s["timestamp-ms"] >= horizon
+        ]
+        expired = [s for s in ordered if s not in kept]
+        if not expired:
+            return None
+        # union ALL expired refs first (see docstring), then delete once
+        live = [set(), set(), set()]  # manifest lists, manifests, files
+        dead = [set(), set(), set()]
+        for group, refs in ((kept, live), (expired, dead)):
+            for s in group:
+                for acc, got in zip(refs, _refs(s)):
+                    acc |= got
+        doomed.clear()
+        doomed.update(*(d - lv for d, lv in zip(dead, live)))
+        expired_ids = {s["snapshot-id"] for s in expired}
+        new_md = dict(md)
+        new_md["last-updated-ms"] = now
+        new_md["snapshots"] = [
+            s for s in snaps if s["snapshot-id"] not in expired_ids
+        ]
+        new_md["snapshot-log"] = [
+            e
+            for e in (md.get("snapshot-log") or [])
+            if e["snapshot-id"] not in expired_ids
+        ]
+        return new_md, ()
 
-    expired_ids = {s["snapshot-id"] for s in expired}
-    new_md = dict(md)
-    new_md["last-updated-ms"] = now
-    new_md["snapshots"] = [s for s in snaps if s["snapshot-id"] not in expired_ids]
-    new_md["snapshot-log"] = [
-        e
-        for e in (md.get("snapshot-log") or [])
-        if e["snapshot-id"] not in expired_ids
-    ]
-    _commit_metadata(os.path.join(table_path, "metadata"), new_md, version)
-
+    if _commit(read, build) is None:
+        return []
     deleted: list[str] = []
-    for p in sorted(
-        (dead_lists - live_lists) | (dead_mans - live_mans)
-        | (dead_files - live_files)
-    ):
+    for p in sorted(doomed):
         if fsio.exists(p):
             fsio.remove(p)
             deleted.append(os.path.relpath(p, table_path)
@@ -2556,27 +2508,27 @@ class _Rewrite:
     row-level writer read (:func:`_load_metadata`): files are the live
     DATA manifest entries, scanned through :func:`_scan_snapshot` (field
     ids bound on renamed tables, delete files applied) and committed by
-    :func:`_commit_snapshot` at that version + 1."""
+    :func:`_commit_snapshot` on that version."""
 
-    def __init__(self, spark: SparkSession, table_path: str, op: str):
+    def __init__(
+        self, spark: SparkSession, table_path: str, op: str,
+        alias: str | None = None,
+    ):
         import uuid as _uuid
 
-        self.spark, self.table_path = spark, table_path
-        self.version, self.md = _load_metadata(table_path)
+        self.spark, self.table_path, self.alias = spark, table_path, alias
+        self.read = _Meta(table_path, *_load_metadata(table_path))
+        self.md = self.read.md
         _refuse_v3_write(self.md, op)
         schema_json = _current_schema(self.md)
         self.schema = iceberg_to_spark_type(schema_json)
         self.ids = _field_ids(schema_json)
         self.snapshot_id = _uuid.uuid4().int >> 75  # positive 53-bit long
-        cur_id = self.md.get("current-snapshot-id")
-        snaps = {s["snapshot-id"]: s for s in self.md.get("snapshots") or []}
         #: every live entry, data AND delete files
-        self.live = (
-            _live_entries(table_path, snaps[cur_id]) if cur_id in snaps else []
-        )
+        self.live = self.read.live
 
     def live_files(self) -> list[dict]:
-        return [e for e in self.live if not e["data_file"].get("content")]
+        return self.read.data
 
     def may_match(self, files, conjuncts) -> list[dict]:
         # decodes only the columns the conjuncts compare (_LazyBounds)
@@ -2607,22 +2559,23 @@ class _Rewrite:
         keep = {_norm_path(tp, e["data_file"]["file_path"]) for e in files}
         snap = copy.copy(self.snap)
         snap.files = [f for f in snap.files if f[0] in keep]
-        return _scan_snapshot(self.spark, snap, file_col, pos_col)
+        df = _scan_snapshot(self.spark, snap, file_col, pos_col)
+        return df.alias(self.alias) if self.alias else df
 
     def stage(self, df: DataFrame, data_change: bool = True) -> list[dict]:
         return _stage_entries(df, self.table_path, self.ids, self.snapshot_id)
 
-    def commit(self, removed, added, op, params, txn=None) -> int:
+    def commit(self, removed, added, op, params, txn=None) -> int | None:
         # the replacing manifest re-records the kept data files; delete
         # files never carry over: row-level writers refuse tables that
         # have them, and OPTIMIZE then rewrites every data file through
         # them
-        gone = {e["data_file"]["file_path"] for e in removed}
-        kept = [
-            e for e in self.live_files()
-            if e["data_file"]["file_path"] not in gone
-        ]
-        dropped = len(self.live) - len(kept)
+        gone = _file_paths(removed)
+
+        def kept(state: _Meta) -> list[dict]:
+            return [e for e in state.data if e["data_file"]["file_path"] not in gone]
+
+        dropped = len(self.live) - len(kept(self.read))
         summary = {
             "operation": _SNAPSHOT_OPERATION[op],
             **params,
@@ -2630,8 +2583,8 @@ class _Rewrite:
             "deleted-data-files": str(dropped),
         }
         return _commit_snapshot(
-            self.table_path, self.md, self.version, self.snapshot_id, added,
-            summary, kept=kept, removed=dropped, txn=txn or (None, None),
+            self.read, self.snapshot_id, added, summary, kept=kept,
+            removed=dropped, txn=txn or (None, None),
         )
 
     def txn_applied(self, txn) -> bool:
@@ -2655,6 +2608,7 @@ def delete_from_iceberg_table(
     table_path: str,
     filters: list[tuple[str, str, object]] | Column,
     use_position_deletes: bool | None = None,
+    alias: str | None = None,
 ) -> int | None:
     """DELETE: remove every row matching ``filters`` — either (col, op,
     value) triples, ALL of which must hold (the proof language the
@@ -2689,9 +2643,11 @@ def delete_from_iceberg_table(
 
     Old snapshots stay readable until ``expire_iceberg_snapshots``;
     the ``ballista_iceberg`` streaming face refuses delete snapshots
-    (a stream cannot retract).
+    (a stream cannot retract).  ``alias`` is the name a Column
+    predicate qualifies the table's columns by (SQL ``DELETE FROM t AS
+    x WHERE x.id = 1``).
     """
-    t = _Rewrite(spark, table_path, "DELETE")
+    t = _Rewrite(spark, table_path, "DELETE", alias)
     if use_position_deletes is None:
         # the spec's routing property: merge-on-read tables get the
         # zero-rewrite shape (SQL DELETE included); explicit True/False
@@ -2765,9 +2721,7 @@ def _delete_with_position_deletes(
     if not entries:
         return None  # no new match — every hit was already tombstoned
     return _commit_snapshot(
-        t.table_path,
-        t.md,
-        t.version,
+        t.read,
         t.snapshot_id,
         entries,
         {
@@ -2786,6 +2740,7 @@ def update_iceberg_table(
     table_path: str,
     set_exprs,
     filters: list[tuple[str, str, object]] | Column | None = None,
+    alias: str | None = None,
 ) -> int | None:
     """Copy-on-write ``UPDATE ... SET ... WHERE`` (``rewrite.update``):
     rows matching ``filters`` (ALL of the triples, or a Column
@@ -2799,9 +2754,10 @@ def update_iceberg_table(
     :func:`delete_from_iceberg_table`: untouched files' manifest
     records carry forward verbatim; v2 delete-file tables refuse
     (compact first); the streaming face refuses the resulting
-    overwrite snapshot (an update changes rows).
+    overwrite snapshot (an update changes rows).  ``alias`` qualifies
+    columns as in :func:`delete_from_iceberg_table`.
     """
-    t = _Rewrite(spark, table_path, "UPDATE")
+    t = _Rewrite(spark, table_path, "UPDATE", alias)
     _refuse_delete_files(t, "UPDATE")
     return rewrite.update(t, set_exprs, filters)
 

@@ -25,7 +25,9 @@ candidates and drop every file with no new match themselves.
 
 Each format supplies a :class:`Table` adapter over the snapshot its
 writer read; the format modules keep only their log/manifest encoding,
-their protocol gates and those zero-rewrite fast paths.
+their protocol gates and those zero-rewrite fast paths.  The footer
+reads of staged files (:func:`per_file`) and the change-feed diff
+(:func:`row_changes`, :func:`union_changes`) are shared here too.
 """
 
 from __future__ import annotations
@@ -37,6 +39,8 @@ from typing import Callable, Protocol
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from ballista_spark.sources import fsio
 
 #: the probe's file-identity column
 _FILE = "__file"
@@ -93,6 +97,26 @@ def decoded_file_path() -> Column:
             "%2B",
         )
     )
+
+
+def per_file(spark, paths: list[str], fn, min_files: int, force: bool) -> dict:
+    """{path: fn(path)} for a worker-safe footer read ``fn`` over staged
+    files.  NON-LOCAL lists of at least ``min_files`` paths (or any,
+    with ``force``) distribute the reads as one tiny Spark job, whose
+    results pickle back losslessly; everything else loops on the
+    driver.  Measured on a 4-vCPU host, 1,000 local footer reads take
+    0.15 s serially vs 4.5 s of Spark job overhead: distributing only
+    wins where each read is a ~10-100 ms object-store GET (10k files =
+    minutes serial, seconds distributed)."""
+    if (
+        spark is None
+        or len(paths) < min_files
+        or (fsio.is_local(paths[0]) and not force)
+    ):
+        return {p: fn(p) for p in paths}
+    sc = spark.sparkContext
+    rdd = sc.parallelize(paths, min(len(paths), sc.defaultParallelism))
+    return dict(rdd.map(lambda p: (p, fn(p))).collect())
 
 
 def _filters_to_column(filters: list[tuple[str, str, object]]) -> Column:
@@ -478,3 +502,53 @@ def compact(
     return a.commit(
         removed, added, "OPTIMIZE", {"targetSize": str(target_file_bytes)}
     )
+
+
+def row_changes(new_df, old_df, types: dict) -> DataFrame:
+    """One commit's change-feed rows: those only one side holds, as
+    MULTISETS (``exceptAll``, so a touched file's carried rows cancel
+    exactly), tagged ``_change_type`` insert/delete.  ``old_df`` aligns
+    to ``new_df``'s columns and the result to ``types`` (NULL for a
+    column an ALTER added later); either side may be None."""
+
+    def align(df, fields):
+        return df.select(*[
+            F.col(c) if c in df.columns else F.lit(None).cast(t).alias(c)
+            for c, t in fields
+        ])
+
+    if new_df is None or old_df is None:
+        kind = "insert" if old_df is None else "delete"
+        out = (old_df if new_df is None else new_df).withColumn(
+            "_change_type", F.lit(kind)
+        )
+    else:
+        old_df = align(old_df, [(f.name, f.dataType) for f in new_df.schema.fields])
+        out = (
+            new_df.exceptAll(old_df).withColumn("_change_type", F.lit("insert"))
+            .unionByName(
+                old_df.exceptAll(new_df).withColumn("_change_type", F.lit("delete"))
+            )
+        )
+    return align(out, [*types.items(), ("_change_type", T.StringType())])
+
+
+def union_changes(
+    spark: SparkSession, parts: list, schema: T.StructType, tags: list[str],
+    every: int,
+) -> DataFrame:
+    """The change feed of ``parts`` (``schema`` plus ``_change_type`` and
+    the long ``tags`` columns), the plan truncated every ``every`` parts:
+    a 500-commit window would otherwise build a 1000+-node
+    exceptAll/union chain whose analysis cost alone dwarfs the data."""
+    if not parts:
+        return spark.createDataFrame([], T.StructType(
+            list(schema.fields) + [T.StructField("_change_type", T.StringType())]
+            + [T.StructField(t, T.LongType()) for t in tags]
+        ))
+    out = parts[0]
+    for i, p in enumerate(parts[1:], start=1):
+        out = out.unionByName(p)
+        if i % every == 0:
+            out = out.localCheckpoint(eager=True)
+    return out

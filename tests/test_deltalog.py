@@ -678,6 +678,27 @@ def test_race_with_blind_append_commits_on_top(spark, tmp_path, monkeypatch, vic
     )
 
 
+def test_racing_blind_appends_both_commit(spark, tmp_path, monkeypatch, caplog):
+    """Two blind appends: the one that stages second loses the version
+    it read, rebuilds on the winner and commits at its second attempt
+    (one commit record each)."""
+    from ballista_spark.sources import deltalog as dl
+
+    path = str(tmp_path / "t")
+    rows = _two_file_table(spark, path)
+    new = [(100, 100.0), (101, 101.0)]
+    _race(monkeypatch, dl, "_stage_data_files", lambda: write_delta_table(
+        spark.createDataFrame(new[:1], _KV), path
+    ))
+    caplog.set_level("INFO", logger="ballista_spark.commit")
+    assert write_delta_table(spark.createDataFrame(new[1:], _KV), path) == 3
+    assert _kv_rows(spark, path) == sorted(rows + new)
+    records = [r for r in caplog.records if r.name == "ballista_spark.commit"]
+    assert [(r.format, r.version, r.attempts, r.outcome) for r in records] == [
+        ("delta", 2, 1, "committed"), ("delta", 3, 2, "committed")
+    ]
+
+
 def test_overwrite_racing_update_raises(spark, tmp_path, monkeypatch):
     """An overwrite rebuilds its removes on the winner's snapshot, but a
     winner that removed one of them still conflicts (the removed-file

@@ -18,7 +18,7 @@ import struct
 import pyarrow.parquet as pq
 import pytest
 
-from ballista_spark.sources import iceberg
+from ballista_spark.sources import iceberg, occ
 from ballista_spark.sources.avroio import read_avro_bytes
 from ballista_spark.sources.iceberg import (
     encode_bound,
@@ -109,16 +109,29 @@ def test_schema_mismatch_on_append_raises(spark, tmp_path):
         )
 
 
+def _squat_next_version(path):
+    """Publish a copy of the current metadata as the next version
+    without moving the hint: a valid version the next writer's read
+    does not see, so its first attempt loses."""
+    meta = os.path.join(path, "metadata")
+    with open(os.path.join(meta, "version-hint.text")) as f:
+        v = int(f.read().strip())
+    with open(os.path.join(meta, f"v{v + 1}.metadata.json"), "x") as f:
+        json.dump(_read_meta(path), f)
+    return v + 1
+
+
 def test_concurrent_version_collision_single_winner(spark, tmp_path):
-    """Exclusive create of vN.metadata.json: simulate the losing writer
-    by pre-creating the version file it will try to claim."""
+    """Exclusive create of vN.metadata.json: a writer whose version was
+    taken by a valid commit retries past it (the winner's snapshots
+    stay, this write lands at the next version)."""
     path = str(tmp_path / "t")
     write_iceberg_table(_df(spark, [(1, "a", 1.0)]), path)
-    os.makedirs(os.path.join(path, "metadata"), exist_ok=True)
-    with open(os.path.join(path, "metadata", "v2.metadata.json"), "x") as f:
-        f.write("{}")
-    with pytest.raises(FileExistsError):
-        write_iceberg_table(_df(spark, [(2, "b", 2.0)]), path)
+    taken = _squat_next_version(path)
+    sid = write_iceberg_table(_df(spark, [(2, "b", 2.0)]), path)
+    assert iceberg._load_metadata(path)[0] == taken + 1
+    assert _read_meta(path)["current-snapshot-id"] == sid
+    assert [r[0] for r in _rows(spark, path)] == [1, 2]
 
 
 def test_empty_partitions_never_committed(spark, tmp_path):
@@ -455,11 +468,16 @@ def test_expire_updates_metadata_by_exclusive_create(spark, tmp_path):
     path = str(tmp_path / "t")
     write_iceberg_table(_df(spark, [(1, "a", 1.0)]), path)
     write_iceberg_table(_df(spark, [(2, "b", 2.0)]), path)
-    os.makedirs(os.path.join(path, "metadata"), exist_ok=True)
-    with open(os.path.join(path, "metadata", "v3.metadata.json"), "x") as f:
-        f.write("{}")
-    with pytest.raises(FileExistsError):
-        expire_iceberg_snapshots(path, retention_ms=-1)
+    taken = _squat_next_version(path)
+    squat = os.path.join(path, "metadata", f"v{taken}.metadata.json")
+    with open(squat) as f:
+        squatted = f.read()
+    assert expire_iceberg_snapshots(path, retention_ms=-1)
+    assert iceberg._load_metadata(path)[0] == taken + 1
+    with open(squat) as f:
+        assert f.read() == squatted  # the winner's version is untouched
+    assert len(_read_meta(path)["snapshots"]) == 1
+    assert [r[0] for r in _rows(spark, path)] == [1, 2]
 
 
 def test_delete_copy_on_write_touch_only(spark, tmp_path):
@@ -841,7 +859,8 @@ def test_merge_stream_refuses_merge_snapshot(spark, tmp_path):
 
 
 # ---------------------------------------------------------------------------
-# every writer commits at the metadata version it READ — races made
+# every writer commits at the metadata version it READ and, on a lost
+# race, re-reads, validates against the winner and retries — races made
 # deterministic: the racer commits inside the victim's own metadata read
 # or commit call (one wrapped call; no threads, no sleeps)
 
@@ -854,73 +873,179 @@ def _rows(spark, path, snapshot_id=None):
     )
 
 
-#: victim writer → its call on the racing table (10 rows, two files)
+def _race(monkeypatch, name, winner):
+    """Run ``winner()`` inside the next call of ``iceberg.<name>``."""
+    real = getattr(iceberg, name)
+
+    def once(*args, **kwargs):
+        monkeypatch.setattr(iceberg, name, real)
+        if name == "_load_metadata":  # the victim reads first
+            got = real(*args, **kwargs)
+            winner()
+            return got
+        winner()
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(iceberg, name, once)
+    return real
+
+
+def _two_file_table(spark, path):
+    """ids 0..4 in one file, 5..9 in another (two small files, so
+    OPTIMIZE has a bin to pack); returns the rows."""
+    for lo in (0, 5):
+        write_iceberg_table(
+            _df(spark, [(lo + i, "c", float(i)) for i in range(5)]).coalesce(1),
+            path,
+        )
+    return _rows(spark, path)
+
+
+def _unreferenced_metadata_files(path):
+    """Manifest lists and manifests under ``metadata/`` that no snapshot
+    of any ``vN.metadata.json`` reads."""
+    meta = os.path.join(path, "metadata")
+    listed = set()
+    for name in glob.glob(os.path.join(meta, "v*.metadata.json")):
+        with open(name) as f:
+            for s in json.load(f).get("snapshots") or []:
+                listed.add(s["manifest-list"])
+                if os.path.exists(s["manifest-list"]):  # not yet expired
+                    with open(s["manifest-list"], "rb") as f2:
+                        mans = read_avro_bytes(f2.read())[0]
+                    listed |= {m["manifest_path"] for m in mans}
+    return sorted(set(glob.glob(os.path.join(meta, "*.avro"))) - listed)
+
+
+def _without(i):
+    return lambda rows: [r for r in rows if r[0] != i]
+
+
+#: victim → (its call on the two-file table, its effect on the rows)
 _RACE_VICTIMS = {
-    "append": lambda spark, path: write_iceberg_table(
-        _df(spark, [(50, "w", 1.0)]), path
+    "append": (
+        lambda spark, path: write_iceberg_table(_df(spark, [(50, "w", 1.0)]), path),
+        lambda rows: sorted(rows + [(50, "w", 1.0)]),
     ),
-    "cow_delete": lambda spark, path: iceberg.delete_from_iceberg_table(
-        spark, path, [("id", "=", 3)]
+    "cow_delete": (
+        lambda spark, path: iceberg.delete_from_iceberg_table(
+            spark, path, [("id", "=", 3)]
+        ),
+        _without(3),
     ),
-    "update": lambda spark, path: iceberg.update_iceberg_table(
-        spark, path, {"v": "v + 1"}, [("id", "=", 3)]
+    "position_delete": (
+        lambda spark, path: iceberg.delete_from_iceberg_table(
+            spark, path, [("id", "=", 3)], use_position_deletes=True
+        ),
+        _without(3),
     ),
-    "merge": lambda spark, path: iceberg.merge_iceberg_table(
-        spark, path, _df(spark, [(3, "m", 9.0), (60, "m", 9.0)]), ["id"]
+    "update": (
+        lambda spark, path: iceberg.update_iceberg_table(
+            spark, path, {"v": "v + 1"}, [("id", "=", 3)]
+        ),
+        lambda rows: [(i, c, v + 1 if i == 3 else v) for i, c, v in rows],
     ),
-    "optimize": lambda spark, path: iceberg.compact_iceberg_table(
-        spark, path, target_file_bytes=1 << 30
+    "merge": (
+        lambda spark, path: iceberg.merge_iceberg_table(
+            spark, path, _df(spark, [(3, "m", 9.0), (60, "m", 9.0)]), ["id"]
+        ),
+        lambda rows: sorted(_without(3)(rows) + [(3, "m", 9.0), (60, "m", 9.0)]),
     ),
-    "set_properties": lambda spark, path: iceberg.set_iceberg_table_properties(
-        path, {"k": "v"}
+    "optimize": (
+        lambda spark, path: iceberg.compact_iceberg_table(
+            spark, path, target_file_bytes=1 << 30
+        ),
+        lambda rows: rows,
     ),
-    "alter_add_column": lambda spark, path: iceberg.alter_iceberg_table(
-        path, add_columns={"extra": "int"}
+    "set_properties": (
+        lambda spark, path: iceberg.set_iceberg_table_properties(
+            path, {"k": "v"}
+        ),
+        lambda rows: rows,
     ),
-    "rename_column": lambda spark, path: iceberg.rename_iceberg_column(
-        path, "cat", "category", spark=spark
+    "alter_add_column": (
+        lambda spark, path: iceberg.alter_iceberg_table(
+            path, add_columns={"extra": "int"}
+        ),
+        lambda rows: [r + (None,) for r in rows],
+    ),
+    "rename_column": (
+        lambda spark, path: iceberg.rename_iceberg_column(
+            path, "cat", "category", spark=spark
+        ),
+        lambda rows: rows,
     ),
 }
 
 
 @pytest.mark.parametrize("victim", list(_RACE_VICTIMS))
 def test_writer_racing_append_after_its_read_raises(
-    spark, tmp_path, monkeypatch, victim
+    spark, tmp_path, monkeypatch, caplog, victim
 ):
-    """A 5-row append commits right after the victim's metadata read:
-    the victim must lose (FileExistsError at version read + 1) and the
-    table must read back exactly the racer's state — the racer's rows
-    are never silently dropped."""
+    """A 5-row blind append commits right after the victim's metadata
+    read.  The append removes nothing, so the victim's first attempt
+    loses, it rebuilds on the append and commits on top at its second
+    attempt: the victim's effect and the racer's rows are both visible,
+    and the losing attempt leaves no manifest behind."""
     path = str(tmp_path / "t")
-    for lo in (0, 5):  # two small files, so OPTIMIZE has a bin to pack
-        write_iceberg_table(
-            _df(spark, [(lo + i, "c", float(i)) for i in range(5)]).coalesce(1),
-            path,
-        )
-    real = iceberg._load_metadata
-
-    def read_then_race(table_path):
-        got = real(table_path)
-        monkeypatch.setattr(iceberg, "_load_metadata", real)
-        write_iceberg_table(_df(spark, _RACER_ROWS).coalesce(1), path)
-        return got
-
-    base = _rows(spark, path)
-    monkeypatch.setattr(iceberg, "_load_metadata", read_then_race)
-    with pytest.raises(FileExistsError):
-        _RACE_VICTIMS[victim](spark, path)
+    base = _two_file_table(spark, path)
+    op, effect = _RACE_VICTIMS[victim]
+    real = _race(monkeypatch, "_load_metadata", lambda: write_iceberg_table(
+        _df(spark, _RACER_ROWS).coalesce(1), path
+    ))
+    caplog.set_level("INFO", logger="ballista_spark.commit")
+    assert op(spark, path) is not None
     assert iceberg._load_metadata is real  # the race actually ran
-    got = read_iceberg_table(spark, path)
-    assert got.columns == ["id", "cat", "v"]
-    assert _rows(spark, path) == sorted(base + _RACER_ROWS)
+    (record,) = [
+        r for r in caplog.records
+        if r.name == "ballista_spark.commit" and r.attempts > 1
+    ]
+    assert (record.format, record.attempts, record.outcome) == (
+        "iceberg", 2, "committed"
+    )
+    assert iceberg._load_metadata(path)[0] == 4  # 2 writes, racer, victim
+    assert _rows(spark, path) == effect(sorted(base + _RACER_ROWS))
+    assert _unreferenced_metadata_files(path) == []
+
+
+#: winner → (its call, its effect on the rows); both remove the file
+#: holding ids 0..4, which every row-level victim reads
+_INPUT_REMOVERS = {
+    "cow_delete": (
+        lambda spark, path: iceberg.delete_from_iceberg_table(
+            spark, path, [("id", "=", 0)]
+        ),
+        _without(0),
+    ),
+    "optimize": _RACE_VICTIMS["optimize"],
+}
+
+
+@pytest.mark.parametrize("winner", list(_INPUT_REMOVERS))
+@pytest.mark.parametrize(
+    "victim", ["cow_delete", "position_delete", "update", "merge", "optimize"]
+)
+def test_race_on_removed_input_raises(spark, tmp_path, monkeypatch, victim, winner):
+    """The winner rewrites a file the victim read, so the victim raises
+    and the table is exactly the winner's."""
+    path = str(tmp_path / "t")
+    base = _two_file_table(spark, path)
+    win, effect = _INPUT_REMOVERS[winner]
+    _race(monkeypatch, "_load_metadata", lambda: win(spark, path))
+    with pytest.raises(occ.ConcurrentCommitError, match="removed"):
+        _RACE_VICTIMS[victim][0](spark, path)
+    assert iceberg._load_metadata(path)[0] == 3
+    assert _rows(spark, path) == effect(base)
+    assert _unreferenced_metadata_files(path) == []
 
 
 def test_expire_losing_commit_race_deletes_nothing(
     spark, tmp_path, monkeypatch
 ):
-    """Expiry commits BEFORE it deletes: when an append wins the
-    metadata version expiry read, expiry raises, no file is removed,
-    and every snapshot the winner's metadata lists stays readable."""
+    """An append wins the metadata version expiry read: the losing
+    attempt deletes nothing; expiry re-plans on the winner's metadata
+    and commits, keeping the racer's snapshot and deleting no file the
+    racer's snapshot or any listed snapshot reads."""
     path = str(tmp_path / "t")
     for lo in (0, 10, 20):
         write_iceberg_table(
@@ -932,23 +1057,23 @@ def test_expire_losing_commit_race_deletes_nothing(
     before = {
         os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs
     }
-    real = iceberg._commit_metadata
-
-    def race_then_commit(meta_dir, new_md, base_version):
-        monkeypatch.setattr(iceberg, "_commit_metadata", real)
-        write_iceberg_table(_df(spark, _RACER_ROWS).coalesce(1), path)
-        return real(meta_dir, new_md, base_version)
-
-    monkeypatch.setattr(iceberg, "_commit_metadata", race_then_commit)
-    with pytest.raises(FileExistsError):
-        iceberg.expire_iceberg_snapshots(path, retention_ms=-1)
+    real = _race(monkeypatch, "_commit_metadata", lambda: write_iceberg_table(
+        _df(spark, _RACER_ROWS).coalesce(1), path
+    ))
+    deleted = iceberg.expire_iceberg_snapshots(path, retention_ms=-1)
     assert iceberg._commit_metadata is real  # the race actually ran
-    assert sorted(p for p in before if not os.path.exists(p)) == []
+    assert sum(d.endswith(".parquet") for d in deleted) == 3
     md = _read_meta(path)
-    assert len(md["snapshots"]) == 5  # 3 appends, replace, racer
-    for s in md["snapshots"]:
-        assert _rows(spark, path, s["snapshot-id"])  # every one readable
+    assert len(md["snapshots"]) == 1  # the racer's, now current
+    assert md["snapshots"][0]["summary"]["added-records"] == "5"
+    gone = {p for p in before if not os.path.exists(p)}
+    read = {
+        os.path.normpath(f[0])
+        for f in read_iceberg_snapshot(path, md["current-snapshot-id"]).files
+    }
+    assert not gone & read
     assert len(_rows(spark, path)) == 35
+    assert _unreferenced_metadata_files(path) == []
 
 
 def test_v2_sequence_number_on_every_snapshot(spark, tmp_path):

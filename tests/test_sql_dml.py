@@ -200,6 +200,33 @@ def test_sql_dml_end_to_end(spark, tmp_path, fmt):
     assert out["operation"] == "vacuum" and out["version"] >= 0
 
 
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_qualified_names_in_delete_and_update(spark, tmp_path, fmt):
+    """Columns qualified by the target's alias, or by its own name when
+    it has none, resolve: each statement leaves the same rows as its
+    unqualified form run on a twin table."""
+    ctx = _ctx(spark)
+    rows = [[(i, "c", i, "a") for i in range(6)]]
+    _register(ctx, spark, fmt, "tq", str(tmp_path / "q"), rows)
+    _register(ctx, spark, fmt, "tu", str(tmp_path / "u"), rows)
+    for qualified, plain in [
+        ("DELETE FROM tq AS x WHERE x.id = 1", "DELETE FROM tu WHERE id = 1"),
+        ("DELETE FROM tq WHERE tq.id = 2", "DELETE FROM tu WHERE id = 2"),
+        (
+            "UPDATE tq AS x SET v = x.v + 1 WHERE x.id = 3",
+            "UPDATE tu SET v = v + 1 WHERE id = 3",
+        ),
+    ]:
+        ctx.sql(qualified)
+        ctx.sql(plain)
+        got, want = (
+            sorted(map(tuple, ctx.sql(f"SELECT * FROM {t}").df.collect()))
+            for t in ("tq", "tu")
+        )
+        assert got == want, qualified
+    assert [r[0] for r in got] == [0, 3, 4, 5] and got[1][2] == 4
+
+
 def test_create_external_table_sql(spark, tmp_path):
     """The reference's exact DDL text (ballista.proto:236-248) through
     ctx.sql: CSV with schema/header/delimiter, parquet, and a DELTA
