@@ -15,10 +15,8 @@ cousin) and ``similarity.kmeans_fit``:
 - one training iteration = margins (feature-sized broadcast join +
   per-(doc, class) reduce), softmax + error (two windows over the doc
   key — ONE shuffle), gradient (feature-sized join + per-(class,
-  bucket) reduce), driver-side bias update from ``n_classes`` scalars.
-- every per-iteration frame ends in an EAGER ``localCheckpoint`` (the
-  connected_components/logreg_fit discipline — lazy persists here
-  silently recompute the whole lineage per round and per consumer).
+  bucket) reduce), driver-side bias update from ``n_classes`` scalars;
+  rounds run through ``iterate.iterate``.
 
 Features are character n-grams (language ID needs sub-word signal;
 word-grams can't see that "sch"/"ación"/"ться" are different languages)
@@ -42,6 +40,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from ballista_spark.operators.hashing import md5_long
+from ballista_spark.operators.iterate import iterate
 
 #: langid default feature space: 2^16 buckets × n_classes doubles —
 #: a 176-language head is ~92 MB, still broadcast territory.
@@ -226,86 +225,84 @@ def softmax_fit(
     ).persist()
     n_docs = lab.count()
 
-    wide = spark.createDataFrame([], "bucket long, ws array<double>")
     biases = [0.0] * k
+
+    def step(wide: DataFrame) -> DataFrame:
+        wide = wide.where(F.col("bucket") != -1)
+        mcols = [F.col(f"__m{i}") + F.lit(biases[i]) for i in range(k)]
+        mx = F.greatest(*mcols)
+        ecols = [F.exp(m - mx) for m in mcols]
+        tot = ecols[0]
+        for e in ecols[1:]:
+            tot = tot + e
+        # ONE distributed action per iteration: margins → softmax →
+        # error → weight gradient (groupBy bucket) with the raw
+        # per-class bias-gradient sums riding a sentinel bucket −1
+        # row — fusing what used to be three jobs (err checkpoint,
+        # weight checkpoint, bias collect) halves the fixed
+        # per-round scheduling latency that dominated this loop
+        err = (
+            feats.join(F.broadcast(wide), "bucket", "left")
+            .groupBy("key")
+            .agg(
+                *[
+                    F.sum(
+                        F.col("x")
+                        * F.coalesce(F.element_at(F.col("ws"), i + 1), F.lit(0.0))
+                    ).alias(f"__m{i}")
+                    for i in range(k)
+                ]
+            )
+            .join(lab, "key")
+            .select(
+                "key",
+                *[
+                    (
+                        ecols[i] / tot - (F.col("__y") == classes[i]).cast("double")
+                    ).alias(f"__g{i}")
+                    for i in range(k)
+                ],
+            )
+        )
+        gsum = (
+            feats.join(err, "key")
+            .groupBy("bucket")
+            .agg(
+                *[
+                    (F.sum(F.col("x") * F.col(f"__g{i}")) / F.lit(n_docs)).alias(
+                        f"__gw{i}"
+                    )
+                    for i in range(k)
+                ]
+            )
+        )
+        upd = [
+            F.coalesce(F.element_at(F.col("ws"), i + 1), F.lit(0.0))
+            * F.lit(1.0 - lr * reg)
+            - F.lit(lr) * F.coalesce(F.col(f"__gw{i}"), F.lit(0.0))
+            for i in range(k)
+        ]
+        raw = [F.coalesce(F.col(f"__gw{i}"), F.lit(0.0)) for i in range(k)]
+        return wide.join(gsum, "bucket", "full").select(
+            "bucket",
+            # the sentinel carries the RAW per-class bias gradient (no
+            # weight-style reg decay — biases are unregularized,
+            # matching the numpy mirror)
+            F.when(F.col("bucket") == -1, F.array(*raw))
+            .otherwise(F.array(*upd))
+            .alias("ws"),
+        )
+
+    def read_biases(wide: DataFrame) -> None:
+        for r in wide.where(F.col("bucket") == -1).collect():
+            for i in range(k):
+                biases[i] -= lr * float(r["ws"][i])
+
     try:
-        for _ in range(n_iters):
-            mcols = [
-                F.col(f"__m{i}") + F.lit(biases[i]) for i in range(k)
-            ]
-            mx = F.greatest(*mcols)
-            ecols = [F.exp(m - mx) for m in mcols]
-            tot = ecols[0]
-            for e in ecols[1:]:
-                tot = tot + e
-            # ONE distributed action per iteration: margins → softmax →
-            # error → weight gradient (groupBy bucket) with the raw
-            # per-class bias-gradient sums riding a sentinel bucket −1
-            # row — fusing what used to be three jobs (err checkpoint,
-            # weight checkpoint, bias collect) halves the fixed
-            # per-round scheduling latency that dominated this loop
-            err = (
-                feats.join(F.broadcast(wide), "bucket", "left")
-                .groupBy("key")
-                .agg(
-                    *[
-                        F.sum(
-                            F.col("x")
-                            * F.coalesce(
-                                F.element_at(F.col("ws"), i + 1), F.lit(0.0)
-                            )
-                        ).alias(f"__m{i}")
-                        for i in range(k)
-                    ]
-                )
-                .join(lab, "key")
-                .select(
-                    "key",
-                    *[
-                        (
-                            ecols[i] / tot
-                            - (F.col("__y") == classes[i]).cast("double")
-                        ).alias(f"__g{i}")
-                        for i in range(k)
-                    ],
-                )
-            )
-            gsum = (
-                feats.join(err, "key")
-                .groupBy("bucket")
-                .agg(
-                    *[
-                        (F.sum(F.col("x") * F.col(f"__g{i}")) / F.lit(n_docs)).alias(
-                            f"__gw{i}"
-                        )
-                        for i in range(k)
-                    ]
-                )
-            )
-            upd = [
-                F.coalesce(F.element_at(F.col("ws"), i + 1), F.lit(0.0))
-                * F.lit(1.0 - lr * reg)
-                - F.lit(lr) * F.coalesce(F.col(f"__gw{i}"), F.lit(0.0))
-                for i in range(k)
-            ]
-            raw = [F.coalesce(F.col(f"__gw{i}"), F.lit(0.0)) for i in range(k)]
-            wide = (
-                wide.join(gsum, "bucket", "full")
-                .select(
-                    "bucket",
-                    # the sentinel carries the RAW per-class bias
-                    # gradient (no weight-style reg decay — biases are
-                    # unregularized, matching the numpy mirror)
-                    F.when(F.col("bucket") == -1, F.array(*raw))
-                    .otherwise(F.array(*upd))
-                    .alias("ws"),
-                )
-                .localCheckpoint(eager=True)
-            )
-            for r in wide.where(F.col("bucket") == -1).collect():
-                for i in range(k):
-                    biases[i] -= lr * float(r["ws"][i])
-            wide = wide.where(F.col("bucket") != -1)
+        wide = iterate(
+            spark.createDataFrame([], "bucket long, ws array<double>"),
+            step, n_iters, delta=read_biases,
+        ).state.where(F.col("bucket") != -1)
         class_arr = F.array(*[F.lit(c) for c in classes])
         weights = (
             wide.select("bucket", F.posexplode("ws"))

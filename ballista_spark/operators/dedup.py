@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ballista_spark.operators.iterate import iterate
+
 #: MinHash defaults: 64 permutations as 16 bands × 4 rows — P(miss) for
 #: jaccard j is (1-j^4)^16: ~2e-4 at exactly j=0.8 and < 1e-6 by j=0.87
 #: (byte-identical duplicates are collapsed *before* LSH and can never
@@ -969,59 +971,53 @@ def connected_components(
         .distinct()
         .persist()
     )
-    # each round ends in an EAGER localCheckpoint: a lazy persist here
-    # would never materialize before the previous round's cache is
-    # dropped, so every round — and every later consumer of the returned
-    # frame — would recompute the whole chain from the start (measured
-    # 3x+ inflation inside curate_corpus before the fix).  Checkpoints
-    # are edge-sized; the final return stays backed by the last one.
     labels = (
         edges.select(F.col("src").alias("key"))
         .distinct()
         .withColumn("comp", F.col("key"))
-        .localCheckpoint(eager=True)
+        .localCheckpoint(eager=False)
     )
-    try:
-        for _ in range(max_iter):
-            # min over own and neighbor labels (edge join + min-combine)
-            nbr = (
-                edges.join(
-                    labels.select(
-                        F.col("key").alias("dst"), F.col("comp").alias("dcomp")
-                    ),
-                    "dst",
-                )
-                .groupBy(F.col("src").alias("key"))
-                .agg(F.min("dcomp").alias("ncomp"))
+
+    def step(labels: DataFrame) -> DataFrame:
+        # min over own and neighbor labels (edge join + min-combine)
+        nbr = (
+            edges.join(
+                labels.select(F.col("key").alias("dst"), F.col("comp").alias("dcomp")),
+                "dst",
             )
-            prop = labels.join(nbr, "key", "left").select(
-                "key",
-                F.col("comp").alias("prev"),
-                F.least("comp", F.coalesce("ncomp", "comp")).alias("comp"),
-            )
-            # pointer jumping: comp <- comp(comp).  Labels are always vertex
-            # ids (min over keys), so the lookup side covers every comp.
-            jumped = (
-                prop.alias("a")
-                .join(
-                    prop.select(
-                        F.col("key").alias("comp"), F.col("comp").alias("comp2")
-                    ).alias("b"),
-                    "comp",
-                    "left",
-                )
-                .select(
-                    "key", "prev", F.coalesce("comp2", "comp").alias("comp")
-                )
-                .localCheckpoint(eager=True)
-            )
-            changed = jumped.where(F.col("comp") != F.col("prev")).count()
-            labels = jumped.select("key", "comp")
-            if changed == 0:
-                return labels.select("key", F.col("comp").alias("component"))
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds"
+            .groupBy(F.col("src").alias("key"))
+            .agg(F.min("dcomp").alias("ncomp"))
         )
+        prop = labels.join(nbr, "key", "left").select(
+            "key",
+            F.col("comp").alias("prev"),
+            F.least("comp", F.coalesce("ncomp", "comp")).alias("comp"),
+        )
+        # pointer jumping: comp <- comp(comp).  Labels are always vertex
+        # ids (min over keys), so the lookup side covers every comp.
+        return (
+            prop.alias("a")
+            .join(
+                prop.select(
+                    F.col("key").alias("comp"), F.col("comp").alias("comp2")
+                ).alias("b"),
+                "comp",
+                "left",
+            )
+            .select("key", "prev", F.coalesce("comp2", "comp").alias("comp"))
+        )
+
+    def changed(labels: DataFrame) -> int:
+        return labels.where(F.col("comp") != F.col("prev")).count()
+
+    try:
+        # converged: no label changed (a count below 1)
+        fit = iterate(labels, step, max_iter, tol=1, delta=changed)
+        if not fit.converged:
+            raise RuntimeError(
+                f"connected_components did not converge in {max_iter} rounds"
+            )
+        return fit.state.select("key", F.col("comp").alias("component"))
     finally:
         edges.unpersist()
 

@@ -10,24 +10,15 @@ weighted companion.
 Spark-idiomatic shape — the textbook distributed power iteration:
 
 - the edge list is normalized ONCE (per-source degree join → per-edge
-  weight) and eagerly checkpointed; every iteration reuses that frame,
+  weight) and checkpointed; every iteration reuses that frame,
   so the big side is scanned but never re-derived.
 - one iteration = ONE edge-sized join (ranks → edges on src) + ONE
-  groupBy(dst) sum — two hash shuffles, both edge-sized — plus two
-  node-sized scalar actions (dangling mass, L1 delta).  No corpus-sized
-  driver state: ranks live distributed; the driver sees only scalars.
-- each round ends in a ``localCheckpoint`` that is MATERIALIZED by the
-  round's own scalar action (r10): the checkpoint is declared lazy, and
-  the L1-delta/dangling-mass aggregation — a full pass over every
-  partition — computes it, caches it, and truncates lineage
-  (``SparkContext.runJob`` calls ``rdd.doCheckpoint()`` after every
-  action).  One action per round instead of two; semantically identical
-  to the eager form — the next round still reads a materialized,
-  lineage-free iterate.  The ``connected_components`` discipline still
-  holds: a bare lazy *persist* without an immediate covering action
-  would silently re-execute the whole lineage every round (a measured
-  3×+ regression class in this repo) — the covering action is the
-  load-bearing part.
+  groupBy(dst) sum — two hash shuffles, both edge-sized — plus the
+  dangling mass as a one-row aggregate cross-joined onto the update.
+  With ``tol > 0`` the round's one action is the node-sized L1 delta;
+  a fixed round count runs none.  No corpus-sized driver state: ranks
+  live distributed; the driver sees only scalars.  Rounds run through
+  ``iterate.iterate``, which owns the per-round checkpoint.
 
 Semantics (pinned by the numpy mirror in tests/test_graph.py):
 
@@ -50,6 +41,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ballista_spark.operators.iterate import iterate
 
 
 def out_degrees(edges: DataFrame, src: str = "src", dst: str = "dst") -> DataFrame:
@@ -83,11 +76,6 @@ def pagerank(
     if not (0.0 < damping < 1.0):
         raise ValueError(f"damping must be in (0, 1), got {damping}")
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    nodes = (
-        e.select(F.col("src").alias("node"))
-        .unionAll(e.select(F.col("dst").alias("node")))
-        .distinct()
-    )
     deg = e.groupBy("src").agg(F.count("*").alias("__deg"))
     # per-edge transition weight, derived once and reused every round;
     # lazily checkpointed — round 1's aggregation (the first action that
@@ -97,96 +85,50 @@ def pagerank(
         .select("src", "dst", (F.lit(1.0) / F.col("__deg")).alias("w"))
         .localCheckpoint(eager=False)
     )
-    # has_out rides on the rank frame so the dangling-mass scalar is a
+    # has_out rides on the rank frame so the dangling mass is a
     # filter+sum over ranks, not a join per round
-    flagged = nodes.join(
-        deg.select(F.col("src").alias("node"), F.lit(True).alias("has_out")),
-        "node",
-        "left",
-    ).select("node", F.coalesce("has_out", F.lit(False)).alias("has_out"))
+    flagged = out_degrees(e).select("node", (F.col("out_deg") > 0).alias("has_out"))
     n = flagged.count()
     if n == 0:
-        return nodes.select("node", F.lit(1.0).alias("rank"))
+        return flagged.select("node", F.lit(1.0).alias("rank"))
     ranks = flagged.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=False)
     base = (1.0 - damping) / n
+    # the L1 delta needs each round's previous rank; a fixed round count
+    # (tol <= 0) carries none and runs no per-round action
+    prev = [F.col("rank").alias("__prev")] if tol > 0 else []
 
-    if tol <= 0:
-        # Fixed-iteration mode (r10): with tol <= 0 the convergence check
-        # can never fire, so no round needs a driver scalar at all.  The
-        # dangling mass rides as a ONE-ROW aggregate cross-joined onto the
-        # update (constant data volume at any scale; the 1-row broadcast
-        # pattern planlint allows) and every round is DECLARED lazily —
-        # each ``localCheckpoint(eager=False)`` truncates the *plan* at
-        # declaration time while the chained RDDs materialize together in
-        # the caller's first action, stage-pipelined inside one job
-        # instead of 2 driver-blocking jobs per round.  Arithmetic is
-        # identical to the scalar path: the same Spark SUM, the same
-        # ``/ n`` double division — only performed executor-side.
-        for _ in range(max_iters):
-            dm = ranks.agg(
-                (
-                    F.coalesce(
-                        F.sum(F.when(~F.col("has_out"), F.col("rank"))), F.lit(0.0)
-                    )
-                    / F.lit(float(n))
-                ).alias("__dangling")
-            )
-            contrib = (
-                ranks.join(weighted, ranks["node"] == weighted["src"])
-                .groupBy(F.col("dst").alias("node"))
-                .agg(F.sum(F.col("rank") * F.col("w")).alias("__in"))
-            )
-            ranks = (
-                ranks.join(contrib, "node", "left")
-                .crossJoin(dm)
-                .select(
-                    "node",
-                    "has_out",
-                    (
-                        F.lit(base)
-                        + F.lit(damping)
-                        * (F.coalesce("__in", F.lit(0.0)) + F.col("__dangling"))
-                    ).alias("rank"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        return ranks.select("node", "rank")
-
-    dangling_sum = float(
-        ranks.agg(
-            F.coalesce(
-                F.sum(F.when(~F.col("has_out"), F.col("rank"))), F.lit(0.0)
-            ).alias("m")
-        ).collect()[0]["m"]
-    )
-    for _ in range(max_iters):
-        dangling = dangling_sum / n
+    def step(ranks: DataFrame) -> DataFrame:
+        # the dangling mass rides as a ONE-ROW aggregate cross-joined onto
+        # the update (the 1-row broadcast pattern planlint allows)
+        dm = ranks.agg(
+            (
+                F.coalesce(F.sum(F.when(~F.col("has_out"), F.col("rank"))), F.lit(0.0))
+                / F.lit(float(n))
+            ).alias("__dangling")
+        )
         contrib = (
             ranks.join(weighted, ranks["node"] == weighted["src"])
             .groupBy(F.col("dst").alias("node"))
             .agg(F.sum(F.col("rank") * F.col("w")).alias("__in"))
         )
-        stepped = (
+        return (
             ranks.join(contrib, "node", "left")
+            .crossJoin(dm)
             .select(
                 "node",
                 "has_out",
-                F.col("rank").alias("__prev"),
+                *prev,
                 (
                     F.lit(base)
-                    + F.lit(damping) * (F.coalesce("__in", F.lit(0.0)) + F.lit(dangling))
+                    + F.lit(damping)
+                    * (F.coalesce("__in", F.lit(0.0)) + F.col("__dangling"))
                 ).alias("rank"),
             )
-            .localCheckpoint(eager=False)
         )
-        [row] = stepped.agg(
-            F.sum(F.abs(F.col("rank") - F.col("__prev"))).alias("d"),
-            F.coalesce(
-                F.sum(F.when(~F.col("has_out"), F.col("rank"))), F.lit(0.0)
-            ).alias("m"),
-        ).collect()
-        dangling_sum = float(row["m"])
-        ranks = stepped.select("node", "has_out", "rank")
-        if float(row["d"]) < tol:
-            break
+
+    def l1(ranks: DataFrame) -> float:
+        d = ranks.agg(F.sum(F.abs(F.col("rank") - F.col("__prev"))))
+        return float(d.first()[0])
+
+    ranks = iterate(ranks, step, max_iters, tol, l1 if prev else None).state
     return ranks.select("node", "rank")

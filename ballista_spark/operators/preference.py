@@ -18,18 +18,11 @@ round — the same distributed shape as ``graph.pagerank``:
   that frame.
 - one round = TWO edge-sized hash joins (both endpoint strengths onto
   the pair list — BT needs pi_i + pi_j, unlike PageRank's source-only
-  rank) + ONE groupBy(item) sum, then a node-sized update join and ONE
-  scalar action (normalizer + L1 delta together).  The driver sees only
-  scalars; strengths live distributed.
-- every round ends in a ``localCheckpoint`` MATERIALIZED by the round's
-  own scalar action (r10, the ``pagerank`` shape): the checkpoint is
-  declared lazy and the normalizer/L1-delta aggregation — a full pass —
-  computes it, caches it, and truncates lineage (``doCheckpoint`` runs
-  after every action).  One action per round instead of two.  The
-  ``connected_components`` discipline still holds: a bare lazy persist
-  with no covering action re-executes the whole lineage per round (a
-  measured 3×+ regression class in this repo) — the immediately
-  following full-pass action is what makes the lazy form safe.
+  rank) + ONE groupBy(item) sum, then a node-sized update join with the
+  normalizer as a one-row aggregate cross-joined on.  With ``tol > 0``
+  the round's one action is the node-sized L1 delta; a fixed round
+  count runs none.  Strengths live distributed; rounds run through
+  ``iterate.iterate``, which owns the per-round checkpoint.
 
 Identifiability and disconnected graphs: the MM update is only defined
 on a strongly connected comparison graph (an undefeated item's strength
@@ -47,6 +40,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ballista_spark.operators.iterate import iterate
 
 __all__ = [
     "bt_strengths",
@@ -141,71 +136,19 @@ def bt_strengths(
     if n_items == 0:
         return items.select("item", F.lit(1.0).alias("strength"))
 
-    if tol <= 0:
-        # Fixed-iteration mode (r10, the ``pagerank`` twin): tol <= 0
-        # disarms the convergence check, so no round needs a driver
-        # scalar — the normalizer rides as a ONE-ROW aggregate
-        # cross-joined onto the update (constant volume at any scale)
-        # and every round is declared lazily; the chained checkpointed
-        # RDDs materialize together in the caller's first action.
-        # Arithmetic is identical to the scalar path: the same Spark
-        # SUM, the same ``/ n_items`` then ``__raw / scale`` double ops,
-        # performed executor-side.
-        for _ in range(max_iters):
-            lo_pi = state.select(F.col("item").alias("lo"), F.col("pi").alias("__plo"))
-            hi_pi = state.select(F.col("item").alias("hi"), F.col("pi").alias("__phi"))
-            joined = totals.join(lo_pi, "lo").join(hi_pi, "hi")
-            denom_part = F.col("n") / (F.col("__plo") + F.col("__phi"))
-            denom = (
-                joined.select(F.col("lo").alias("item"), denom_part.alias("__d"))
-                .unionAll(
-                    joined.select(F.col("hi").alias("item"), denom_part.alias("__d"))
-                )
-                .groupBy("item")
-                .agg(F.sum("__d").alias("__den"))
-            )
-            stepped = (
-                state.join(denom, "item", "left")
-                .select(
-                    "item",
-                    "__wins",
-                    (
-                        F.col("__wins")
-                        / (
-                            F.coalesce("__den", F.lit(0.0))
-                            # virtual anchor: one win + one loss vs strength 1
-                            + F.lit(2.0 * smoothing) / (F.col("pi") + F.lit(1.0))
-                        )
-                    ).alias("__raw"),
-                )
-                # checkpointed so its two consumers (the normalizer agg and
-                # the update select) read ONE computed copy, not two
-                .localCheckpoint(eager=False)
-            )
-            scale = stepped.agg(
-                (F.sum("__raw") / F.lit(float(n_items))).alias("__scale")
-            )
-            state = (
-                stepped.crossJoin(scale)
-                .select(
-                    "item",
-                    "__wins",
-                    (F.col("__raw") / F.col("__scale")).alias("pi"),
-                )
-                .localCheckpoint(eager=False)
-            )
-        return state.select("item", F.col("pi").alias("strength"))
+    # the L1 delta needs each round's previous strength and raw update; a
+    # fixed round count (tol <= 0) carries neither and runs no action
+    prev = [F.col("pi").alias("__prev")] if tol > 0 else []
+    carry = ["__raw", "__prev"] if tol > 0 else []
 
-    for _ in range(max_iters):
+    def step(state: DataFrame) -> DataFrame:
         lo_pi = state.select(F.col("item").alias("lo"), F.col("pi").alias("__plo"))
         hi_pi = state.select(F.col("item").alias("hi"), F.col("pi").alias("__phi"))
         joined = totals.join(lo_pi, "lo").join(hi_pi, "hi")
         denom_part = F.col("n") / (F.col("__plo") + F.col("__phi"))
         denom = (
             joined.select(F.col("lo").alias("item"), denom_part.alias("__d"))
-            .unionAll(
-                joined.select(F.col("hi").alias("item"), denom_part.alias("__d"))
-            )
+            .unionAll(joined.select(F.col("hi").alias("item"), denom_part.alias("__d")))
             .groupBy("item")
             .agg(F.sum("__d").alias("__den"))
         )
@@ -214,7 +157,7 @@ def bt_strengths(
             .select(
                 "item",
                 "__wins",
-                F.col("pi").alias("__prev"),
+                *prev,
                 (
                     F.col("__wins")
                     / (
@@ -224,21 +167,22 @@ def bt_strengths(
                     )
                 ).alias("__raw"),
             )
+            # checkpointed so its two consumers (the normalizer agg and
+            # the update select) read ONE computed copy, not two
             .localCheckpoint(eager=False)
         )
-        # ONE action per round: the scalar agg computes normalizer +
-        # convergence delta AND materializes the lazy checkpoint above
-        [row] = stepped.agg(
-            F.sum("__raw").alias("s"),
-            F.sum(F.abs(F.col("__raw") - F.col("__prev"))).alias("d"),
-        ).collect()
-        scale = float(row["s"]) / n_items
-        state = stepped.select(
-            "item", "__wins", (F.col("__raw") / F.lit(scale)).alias("pi")
+        # the normalizer rides as a ONE-ROW aggregate cross-joined onto
+        # the update (constant volume at any scale)
+        scale = stepped.agg((F.sum("__raw") / F.lit(float(n_items))).alias("__scale"))
+        return stepped.crossJoin(scale).select(
+            "item", "__wins", (F.col("__raw") / F.col("__scale")).alias("pi"), *carry
         )
-        if float(row["d"]) < tol * n_items:
-            break
 
+    def l1(state: DataFrame) -> float:
+        d = state.agg(F.sum(F.abs(F.col("__raw") - F.col("__prev"))))
+        return float(d.first()[0])
+
+    state = iterate(state, step, max_iters, tol * n_items, l1 if prev else None).state
     return state.select("item", F.col("pi").alias("strength"))
 
 

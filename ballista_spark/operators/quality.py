@@ -17,8 +17,7 @@ Three pieces, all pure DataFrame compositions:
   exists precisely to cap the model at a broadcastable size), and each
   iteration is two feature-sized shuffles (per-doc margin reduce,
   per-bucket gradient reduce).  The corpus is never collected;
-  ``localCheckpoint`` truncates the per-iteration lineage so the plan
-  stays constant-size.
+  rounds run through ``iterate.iterate``.
 - :func:`quality_classifier_score` — score = sigmoid(w·x + b) per doc,
   one broadcast join + one per-doc reduce.
 
@@ -38,6 +37,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ballista_spark.operators.hashing import md5_long
+from ballista_spark.operators.iterate import iterate
 from ballista_spark.operators.lm import _gram_orders, _tokens
 
 #: default hashed-feature space: 2^18 buckets ≈ 2 MB of float64 weights —
@@ -141,41 +141,48 @@ def logreg_fit(
     )
     feats = features.persist()
     n_docs = lab.count()
-    weights = feats.sparkSession.createDataFrame([], "bucket long, w double")
-    bias = 0.0
+    bias, err = 0.0, None
+
+    def step(weights: DataFrame) -> DataFrame:
+        nonlocal err
+        marg = _margins(feats, weights, bias)
+        # doc-sized checkpoint: err feeds TWO consumers (the gradient
+        # reduce below and the bias read); without it the margin join +
+        # per-doc reduce recompute per consumer
+        err = (
+            marg.join(lab, "key")
+            .select("key", (_sigmoid(F.col("margin")) - F.col("y")).alias("g"))
+            .localCheckpoint(eager=False)
+        )
+        grad = (
+            feats.join(err, "key")
+            .groupBy("bucket")
+            .agg((F.sum(F.col("g") * F.col("x")) / F.lit(n_docs)).alias("gw"))
+        )
+        return weights.join(grad, "bucket", "full").select(
+            "bucket",
+            (
+                F.coalesce(F.col("w"), F.lit(0.0)) * F.lit(1.0 - lr * reg)
+                - F.lit(lr) * F.coalesce(F.col("gw"), F.lit(0.0))
+            ).alias("w"),
+        )
+
+    def read_bias(weights: DataFrame) -> None:
+        # the round's one action: the bias gradient, with a count of the
+        # new weights riding the same job, materializes both checkpoints
+        nonlocal bias
+        [row] = (
+            err.agg((F.sum("g") / F.lit(n_docs)).alias("gb"))
+            .crossJoin(weights.agg(F.count("*")))
+            .collect()
+        )
+        bias -= lr * float(row["gb"] or 0.0)
+
     try:
-        for _ in range(n_iters):
-            marg = _margins(feats, weights, bias)
-            # eager doc-sized checkpoint: err feeds TWO actions (the
-            # gradient reduce inside the weights checkpoint and the
-            # bias_grad collect); without it the margin join + per-doc
-            # reduce recompute per consumer — 2x feature-sized shuffle
-            # passes per iteration
-            err = (
-                marg.join(lab, "key")
-                .select("key", (_sigmoid(F.col("margin")) - F.col("y")).alias("g"))
-                .localCheckpoint(eager=True)
-            )
-            grad = (
-                feats.join(err, "key")
-                .groupBy("bucket")
-                .agg((F.sum(F.col("g") * F.col("x")) / F.lit(n_docs)).alias("gw"))
-            )
-            bias_grad = err.agg((F.sum("g") / F.lit(n_docs)).alias("gb")).collect()[0][
-                "gb"
-            ]
-            weights = (
-                weights.join(grad, "bucket", "full")
-                .select(
-                    "bucket",
-                    (
-                        F.coalesce(F.col("w"), F.lit(0.0)) * F.lit(1.0 - lr * reg)
-                        - F.lit(lr) * F.coalesce(F.col("gw"), F.lit(0.0))
-                    ).alias("w"),
-                )
-                .localCheckpoint(eager=True)  # truncate per-iteration lineage
-            )
-            bias -= lr * float(bias_grad or 0.0)
+        weights = iterate(
+            feats.sparkSession.createDataFrame([], "bucket long, w double"),
+            step, n_iters, delta=read_bias,
+        ).state
         return LogRegModel(weights, bias, n_features, tuple(ngrams))
     finally:
         feats.unpersist()

@@ -1513,9 +1513,11 @@ def _sketch_sampling_builder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return _CoalescedView(raw)
 
-    # the four ITERATIVE/fit constructions run eager internal checkpoints
-    # (pagerank 7 rounds, Bradley-Terry 5, the lm/dsir fits one each —
-    # ~5.7 s serial warm at sf0.01).  Kick them off now on pool threads so
+    # the four ITERATIVE/fit constructions launch jobs while they build:
+    # pagerank (7 rounds) and Bradley-Terry (5) run at tol=0, so no round
+    # has an action, but AQE runs each round's shuffle stages when its
+    # checkpoint is declared; the lm/dsir fits checkpoint eagerly once —
+    # ~5.7 s serial warm at sf0.01.  Kick them off now on pool threads so
     # they overlap with each other and with the main thread's (serial,
     # py4j-bound) plan construction; each is resolved at its first use.
     from concurrent.futures import ThreadPoolExecutor

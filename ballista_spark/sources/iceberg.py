@@ -1802,7 +1802,6 @@ def _commit_snapshot(
     added: list[dict],
     summary: dict,
     kept=None,
-    removed: int = 0,
     content: int = 0,
     txn: tuple = (None, None),
 ) -> int | None:
@@ -1813,7 +1812,8 @@ def _commit_snapshot(
     ``kept=None`` carries the landing snapshot's manifests forward
     (append, position delete); else the new manifest re-records
     ``kept(state)``, the landing snapshot's live data entries it keeps,
-    as EXISTING, and ``removed`` counts the files dropped.  ``content=1``
+    as EXISTING; the live entries it drops are counted in the manifest
+    list and the summary's ``deleted-data-files``.  ``content=1``
     writes a position-DELETE manifest, upgrading the table to v2, where
     every snapshot takes the next sequence number.  A lost race rebuilds
     on the winner unless the winner changed the schema or, for all but
@@ -1846,6 +1846,7 @@ def _commit_snapshot(
              "data_file": e["data_file"]}
             for e in (kept(state) if kept else [])
         ]
+        removed = len(state.live) - len(existing) if kept else 0
         manifest_path, manifest_len = _write_manifest(
             meta_dir, _current_schema(md), existing + added, content
         )
@@ -1866,7 +1867,9 @@ def _commit_snapshot(
             "snapshot-id": snapshot_id,
             "timestamp-ms": int(time.time() * 1000),
             "manifest-list": list_path,
-            "summary": summary,
+            "summary": (
+                {**summary, "deleted-data-files": str(removed)} if kept else summary
+            ),
         }
         if parent_id is not None:
             snapshot["parent-snapshot-id"] = parent_id
@@ -2575,16 +2578,14 @@ class _Rewrite:
         def kept(state: _Meta) -> list[dict]:
             return [e for e in state.data if e["data_file"]["file_path"] not in gone]
 
-        dropped = len(self.live) - len(kept(self.read))
         summary = {
             "operation": _SNAPSHOT_OPERATION[op],
             **params,
             "added-data-files": str(len(added)),
-            "deleted-data-files": str(dropped),
         }
         return _commit_snapshot(
             self.read, self.snapshot_id, added, summary, kept=kept,
-            removed=dropped, txn=txn or (None, None),
+            txn=txn or (None, None),
         )
 
     def txn_applied(self, txn) -> bool:

@@ -112,15 +112,16 @@ def test_string_node_ids(spark):
 
 
 def test_fixed_iteration_lazy_path_matches_scalar_path(spark):
-    """tol <= 0 takes the r10 fully-declarative round path (dangling mass
-    as a one-row cross join, zero per-round driver actions); its iterates
-    must equal the scalar-action path bit-for-bit."""
+    """Convergence mode never changes the arithmetic: tol <= 0 runs the
+    rounds with no per-round action, a tiny positive tol adds only the
+    L1-delta action per round (dangling mass still a one-row cross join),
+    and the iterates must be equal bit-for-bit."""
     from pyspark.sql import functions as F
 
     docs = spark.range(0, 2000).select(F.col("id").alias("doc_id"))
     d = F.col("doc_id")
     edges = docs.select(((d * 7 + 3) % 53).alias("src"), ((d * 13 + 5) % 61).alias("dst"))
     lazy = {r.node: r.rank for r in pagerank(edges, max_iters=7, tol=0.0).collect()}
-    # tol tiny-but-positive -> the per-round scalar-action path, never converging
+    # tol tiny-but-positive -> one L1-delta action per round, never converging
     scalar = {r.node: r.rank for r in pagerank(edges, max_iters=7, tol=1e-300).collect()}
     assert lazy == scalar

@@ -1118,3 +1118,38 @@ def test_v2_sequence_number_on_every_snapshot(spark, tmp_path):
         assert all(m["sequence_number"] == s["sequence-number"] for m in new)
     assert md["last-sequence-number"] == snaps[-1]["sequence-number"]
     assert [r[0] for r in _rows(spark, path)] == list(range(20))
+
+
+def _new_manifest_counts(path):
+    """(added, existing, deleted) data-file counts of the current
+    snapshot's new manifest, and the snapshot summary."""
+    snap = _read_meta(path)["snapshots"][-1]
+    with open(snap["manifest-list"], "rb") as f:
+        (m,) = read_avro_bytes(f.read())[0]
+    counts = tuple(
+        m[f"{k}_data_files_count"] for k in ("added", "existing", "deleted")
+    )
+    return counts, snap["summary"]
+
+
+@pytest.mark.parametrize("racer_files", [0, 1])
+def test_overwrite_counts_the_files_it_drops(
+    spark, tmp_path, monkeypatch, racer_files
+):
+    """An overwrite of the two-file table records both dropped files in
+    its manifest list and summary; when a one-file append wins the race
+    after the overwrite's read, the overwrite rebases onto it and drops
+    that file too."""
+    path = str(tmp_path / "t")
+    _two_file_table(spark, path)
+    if racer_files:
+        _race(monkeypatch, "_load_metadata", lambda: write_iceberg_table(
+            _df(spark, _RACER_ROWS).coalesce(1), path
+        ))
+    write_iceberg_table(
+        _df(spark, [(99, "z", 9.0)]).coalesce(1), path, mode="overwrite"
+    )
+    counts, summary = _new_manifest_counts(path)
+    assert counts == (1, 0, 2 + racer_files)
+    assert summary["deleted-data-files"] == str(2 + racer_files)
+    assert _rows(spark, path) == [(99, "z", 9.0)]

@@ -11,18 +11,26 @@
 
 from __future__ import annotations
 
+from unittest import mock
+
 import pytest
 from pyspark.sql import functions as F
 
+from ballista_spark.operators.classify import softmax_fit
 from ballista_spark.operators.dedup import (
+    connected_components,
     exact_dedup,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
 )
+from ballista_spark.operators.graph import pagerank
 from ballista_spark.operators.partitioning import row_salt
+from ballista_spark.operators.preference import bt_strengths
+from ballista_spark.operators.quality import logreg_fit
 from ballista_spark.operators.rangejoin import range_join
 from ballista_spark.sources.registry import load_table
 from tests.conftest import SF_SMOKE
+from tests.test_iterate import fit_inputs, job_stages, one_job_per_action
 
 
 def test_exact_dedup_plan_has_no_broadcast(spark):
@@ -429,24 +437,31 @@ def test_asof_join_matches_pandas_merge_asof_on_random_data(spark):
         assert got == want, seed
 
 
-def test_connected_components_result_is_materialized(spark):
-    """The returned frame must be backed by the final round's eager
-    checkpoint — a consumer's plan contains NO joins/aggregates, so using
-    the result can never replay the iterative rounds (the
-    recompute-explosion regression fixed in round 4: lazy persists were
-    dropped before materializing, so every round and every consumer
-    re-ran the whole chain from the edges)."""
-    from ballista_spark.operators.dedup import connected_components
+#: fit → its returned frame (the model's weights for the classifiers)
+_FIT_RESULTS = {
+    "connected_components": lambda d: connected_components(d["pairs"]),
+    "pagerank": lambda d: pagerank(d["edges"], max_iters=2),
+    "bt_strengths": lambda d: bt_strengths(d["pairs"], max_iters=2),
+    "logreg_fit": lambda d: logreg_fit(d["feats"], d["labels"], n_iters=2).weights,
+    "softmax_fit": lambda d: softmax_fit(d["feats"], d["labels"], n_iters=2).weights,
+}
 
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (10, 11)], "key_a long, key_b long"
-    )
-    comp = connected_components(pairs)
-    plan = comp._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" not in plan and "Aggregate" not in plan, plan
-    assert {r["key"]: r["component"] for r in comp.collect()} == {
-        1: 1, 2: 1, 3: 1, 10: 10, 11: 10
-    }
+
+@pytest.mark.parametrize("fit", list(_FIT_RESULTS))
+def test_fit_result_is_materialized(spark, fit):
+    """Every fit returns the final round's materialized checkpoint: a
+    consumer's plan contains NO joins/aggregates, and reading it is one
+    job of one stage, so using the result can never replay the
+    iterative rounds (the recompute-explosion regression fixed in round
+    4: lazy persists were dropped before materializing, so every round
+    and every consumer re-ran the whole chain from the edges)."""
+    with one_job_per_action(spark):
+        got = _FIT_RESULTS[fit](fit_inputs(spark))
+        plan = got._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan and "Aggregate" not in plan, plan
+        assert job_stages(spark.sparkContext, f"read-{fit}", got.collect) == [
+            [mock.ANY]
+        ]
 
 
 def test_connected_components_string_keys(spark):

@@ -153,9 +153,10 @@ def test_self_comparisons_ignored(spark):
 
 
 def test_fixed_iteration_lazy_path_matches_scalar_path(spark):
-    """tol <= 0 takes the r10 fully-declarative round path (normalizer as
-    a one-row cross join, zero per-round driver actions); strengths must
-    equal the scalar-action path bit-for-bit."""
+    """Convergence mode never changes the arithmetic: tol <= 0 runs the
+    rounds with no per-round action, a tiny positive tol adds only the
+    L1-delta action per round (normalizer still a one-row cross join),
+    and the strengths must be equal bit-for-bit."""
     from pyspark.sql import functions as F
 
     docs = spark.range(0, 2000).select(F.col("id").alias("doc_id"))
