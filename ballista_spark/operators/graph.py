@@ -86,12 +86,18 @@ def pagerank(
         .localCheckpoint(eager=False)
     )
     # has_out rides on the rank frame so the dangling mass is a
-    # filter+sum over ranks, not a join per round
-    flagged = out_degrees(e).select("node", (F.col("out_deg") > 0).alias("has_out"))
+    # filter+sum over ranks, not a join per round; the node set is
+    # derived once — the count materializes the checkpoint, and the
+    # first ranks are a projection over it
+    flagged = (
+        out_degrees(e)
+        .select("node", (F.col("out_deg") > 0).alias("has_out"))
+        .localCheckpoint(eager=False)
+    )
     n = flagged.count()
     if n == 0:
         return flagged.select("node", F.lit(1.0).alias("rank"))
-    ranks = flagged.withColumn("rank", F.lit(1.0 / n)).localCheckpoint(eager=False)
+    ranks = flagged.withColumn("rank", F.lit(1.0 / n))
     base = (1.0 - damping) / n
     # the L1 delta needs each round's previous rank; a fixed round count
     # (tol <= 0) carries none and runs no per-round action

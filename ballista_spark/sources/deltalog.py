@@ -1058,6 +1058,10 @@ def _scan_snapshot(
             "__dfp", "__pos"
         )
 
+    def _read(paths, reader=spark.read):
+        phys = reader.schema(_phys_struct(data_fields)).parquet(*paths)
+        return _strip_deleted(_tag(_to_logical(phys)))
+
     out_fields = [fld.name for fld in snap.schema.fields] + [
         c for c in (file_col, pos_col) if c
     ]
@@ -1065,20 +1069,13 @@ def _scan_snapshot(
         reader = spark.read
         if snap.partition_columns:
             reader = reader.option("basePath", snap.table_path)
-        df = _strip_deleted(
-            _tag(
-                _to_logical(
-                    reader.schema(_phys_struct(data_fields)).parquet(
-                        *snap.file_paths()
-                    )
-                )
-            )
-        )
+        df = _read(snap.file_paths(), reader)
         for col in snap.partition_columns:
             df = df.withColumn(
                 col, F.col(col).cast(part_fields[col].dataType)
             )
-        return df.select(out_fields)
+        # a select per scan build costs a plan analysis: skip a no-op one
+        return df if df.columns == out_fields else df.select(out_fields)
     # non-hive layout: one read per distinct partition tuple + union —
     # correct but one scan node per partition value; warn at width
     groups: dict[tuple, list[str]] = {}
@@ -1096,13 +1093,7 @@ def _scan_snapshot(
         )
     out = None
     for key, paths in groups.items():
-        part = _strip_deleted(
-            _tag(
-                _to_logical(
-                    spark.read.schema(_phys_struct(data_fields)).parquet(*paths)
-                )
-            )
-        )
+        part = _read(paths)
         for col, val in zip(snap.partition_columns, key):
             lit = (
                 F.lit(None) if val in (None, "")
@@ -2158,8 +2149,9 @@ def merge_delta_table(
 
     Touch-only (``rewrite.merge``): for single-key merges the source's
     key min/max cut the candidates by the log's per-file stats, a
-    broadcast-semi probe finds the files the keys touch, and only those
-    are rewritten.  Matching the delta-spark semantics, a concurrent
+    one-job broadcast-semi probe finds the files the keys touch, and
+    only those are rewritten, in ONE staged write with the source rows
+    the merge writes.  Matching the delta-spark semantics, a concurrent
     commit that removed one of our touched files aborts with
     :class:`DeltaConcurrentCommitError` (rerun on the new snapshot).
     ``txn_app_id``/``txn_version`` give streaming-upsert idempotence

@@ -81,6 +81,7 @@ import os
 import struct
 
 from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ballista_spark.sources import fsio, occ, rewrite
@@ -907,8 +908,6 @@ def _scan_snapshot(
     snapshot applied; ``file_col`` / ``pos_col`` optionally carry each
     row's decoded source-file path (``rewrite.decoded_file_path``) and
     physical row position, captured at the scan stage."""
-    from pyspark.sql import functions as F
-
     files = snap.files
     if not files:
         return spark.createDataFrame([], snap.spark_schema)
@@ -1061,8 +1060,6 @@ def read_iceberg_changelog(
     file-set shortcut would miss it).  Expired (cleaned-up) snapshots
     raise rather than under-reporting.
     """
-    from pyspark.sql import functions as F
-
     _, md = _load_metadata(table_path)
     log = md.get("snapshot-log") or []
     hi = len(log) - 1 if to_ordinal is None else int(to_ordinal)
@@ -1439,8 +1436,6 @@ def _stamp_field_ids(df: DataFrame, ids: dict) -> DataFrame:
     enabled``, default true), which the Iceberg spec requires and which
     makes RENAME COLUMN a safe metadata-only commit (round-10 ask #2:
     id-resolved reads re-bind old files to new names)."""
-    from pyspark.sql import functions as F
-
     id_by_name = {name: fid for fid, (name, _t) in ids.items()}
     if not id_by_name:
         return df
@@ -1970,8 +1965,6 @@ def write_iceberg_table(
     _ice, _ = spark_to_iceberg_schema(df.schema)
     norm = iceberg_to_spark_type(_ice)
     if [f.dataType for f in norm.fields] != [f.dataType for f in df.schema.fields]:
-        from pyspark.sql import functions as F
-
         df = df.select(
             *[
                 F.col(f.name).cast(norm.fields[i].dataType)
@@ -2179,8 +2172,6 @@ def _scan_with_initial_defaults(
     and after the ADD COLUMN), and ``tag=True`` attaches the
     (__dfp, __pos) tombstone-join columns scan-side, where
     ``_metadata`` is still resolvable (it is not after a union)."""
-    from pyspark.sql import functions as F
-
     id_by_name = {
         f["name"]: int(f["id"])
         for f in snap.schema_json.get("fields", [])
@@ -2699,8 +2690,6 @@ def _delete_with_position_deletes(
     """
     import math
 
-    from pyspark.sql import functions as F
-
     matched = (
         t.scan(candidates, file_col="__file", pos_col="__rowpos")
         .where(pred)
@@ -2780,10 +2769,12 @@ def merge_iceberg_table(
     (the CDC-bootstrap case).  One atomic snapshot (operation
     ``overwrite`` — a merge changes rows, so the streaming face refuses
     it); returns its id, or None for a no-op merge or a replayed
-    ``txn_app_id``/``txn_version`` epoch.  Only the touched files are
-    rewritten — untouched files' manifest records carry forward
-    verbatim.  Tables with v2 delete files refuse (compact first — it
-    applies the tombstones).
+    ``txn_app_id``/``txn_version`` epoch.  Only the touched files
+    (stats-pruned on the source's key bounds, then probed in one job)
+    are rewritten, in ONE staged write with the source rows the merge
+    writes; untouched files' manifest records carry forward verbatim.
+    Tables with v2 delete files refuse (compact first — it applies the
+    tombstones).
     """
     if (txn_app_id is None) != (txn_version is None):
         raise ValueError("txn_app_id and txn_version must be passed together")

@@ -12,10 +12,11 @@ A row-level change rewrites only the files it provably touches:
    (:func:`decoded_file_path`).  Spark's input-file-name function
    returns '' once a shuffle (a tombstone anti-join) sits downstream,
    and a percent-encoded URI never equals a raw log/manifest path, so
-   either would silently under-touch;
-3. *rewrite*: only the touched files are read again, their new rows
-   staged as new files, and remove(touched) + add(new) publish in ONE
-   commit at the version the writer read.
+   either would silently under-touch.  It is ONE map-only job whose
+   file set comes back as an observed metric (:func:`_observe`);
+3. *rewrite*: only the touched files are read again, their new rows (a
+   MERGE's source rows too) staged in ONE write, and remove(touched) +
+   add(new) publish in ONE commit at the version the writer read.
 
 Untouched files are never read twice and never rewritten: a 1M-row CDC
 batch against a well-clustered 100 TB table rewrites a few files, not
@@ -33,10 +34,12 @@ reads of staged files (:func:`per_file`) and the change-feed diff
 from __future__ import annotations
 
 import datetime
+import functools
 import json
+import operator
 from typing import Callable, Protocol
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,6 +47,11 @@ from ballista_spark.sources import fsio
 
 #: the probe's file-identity column
 _FILE = "__file"
+#: the proof language's comparisons as Column operators
+_COMPARE = {
+    "=": operator.eq, "!=": operator.ne, "<": operator.lt,
+    "<=": operator.le, ">": operator.gt, ">=": operator.ge,
+}
 
 
 class Table(Protocol):
@@ -51,6 +59,7 @@ class Table(Protocol):
     handles are the format's own and opaque here."""
 
     schema: T.StructType  # logical: the scan output, a MERGE source's shape
+    alias: str | None  # the name predicates may qualify columns by
 
     def live_files(self) -> list: ...  # the snapshot's live data files
 
@@ -90,12 +99,10 @@ def decoded_file_path() -> Column:
     identity of the tombstone anti-joins, the position-delete writer and
     the touch probe — every side of a (file, pos) join agrees
     byte-for-byte."""
-    return F.url_decode(
-        F.regexp_replace(
-            F.regexp_replace(F.col("_metadata.file_path"), "^file:/*", "/"),
-            r"\+",
-            "%2B",
-        )
+    # one parsed expression: each F.* call is a py4j round trip
+    return F.expr(
+        "url_decode(regexp_replace(regexp_replace("
+        "_metadata.file_path, '^file:/*', '/'), '[+]', '%2B'))"
     )
 
 
@@ -124,21 +131,10 @@ def _filters_to_column(filters: list[tuple[str, str, object]]) -> Column:
     exact-match twin of the proof language the stats prune on."""
     cond = F.lit(True)
     for col, op, val in filters:
-        c = F.col(col)
-        if op == "=":
-            cond = cond & (c == F.lit(val))
-        elif op == "!=":
-            cond = cond & (c != F.lit(val))
-        elif op == "<":
-            cond = cond & (c < F.lit(val))
-        elif op == "<=":
-            cond = cond & (c <= F.lit(val))
-        elif op == ">":
-            cond = cond & (c > F.lit(val))
-        elif op == ">=":
-            cond = cond & (c >= F.lit(val))
-        elif op == "is_null":
-            cond = cond & c.isNull()
+        if op == "is_null":
+            cond = cond & F.col(col).isNull()
+        elif op in _COMPARE:
+            cond = cond & _COMPARE[op](F.col(col), F.lit(val))
         else:
             raise ValueError(f"unsupported filter operator {op!r}")
     return cond
@@ -163,10 +159,13 @@ def _kind(e) -> str | None:
     return _KIND.get(e.getClass().getSimpleName())
 
 
-def _column_name(e) -> str | None:
+def _column_name(e, qualifier: str | None) -> str | None:
+    # `col`, or `q.col` when q is the target's (case-insensitive) name
     if e.getClass().getSimpleName() != "UnresolvedAttribute":
         return None
     parts = e.nameParts()
+    if parts.size() == 2 and parts.head().lower() == (qualifier or "").lower():
+        return parts.apply(1)
     return parts.head() if parts.size() == 1 else None
 
 
@@ -192,7 +191,7 @@ def _literal(e):
     raise ValueError(f"no triple literal for {t}")
 
 
-def _conjunct(e) -> tuple[str, str, object] | None:
+def _conjunct(e, qualifier: str | None) -> tuple[str, str, object] | None:
     """``e`` as one (col, op, value) triple, or None when it is not
     ``col op literal``, ``literal op col`` or ``col IS NULL``."""
     op = _kind(e)
@@ -200,14 +199,14 @@ def _conjunct(e) -> tuple[str, str, object] | None:
         e, op = e.children().head(), "!="
     ch = e.children()
     if op == "is_null":
-        col = _column_name(ch.head())
+        col = _column_name(ch.head(), qualifier)
         return None if col is None else (col, "is_null", None)
     if op not in _FLIP or ch.size() != 2:
         return None
     left, right = ch.apply(0), ch.apply(1)
-    col = _column_name(left)
+    col = _column_name(left, qualifier)
     if col is None:
-        col, op, right = _column_name(right), _FLIP[op], left
+        col, op, right = _column_name(right, qualifier), _FLIP[op], left
     if col is None:
         return None
     try:
@@ -224,23 +223,28 @@ def _and_terms(e) -> list:
     return _and_terms(ch.apply(0)) + _and_terms(ch.apply(1))
 
 
-def provable_conjuncts(predicate: Column) -> list[tuple[str, str, object]]:
+def provable_conjuncts(
+    predicate: Column, qualifier: str | None = None
+) -> list[tuple[str, str, object]]:
     """The (col, op, value) triples the top-level AND of ``predicate``
     implies: each conjunct that is ``col op literal``, ``literal op
-    col`` or ``col IS NULL``.  Every other conjunct (OR, IN, LIKE, a
-    function call) is skipped: it still filters rows, it only cannot
-    prune files."""
+    col`` or ``col IS NULL``, where ``col`` may be qualified by
+    ``qualifier`` (the target's alias, SQL ``DELETE FROM t AS x WHERE
+    x.id = 1``).  Every other conjunct (OR, IN, LIKE, a function call,
+    another table's column) is skipped: it still filters rows, it only
+    cannot prune files."""
     tree = SparkSession.active()._jsparkSession.expression(predicate._jc)
-    return [t for t in map(_conjunct, _and_terms(tree)) if t is not None]
+    terms = (_conjunct(e, qualifier) for e in _and_terms(tree))
+    return [t for t in terms if t is not None]
 
 
-def _normalize(filters) -> tuple[list, Column]:
+def _normalize(filters, qualifier: str | None) -> tuple[list, Column]:
     """``filters`` — (col, op, value) triples or a Column — as
     ``(conjuncts, predicate)``: the triples the stats prune on, and the
     exact row predicate with NULL counted as false, so DELETE keeps the
     row and UPDATE leaves it untouched (SQL semantics)."""
     if isinstance(filters, Column):
-        conjuncts, pred = provable_conjuncts(filters), filters
+        conjuncts, pred = provable_conjuncts(filters, qualifier), filters
     else:
         conjuncts, pred = list(filters), _filters_to_column(filters)
     return conjuncts, F.coalesce(pred, F.lit(False))
@@ -258,22 +262,31 @@ def _predicate_param(filters) -> str:
     return json.dumps([list(map(str, f)) for f in filters or []])
 
 
+def _observe(df: DataFrame, *aggs: Column) -> list:
+    """``aggs`` over ``df`` in ONE map-only job: the rows stream to the
+    ``noop`` sink and the values come back as the query's observed
+    metrics (``agg().collect()`` is a shuffle map job plus a result job
+    under AQE).  Observed metrics are accumulator-backed, so a retried task
+    may apply its update twice: observe only idempotent aggregates — a
+    set, a min, a max — never a count or a sum."""
+    o = Observation()
+    named = [agg.alias(f"m{i}") for i, agg in enumerate(aggs)]
+    df.observe(o, *named).write.format("noop").mode("overwrite").save()
+    got = o.get
+    return [got[f"m{i}"] for i in range(len(aggs))]
+
+
 def _touch(
     a: Table, conjuncts: list, match: Callable[[DataFrame], DataFrame] | None
 ) -> list:
     """Stats pre-prune on ``conjuncts``, then — unless ``match`` is None
-    (an unconditional rewrite) — one exact probe: the candidates that
-    hold a row ``match`` keeps."""
+    (an unconditional rewrite) — one exact one-job probe: the candidates
+    that hold a row ``match`` keeps (:func:`_observe`)."""
     files = a.may_match(a.live_files(), conjuncts)
     if match is None or not files:
         return files
-    hit = {
-        r[0]
-        for r in match(a.scan(files, file_col=_FILE))
-        .select(_FILE)
-        .distinct()
-        .collect()
-    }
+    probe = match(a.scan(files, file_col=_FILE)).select(_FILE)
+    hit = set(_observe(probe, F.collect_set(_FILE))[0])
     return [f for f in files if a.path(f) in hit]
 
 
@@ -297,7 +310,7 @@ def delete(
             "refusing an unconditional DELETE — pass explicit filters "
             "(overwrite with an empty DataFrame to truncate)"
         )
-    conjuncts, pred = _normalize(filters)
+    conjuncts, pred = _normalize(filters, a.alias)
     if fast_path is not None:
         candidates = a.may_match(a.live_files(), conjuncts)
         return fast_path(candidates, pred) if candidates else None
@@ -323,7 +336,7 @@ def update(a: Table, set_exprs, filters=None) -> int | None:
         if name not in types:
             raise ValueError(f"SET column {name!r} is not in the table schema")
     if _given(filters):
-        conjuncts, pred = _normalize(filters)
+        conjuncts, pred = _normalize(filters, a.alias)
         touched = _touch(a, conjuncts, lambda df: df.where(pred))
     else:
         pred = F.lit(True)
@@ -350,12 +363,10 @@ def update(a: Table, set_exprs, filters=None) -> int | None:
         touched, a.stage(updated), "UPDATE",
         {
             "predicate": _predicate_param(filters),
-            "set": json.dumps(
-                {
-                    k: v if isinstance(v, str) else _sql_text(v)
-                    for k, v in set_exprs.items()
-                }
-            ),
+            "set": json.dumps({
+                k: v if isinstance(v, str) else _sql_text(v)
+                for k, v in set_exprs.items()
+            }),
         },
     )
 
@@ -372,7 +383,14 @@ def merge(
     replaced by their source row (``update``, SCD-1) or dropped
     (``delete``); unmatched source rows insert when
     ``insert_not_matched``.  A replayed ``txn`` is skipped before any
-    file is staged.  None for a no-op merge."""
+    file is staged.  None for a no-op merge.
+
+    A single-key merge observes its key bounds as the source's cache
+    fills (:func:`_observe`); they prune the candidates for the probe.
+    ONE staged write then holds the touched files' rows minus every
+    matched row, plus the source rows the mode writes: all of them for
+    update + insert, else those whose keys do (update) or do not
+    (insert) match a target row."""
     if when_matched not in ("update", "delete"):
         raise ValueError("when_matched must be update|delete")
     on = list(on)
@@ -381,10 +399,8 @@ def merge(
     if when_matched == "update" or insert_not_matched:
         # names + types must match; nullability may differ (literals are
         # non-nullable, table columns usually nullable — irrelevant here)
-        def shape(sch):
-            return [(f.name, f.dataType) for f in sch.fields]
-
-        if shape(source.schema) != shape(a.schema):
+        shape = [(f.name, f.dataType) for f in source.schema.fields]
+        if shape != [(f.name, f.dataType) for f in a.schema.fields]:
             raise ValueError(
                 "merge source schema must equal the table schema "
                 f"(table {a.schema.simpleString()}, "
@@ -392,10 +408,12 @@ def merge(
             )
     source = source.cache()
     try:
-        keys = F.broadcast(source.select(*on).distinct())
+        # semi and anti joins ignore duplicate keys: no distinct shuffle
+        keys = F.broadcast(source.select(*on))
         conjuncts = []
         if len(on) == 1:
-            lo, hi = source.agg(F.min(on[0]), F.max(on[0])).collect()[0]
+            # the bounds ride the cache fill: one job reads the source
+            lo, hi = _observe(source, F.min(on[0]), F.max(on[0]))
             if hasattr(lo, "isoformat"):
                 # Delta stats spell dates/timestamps as ISO strings;
                 # Iceberg's numeric bounds compare with neither and keep
@@ -407,22 +425,19 @@ def merge(
         touched = _touch(
             a, conjuncts, lambda df: df.join(keys, on=on, how="semi")
         )
-        added: list = []
-        matched = None
+        parts = []  # the one staged write's inputs (see the docstring)
         if touched:
             rows = a.scan(touched)
-            matched = rows.select(*on).join(keys, on=on, how="semi").distinct()
-            new_rows = rows.join(keys, on=on, how="left_anti")
-            if when_matched == "update":
-                new_rows = new_rows.unionByName(
-                    source.join(matched, on=on, how="semi")
-                )
-            added += a.stage(new_rows)
-        if insert_not_matched:
-            inserts = source
-            if matched is not None:
-                inserts = source.join(matched, on=on, how="left_anti")
-            added += a.stage(inserts)
+            parts.append(rows.join(keys, on=on, how="left_anti"))
+        if insert_not_matched and (when_matched == "update" or not touched):
+            parts.append(source)  # each row updates or inserts
+        elif touched and (when_matched == "update" or insert_not_matched):
+            matched = rows.select(*on).join(keys, on=on, how="semi")
+            how = "semi" if when_matched == "update" else "left_anti"
+            parts.append(source.join(matched, on=on, how=how))
+        added = []
+        if parts:
+            added = a.stage(functools.reduce(DataFrame.unionByName, parts))
     finally:
         source.unpersist()
     if not added and not touched:

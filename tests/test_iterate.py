@@ -123,6 +123,20 @@ def test_fit_job_budget(spark, fit):
         assert got[1] - got[0] == rounds
 
 
+def test_pagerank_node_set_job_budget(spark):
+    """With AQE on, where every shuffle stage is a job of its own, a
+    zero-round PageRank derives its node set once: the count of the
+    checkpointed node frame runs the union / distinct / degree-join
+    stages, and the first ranks are a projection over that checkpoint,
+    not a second pass through them."""
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    edges = fit_inputs(spark)["edges"]
+    jobs = job_stages(
+        spark.sparkContext, "pagerank-aqe", lambda: pagerank(edges, max_iters=0)
+    )
+    assert len(jobs) == 8
+
+
 def test_fit_record(spark, caplog):
     """One record per fit on ``ballista_spark.fit``: a 4-node cycle's
     uniform ranks converge long before the round cap."""

@@ -78,3 +78,100 @@ def test_no_match_inside_file_bounds_writes_nothing(spark, tmp_path, fmt, op):
     assert got is None
     assert _files(path) == before  # no data file, no log/metadata version
     assert _rows(spark, fmt, path) == [(k, 0) for k in (1, 3, 7, 9)]
+
+
+def _live(spark, fmt, path):
+    mod = deltalog if fmt == "delta" else iceberg
+    t = mod._Rewrite(spark, path, "DELETE")
+    return {t.path(f) for f in t.live_files()}
+
+
+def _jobs(spark, group, call) -> int:
+    """The number of Spark jobs ``call()`` launches."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+#: jobs per commit with AQE on, where every shuffle map stage and every
+#: broadcast is a job of its own.  MERGE: the source cache fill that
+#: observes the key bounds (1), the probe's key broadcast and map-only
+#: observed write (2), the one staged write's broadcast and write (2).
+#: UPDATE and DELETE: the probe (1) and the staged write (1).
+_BUDGET = {"merge": 5, "update": 2, "delete": 2}
+
+
+@pytest.mark.parametrize("op", list(_BUDGET))
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_row_level_job_budget(spark, tmp_path, fmt, op):
+    """A row-level commit on a range-clustered table launches only the
+    jobs its algorithm needs, and rewrites only the files it touches."""
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
+    path = str(tmp_path / "t")
+    df = spark.range(0, 2000, 2).select(
+        F.col("id").alias("k"), (F.col("id") % 7).alias("v")
+    )
+    _WRITE[fmt](df.repartitionByRange(8, "k").sortWithinPartitions("k"), path)
+    band = [("k", ">=", 300), ("k", "<", 340)]
+    call = {
+        "merge": lambda: _MERGE[fmt](
+            spark, path,
+            spark.createDataFrame([(k, 99) for k in range(300, 340)], _KV), ["k"],
+        ),
+        "update": lambda: _UPDATE[fmt](spark, path, {"v": "v + 1"}, band),
+        "delete": lambda: _cow_delete(fmt, spark, path, band),
+    }[op]
+    before = _live(spark, fmt, path)
+    assert _jobs(spark, f"budget-{fmt}-{op}-{tmp_path.name}", call) == _BUDGET[op]
+    assert len(before - _live(spark, fmt, path)) == 1
+
+
+#: a MERGE source per case over a target of the even keys 0..18 in two
+#: files: key 4 twice (a match) and 5 twice and 30 (no match); or keys
+#: inside the files' bounds that match no row, so no file is touched
+_SOURCES = {
+    "duplicate_keys": [(4, 1), (4, 2), (5, 3), (5, 4), (30, 5)],
+    "no_touched_file": [(5, 1), (7, 2), (7, 3)],
+}
+
+
+@pytest.mark.parametrize("source", list(_SOURCES))
+@pytest.mark.parametrize("insert", [True, False], ids=["insert", "no_insert"])
+@pytest.mark.parametrize("when_matched", ["update", "delete"])
+@pytest.mark.parametrize("fmt", ["delta", "iceberg"])
+def test_merge_modes_match_mirror(spark, tmp_path, fmt, when_matched, insert, source):
+    """Every MERGE mode leaves the rows a pure-Python mirror of its
+    semantics gives: matched target rows go; every source row whose key
+    matches (update) or does not (insert) comes in, duplicates
+    included.  A merge that changes nothing commits nothing."""
+    path = str(tmp_path / "t")
+    target = [(k, 0) for k in range(0, 20, 2)]
+    _WRITE[fmt](
+        spark.createDataFrame(target, _KV).repartitionByRange(2, "k")
+        .sortWithinPartitions("k"),
+        path,
+    )
+    src = _SOURCES[source]
+    tkeys, skeys = {k for k, _ in target}, {k for k, _ in src}
+    want = [r for r in target if r[0] not in skeys] + [
+        r for r in src
+        if (when_matched == "update" and r[0] in tkeys)
+        or (insert and r[0] not in tkeys)
+    ]
+    before, files = _live(spark, fmt, path), _files(path)
+    got = _MERGE[fmt](
+        spark, path, spark.createDataFrame(src, _KV), ["k"], when_matched, insert
+    )
+    assert _rows(spark, fmt, path) == sorted(want)
+    removed = before - _live(spark, fmt, path)
+    assert len(removed) == (source == "duplicate_keys")
+    if sorted(want) == sorted(target):
+        assert got is None and _files(path) == files
+    else:
+        assert got is not None

@@ -201,24 +201,39 @@ def test_sql_dml_end_to_end(spark, tmp_path, fmt):
 
 
 @pytest.mark.parametrize("fmt", ["delta", "iceberg"])
-def test_qualified_names_in_delete_and_update(spark, tmp_path, fmt):
+def test_qualified_names_in_delete_and_update(spark, tmp_path, monkeypatch, fmt):
     """Columns qualified by the target's alias, or by its own name when
-    it has none, resolve: each statement leaves the same rows as its
-    unqualified form run on a twin table."""
+    it has none, resolve and prune: each statement leaves the same rows
+    as its unqualified form run on a twin table, its stats prune sees
+    the unqualified conjunct, and it rewrites only the one candidate
+    file that holds the id."""
+    from ballista_spark.sources import deltalog, iceberg
+
+    mod = deltalog if fmt == "delta" else iceberg
     ctx = _ctx(spark)
-    rows = [[(i, "c", i, "a") for i in range(6)]]
-    _register(ctx, spark, fmt, "tq", str(tmp_path / "q"), rows)
-    _register(ctx, spark, fmt, "tu", str(tmp_path / "u"), rows)
-    for qualified, plain in [
-        ("DELETE FROM tq AS x WHERE x.id = 1", "DELETE FROM tu WHERE id = 1"),
-        ("DELETE FROM tq WHERE tq.id = 2", "DELETE FROM tu WHERE id = 2"),
+    chunks = [[(i, "c", i, "a") for i in (j, j + 1)] for j in (0, 2, 4)]
+    paths = {t: str(tmp_path / t) for t in ("tq", "tu")}
+    for t, path in paths.items():
+        _register(ctx, spark, fmt, t, path, chunks)
+
+    seen = _record_may_match(monkeypatch, mod)
+    for qualified, plain, conj in [
+        ("DELETE FROM tq AS x WHERE x.id = 1", "DELETE FROM tu WHERE id = 1", 1),
+        ("DELETE FROM tq WHERE tq.id = 2", "DELETE FROM tu WHERE id = 2", 2),
         (
             "UPDATE tq AS x SET v = x.v + 1 WHERE x.id = 3",
             "UPDATE tu SET v = v + 1 WHERE id = 3",
+            3,
         ),
     ]:
-        ctx.sql(qualified)
-        ctx.sql(plain)
+        for stmt, t in ((qualified, "tq"), (plain, "tu")):
+            before = _live(spark, mod, paths[t])
+            ctx.sql(stmt)
+            removed = before - _live(spark, mod, paths[t])
+            ((got_conj, cands),) = seen
+            seen.clear()
+            assert got_conj == [("id", "=", conj)], stmt
+            assert len(cands) == 1 and removed == cands, stmt
         got, want = (
             sorted(map(tuple, ctx.sql(f"SELECT * FROM {t}").df.collect()))
             for t in ("tq", "tu")
@@ -917,6 +932,20 @@ def _live(spark, mod, path) -> set:
     return {t.path(f) for f in t.live_files()}
 
 
+def _record_may_match(monkeypatch, mod) -> list:
+    """Each stats prune's (conjuncts, candidate paths), in call order."""
+    seen = []
+    may_match = mod._Rewrite.may_match
+
+    def recording(self, fs, conj):
+        out = may_match(self, fs, conj)
+        seen.append((conj, {self.path(f) for f in out}))
+        return out
+
+    monkeypatch.setattr(mod._Rewrite, "may_match", recording)
+    return seen
+
+
 @pytest.mark.parametrize("fmt", ["delta", "iceberg"])
 def test_sql_vacuum_retain_zero_hours(spark, tmp_path, fmt):
     """``RETAIN 0 HOURS`` is an explicit zero retention (it used to fall
@@ -992,15 +1021,7 @@ def test_broad_predicate_dml_matches_duckdb(
     }
     assert touched <= expected
 
-    seen = []
-    may_match = mod._Rewrite.may_match
-
-    def recording(self, fs, conj):
-        out = may_match(self, fs, conj)
-        seen.append((conj, {self.path(f) for f in out}))
-        return out
-
-    monkeypatch.setattr(mod._Rewrite, "may_match", recording)
+    seen = _record_may_match(monkeypatch, mod)
 
     def run(stmt):
         before = _live(spark, mod, path)
